@@ -1,16 +1,17 @@
 """Benchmark harness — headline queries vs BASELINE.md + domain ops.
 
-The first 12 queries mirror BASELINE.md one-to-one (the judge's ≤2×
-gate); the remainder are LLM-pipeline domain ops (near-dup sketches,
+The 12 HEADLINE queries mirror BASELINE.md one-to-one (the judge's ≤2×
+gate); the rest of the registry is LLM-pipeline domain ops (near-dup sketches,
 cluster closure, tf-idf) tracked round-over-round so a perf regression
 in that surface is visible even without a baseline row.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS].  Protocol mirrors BASELINE.md: one warm
 SparkSession (JVM warmed by a lineitem.count()), per query cold run
-then warm run, warm time reported; action = toPandas() — full result
-materialization to the client over Arrow batches, the engine's
-idiomatic transfer path.  (Round-4 finding: row-object collect() on
+then warm run, warm time reported; a query whose build runs Spark jobs
+is rebuilt for each warm run (see build_query).  Action = toPandas() —
+full result materialization to the client over Arrow batches, the
+engine's idiomatic transfer path.  (Round-4 finding: row-object collect() on
 sessionize spent 0.7-2.3 s building ~9.5k Python Row objects with
 datetimes — variance 0.9-2.6 s across 7 reps in ONE session — while
 the Arrow path is a stable 0.21-0.26 s and count() of the same plan
@@ -33,7 +34,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-BENCH_QUERIES = [
+#: The 12 BASELINE.md-comparable queries (the judge's ≤2× gate), in
+#: BASELINE.md row order.  They run FIRST, on the fresh warm JVM; the
+#: rest of the registry follows in registry order.
+HEADLINE = (
     "scan_filter_agg",
     "groupby_agg",
     "join_star",
@@ -46,474 +50,51 @@ BENCH_QUERIES = [
     "tokenize_wordcount",
     "dedup_hash",
     "knn_cosine_topk",
-    # domain ops (no BASELINE.md row; tracked vs previous BENCH_r{N})
-    "minhash_near_dup_pairs",
-    "simhash_near_dup",
-    "near_dup_clusters",
-    "tfidf_top",
-    "ann_ivf_topk",
-    "bm25_search",
-    "ngram_decontaminate",
-    "dup_span_ratio",
-    "multimodal_decode_real",
-    "kmeans_lloyd",
-    "pagerank_tokens",
-    "bloom_semi_agg",
-    "unigram_surprisal_score",
-    "bpe_merge_pairs",
-    "tpch_q21_waiting_suppliers",
-    # round-3 additions
-    "tpch_q1_pricing_summary",
-    "minhash_lsh_pairs",
-    "mad_outliers",
-    "ewma_smooth",
-    "hard_negative_mining",
-    "triangle_count",
-    "rollup_multires",
-    # round-4 additions: streaming/sink round-trips + new driver surface
-    "stream_hourly_counts",
-    "stream_sliding_append",
-    "partitioned_sink_roundtrip",
-    "binary_stats",
-    "byte_entropy_text",
-    "pii_scrub_audit",
-    "minhash_recall_gate",
-    "dedup_pipeline_summary",
-    # round-4 late additions: corpus-clean family + search/vector ops
-    "line_dedup_stats",
-    "dsir_importance",
-    "semantic_dedup",
-    "inverted_index_build",
-    "sparse_cosine_topk",
-    "bigram_lm_score",
-    "random_projection_jl",
-    "twap_user_value",
-    "logreg_gd_train",
-    "salted_join_priority_revenue",
-    "attribution_linear_touch",
-    "hybrid_search_rrf",
-    "psi_drift",
-    "cdc_apply_log",
-    "label_propagation",
-    # round-5 additions: mixing / sampling / fingerprinting family
-    "source_mixture_temperature",
-    "token_budget_sampler",
-    "ccnet_perplexity_buckets",
-    "winnowing_fingerprints",
-    "langid_trigram_predict",
-    "bpe_train_merges",
-    "bucketed_join_roundtrip",
-    "multimodal_video_frames",
-    "ivm_additive_merge",
-    "hashing_trick_features",
-    "cdc_chunk_dedup",
-    "data_prep_funnel",
-    "bpe_apply_compression",
-    "compaction_roundtrip",
-    # round-5 late additions: IVM join, semantic decon, entity resolution
-    "ivm_join_delta",
-    "semantic_decontaminate",
-    "entity_resolution_golden",
-    "recursive_cte_walk",
-    "variant_extract_agg",
-    "xml_roundtrip",
-    "lateral_topn_per_key",
-    "session_window_dynamic_gap",
-    "multimodal_prep_funnel",
-    "udtf_polymorphic_ngrams",
-    # round-6 additions: A7 serving probe, A9 Python DataSource,
-    # value-oracled LSH ANN
-    "search_index_probe",
-    "pyds_topic_counts",
-    "ann_lsh_topk",
-    "span_merge_intervals",
-    "mixture_fractional_upsample",
-    "funnel_conversion_steps",
-    "vector_index_probe",
-    "stream_funnel_stages",
-    # round-7 additions: DP release, MMR re-rank, observe() gate
-    "dp_noisy_release",
-    "mmr_diverse_rerank",
-    "observed_quality_gate",
-    "int8_quantize_embeddings",
-    "kv_prefix_sharing",
-    "mv_rollup_rewrite",
-    "bitext_margin_mining",
-    "exact_substring_dedup",
-    "stream_mv_additive_merge",
-    "table_diff_reconcile",
-    "retrieval_eval_metrics",
-    "join_size_estimate",
-    "vocab_coverage_curve",
-    "rfm_segmentation",
-    "pmi_collocations",
-    "calibration_reliability_bins",
-    "target_encode_categories",
-    "funnel_time_to_convert",
-    "shard_skew_report",
-    # round-8/9 additions: ANN bitext + the restored-harness audits
-    "bitext_margin_mining_ann",
-    "minhash_band_cardinality",
-    "quantile_bin_features",
-    "stream_watermark_audit",
-    "ann_recall_eval",
-    "tokenizer_fertility_by_lang",
-    "ivf_cell_load_audit",
-    "dedup_cluster_size_histogram",
-    "packing_waste_audit",
-    "cross_source_overlap_matrix",
-    "ann_lsh_recall_eval",
-    "stream_exactly_once_audit",
-    "ann_pq_recall_eval",
-    "blocklist_filter_audit",
-    "preference_pair_build",
-    "annotator_agreement_kappa",
-    "class_centroid_outliers",
-    "sft_dialogue_assembly",
-    "matryoshka_dim_recall_eval",
-    "fim_transform",
-    "packed_attention_mask_audit",
-    "dedup_weight_consolidation",
-    "cross_source_quantile_norm",
-    "split_label_shift_chi2",
-    "lsh_candidate_precision",
-    "late_interaction_maxsim",
-    "retriever_agreement_audit",
-    "surprisal_filter_sweep",
-    "embedding_norm_audit",
-    "export_manifest_checksums",
-    # round-9 session-2 additions (M175-M187)
-    "benford_first_digit_audit",
-    "encoding_artifact_audit",
-    "acf_hourly_lags",
-    "cusum_changepoint",
-    "best_of_n_select",
-    "rank_biased_overlap",
-    "roc_auc_binned",
-    "vocab_novelty_curve",
-    "knn_label_agreement",
-    "theil_sen_trend",
-    "feature_hash_collision_audit",
-    "rake_keyword_extract",
-    "dau_wau_stickiness",
-    "user_diversity_gini",
-    "churn_label_build",
-    "trending_terms_rank_shift",
-    "revenue_lorenz_curve",
-    "ab_srm_check",
-    "survival_hazard_table",
-    "bloom_fpr_audit",
-    "skipgram_pair_counts",
-    "embedding_dim_variance",
-    "zipf_coverage_curve",
-    "reshard_stability_audit",
-    "json_validity_audit",
-    "jaccard_threshold_sweep",
-    "normalization_dedup_delta",
-    "calibration_ece",
-    "pass_at_k_estimator",
-    "conversion_wilson_ci",
-    "predicate_selectivity_profile",
-    "decision_stump_split",
-    # round-10 additions
-    "suggest_from_index",
-    "manifest_log_roundtrip",
-    "manifest_delete_roundtrip",
-    "manifest_checkpoint_read",
-    "manifest_zone_map_scan",
-    "manifest_schema_evolution",
-    "manifest_vacuum_audit",
-    "pca_top2_closed_form",
-    "phash_image_clusters",
-    "wav_fingerprint_clusters",
-    "truncation_loss_audit",
-    "length_bucket_padding_sweep",
-    "pseudonym_consistency_audit",
-    "window_distribution_family",
-    "stream_manifest_sink_versions",
-    "diff_in_diff_estimate",
-    "manifest_merge_upsert",
-    "zorder_zone_map_probe",
-    "sentence_split_stats",
-    "code_like_score",
-    "kwic_windows",
-    "prf_query_expansion",
-    "nearest_centroid_confusion",
-    "url_parse_stats",
-    "per_type_trend_slopes",
-    "data_contract_audit",
-    "delta_index_merge_read",
-    "event_runlength_islands",
-    "bootstrap_mean_ci",
-    "trimmed_mean_robust",
-    "interarrival_median_gap",
-    "manifest_clone_diverge",
-    "manifest_compact_optimize",
-    "cuped_adjusted_lift",
-    "manifest_version_cdc",
-    "geo_nearest_hub",
-    "geo_bbox_containment",
-    "geo_grid_density",
-    "beta_posterior_arms",
-    "pr_curve_thresholds",
-    "xcorr_hourly_lags",
-    "silhouette_simplified",
-    "term_proximity_rank",
-    "markov_next_event_accuracy",
-    "kmv_set_cardinality",
-    "hamming_binary_rerank",
-    "anova_f_groups",
-    "manifest_constraint_gate",
-    "stream_topk_hitters",
-    "dataset_card_profile",
-    "lag_feature_matrix",
-    "l_diversity_audit",
-    "cohort_ltv_curve",
-    "embedding_mean_shift_audit",
-    "quantile_treatment_effect",
-    "conformal_interval_coverage",
-    "experiment_cumulative_lift",
-    "mann_whitney_u",
-    "spearman_nation_segment",
-    "t_closeness_audit",
-    "mips_dot_topk",
-    "largest_remainder_allocation",
-    "special_token_contamination",
-    "file_metadata_rowcount_audit",
-    "manifest_restore_roundtrip",
-    "manifest_disjoint_writers",
-    "chi2_independence_rc",
-    "degree_assortativity",
-    "ivm_delete_recompute",
-    "ohlc_hourly_bars",
-    "uplift_by_exposure_bucket",
-    "concurrency_curve",
-    "stream_ohlc_bars",
-    "hidden_partition_pruning",
-    "video_keyframe_select",
-    "bottomk_mergeable_sample",
-    "markup_strip_audit",
-    "url_canonicalize_dedup",
-    "windowed_count_distinct",
-    "impute_group_median",
-    "session_gap_sweep",
-    "fd_discovery_audit",
-    "sargable_rewrite_probe",
-    "hierarchy_subtree_rollup",
-    "json_key_coverage",
-    "frequency_cap_waste",
-    "flesch_reading_ease",
-    "capped_running_balance",
-    "kpi_delta_decomposition",
-    "dispersion_index_check",
-    "burst_rate_audit",
-    "triplet_margin_audit",
-    "ams_f2_sketch",
-    "rendezvous_hashing_audit",
-    "event_type_affinity",
-    "decayed_user_activity_rank",
-    "bandit_replay_eval",
-    "csv_corrupt_records_audit",
-    "max_drawdown_daily",
-    "ipf_raking_weights",
-    "fair_topk_interleave",
-    "lateness_horizon_audit",
-    "digest_collision_risk",
-    "conditional_quantile_profile",
-    "trend_fit_quality",
-    "vwap_monthly",
-    "leadtime_percentiles",
-    "p99_regression_probe",
-    "weekpart_seasonality",
-    "phrase_match_search",
-    "ratio_metric_delta_var",
-    "ab_sample_size_table",
-    "jains_fairness_index",
-    "simpson_diversity_index",
-    "hourly_peak_detection",
-    "topk_concentration_ratio",
-    "aa_test_null_check",
-    "midnight_boundary_artifact",
-    "multi_table_publish",
-    "doc_prefix_dup_groups",
-    "cluster_sample_two_stage",
-    "edge_support_truss",
-    "rate_limit_admission_audit",
-    "stratified_att_estimate",
-    "distinctive_terms_ratio",
-    "geo_convex_contains",
-    "median_ci_order_stats",
-    "active_learning_margin_pick",
-    "mv_staleness_probe",
-    "weighted_jaccard_pairs",
-    "sorted_neighborhood_pairs",
-    "bigram_next_token_accuracy",
-    "centroid_2fold_accuracy",
-    "lexical_richness_profile",
-    "telemetry_echo_audit",
-    "pareto_skyline_sources",
-    "trailing_zscore_anomalies",
-    "iv_wald_estimator",
-    "dow_matched_delta",
-    "candidate_key_audit",
-    "overlap_coefficient_pairs",
-]
+)
 
 #: Registry queries deliberately NOT in the sweep, with the reason —
 #: the documented exclusion list the r10 verdict asked for (task 6).
-#: Anything registered and not named here runs: main() appends every
-#: remaining registry query after BENCH_QUERIES, so a new query is
-#: benched by default and an exclusion is an explicit, reviewed line.
-#: Empty since r12 (VERDICT r11 task 4): the one prior entry,
-#: stream_dedup_within_watermark, measured ~58 s/drain in r10 but that
-#: cost no longer reproduces (4.7 s/drain at sf0.1 measured r12, 4
-#: micro-batches at maxFilesPerTrigger=2) — every registry query is in
-#: the sweep.
+#: Anything registered and not named here runs (sweep_order), so a new
+#: query is benched by default and an exclusion is an explicit,
+#: reviewed line.  Empty since r12 (VERDICT r11 task 4): the one prior
+#: entry, stream_dedup_within_watermark, measured ~58 s/drain in r10
+#: but that cost no longer reproduces (4.7 s/drain at sf0.1 measured
+#: r12, 4 micro-batches at maxFilesPerTrigger=2) — every registry
+#: query is in the sweep.
 BENCH_EXCLUDED: dict[str, str] = {}
 
-#: Iterative queries coordinate their rounds (centroid collects, rank
-#: checkpoints, CC convergence) while the DataFrame is being BUILT, so
-#: a fair timing must rebuild the plan inside the timed region instead
-#: of re-collecting a prebuilt final stage.  (r1 under-reported
-#: near_dup_clusters for this reason — its number jumps in r2 because
-#: the protocol got honest, not because the op regressed.)
-#: rollup_multires belongs here too: its hourly level materializes via
-#: localCheckpoint while the DataFrame is being built.
-ITERATIVE = {
-    "near_dup_clusters",
-    "kmeans_lloyd",
-    "pagerank_tokens",
-    "rollup_multires",
-    # streaming queries run the micro-batch drain, and sink round-trips
-    # write the file target, while the DataFrame is being BUILT — the
-    # timed region must rebuild or it re-reads a finished memory/file
-    # table and reports the read, not the operation.
-    "stream_hourly_counts",
-    "stream_sliding_append",
-    "partitioned_sink_roundtrip",
-    "binary_stats",
-    # CC convergence loop runs during build
-    "dedup_pipeline_summary",
-    # Lloyd rounds (centroid collects) run during build
-    "semantic_dedup",
-    # GD epochs (gradient collects) run during build
-    "logreg_gd_train",
-    # merge-rule argmax collects + localCheckpoints run during build
-    "bpe_train_merges",
-    # bucketed table writes run during build
-    "bucketed_join_roundtrip",
-    # merge-rule collects run during build; compaction writes during build
-    "bpe_apply_compression",
-    "compaction_roundtrip",
-    # candidate-set localCheckpoint runs during build
-    "jaccard_threshold_sweep",
-    # r13: the prefix-filter operator materializes its token and
-    # prefix tables during build (the double-evaluation fix), so the
-    # timed region must rebuild
-    "jaccard_threshold_join",
-    # CC convergence loop runs during build
-    "entity_resolution_golden",
-    # eval-matrix collect runs during build
-    "semantic_decontaminate",
-    # xml file write runs during build
-    "xml_roundtrip",
-    # decode localCheckpoint runs during build
-    "multimodal_prep_funnel",
-    # index sink writes (saveAsTable) run during build
-    "search_index_probe",
-    "suggest_from_index",
-    # manifest commits (parquet writes) run during build
-    "manifest_log_roundtrip",
-    "manifest_delete_roundtrip",
-    "manifest_checkpoint_read",
-    "manifest_zone_map_scan",
-    "manifest_schema_evolution",
-    "manifest_vacuum_audit",
-    # two index sink writes run during build
-    "delta_index_merge_read",
-    # manifest writes run during build
-    "manifest_clone_diverge",
-    "manifest_compact_optimize",
-    "manifest_version_cdc",
-    # micro-batch drain runs during build
-    "stream_manifest_sink_versions",
-    "manifest_merge_upsert",
-    # 16 bucket-file manifest writes run during build
-    "zorder_zone_map_probe",
-    # cell-partitioned index write + centroid collect run during build
-    "vector_index_probe",
-    # micro-batch drain runs during build
-    "stream_funnel_stages",
-    # pool + pairwise-sim collects (bounded model state) run during build
-    "mmr_diverse_rerank",
-    # the daily-partials MV parquet is written during build
-    "mv_rollup_rewrite",
-    # stream drain + sink merges run during build
-    "stream_mv_additive_merge",
-    # watermarked stream drain runs during build
-    "stream_watermark_audit",
-    # CC convergence loop runs during build
-    "dedup_cluster_size_histogram",
-    "dedup_weight_consolidation",
-    # double-delivery stream drain runs during build
-    "stream_exactly_once_audit",
-    # bounded aggregate localCheckpoints run during build
-    "pmi_collocations",
-    "vocab_coverage_curve",
-    "rfm_segmentation",
-    # partitioned parquet write runs during build
-    "file_metadata_rowcount_audit",
-    # manifest commits (parquet writes) run during build
-    "manifest_restore_roundtrip",
-    "manifest_disjoint_writers",
-    # micro-batch drain runs during build
-    "stream_ohlc_bars",
-    # partitioned write runs during build
-    "hidden_partition_pruning",
-    # csv write + driver-side append run during build
-    "csv_corrupt_records_audit",
-    # manifest commits + set publishes run during build
-    "multi_table_publish",
-    # MV parquet write runs during build
-    "mv_staleness_probe",
-    # r12: unexcluded — micro-batch drain runs during build
-    "stream_dedup_within_watermark",
-    # r11 sweep-gap closure: micro-batch drains run during build
-    "stream_dedup_counts",
-    "stream_session_append",
-    "stream_static_join_counts",
-    "stream_late_drop",
-    "stream_stream_join_pairs",
-    "stream_stateful_user_totals",
-    "stream_upsert_user_latest",
-    "stream_stream_left_join",
-    # r11 sweep-gap closure: file/JDBC sink writes run during build
-    "csv_roundtrip",
-    "json_roundtrip",
-    "orc_roundtrip",
-    "schema_merge_roundtrip",
-    "avro_roundtrip",
-    "dynamic_partition_overwrite",
-    "jdbc_roundtrip",
-    # r11 sweep-gap closure: localCheckpoint / foreachBatch runs
-    # during build
-    "leakage_safe_split",
-    "dq_expectations",
-    # two stream drains + a checkpoint restart run during build
-    "stream_state_rescale_audit",
-    # two stream drains + state export/re-ingest run during build
-    "stream_state_migration_roundtrip",
-    # r12 additions: RocksDB drain / metadata+reader scans run during
-    # build
-    "stream_rocksdb_state_audit",
-    "stream_state_metadata_audit",
-    # range-stage localCheckpoint + P-row partition stats run during build
-    "skyline_users_scalable",
-    # AQE plan-probe collects (skew split / SMJ->BHJ switch are only
-    # observable from an EXECUTED adaptive plan) run during build
-    "aqe_skew_join_audit",
-    "aqe_bhj_switch_audit",
-}
+
+def sweep_order(registry) -> list[str]:
+    """HEADLINE first, then every other registry query in registry
+    order, minus BENCH_EXCLUDED."""
+    rest = [n for n in registry if n not in HEADLINE and n not in BENCH_EXCLUDED]
+    return list(HEADLINE) + rest
+
+
+def build_query(spark, name: str, fn, sf_dir: str):
+    """Build one query under its own job group; return ``(df, rebuild)``.
+
+    ``rebuild`` is True when building submitted at least one Spark job:
+    the operation (iterative rounds, stream drains, sink writes,
+    eager checkpoints) then runs while the DataFrame is being BUILT, so
+    a fair timing must rebuild inside the timed region instead of
+    re-collecting a finished result.  (r1 under-reported
+    near_dup_clusters for exactly this reason.)  Driver-thread overlap
+    writes go through ``engine.run_concurrently``, which keeps the job
+    group, so their jobs count too.  Call after the fixture schemas are
+    warm (``load_tables``): a table's first load runs a one-off schema
+    job that says nothing about the query."""
+    sc = spark.sparkContext
+    group = f"bench-build-{name}"
+    sc.setJobGroup(group, f"bench build {name}")
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.setJobGroup(None, None)
+    # job-start events reach the status store through the async
+    # listener bus; drain it so no finished build job is missed
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, bool(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class _SkipStages(Exception):
@@ -526,9 +107,7 @@ def main() -> None:
     # wrong" #1: isolate headline timing from any sweep/session
     # pressure).  The default full run keeps the headline 12 FIRST, so
     # their timings are taken on a fresh warm JVM either way.
-    queries_to_run = BENCH_QUERIES
-    if os.environ.get("SPARK_GRAFT_BENCH_HEADLINE"):
-        queries_to_run = BENCH_QUERIES[:12]
+    headline_only = bool(os.environ.get("SPARK_GRAFT_BENCH_HEADLINE"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -549,7 +128,7 @@ def main() -> None:
 
     from insight_spark.engine import get_spark
     from insight_spark.queries import all_queries, set_lint_default
-    from insight_spark.sources import load_table
+    from insight_spark.sources import load_table, load_tables
 
     # timed runs — the build-time plan lint (default-on for dev since
     # r11) must not sit inside a measured interval
@@ -561,18 +140,13 @@ def main() -> None:
     # clean enough that a real regression stands out in `tail`.
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-
     # Sweep-gap closure (VERDICT r10 task 6): every registered query
-    # runs unless it carries a documented BENCH_EXCLUDED reason.  The
-    # explicit BENCH_QUERIES list pins ordering (headline 12 first on
-    # the fresh warm JVM); everything else follows in registry order.
-    if not os.environ.get("SPARK_GRAFT_BENCH_HEADLINE"):
-        listed = set(queries_to_run) | set(BENCH_EXCLUDED)
-        queries_to_run = queries_to_run + [
-            n for n in registry if n not in listed
-        ]
+    # runs unless it carries a documented BENCH_EXCLUDED reason.
+    queries_to_run = list(HEADLINE) if headline_only else sweep_order(registry)
 
-    # warm the JVM / codegen paths
+    # warm the JVM / codegen paths, and every fixture table's schema so
+    # build_query sees only the jobs a query's build itself runs
+    load_tables(spark, sf_dir)
     load_table(spark, sf_dir, "lineitem").count()
 
     # A/A calibration probe (VERDICT r12 task 2, guide §1): constant
@@ -607,6 +181,7 @@ def main() -> None:
     calib["noop_job"] = round(best_job, 4)
 
     timings: dict[str, float] = {}
+    rebuilt: list[str] = []
     errors: dict[str, str] = {}
     for name in queries_to_run:
         # One DataFrame per query; cold = first collect (plan + codegen
@@ -623,13 +198,14 @@ def main() -> None:
         # round).  A failing query records an error row; the run and
         # its JSON line always complete.
         try:
-            rebuild = name in ITERATIVE
-            df = registry[name](spark, sf_dir)
+            df, rebuild = build_query(spark, name, registry[name], sf_dir)
+            if rebuild:
+                rebuilt.append(name)
             df.toPandas()  # cold
             best = float("inf")
-            # ITERATIVE queries re-run the whole operation (stream
-            # drain, sink write, iterative rounds) per rep — 2 reps
-            # bound the wall clock; cheap cached plans keep 3.
+            # rebuilt queries re-run the whole operation (stream drain,
+            # sink write, iterative rounds) per rep — 2 reps bound the
+            # wall clock; cheap cached plans keep 3.
             for _ in range(2 if rebuild else 3):
                 t0 = time.perf_counter()
                 (registry[name](spark, sf_dir) if rebuild else df).toPandas()
@@ -645,7 +221,7 @@ def main() -> None:
     # headline mode skips the funnel split: the dedicated session
     # measures exactly the 12 baseline-comparable queries, nothing else.
     try:
-        if os.environ.get("SPARK_GRAFT_BENCH_HEADLINE"):
+        if headline_only:
             raise _SkipStages
         from pyspark.sql import functions as F
 
@@ -686,12 +262,14 @@ def main() -> None:
     # COMPACT line last — totals + the 12 BASELINE.md-comparable
     # queries + funnel stages — and write the full map to
     # BENCH_full.json beside this script for the judge.
-    headline = {n: timings[n] for n in BENCH_QUERIES[:12] if n in timings}
+    headline = {n: timings[n] for n in HEADLINE if n in timings}
     full = {
         "metric": "total_warm_s",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        # the queries whose build ran Spark jobs, timed by rebuilding
+        "rebuilt": sorted(rebuilt),
         "funnel_stages": stages,
         "stress_subset": stress_subset,
         "calib_s": calib,

@@ -137,6 +137,28 @@ def get_spark(app_name: str = "insight_spark") -> SparkSession:
     return spark
 
 
+def run_concurrently(*fns):
+    """Run each zero-argument ``fn`` on its own driver thread and return
+    their results in argument order; the first failure (in argument
+    order) re-raises once every thread has finished.
+
+    The overlap idiom for independent Spark jobs (guide §2.6): one
+    write's commit tail back-fills with the other's tasks.  Each thread
+    target is wrapped in ``pyspark.inheritable_thread_target`` at
+    submit time, so the jobs keep the caller's JVM local properties —
+    job group, scheduler pool, description — and the active session's
+    job tags; a caller that counts or cancels its group's jobs sees
+    every one of them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(inherit(fn)) for fn in fns]
+        return [f.result() for f in futures]
+
+
 @contextmanager
 def conf_override(spark: SparkSession, conf: dict[str, str]):
     """Set session confs for a scoped probe and ALWAYS restore them.

@@ -111,8 +111,9 @@ def aqe_skew_join_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting is physical, so values must not move.  The audit
     deliberately re-executes at the caller's collect instead of
     persisting the K-row aggregate: the registry stays cache-free, and
-    the re-run is the same finalized adaptive plan (bench lists the
-    query as ITERATIVE so timings charge the whole operation).
+    the re-run is the same finalized adaptive plan (its build runs the
+    probe's jobs, so bench rebuilds it and timings charge the whole
+    operation).
     """
     with conf_override(spark, SKEW_PROBE_CONF):
         fact = (

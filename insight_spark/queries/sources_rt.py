@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from insight_spark.engine import scratch_base
+from insight_spark.engine import run_concurrently, scratch_base
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -438,11 +438,7 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(t_lineitem)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_orders), pool.submit(_write_lineitem)]:
-            fut.result()
+    run_concurrently(_write_orders, _write_lineitem)
     o = spark.table(t_orders)
     li = spark.table(t_lineitem)
     return (
@@ -1563,32 +1559,20 @@ def delta_index_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc subsets, distinct tables/paths) — overlapped from two driver
     # threads so the delta's tasks back-fill the base write's tail
     # (guide §2.6); offline segment builds on a real cluster run as
-    # concurrent jobs for the same reason.  Plain threads (not
-    # pyspark.InheritableThread) suffice: the builds set no job group /
-    # scheduler pool and touch no session conf, so there is no JVM
-    # thread-local state to inherit or clean up — a caller that needs
-    # group cancellation over these jobs must switch to
-    # InheritableThread (ADVICE r12).
-    from concurrent.futures import ThreadPoolExecutor
+    # concurrent jobs for the same reason.
+    def _segment(name: str, keep) -> dict[str, str]:
+        return write_search_index(
+            spark,
+            docs.filter(keep),
+            _rt_path(sf_dir, name),
+            8,
+            f"{name}_{tag}",
+        )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        base_fut = pool.submit(
-            write_search_index,
-            spark,
-            docs.filter(F.col("doc_id") % 10 != 0),
-            _rt_path(sf_dir, "delta_idx_base"),
-            8,
-            f"delta_idx_base_{tag}",
-        )
-        delta_fut = pool.submit(
-            write_search_index,
-            spark,
-            docs.filter(F.col("doc_id") % 10 == 0),
-            _rt_path(sf_dir, "delta_idx_delta"),
-            8,
-            f"delta_idx_delta_{tag}",
-        )
-        base_tables, delta_tables = base_fut.result(), delta_fut.result()
+    base_tables, delta_tables = run_concurrently(
+        lambda: _segment("delta_idx_base", F.col("doc_id") % 10 != 0),
+        lambda: _segment("delta_idx_delta", F.col("doc_id") % 10 == 0),
+    )
     base = search_term_lookup(spark, base_tables["postings"], "join")
     delta = search_term_lookup(spark, delta_tables["postings"], "join")
     merged = base.select(
@@ -2309,8 +2293,6 @@ def multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # because every expected_version is passed explicitly.  The set
     # publishes themselves stay sequential: set_version assignment is
     # an O_EXCL counter and s1 < s2 is part of the result.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _orders_chain() -> tuple[int, int]:
         ov1 = log_append(
             orders.filter(F.col("o_orderkey") <= 100), orders_t,
@@ -2330,11 +2312,7 @@ def multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             cust.filter(F.col("c_custkey") <= 50), cust_t, expected_version=0
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_orders = pool.submit(_orders_chain)
-        f_cust = pool.submit(_cust_write)
-        ov1, ov2 = f_orders.result()
-        cv1 = f_cust.result()
+    (ov1, ov2), cv1 = run_concurrently(_orders_chain, _cust_write)
     s1 = publish_set(meta, {orders_t: ov1, cust_t: cv1})
     s2 = publish_set(meta, {orders_t: ov2, cust_t: cv1})
 
@@ -2349,8 +2327,7 @@ def multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the two snapshot reads are independent count jobs — overlap them
     # the same way (results are deterministic row counts)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        leg1, leg2 = pool.map(leg, [s1, s2])
+    leg1, leg2 = run_concurrently(lambda: leg(s1), lambda: leg(s2))
     return leg1.unionByName(leg2)
 
 

@@ -26,7 +26,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insight_spark.engine import run_concurrently
 from insight_spark.operators.text import tokenize
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through its own Hadoop
+    FileSystem — existence checks and deletes that hold for any scheme
+    (plain local, file://, hdfs://, s3a://), unlike ``os.path``."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
 
 
 def write_partitioned(
@@ -61,10 +71,9 @@ def write_search_index(
     # with the other's tasks, same pattern as the base/delta segment
     # overlap in delta_index_merge_read.  The suggest table reads the
     # WRITTEN posting table, so it stays ordered after postings inside
-    # its thread.  Plain threads suffice: no job group / scheduler
-    # pool / session conf is set here.  (r12 measured this overlap as
-    # noise-inconclusive on a degraded box; re-measured r13 on a quiet
-    # box — see OPTIMIZATION_r13.md.)
+    # its thread.  (r12 measured this overlap as noise-inconclusive on
+    # a degraded box; re-measured r13 on a quiet box — see
+    # OPTIMIZATION_r13.md.)
     def _write_docs() -> None:
         # external tables (explicit path): bucketing metadata lives in
         # the catalog, data at out_dir — no static warehouse conf needed
@@ -119,15 +128,7 @@ def write_search_index(
             .saveAsTable(suggest_table)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [
-            pool.submit(_write_docs),
-            pool.submit(_write_postings_then_suggest),
-        ]
-        for fut in futures:
-            fut.result()
+    run_concurrently(_write_docs, _write_postings_then_suggest)
     return {"docs": doc_table, "postings": post_table, "suggest": suggest_table}
 
 
@@ -256,13 +257,16 @@ def foreach_batch_upsert(
         spark = batch_df.sparkSession
         path = os.path.join(out_dir, "serving")
         new = batch_df.dropDuplicates(key_cols)
+        fs, hpath = _hadoop_fs(spark, path)
         # Only a MISSING serving dir means first batch (ADVICE r12:
         # the old bare `except Exception` treated ANY read failure —
         # including a serving dir half-destroyed by an aborted
         # overwrite — as first-batch and silently re-seeded the table
         # from one micro-batch; same narrowing as
-        # foreach_batch_additive_merge).
-        if os.path.isdir(path):
+        # foreach_batch_additive_merge).  Existence is asked of the
+        # path's own Hadoop FileSystem, so a file:// / hdfs:// / s3a://
+        # out_dir sees its earlier batches too (ADVICE r13).
+        if fs.exists(hpath):
             current = spark.read.parquet(path)
             merged = current.join(
                 new.select(*key_cols), key_cols, "left_anti"
@@ -278,16 +282,15 @@ def foreach_batch_upsert(
         # repartition to a target file size here instead.
         merged = merged.coalesce(1)
         if barrier == "local":
-            merged = merged.localCheckpoint()
-        else:
-            staging = os.path.join(out_dir, f"_staging_{batch_id}")
+            merged.localCheckpoint().write.mode("overwrite").parquet(path)
+            return
+        staging = os.path.join(out_dir, f"_staging_{batch_id}")
+        try:
             merged.write.mode("overwrite").parquet(staging)
-            merged = spark.read.parquet(staging)
-        merged.write.mode("overwrite").parquet(path)
-        if barrier == "reliable":
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
+            spark.read.parquet(staging).write.mode("overwrite").parquet(path)
+        finally:
+            # a failed batch must not strand its staged copy either
+            fs.delete(_hadoop_fs(spark, staging)[1], True)
 
     return upsert
 

@@ -317,7 +317,9 @@ def run_stream_to_memory(
 
     ``processAllAvailable`` drains every pending file (test harness
     use); production sinks go through ``foreachBatch`` upserts instead
-    (see sinks.foreach_batch_upsert).
+    (see sinks.foreach_batch_upsert).  A stream that throws is stopped
+    before its error re-raises, so it never stays in
+    ``spark.streams.active`` holding its query name.
     """
     q = (
         stream_df.writeStream.format("memory")
@@ -326,8 +328,10 @@ def run_stream_to_memory(
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     return spark.table(name)
 
 

@@ -6,8 +6,9 @@ files without running Spark).
 
 Usage: python scripts/capture_plan.py <tag> name1 name2 ... [--sf DIR]
 
-Note: for ITERATIVE queries (stream drains, manifest writes) the
-captured plan is the RETURNED DataFrame's plan — side-effecting build
+Note: for queries whose build runs Spark jobs (stream drains, manifest
+writes — the ones bench.py times by rebuilding) the captured plan is
+the RETURNED DataFrame's plan — side-effecting build
 stages (drains, sink writes) do not appear in it; their evidence is
 the progress/durationMs profile in OPTIMIZATION_r12.md instead.
 """

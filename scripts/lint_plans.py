@@ -13,9 +13,10 @@ Run before committing a new query::
     python scripts/lint_plans.py              # whole registry
     python scripts/lint_plans.py topk knn_cosine_topk   # just these
 
-Iterative/streaming queries (bench.ITERATIVE) are skipped: building
-their DataFrame executes the operation, and their Python/plan shapes
-are asserted by their dedicated tests instead.
+Side-effecting queries (stream drains, sink writes, iterative rounds)
+execute their operation while being built, so a whole-registry lint
+runs them too — the same builds the test suite's ``registry_builds``
+fixture makes with the lint on.
 """
 
 from __future__ import annotations
@@ -35,16 +36,11 @@ def main() -> int:
     from insight_spark.plans.audit import PlanScaleError
     from insight_spark.queries import all_queries
 
-    import bench
-
     spark = get_spark("lint_plans")
     only = set(sys.argv[1:])
     failures: list[str] = []
     for name, fn in all_queries().items():
         if only and name not in only:
-            continue
-        if name in bench.ITERATIVE and name not in only:
-            print(f"SKIP {name} (iterative/streaming — dedicated tests)")
             continue
         t0 = time.perf_counter()
         try:

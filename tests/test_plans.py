@@ -442,15 +442,8 @@ def test_no_rowwise_python_anywhere_in_bench_surface(registry_builds):
     """Engine-wide guard: no benched query may plan a row-at-a-time
     Python eval (BatchEvalPython).  Arrow-batched forms
     (ArrowEvalPython, FlatMapGroupsInPandas, MapInPandas/Arrow) are the
-    sanctioned Python surface.  Iterative/streaming queries are skipped
-    — building their DataFrame executes the operation (their Python
-    usage is plan-asserted in their dedicated tests)."""
-    import bench
-
-    for name in bench.BENCH_QUERIES:
-        if name in bench.ITERATIVE:
-            continue
-        plan = registry_builds[name][1]
+    sanctioned Python surface."""
+    for name, (_, plan) in registry_builds.items():
         assert "BatchEvalPython" not in plan, f"{name} plans rowwise Python"
 
 

@@ -283,28 +283,74 @@ def test_bench_sweep_covers_registry_minus_documented_exclusions():
     """VERDICT r10 task 6: the bench sweep must cover EVERY registered
     query except the documented BENCH_EXCLUDED entries — a new query
     is benched by default, and an exclusion is an explicit, reasoned
-    line, never a silent gap."""
+    line, never a silent gap.  The 12 HEADLINE queries run first, the
+    rest in registry order."""
     import bench
 
-    registry = set(all_queries())
-    listed = set(bench.BENCH_QUERIES)
+    registry = all_queries()
     excluded = set(bench.BENCH_EXCLUDED)
-    # every name bench knows is real
-    assert listed <= registry, sorted(listed - registry)
-    assert excluded <= registry, sorted(excluded - registry)
-    assert not (listed & excluded), sorted(listed & excluded)
-    # main() appends (registry - listed - excluded): total coverage
-    covered = listed | (registry - listed - excluded)
-    assert covered == registry - excluded
+    assert len(bench.HEADLINE) == 12
+    assert set(bench.HEADLINE) <= set(registry) - excluded
+    assert excluded <= set(registry), sorted(excluded - set(registry))
+    order = bench.sweep_order(registry)
+    assert tuple(order[:12]) == bench.HEADLINE
+    assert order[12:] == [
+        n for n in registry if n not in bench.HEADLINE and n not in excluded
+    ]
     # every exclusion carries a non-empty reason
     assert all(
         isinstance(r, str) and len(r) > 20
         for r in bench.BENCH_EXCLUDED.values()
     )
-    # ITERATIVE names must be real and not excluded (they'd never run)
-    assert bench.ITERATIVE <= registry - excluded, sorted(
-        bench.ITERATIVE - (registry - excluded)
-    )
+
+
+def test_bench_rebuilds_queries_whose_build_runs_jobs(spark):
+    """bench times a query by rebuilding it exactly when its build ran
+    Spark jobs — including jobs submitted from run_concurrently's
+    driver threads (search_index_probe's index writes) and a stream
+    drain (stream_topk_hitters); a pure lazy plan is re-collected."""
+    import bench
+
+    from insight_spark.sources import load_tables
+
+    load_tables(spark, SF_DIR)  # the one-off schema jobs run here
+    for name, want in (
+        ("scan_filter_agg", False),
+        ("search_index_probe", True),
+        ("stream_topk_hitters", True),
+    ):
+        _, rebuild = bench.build_query(spark, name, _q(name), SF_DIR)
+        assert rebuild is want, name
+
+
+def test_run_concurrently_keeps_job_group_and_reraises(spark):
+    """engine.run_concurrently: results in argument order, every job
+    lands in the caller's job group, and a thunk's error re-raises."""
+    import pytest
+
+    from insight_spark.engine import run_concurrently
+
+    sc = spark.sparkContext
+    group = "run_concurrently_pin"
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_concurrently job-group pin")
+    try:
+        got = run_concurrently(
+            lambda: spark.range(7).count(), lambda: spark.range(3).count()
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == [7, 3]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+    # no new ungrouped job (the status store may only evict old ones)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+
+    def boom():
+        raise ValueError("thunk failed")
+
+    with pytest.raises(ValueError, match="thunk failed"):
+        run_concurrently(lambda: 1, boom)
 
 
 def test_state_rescale_restart_keeps_physical_layout(spark):

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from insight_spark.operators.multimodal import (
@@ -97,11 +98,14 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     assert served.select("user_id").distinct().count() == b1.count()
 
 
-def test_foreach_batch_upsert_reliable_barrier(spark, tmp_path):
+def test_foreach_batch_upsert_reliable_barrier(spark, tmp_path, monkeypatch):
     """VERDICT r12 #7: the cluster-posture 'reliable' (staged, durable)
     barrier yields the same serving content as the default
     localCheckpoint barrier, stays idempotent under replay, and cleans
-    up its staging dirs."""
+    up its staging dirs — also when the serving overwrite fails (the
+    error propagates and the staged copy is still removed)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     b2 = b1.withColumn("n", F.col("n") + F.lit(1)).limit(5)
@@ -118,6 +122,39 @@ def test_foreach_batch_upsert_reliable_barrier(spark, tmp_path):
             d for d in os.listdir(out) if d.startswith("_staging")
         ], "reliable barrier must GC its staging dirs"
     assert outs["local"] == outs["reliable"]
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_serving_write(self, path, *args, **kwargs):
+        if path.endswith("serving"):
+            raise RuntimeError("injected serving overwrite failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_serving_write)
+    out = str(tmp_path / "serving_reliable")
+    upsert = foreach_batch_upsert(out, ["user_id"], barrier="reliable")
+    with pytest.raises(RuntimeError, match="injected serving overwrite"):
+        upsert(b2, 2)
+    assert not [d for d in os.listdir(out) if d.startswith("_staging")]
+
+
+@pytest.mark.parametrize("barrier", ["local", "reliable"])
+def test_foreach_batch_upsert_on_uri_out_dir(spark, tmp_path, barrier):
+    """ADVICE r13: on a URI out_dir (file:// here; hdfs:// / s3a:// on
+    a cluster) a later micro-batch must still merge onto the earlier
+    ones — the serving dir's existence is asked of its Hadoop
+    FileSystem, not of os.path, which sees no URI as a directory."""
+    out_path = tmp_path / f"serving_uri_{barrier}"
+    upsert = foreach_batch_upsert(out_path.as_uri(), ["user_id"], barrier)
+    ev = load_table(spark, SF_DIR, "events")
+    per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
+    upsert(per_user.filter(F.col("user_id") % 2 == 0), 0)
+    upsert(per_user.filter(F.col("user_id") % 2 == 1), 1)
+    served = spark.read.parquet(out_path.as_uri() + "/serving")
+    assert sorted(tuple(r) for r in served.collect()) == sorted(
+        tuple(r) for r in per_user.collect()
+    )
+    assert not [d for d in os.listdir(out_path) if d.startswith("_staging")]
 
 
 def test_foreach_batch_upsert_no_silent_reseed(spark, tmp_path):

@@ -138,6 +138,30 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     assert got == n_unique_batch, f"expected {n_unique_batch} unique, got {got}"
 
 
+def test_run_stream_to_memory_stops_a_stream_that_throws(spark, tmp_path):
+    """A drain whose stream fails re-raises the failure and leaves no
+    query holding its name in spark.streams.active."""
+
+    @F.udf("long")
+    def poison(x):
+        if x == 3:
+            raise ValueError("poison row")
+        return x
+
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    name = "mem_throwing_drain"
+    with pytest.raises(Exception, match="poison row"):
+        run_stream_to_memory(
+            spark,
+            stream.select(poison("id").alias("id")),
+            name,
+            str(tmp_path / "ckpt"),
+        )
+    assert name not in {q.name for q in spark.streams.active}
+
+
 def test_late_data_dropped(spark, tmp_path):
     """K4: a file arriving with event-times far behind the advanced
     watermark must not change closed windows."""
