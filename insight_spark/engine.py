@@ -86,13 +86,6 @@ LOCAL_PERF_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # Every bucketed table this engine writes is a serving-side index
-    # where bucket PRUNING (1-of-n file point lookup) is the point;
-    # auto-bucketed-scan would drop the layout when no join/agg needs
-    # the distribution.  Pinned here so plan shape never depends on
-    # which query ran first (search_index_probe also sets it for
-    # vanilla driver sessions).
-    "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
     # shuffle/spill blocks on the scratch root (tmpfs when available) —

@@ -670,26 +670,18 @@ def search_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership.
 
     The probe filter hits the posting table's bucket column, so the
-    scan is bucket-pruned to 1 of n_buckets files
-    (SelectedBucketsCount plan-asserted in tests/test_plans.py) — a
-    point lookup stays O(index/n_buckets) IO no matter how large the
-    term dictionary grows, which is the property the real ES
-    connector provides and the 100 TB posture needs from a serving
-    stand-in.
+    scan's bucket set keeps 1 of n_buckets files (a file filter on a
+    plain, non-bucketed scan — the lookup is one task; plan-asserted
+    in tests/test_plans.py) — a point lookup stays O(index/n_buckets)
+    IO no matter how large the term dictionary grows, which is the
+    property the real ES connector provides and the 100 TB posture
+    needs from a serving stand-in.
     """
     import re as _re
 
     from insight_spark.sources.sinks import search_term_lookup, write_search_index
 
     tag = _re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    # Auto-bucketed-scan drops bucket layout when no join/agg needs the
-    # distribution — but a point lookup needs it for bucket PRUNING
-    # (1-of-n file scan), so pin bucketed scans on.  Engine-built
-    # sessions already pin this (engine.LOCAL_PERF_CONF, so plan shape
-    # is order-independent in tests/bench); this set covers the
-    # driver's vanilla session, where it must stay set until the
-    # returned lazy probe is executed.
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     tables = write_search_index(
         spark,
         load_table(spark, sf_dir, "documents"),
@@ -730,22 +722,19 @@ def suggest_from_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted suggest table.
 
     The suggest table is bucketed on the 2-char prefix key, so the
-    lookup's prefix2 EQUALITY bucket-prunes to 1 of 8 files
-    (SelectedBucketsCount plan-asserted in tests/test_plans.py) — a
-    suggester query stays O(index/n_buckets) IO however large the term
-    dictionary grows, the same serving property the term point lookup
-    has.  Ranking is document frequency (df desc, term asc): the
-    postings' df column read back from disk, so the hash also proves
-    df survived the write.
+    lookup's prefix2 EQUALITY leaves 1 of 8 files in the scan's bucket
+    set (a file filter: the lookup is one task; plan-asserted in
+    tests/test_plans.py) — a suggester query stays O(index/n_buckets)
+    IO however large the term dictionary grows, the same serving
+    property the term point lookup has.  Ranking is document frequency
+    (df desc, term asc): the postings' df column read back from disk,
+    so the hash also proves df survived the write.
     """
     import re as _re
 
     from insight_spark.sources.sinks import suggest_lookup, write_search_index
 
     tag = _re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    # pin bucketed scans on for vanilla driver sessions (see
-    # search_index_probe) — required for bucket PRUNING on the lookup
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     tables = write_search_index(
         spark,
         load_table(spark, sf_dir, "documents"),
@@ -1538,10 +1527,10 @@ def delta_index_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch is a non-starter; segment merge happens offline.
 
     Docs with doc_id % 10 == 0 play the new arrivals.  Both segments
-    are written through the A7 bucketed sink, the lookup bucket-prunes
-    each side, and the merged posting's df / id-range ride in the
-    value hash — a lost or double-counted posting in EITHER segment
-    breaks it.
+    are written through the A7 bucketed sink, each side's lookup keeps
+    1 of 8 bucket files in its scan's bucket set, and the merged
+    posting's df / id-range ride in the value hash — a lost or
+    double-counted posting in EITHER segment breaks it.
     """
     import re as _re
 
@@ -1551,9 +1540,6 @@ def delta_index_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tag = _re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-    )
     docs = load_table(spark, sf_dir, "documents")
     # The base and delta segment builds are fully independent (disjoint
     # doc subsets, distinct tables/paths) — overlapped from two driver

@@ -81,10 +81,14 @@ def _chunk_dir(spark: SparkSession, sf_dir: str, dup: bool = False) -> str:
 def _drain(spark: SparkSession, stream_df: DataFrame, name: str) -> DataFrame:
     from insight_spark.streaming.core import run_stream_to_memory
 
+    # the memory sink's rows live on the driver, not in the checkpoint
     ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    return run_stream_to_memory(
-        spark, stream_df, name, ckpt, output_mode="complete"
-    )
+    try:
+        return run_stream_to_memory(
+            spark, stream_df, name, ckpt, output_mode="complete"
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(

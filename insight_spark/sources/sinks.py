@@ -22,6 +22,7 @@ term_freq.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +38,15 @@ def _hadoop_fs(spark: SparkSession, path: str):
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _local_dir(out_dir: str) -> str:
+    """``out_dir`` as a local path (a ``file:`` URI maps to its path);
+    any other scheme raises — ``os.replace`` commits are local-only."""
+    url = urlparse(out_dir)
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"out_dir {out_dir!r}: os.replace commits are local-only")
+    return url.path if url.scheme else out_dir
 
 
 def write_partitioned(
@@ -113,7 +123,7 @@ def write_search_index(
         # from the inverted index (an FST keyed by input prefixes); the
         # stand-in keys each term by its 2-char prefix and buckets on
         # it, so a prefix lookup is an EQUALITY on the bucket column
-        # and bucket-prunes to 1 of n files, exactly like the term
+        # and reads 1 of n files in one task, exactly like the term
         # point lookup.  Derived by reading the WRITTEN posting table
         # (one aggregated scan, no re-tokenization).
         suggest = spark.table(post_table).select(
@@ -134,7 +144,8 @@ def write_search_index(
 
 def search_term_lookup(spark: SparkSession, post_table: str, term: str) -> DataFrame:
     """Serving-side read of the A7 index: posting list for one term.
-    Bucket pruning keeps this a single-bucket scan."""
+    The term equality leaves one file in the scan's bucket set, so the
+    lookup is a one-task scan of 1 of n files."""
     return spark.table(post_table).filter(F.col("term") == term)
 
 
@@ -147,10 +158,11 @@ def suggest_lookup(
     deterministic tie key).
 
     ``prefix`` must be >= 2 chars: the equality on the bucketed
-    ``prefix2`` column is what bucket-prunes the scan to 1 of n files;
-    the residual ``startswith`` handles longer prefixes within the
-    pruned bucket (within-bucket rows are term-sorted, so parquet
-    row-group stats skip non-matching ranges)."""
+    ``prefix2`` column leaves 1 of n files in the scan's bucket set (a
+    file filter — the lookup is one task, and the top-k needs no
+    shuffle); the residual ``startswith`` handles longer prefixes
+    within that file (rows are term-sorted, so parquet row-group stats
+    skip non-matching ranges)."""
     if len(prefix) < 2:
         raise ValueError("suggest_lookup needs a prefix of >= 2 chars")
     return (
@@ -325,8 +337,9 @@ def foreach_batch_additive_merge(
     Failure posture: only a MISSING serving version is treated as
     first-batch; any other read error (transient IO, corruption)
     re-raises rather than silently re-initializing the MV from one
-    batch's partials.
+    batch's partials.  A non-local ``out_dir`` raises ``ValueError``.
     """
+    out_dir = _local_dir(out_dir)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         import json
@@ -385,6 +398,7 @@ def read_additive_mv(spark: SparkSession, out_dir: str) -> DataFrame:
     them apart."""
     import json
 
+    out_dir = _local_dir(out_dir)
     pointer = os.path.join(out_dir, "CURRENT")
     try:
         with open(pointer) as fh:

@@ -58,3 +58,15 @@ def registry_builds(spark):
             df._jdf.queryExecution().executedPlan().toString(),
         )
     return builds
+
+
+def file_scans(df) -> list:
+    """The FileSourceScanExec nodes of ``df``'s executed plan."""
+    stack, scans = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            scans.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return scans

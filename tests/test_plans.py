@@ -11,6 +11,7 @@ import contextlib
 import io
 
 from insight_spark.queries import all_queries
+from tests.conftest import file_scans
 
 SF = "/root/testdata/sf0.001"
 
@@ -640,38 +641,45 @@ def test_ivm_join_delta_single_aggregate_exchange(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+def _one_bucket_scan_plan(df) -> str:
+    """Assert ``df``'s single file scan keeps exactly 1 of its table's
+    8 buckets in its bucket set — Spark's file filter, which holds for
+    bucketed and plain scans alike — and that the plan has no
+    Exchange; return the executed-plan string."""
+    scans = file_scans(df)
+    text = df._jdf.queryExecution().executedPlan().toString()
+    assert len(scans) == 1, text
+    bucket_set = scans[0].optionalBucketSet()
+    assert bucket_set.isDefined(), text
+    assert bucket_set.get().cardinality() == 1, text
+    assert scans[0].relation().bucketSpec().get().numBuckets() == 8, text
+    assert "Exchange" not in text, text
+    return text
+
+
 def test_search_index_probe_bucket_pruned(spark):
     """The A7 serving probe must be a bucket-pruned point lookup: a
-    term-equality filter on the bucketed posting table scans exactly
-    1 of the 8 bucket files (SelectedBucketsCount), with the term
+    term-equality filter on the bucketed posting table leaves exactly
+    1 of the 8 bucket files in the scan's bucket set, with the term
     predicate pushed to the parquet scan — the O(index/n_buckets) IO
     property a real search store provides."""
-    import re
-
     from insight_spark.queries import all_queries
 
     df = all_queries()["search_index_probe"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, plan
-    assert m.group(1) == "1" and m.group(2) == "8", plan
+    plan = _one_bucket_scan_plan(df)
     assert "EqualTo(term,the)" in plan, plan
 
 
 def test_suggest_from_index_bucket_pruned(spark):
     """The A7 completion suggester must serve from the written suggest
-    table with a bucket-pruned scan: the prefix2 equality selects
-    exactly 1 of the 8 bucket files, so a suggest query is
-    O(index/n_buckets) IO regardless of term-dictionary size."""
-    import re
-
+    table with a bucket-pruned scan: the prefix2 equality leaves
+    exactly 1 of the 8 bucket files in the scan's bucket set, so a
+    suggest query is O(index/n_buckets) IO regardless of
+    term-dictionary size."""
     from insight_spark.queries import all_queries
 
     df = all_queries()["suggest_from_index"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, plan
-    assert m.group(1) == "1" and m.group(2) == "8", plan
+    plan = _one_bucket_scan_plan(df)
     assert "EqualTo(prefix2,th)" in plan, plan
     # top-k must be TakeOrdered, not a global sort
     assert "TakeOrderedAndProject" in plan, plan

@@ -20,7 +20,7 @@ from insight_spark.sources.sinks import (
     write_partitioned,
     write_search_index,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, file_scans
 
 
 def test_partitioned_parquet_roundtrip(spark, tmp_path):
@@ -72,6 +72,55 @@ def test_search_index_sink_and_lookup(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {tables['docs']}")
     spark.sql(f"DROP TABLE IF EXISTS {tables['postings']}")
     spark.sql(f"DROP TABLE IF EXISTS {tables['suggest']}")
+
+
+def test_index_lookups_are_one_task_and_match_bucketed_scans(spark, tmp_path):
+    """A lookup on the written index is a one-task scan of 1 of the 8
+    bucket files under Spark's default scan mode, and returns the same
+    rows as the 8-task bucketed scan."""
+    from insight_spark.engine import conf_override
+    from insight_spark.sources.sinks import suggest_lookup
+
+    docs = load_table(spark, SF_DIR, "documents")
+    tables = write_search_index(
+        spark, docs, str(tmp_path), n_buckets=8, table_prefix="lookup_fanout"
+    )
+    sug, post = tables["suggest"], tables["postings"]
+    lookups = [  # (name, table read, lookup, expect rows)
+        ("suggest_th", sug, lambda: suggest_lookup(spark, sug, "th"), True),
+        ("suggest_the", sug, lambda: suggest_lookup(spark, sug, "the"), True),
+        ("search_the", post, lambda: search_term_lookup(spark, post, "the"), True),
+        ("search_absent", post, lambda: search_term_lookup(spark, post, "zzqx"), False),
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name, table, lookup, expect_rows in lookups:
+        with conf_override(
+            spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+        ):
+            bucketed = lookup().collect()
+        rows = lookup().collect()
+        assert rows == bucketed, name
+        assert bool(rows) == expect_rows, name
+        df = lookup()
+        group = f"lookup_fanout_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            assert len(df.toPandas()) == len(rows), name
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = [
+            tracker.getStageInfo(st).numTasks
+            for j in jobs
+            for st in tracker.getJobInfo(j).stageIds
+        ]
+        assert (len(jobs), tasks) == (1, [1]), (name, jobs, tasks)
+        (scan,) = file_scans(df)
+        scanned = scan.metrics().apply("numOutputRows").value()
+        assert scanned < spark.table(table).count() / 4, (name, scanned)
+    for table in tables.values():
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_jdbc_standin_writes_ddl(spark, tmp_path):

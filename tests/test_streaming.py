@@ -162,6 +162,36 @@ def test_run_stream_to_memory_stops_a_stream_that_throws(spark, tmp_path):
     assert name not in {q.name for q in spark.streams.active}
 
 
+def test_drain_removes_its_checkpoint(spark, tmp_path):
+    """The shared drain helper of the streaming registry queries leaves
+    no checkpoint dir behind: not after a drain, and not after a drain
+    that throws."""
+    import glob
+
+    from insight_spark.queries import all_queries
+    from insight_spark.queries.streaming_rt import _RT_BASE, _drain
+
+    def ckpts() -> set[str]:
+        return set(glob.glob(os.path.join(_RT_BASE, "ckpt_*")))
+
+    before = ckpts()
+    assert all_queries()["stream_hourly_counts"](spark, SF_DIR).count() > 0
+    assert ckpts() == before
+
+    @F.udf("long")
+    def poison(x):
+        if x == 3:
+            raise ValueError("poison row")
+        return x
+
+    src = str(tmp_path / "src")
+    spark.range(5).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    with pytest.raises(Exception, match="poison row"):
+        _drain(spark, stream.groupBy(poison("id")).count(), "mem_poison_drain")
+    assert ckpts() == before
+
+
 def test_late_data_dropped(spark, tmp_path):
     """K4: a file arriving with event-times far behind the advanced
     watermark must not change closed windows."""
@@ -836,3 +866,26 @@ def test_additive_merge_batch_fencing(spark, tmp_path):
     merge(spark.createDataFrame([("b", 1)], "k string, n long"), 2)
     got = {r["k"]: r["n"] for r in read_additive_mv(spark, out).collect()}
     assert got == {"a": 7, "b": 4}, got
+
+
+def test_additive_merge_refuses_uri_out_dir(spark, tmp_path):
+    """The additive MV commits through os calls, so a non-local
+    out_dir is refused when the merge is built (not mid-stream) and on
+    read; a file: URI is the local path it names."""
+    from insight_spark.sources.sinks import (
+        foreach_batch_additive_merge,
+        read_additive_mv,
+    )
+
+    for remote in ("hdfs://nn:8020/mv", "s3a://bucket/mv"):
+        with pytest.raises(ValueError, match="os.replace"):
+            foreach_batch_additive_merge(remote, ["k"], ["n"])
+        with pytest.raises(ValueError, match="os.replace"):
+            read_additive_mv(spark, remote)
+    local = tmp_path / "mv"
+    merge = foreach_batch_additive_merge(local.as_uri(), ["k"], ["n"])
+    merge(spark.createDataFrame([("a", 2)], "k string, n long"), 0)
+    merge(spark.createDataFrame([("a", 5)], "k string, n long"), 1)
+    assert (local / "CURRENT").is_file()
+    got = {r["k"]: r["n"] for r in read_additive_mv(spark, str(local)).collect()}
+    assert got == {"a": 7}, got
