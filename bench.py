@@ -72,29 +72,24 @@ def sweep_order(registry) -> list[str]:
 
 
 def build_query(spark, name: str, fn, sf_dir: str):
-    """Build one query under its own job group; return ``(df, rebuild)``.
+    """Build one query; return ``(df, rebuild)``.
 
     ``rebuild`` is True when building submitted at least one Spark job:
     the operation (iterative rounds, stream drains, sink writes,
     eager checkpoints) then runs while the DataFrame is being BUILT, so
     a fair timing must rebuild inside the timed region instead of
     re-collecting a finished result.  (r1 under-reported
-    near_dup_clusters for exactly this reason.)  Driver-thread overlap
-    writes go through ``engine.run_concurrently``, which keeps the job
-    group, so their jobs count too.  Call after the fixture schemas are
+    near_dup_clusters for exactly this reason.)  Jobs are counted on
+    the scheduler, not by job group: a stream drain's micro-batch jobs
+    run on the stream's own thread under the stream's own job group.
+    The bench builds one query at a time, so every job submitted while
+    ``fn`` runs is the build's.  Call after the fixture schemas are
     warm (``load_tables``): a table's first load runs a one-off schema
     job that says nothing about the query."""
-    sc = spark.sparkContext
-    group = f"bench-build-{name}"
-    sc.setJobGroup(group, f"bench build {name}")
-    try:
-        df = fn(spark, sf_dir)
-    finally:
-        sc.setJobGroup(None, None)
-    # job-start events reach the status store through the async
-    # listener bus; drain it so no finished build job is missed
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return df, bool(sc.statusTracker().getJobIdsForGroup(group))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    submitted = scheduler.numTotalJobs()
+    df = fn(spark, sf_dir)
+    return df, scheduler.numTotalJobs() > submitted
 
 
 class _SkipStages(Exception):

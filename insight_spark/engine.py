@@ -160,15 +160,12 @@ def conf_override(spark: SparkSession, conf: dict[str, str]):
     256-byte advisory partition size, a disabled broadcast threshold)
     would silently re-plan every query that runs later — the defect
     class the determinism gate's conf-isolation leg pins.  One shared
-    implementation so the try/except-None/unset restore contract lives
-    in exactly one place (used by queries/optimizer_rt.py and the
-    probe-restoration tests)."""
-    old: dict[str, str | None] = {}
-    for k in conf:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
+    implementation so the restore contract lives in exactly one place
+    (used by queries/optimizer_rt.py, queries/streaming_rt.py and the
+    probe-restoration tests).  An unset key is read as ``None`` and
+    unset again on exit: a plain ``get`` would return a registered
+    key's default, and restoring that would leave the key set."""
+    old = {k: spark.conf.get(k, None) for k in conf}
     try:
         for k, v in conf.items():
             spark.conf.set(k, v)

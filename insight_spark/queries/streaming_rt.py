@@ -28,17 +28,21 @@ instead of only by tests.
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import json
 import os
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from insight_spark.engine import scratch_base
+from insight_spark.engine import conf_override, scratch_base
 from insight_spark.queries import query
 from insight_spark.sources import load_table
+from insight_spark.streaming.core import run_stream_to_memory, run_to_completion
 
 #: Stream fixtures + checkpoints live on the node-local scratch root
 #: (tmpfs when available — the drains' fixed cost is small-file churn,
@@ -47,25 +51,26 @@ from insight_spark.sources import load_table
 _RT_BASE = os.path.join(scratch_base(), "stream_rt")
 os.makedirs(_RT_BASE, exist_ok=True)
 
+#: The shuffle-partition conf a stateful drain pins into its checkpoint.
+_PARTS = "spark.sql.shuffle.partitions"
+
 
 def _chunk_dir(spark: SparkSession, sf_dir: str, dup: bool = False) -> str:
     """Get-or-create the chunked stream input for a fixture dir.
 
-    Chunks are content-addressed by (sf_dir, dup, fixture row count,
-    source-file size+mtime) so a fixture swap invalidates stale chunks
-    even when the refreshed fixture keeps the same row count (driver
-    fixture drift between rounds is an established pattern); reuse
-    across queries in the same round avoids rewriting per
-    determinism-rerun.  ``dup`` additionally copies every chunk file —
-    duplicate arrivals for the exactly-once dedup query.
+    Chunks are content-addressed by (sf_dir, dup, the single fixture
+    file's size + mtime) — a file stat, no Spark job — so a fixture
+    swap invalidates stale chunks (driver fixture drift between rounds
+    is an established pattern); reuse across queries in the same round
+    avoids rewriting per determinism-rerun.  ``dup`` additionally
+    copies every chunk file — duplicate arrivals for the exactly-once
+    dedup query.
     """
     from insight_spark.streaming.core import prepare_stream_input
 
-    n = load_table(spark, sf_dir, "events").count()
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    digest = f"{st.st_size}|{st.st_mtime_ns}"
-    tag = hashlib.md5(f"{sf_dir}|{dup}|{n}|{digest}".encode()).hexdigest()[:12]
+    st = os.stat(os.path.join(sf_dir, "events.parquet"))
+    key = f"{sf_dir}|{dup}|{st.st_size}|{st.st_mtime_ns}"
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
     out = os.path.join(_RT_BASE, tag)
     marker = os.path.join(out, "_READY")
     if not os.path.exists(marker):
@@ -78,17 +83,41 @@ def _chunk_dir(spark: SparkSession, sf_dir: str, dup: bool = False) -> str:
     return out
 
 
-def _drain(spark: SparkSession, stream_df: DataFrame, name: str) -> DataFrame:
-    from insight_spark.streaming.core import run_stream_to_memory
-
-    # the memory sink's rows live on the driver, not in the checkpoint
+@contextmanager
+def _checkpoint_dir():
+    """A fresh stream checkpoint dir under ``_RT_BASE``, removed on
+    exit — after a drain that throws too.  Anything that reads the
+    checkpoint (statestore/state-metadata reader, offsets log) reads it
+    eagerly inside the ``with`` block."""
     ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
     try:
-        return run_stream_to_memory(
-            spark, stream_df, name, ckpt, output_mode="complete"
-        )
+        yield ckpt
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _drain(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    name: str,
+    output_mode: str = "complete",
+) -> DataFrame:
+    """Drain ``stream_df`` into the memory sink ``name`` on a throwaway
+    checkpoint: the sink's rows live on the driver, not in it."""
+    with _checkpoint_dir() as ckpt:
+        return run_stream_to_memory(spark, stream_df, name, ckpt, output_mode)
+
+
+def _committed_conf(ckpt: str) -> dict[str, str]:
+    """The session conf pinned by the checkpoint's latest offsets entry.
+
+    OffsetSeq file layout (positional, ADVICE r11): line 1 is the format
+    version tag, line 2 the metadata JSON carrying the pinned conf,
+    line 3+ the per-source offsets."""
+    offsets = os.path.join(ckpt, "offsets")
+    latest = max((f for f in os.listdir(offsets) if f.isdigit()), key=int)
+    with open(os.path.join(offsets, latest)) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
 
 
 @query(
@@ -168,7 +197,6 @@ _SENTINEL_USER = -1
 
 def _chunk_dir_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     """Chunked stream input plus a trailing far-future sentinel chunk."""
-    from insight_spark.sources import load_table
     from insight_spark.streaming.core import write_single_parquet
 
     base = _chunk_dir(spark, sf_dir)
@@ -238,10 +266,7 @@ def stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel's own session is filtered from the result.  Parity with
     the batch lag-gap oracle proves merge + eviction semantics exact.
     """
-    from insight_spark.streaming.core import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from insight_spark.streaming.core import read_events_stream
 
     # 2 files per trigger (3 micro-batches over 4 chunks + sentinel):
     # session-window state still merges across batch boundaries and
@@ -261,8 +286,7 @@ def stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "mem_sess_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    out = run_stream_to_memory(spark, agg, name, ckpt, output_mode="append")
+    out = _drain(spark, agg, name, output_mode="append")
     return out.filter(F.col("user_id") != _SENTINEL_USER)
 
 
@@ -285,11 +309,7 @@ def stream_sliding_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the batch explode-form oracle proves overlapping-window state
     and eviction agree with batch semantics.
     """
-    from insight_spark.sources import load_table
-    from insight_spark.streaming.core import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from insight_spark.streaming.core import read_events_stream
 
     # 2 files per trigger — same slicing argument as the session query.
     events = read_events_stream(
@@ -302,8 +322,7 @@ def stream_sliding_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
     name = "mem_slide_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    out = run_stream_to_memory(spark, agg, name, ckpt, output_mode="append")
+    out = _drain(spark, agg, name, output_mode="append")
     [hi] = (
         load_table(spark, sf_dir, "events")
         .agg(F.max("ts").alias("hi"))
@@ -339,7 +358,6 @@ def stream_static_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the batch join oracle proves per-batch enrichment composes
     to exactly the batch result.
     """
-    from insight_spark.sources import load_table
     from insight_spark.streaming.core import read_events_stream
 
     dim = (
@@ -421,10 +439,7 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing no-data batch).  A leak would either re-emit
     closed windows (duplicate rows -> row-count mismatch) or inflate
     counts (value-hash mismatch)."""
-    from insight_spark.streaming.core import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from insight_spark.streaming.core import read_events_stream
 
     events = read_events_stream(
         spark, _chunk_dir_with_late(spark, sf_dir), max_files_per_trigger=2
@@ -438,8 +453,7 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "mem_late_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    out = run_stream_to_memory(spark, agg, name, ckpt, output_mode="append")
+    out = _drain(spark, agg, name, output_mode="append")
     return out.filter(F.col("event_type") != "sentinel")
 
 
@@ -500,10 +514,7 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     K4 ``stream_late_drop``: the redelivery is days behind even the
     pre-sentinel watermark, so ``n_late`` is slicing-independent.
     """
-    from insight_spark.streaming.core import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from insight_spark.streaming.core import read_events_stream
 
     in_dir = _chunk_dir_with_late(spark, sf_dir)
     events = read_events_stream(spark, in_dir, max_files_per_trigger=2)
@@ -516,10 +527,9 @@ def stream_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "mem_wma_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    accepted = run_stream_to_memory(
-        spark, agg, name, ckpt, output_mode="append"
-    ).filter(F.col("event_type") != "sentinel")
+    accepted = _drain(spark, agg, name, output_mode="append").filter(
+        F.col("event_type") != "sentinel"
+    )
     delivered = (
         spark.read.parquet(os.path.join(in_dir, "*.parquet"))
         .filter(F.col("event_type") != "sentinel")
@@ -576,7 +586,6 @@ def stream_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_spark.streaming.core import (
         purchase_click_join_stream,
         read_events_stream,
-        run_stream_to_memory,
     )
 
     events = read_events_stream(
@@ -584,8 +593,7 @@ def stream_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = purchase_click_join_stream(events)
     name = "mem_ssj_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    return run_stream_to_memory(spark, joined, name, ckpt, output_mode="append")
+    return _drain(spark, joined, name, output_mode="append")
 
 
 @query(
@@ -622,7 +630,6 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from insight_spark.streaming.core import (
         read_events_stream,
-        run_stream_to_memory,
         user_totals_stateful,
     )
 
@@ -631,8 +638,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     totals = user_totals_stateful(events)
     name = "mem_state_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    out = run_stream_to_memory(spark, totals, name, ckpt, output_mode="update")
+    out = _drain(spark, totals, name, output_mode="update")
     return (
         out.groupBy("user_id")
         .agg(
@@ -686,15 +692,13 @@ def stream_upsert_user_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"), F.max("ts").alias("last_ts"))
     )
     out_dir = tempfile.mkdtemp(prefix="upsert_", dir=_RT_BASE)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    q = (
-        agg.writeStream.foreachBatch(foreach_batch_upsert(out_dir, ["user_id"]))
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    with _checkpoint_dir() as ckpt:
+        run_to_completion(
+            agg.writeStream.foreachBatch(
+                foreach_batch_upsert(out_dir, ["user_id"])
+            ).outputMode("update"),
+            ckpt,
+        )
     return spark.read.parquet(os.path.join(out_dir, "serving"))
 
 
@@ -732,15 +736,12 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sentinel file's mtime is newest so it stays LAST): the inner
     path is slicing-invariant, and the eviction path still runs after
     the sentinel batch advances both watermarks (null emissions land
-    in the trailing no-data micro-batch, which
-    ``processAllAvailable`` drains); the coarser slicing only
+    in the trailing no-data micro-batch, which the drain runs to
+    completion); the coarser slicing only
     amortizes the fixed per-trigger cost of the two join-state
     commits per batch.
     """
-    from insight_spark.streaming.core import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
+    from insight_spark.streaming.core import read_events_stream
 
     events = read_events_stream(
         spark, _chunk_dir_with_sentinel(spark, sf_dir), max_files_per_trigger=2
@@ -778,8 +779,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("click_id"), F.lit(-1)).alias("click_id"),
     )
     name = "mem_sslj_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    out = run_stream_to_memory(spark, joined, name, ckpt, output_mode="append")
+    out = _drain(spark, joined, name, output_mode="append")
     return out.filter(F.col("p_user") != _SENTINEL_USER)
 
 
@@ -827,7 +827,6 @@ def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_spark.streaming.core import (
         funnel_stage_stateful,
         read_events_stream,
-        run_stream_to_memory,
     )
 
     # 2 files per trigger (2 micro-batches over the 4 ts-ordered
@@ -840,8 +839,7 @@ def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stages = funnel_stage_stateful(events)
     name = "mem_funnel_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
-    out = run_stream_to_memory(spark, stages, name, ckpt, output_mode="update")
+    out = _drain(spark, stages, name, output_mode="update")
     return out.groupBy("user_id").agg(
         F.max("funnel_stage").alias("funnel_stage")
     )
@@ -883,7 +881,6 @@ def stream_mv_additive_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, _chunk_dir(spark, sf_dir))
     out_dir = tempfile.mkdtemp(prefix="mvmerge_", dir=_RT_BASE)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
 
     def partials_then_merge(batch_df, batch_id):
         p = batch_df.groupBy(
@@ -899,13 +896,8 @@ def stream_mv_additive_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_dir, ["hour", "event_type"], ["n_events", "_sv"]
         )(p, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(partials_then_merge)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    with _checkpoint_dir() as ckpt:
+        run_to_completion(events.writeStream.foreachBatch(partials_then_merge), ckpt)
     mv = read_additive_mv(spark, out_dir)
     return mv.select(
         "hour",
@@ -1057,7 +1049,6 @@ def stream_manifest_sink_versions(spark: SparkSession, sf_dir: str) -> DataFrame
     events = read_events_stream(spark, _chunk_dir(spark, sf_dir))
     tbl = tempfile.mkdtemp(prefix="mani_sink_", dir=_RT_BASE)
     shutil.rmtree(tbl, ignore_errors=True)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=_RT_BASE)
 
     def commit_batch(batch_df, batch_id: int) -> None:
         # one manifest version per micro-batch; expected_version derives
@@ -1069,14 +1060,11 @@ def stream_manifest_sink_versions(spark: SparkSession, sf_dir: str) -> DataFrame
             op=f"stream-epoch-{batch_id}",
         )
 
-    q = (
-        events.writeStream.foreachBatch(commit_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    with _checkpoint_dir() as ckpt:
+        run_to_completion(
+            events.writeStream.foreachBatch(commit_batch).outputMode("append"),
+            ckpt,
+        )
     n_versions = latest_version(tbl)
     return (
         read_snapshot(spark, tbl)
@@ -1257,9 +1245,6 @@ def stream_state_rescale_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     criterion is exactly this query's: same key set, same totals,
     conservation under re-partitioning.
     """
-    import glob
-    import json
-
     from insight_spark.sources.sinks import foreach_batch_upsert
     from insight_spark.streaming.core import read_events_stream
 
@@ -1272,10 +1257,9 @@ def stream_state_rescale_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(staged)
 
-    def _run(n_parts: int) -> None:
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        try:
+    def _run(n_parts: int) -> int:
+        """Drain at ``n_parts`` requested; the count the checkpoint ran at."""
+        with conf_override(spark, {_PARTS: str(n_parts)}):
             # 2 files per trigger: the count monoid is slicing-
             # invariant and the audit's invariants (committed conf,
             # state-key conservation across the restart) are
@@ -1285,43 +1269,20 @@ def stream_state_rescale_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("user_id")
                 .agg(F.count("*").cast("long").alias("n_events"))
             )
-            q = (
+            run_to_completion(
                 agg.writeStream.foreachBatch(
                     foreach_batch_upsert(serving, ["user_id"])
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
+                ).outputMode("update"),
+                ckpt,
             )
-            q.processAllAvailable()
-            q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-
-    def _committed_parts() -> int:
-        # OffsetSeq file layout (positional, ADVICE r11): line 1 is the
-        # format version tag, line 2 is the metadata JSON carrying the
-        # pinned conf, line 3+ are per-source offsets.
-        latest = max(
-            (
-                f
-                for f in glob.glob(os.path.join(ckpt, "offsets", "*"))
-                if os.path.basename(f).isdigit()
-            ),
-            key=lambda f: int(os.path.basename(f)),
-        )
-        lines = open(latest).read().splitlines()
-        meta = json.loads(lines[1])
-        return int(meta["conf"]["spark.sql.shuffle.partitions"])
+        return int(_committed_conf(ckpt)[_PARTS])
 
     for c in chunks[:2]:
         shutil.copy(c, staged)
-    _run(8)
-    parts_run1 = _committed_parts()
+    parts_run1 = _run(8)
     for c in chunks[2:]:
         shutil.copy(c, staged)
-    _run(32)  # the rescale request the engine must refuse silently
-    parts_run2 = _committed_parts()
+    parts_run2 = _run(32)  # the rescale request the engine must refuse silently
 
     n_state_keys = (
         spark.read.format("statestore")
@@ -1398,11 +1359,8 @@ def stream_state_migration_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
       the final serving view equal the batch aggregate over ALL
       events — no loss, no double count across the migration.
     """
-    import glob as _glob
-    import json as _json
-
     chunks = sorted(
-        _glob.glob(os.path.join(_chunk_dir(spark, sf_dir), "*.parquet"))
+        glob.glob(os.path.join(_chunk_dir(spark, sf_dir), "*.parquet"))
     )
     base = tempfile.mkdtemp(prefix="migrate_", dir=_RT_BASE)
     in1 = os.path.join(base, "in1")
@@ -1423,16 +1381,15 @@ def stream_state_migration_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     def _stage(df, dest_dir, name):
         tmp = os.path.join(base, "stage_" + name)
         df.coalesce(1).write.parquet(tmp)
-        for f in _glob.glob(os.path.join(tmp, "*.parquet")):
+        for f in glob.glob(os.path.join(tmp, "*.parquet")):
             shutil.copy(f, os.path.join(dest_dir, name + ".parquet"))
 
     for i, c in enumerate(chunks[:2]):
         _stage(_weighted(spark.read.parquet(c)), in1, f"c{i}")
 
-    def _run(src_dir: str, ckpt: str, n_parts: int, sink: str) -> None:
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        try:
+    def _run(src_dir: str, ckpt: str, n_parts: int, sink: str) -> int:
+        """Drain at ``n_parts``; the count the checkpoint ran at."""
+        with conf_override(spark, {_PARTS: str(n_parts)}):
             # 2 files per trigger: SUM(w)/SUM(vu) are commutative
             # monoids, so the migrated totals are slicing-invariant.
             agg = (
@@ -1445,36 +1402,11 @@ def stream_state_migration_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
                     F.sum("vu").cast("long").alias("vu"),
                 )
             )
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-
-    def _committed_parts(ckpt: str) -> int:
-        # OffsetSeq file layout (positional, ADVICE r11): line 1 =
-        # version tag, line 2 = metadata JSON with the pinned conf.
-        latest = max(
-            (
-                f
-                for f in _glob.glob(os.path.join(ckpt, "offsets", "*"))
-                if os.path.basename(f).isdigit()
-            ),
-            key=lambda f: int(os.path.basename(f)),
-        )
-        lines = open(latest).read().splitlines()
-        meta = _json.loads(lines[1])
-        return int(meta["conf"]["spark.sql.shuffle.partitions"])
+            run_stream_to_memory(spark, agg, sink, ckpt, output_mode="update")
+        return int(_committed_conf(ckpt)[_PARTS])
 
     ck1 = os.path.join(base, "ck1")
-    _run(in1, ck1, 8, "mig1_" + tag)
-    parts_before = _committed_parts(ck1)
+    parts_before = _run(in1, ck1, 8, "mig1_" + tag)
 
     # EXPORT: typed agg state (key.user_id, buffer sums in declaration
     # order) re-encoded as weighted seed records.  BOTH buffer fields
@@ -1500,8 +1432,7 @@ def stream_state_migration_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         _stage(_weighted(spark.read.parquet(c)), in2, f"c{i + 2}")
 
     ck2 = os.path.join(base, "ck2")
-    _run(in2, ck2, 16, "mig2_" + tag)
-    parts_after = _committed_parts(ck2)
+    parts_after = _run(in2, ck2, 16, "mig2_" + tag)
     # beyond_old_layout assumes SOME user key hashes to a partition id
     # >= 8 of the 16 — certain for the fixture tiers (hundreds+ of
     # distinct user_ids; P(all on partitions 0-7) = 0.5^n_users), but a
@@ -1587,12 +1518,10 @@ def stream_rocksdb_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     RocksDB state round-trip (put → commit → get at the next batch)
     is exercised across the remaining boundary.
     """
-    import glob as _glob
-    import json as _json
-
     from insight_spark.streaming.core import read_events_stream
 
     in_dir = _chunk_dir(spark, sf_dir)
+    # kept after the query: its on-disk RocksDB artifacts are evidence
     ckpt = tempfile.mkdtemp(prefix="ckpt_rocks_", dir=_RT_BASE)
     name = "mem_rocks_" + hashlib.md5((sf_dir + ckpt).encode()).hexdigest()[:8]
     provider_conf = "spark.sql.streaming.stateStore.providerClass"
@@ -1600,45 +1529,18 @@ def stream_rocksdb_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_provider = spark.conf.get(provider_conf, None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set(provider_conf, rocksdb)
-    try:
+    with conf_override(spark, {_PARTS: "8", provider_conf: rocksdb}):
         agg = (
             read_events_stream(spark, in_dir, max_files_per_trigger=2)
             .groupBy("user_id")
             .agg(F.count("*").cast("long").alias("n"))
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if old_provider is None:
-            spark.conf.unset(provider_conf)
-        else:
-            spark.conf.set(provider_conf, old_provider)
+        out = run_stream_to_memory(spark, agg, name, ckpt, output_mode="complete")
 
-    # committed offsets metadata (positional: line 2) — the engine's
-    # own record of the provider the state was written with
-    latest = max(
-        (
-            f
-            for f in _glob.glob(os.path.join(ckpt, "offsets", "*"))
-            if os.path.basename(f).isdigit()
-        ),
-        key=lambda f: int(os.path.basename(f)),
-    )
-    meta = _json.loads(open(latest).read().splitlines()[1])
-    provider = meta["conf"][provider_conf].rsplit(".", 1)[-1]
-    parts = int(meta["conf"]["spark.sql.shuffle.partitions"])
+    # the engine's own record of the provider the state was written with
+    committed = _committed_conf(ckpt)
+    provider = committed[provider_conf].rsplit(".", 1)[-1]
+    parts = int(committed[_PARTS])
     n_state_keys = (
         spark.read.format("statestore")
         .load(ckpt)
@@ -1646,7 +1548,7 @@ def stream_rocksdb_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .count()
     )
-    return spark.table(name).agg(
+    return out.agg(
         F.lit(provider).alias("provider"),
         F.lit(parts).cast("int").alias("state_partitions"),
         F.count("*").cast("long").alias("n_users"),
@@ -1700,52 +1602,36 @@ def stream_state_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_spark.streaming.core import read_events_stream
 
     in_dir = _chunk_dir(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_md_", dir=_RT_BASE)
-    name = "mem_md_" + hashlib.md5((sf_dir + ckpt).encode()).hexdigest()[:8]
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        deduped = (
-            read_events_stream(spark, in_dir, max_files_per_trigger=2)
-            .withWatermark("ts", "24 hours")
-            .dropDuplicates(["event_id"])
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-        )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    with _checkpoint_dir() as ckpt:
+        name = "mem_md_" + hashlib.md5((sf_dir + ckpt).encode()).hexdigest()[:8]
+        with conf_override(spark, {_PARTS: "8"}):
+            deduped = (
+                read_events_stream(spark, in_dir, max_files_per_trigger=2)
+                .withWatermark("ts", "24 hours")
+                .dropDuplicates(["event_id"])
+                .groupBy("event_type")
+                .agg(F.count("*").alias("n"))
+            )
+            run_stream_to_memory(spark, deduped, name, ckpt, output_mode="complete")
 
-    ops = (
-        spark.read.format("state-metadata")
-        .load(ckpt)
-        .select("operatorId", "operatorName", "stateStoreName", "numPartitions")
-        .collect()
-    )  # catalog-sized: one row per stateful operator
-    rows = []
-    for op in ops:
-        n_keys = (
-            spark.read.format("statestore")
-            .option("operatorId", op["operatorId"])
+        ops = (
+            spark.read.format("state-metadata")
             .load(ckpt)
-            .count()
-        )
-        rows.append(
+            .select("operatorId", "operatorName", "stateStoreName", "numPartitions")
+            .collect()
+        )  # catalog-sized: one row per stateful operator
+        rows = [
             (
                 op["operatorName"],
                 op["stateStoreName"],
                 op["numPartitions"],
-                n_keys,
+                spark.read.format("statestore")
+                .option("operatorId", op["operatorId"])
+                .load(ckpt)
+                .count(),
             )
-        )
+            for op in ops
+        ]
     return spark.createDataFrame(
         rows,
         "operator_name string, state_store_name string, "

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 #: events schema *after* the ns-ts repair (streams carry proper timestamps).
 EVENTS_SCHEMA = T.StructType(
@@ -306,6 +307,21 @@ def user_totals_tws(events: DataFrame) -> DataFrame:
     )
 
 
+def run_to_completion(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """Start a configured stream writer on ``checkpoint_dir`` and drain
+    every pending input (``processAllAvailable``, test-harness use).
+
+    The one place the engine drives a stream: the query is stopped in a
+    ``finally``, so a stream that throws re-raises its error without
+    staying in ``spark.streams.active`` holding its name and checkpoint.
+    """
+    q = writer.option("checkpointLocation", checkpoint_dir).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def run_stream_to_memory(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -313,25 +329,20 @@ def run_stream_to_memory(
     checkpoint_dir: str,
     output_mode: str = "append",
 ) -> DataFrame:
-    """K8/A10: drive a stream to completion into an in-memory sink.
+    """K8/A10: drive a stream to completion into an in-memory sink
+    (:func:`run_to_completion`) and return the sink's table.
 
-    ``processAllAvailable`` drains every pending file (test harness
-    use); production sinks go through ``foreachBatch`` upserts instead
-    (see sinks.foreach_batch_upsert).  A stream that throws is stopped
-    before its error re-raises, so it never stays in
-    ``spark.streams.active`` holding its query name.
+    Production sinks go through ``foreachBatch`` upserts instead (see
+    sinks.foreach_batch_upsert).  The memory sink's rows live on the
+    driver, so the caller may remove ``checkpoint_dir`` once this
+    returns.
     """
-    q = (
+    run_to_completion(
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        .outputMode(output_mode),
+        checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 

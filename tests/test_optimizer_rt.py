@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from insight_spark.engine import conf_override, conf_snapshot
+from insight_spark.engine import LOCAL_PERF_CONF, conf_override, conf_snapshot
 from insight_spark.queries import all_queries
 from insight_spark.queries.optimizer_rt import (
     BHJ_PROBE_CONF,
@@ -37,6 +37,12 @@ _SHUFFLE_ONLY = {
 }
 
 
+#: Probe keys the engine session leaves unset (registered keys with a
+#: default, e.g. skewJoin.skewedPartitionFactor): restoring them must
+#: unset them again, not pin their defaults.
+_UNSET_PROBE_KEYS = tuple(k for k in _PROBE_CONFS if k not in LOCAL_PERF_CONF)
+
+
 def _q(name):
     return all_queries()[name]
 
@@ -50,11 +56,15 @@ def test_probe_confs_restored(spark, name):
     """Queries share one session with the whole registry — a leaked
     256-byte advisory partition size or a disabled broadcast threshold
     would silently re-plan every later query."""
+    for k in _UNSET_PROBE_KEYS:
+        spark.conf.unset(k)
     before = conf_snapshot(spark, _PROBE_CONFS)
     _q(name)(spark, SF_DIR).collect()
     assert conf_snapshot(spark, _PROBE_CONFS) == before, (
         f"{name} leaked session confs"
     )
+    left_set = [k for k in _UNSET_PROBE_KEYS if spark.conf.get(k, None) is not None]
+    assert not left_set, f"{name} left unset confs set: {left_set}"
 
 
 def test_skew_audit_values_and_whale_mass(spark):

@@ -25,7 +25,7 @@ from insight_spark.streaming import (
     sessionize_stream,
     stream_dedup,
 )
-from insight_spark.streaming.core import write_single_parquet
+from insight_spark.streaming.core import run_to_completion, write_single_parquet
 from tests.conftest import SF_DIR
 from tests.oracle_harness import canonical_rows
 
@@ -140,13 +140,17 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
 
 def test_run_stream_to_memory_stops_a_stream_that_throws(spark, tmp_path):
     """A drain whose stream fails re-raises the failure and leaves no
-    query holding its name in spark.streams.active."""
+    query holding its name in spark.streams.active: a memory sink whose
+    rows throw, and a foreachBatch writer whose batch function throws."""
 
     @F.udf("long")
     def poison(x):
         if x == 3:
             raise ValueError("poison row")
         return x
+
+    def poison_batch(batch_df, batch_id):
+        raise ValueError("poison batch")
 
     src = str(tmp_path / "src")
     spark.range(5).write.parquet(src)
@@ -161,11 +165,26 @@ def test_run_stream_to_memory_stops_a_stream_that_throws(spark, tmp_path):
         )
     assert name not in {q.name for q in spark.streams.active}
 
+    with pytest.raises(Exception, match="poison batch"):
+        run_to_completion(
+            stream.writeStream.foreachBatch(poison_batch),
+            str(tmp_path / "ckpt_fb"),
+        )
+    assert not spark.streams.active
 
-def test_drain_removes_its_checkpoint(spark, tmp_path):
-    """The shared drain helper of the streaming registry queries leaves
-    no checkpoint dir behind: not after a drain, and not after a drain
-    that throws."""
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_hourly_counts",  # complete-mode memory sink
+        "stream_session_append",  # append-mode memory sink
+        "stream_upsert_user_latest",  # foreachBatch sink
+        "stream_state_metadata_audit",  # reads its checkpoint after the drain
+    ],
+)
+def test_drain_removes_its_checkpoint(spark, tmp_path, name):
+    """A streaming registry query leaves no checkpoint dir behind, and
+    neither does the shared drain helper after a drain that throws."""
     import glob
 
     from insight_spark.queries import all_queries
@@ -175,7 +194,7 @@ def test_drain_removes_its_checkpoint(spark, tmp_path):
         return set(glob.glob(os.path.join(_RT_BASE, "ckpt_*")))
 
     before = ckpts()
-    assert all_queries()["stream_hourly_counts"](spark, SF_DIR).count() > 0
+    assert all_queries()[name](spark, SF_DIR).count() > 0
     assert ckpts() == before
 
     @F.udf("long")
@@ -190,6 +209,37 @@ def test_drain_removes_its_checkpoint(spark, tmp_path):
     with pytest.raises(Exception, match="poison row"):
         _drain(spark, stream.groupBy(poison("id")).count(), "mem_poison_drain")
     assert ckpts() == before
+
+
+def test_warm_chunk_dir_runs_no_spark_job(spark):
+    """Once its chunks exist, the stream input cache answers from a
+    file stat: a warm call runs no Spark job."""
+    from insight_spark.queries.streaming_rt import _chunk_dir
+
+    cold = _chunk_dir(spark, SF_DIR)
+    sc = spark.sparkContext
+    group = "warm_chunk_dir"
+    sc.setJobGroup(group, group)
+    try:
+        assert _chunk_dir(spark, SF_DIR) == cold
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_only_the_stream_core_drives_streams():
+    """Every stream in the engine is drained by streaming/core.py's
+    run_to_completion, which stops the query on failure; a second
+    hand-written start/processAllAvailable/stop would not."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "insight_spark"
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if ".processAllAvailable()" in p.read_text()
+    )
+    assert callers == ["streaming/core.py"]
 
 
 def test_late_data_dropped(spark, tmp_path):
