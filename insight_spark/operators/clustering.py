@@ -5,24 +5,26 @@
 Design for 100 TB, mirroring how Spark MLlib trains KMeans:
 
 - **Centroids live on the driver** (K·d values — KB-scale even at
-  K=32k, d=1k) and are inlined into the assignment projection as a
-  literal ``array<struct>``; each corpus row scores all K cells with a
-  single ``transform`` — zero joins, zero shuffles, zero extra rows
-  (the same no-crossJoin pattern as ``similarity.ivf_assign``).
+  K=32k, d=1k) and are closed over by the assignment's
+  ``mapInPandas``: each Arrow batch scores all K cells with one GEMM —
+  zero joins, zero shuffles, zero extra rows, and no per-row
+  expression tree that grows with K·d.
 - **The update step is a map-side-combined aggregate**: posexplode to
   (cell, dim, value) is a projection, and the groupBy(cell, dim) sum
   partially aggregates to K·d rows per task before the (tiny) shuffle.
   Per iteration the cluster moves K·d numbers, not data.
 - **All arithmetic is exact integer math.** Coordinates are quantized
-  to 1e-6 units (micro-ints) once at load: distances are BIGINT sums of
-  squared BIGINT diffs, centroid updates are floor(sum/n + 0.5) — no
-  float accumulation anywhere, so results are bit-identical regardless
-  of partitioning, engine, or summation order (the property that makes
-  the DuckDB value-oracle exact; float sums are order-nondeterministic
-  under Spark's partial aggregation).  Micro-unit quantization costs
-  ~1e-6 relative precision — noise next to k-means' own local-optimum
-  variance.  Headroom: per-point distances fit BIGINT up to ~1e18;
-  inertia sums beyond ~1e9 points/cluster should widen to DECIMAL(38,0).
+  to 1e-6 units (micro-ints) once at load: distances are exact integer
+  sums (computed in float64 below 2^53, see ``assign_cells``), centroid
+  updates are floor(sum/n + 0.5) — no inexact float accumulation
+  anywhere, so results are bit-identical regardless of partitioning,
+  engine, or summation order (the property that makes the DuckDB
+  value-oracle exact; float sums are order-nondeterministic under
+  Spark's partial aggregation).  Micro-unit quantization costs ~1e-6
+  relative precision — noise next to k-means' own local-optimum
+  variance.  Headroom: per-point distances stay exact in float64 up to
+  2^53 (~9e15; ~1e15 at d=64); inertia sums beyond ~1e9
+  points/cluster should widen to DECIMAL(38,0).
 """
 
 from __future__ import annotations
@@ -56,36 +58,62 @@ def sq_dist_micro(a: Column, b: Column) -> Column:
     )
 
 
-def _inline_centroids(cents: list[tuple[int, list[int]]]) -> Column:
-    """Driver-resident centroids → literal array<struct<cid, c>>."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(cid)).alias("cid"),
-                F.array(*[F.lit(int(v)) for v in c]).alias("c"),
-            )
-            for cid, c in cents
-        ]
-    )
-
-
 def assign_cells(
     df: DataFrame, cents: list[tuple[int, list[int]]], vec_col: str = "e"
 ) -> DataFrame:
-    """Tag each row with (cell, dist): argmin over the inlined centroid
-    array via ``array_sort`` on (dist, cid) structs — deterministic
-    integer tie-break, single Project, no shuffle."""
-    scores = F.transform(
-        _inline_centroids(cents),
-        lambda c: F.struct(
-            sq_dist_micro(F.col(vec_col), c["c"]).alias("dist"),
-            c["cid"].alias("cid"),
-        ),
+    """Tag each row with (cell, dist): the nearest driver-resident
+    centroid by exact squared L2 distance, computed as one GEMM per
+    Arrow batch — a single ``mapInPandas``, no shuffle.
+
+    Exact at any K: coordinates are micro-ints, so every product
+    ``|x_i·c_i| <= (2e6)^2 = 4e12``, every 64-term dot ``<= 2.6e14``,
+    and the full squared distance ``|x|^2 - 2x·c + |c|^2 <= ~1e15`` —
+    all far below 2^53, where float64 arithmetic IS integer arithmetic
+    (the semantic_dedup BLAS-exactness argument), so the DuckDB
+    oracle's BIGINT folds reproduce every distance bit-for-bit.  Ties
+    resolve to the lowest cid because the centroid matrix is
+    cid-ordered and ``np.argmin`` takes the first minimum — the
+    oracle's ``ORDER BY dist, cid``.
+
+    Cost does not grow with an expression tree: a K·d centroid literal
+    per row would leave codegen at the production K ~ sqrt(N) rule
+    (measured N^1.5 wall clock, SCALE.md r12c).  Headroom note:
+    per-batch score blocks are B×K float64 (~100 MB at B=10k,
+    K=1250), so lower ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    if K grows past ~10k.
+    """
+    import numpy as np
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
     )
-    best = F.array_sort(scores)[0]
-    return df.withColumn("cell", best["cid"]).withColumn(
-        "dist", best["dist"]
+
+    cents = sorted(cents)
+    cmat = np.asarray([c for _, c in cents], dtype=np.float64)  # (K, d)
+    cids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
+    c_norm2 = (cmat * cmat).sum(axis=1)  # exact: <= 64·4e12
+
+    out_schema = StructType(
+        list(df.schema.fields)
+        + [StructField("cell", IntegerType()), StructField("dist", LongType())]
     )
+
+    def assign(batches):
+        for pdf in batches:
+            x = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            x_norm2 = (x * x).sum(axis=1)
+            d2 = x_norm2[:, None] - 2.0 * (x @ cmat.T) + c_norm2[None, :]
+            best = np.argmin(d2, axis=1)
+            pdf = pdf.copy()
+            pdf["cell"] = cids[best].astype("int32")
+            pdf["dist"] = d2[np.arange(len(best)), best].astype("int64")
+            yield pdf
+
+    return df.mapInPandas(assign, schema=out_schema)
 
 
 def update_centroids(assigned: DataFrame, vec_col: str = "e") -> list:
@@ -121,7 +149,6 @@ def lloyd(
     n_iter: int,
     vec_col: str = "e",
     id_col: str = "vec_id",
-    kernel: str = "literal",
 ) -> DataFrame:
     """Run ``n_iter`` Lloyd rounds from the deterministic seed (the k
     smallest-id vectors) and return the final assignment with dists.
@@ -130,22 +157,7 @@ def lloyd(
     total driver traffic is n_iter·K·d integers.  Empty cells keep
     their previous centroid (cells absent from ``update_centroids`` are
     carried forward).
-
-    ``kernel`` picks the assignment implementation: ``"literal"`` (the
-    zero-Python-boundary reference form the DuckDB oracle mirrors —
-    inlined centroid array) or ``"blas"`` (``assign_cells_blas`` —
-    bit-identical by exact integer arithmetic, the K ~ sqrt(N) scale
-    path).  Because the swap is exact, the whole training trajectory
-    (every intermediate centroid) is identical between kernels, not
-    just the final assignment.  r12-opt measurement at the registered
-    K=8/d=64 knobs: the GEMM kernel is ~2x faster END TO END (3.3 s vs
-    1.7 s for the 2-round query) — the literal form's per-action cost
-    is dominated by Catalyst analysis + interpreted HOF evaluation of
-    the K·d-literal expression tree, not by execution — so registered
-    queries run ``kernel="blas"`` and the literal form remains the
-    oracle-shaped reference implementation.
     """
-    assign = assign_cells if kernel == "literal" else assign_cells_blas
     seed_rows = (
         corpus.orderBy(id_col)
         .limit(k)
@@ -156,68 +168,7 @@ def lloyd(
     # reindex seed cells 0..k-1 by id order for stable cell ids
     cents = [(i, c) for i, (_, c) in enumerate(sorted(cents))]
     for _ in range(n_iter):
-        assigned = assign(corpus, cents, vec_col)
+        assigned = assign_cells(corpus, cents, vec_col)
         new = dict(update_centroids(assigned, vec_col))
         cents = [(cid, new.get(cid, c)) for cid, c in cents]
-    return assign(corpus, cents, vec_col)
-
-
-def assign_cells_blas(
-    df: DataFrame, cents: list[tuple[int, list[int]]], vec_col: str = "e"
-) -> DataFrame:
-    """Scale-tier assignment: the same (dist, cid) argmin as
-    ``assign_cells``, computed as one GEMM per Arrow batch instead of a
-    K·d literal expression tree per row.
-
-    Unlike the float ANN kernels (``similarity.ivf_assign_blas``) this
-    swap is EXACT at any K, with no near-tie caveat: coordinates are
-    micro-ints, so every product ``|x_i·c_i| <= (2e6)^2 = 4e12``, every
-    64-term dot ``<= 2.6e14``, and the full squared distance
-    ``|x|^2 - 2x·c + |c|^2 <= ~1e15`` — all far below 2^53, where
-    float64 arithmetic IS integer arithmetic (the semantic_dedup
-    BLAS-exactness argument).  Ties resolve to the lowest cid because
-    the centroid matrix is cid-ordered and ``np.argmin`` takes the
-    first minimum — the same total order as ``array_sort`` on
-    (dist, cid) structs.  Bit-equality with ``assign_cells`` is pinned
-    in tests/test_similarity_blas.py.
-
-    Why it exists: at the production K ~ sqrt(N) quantizer rule the
-    literal form's O(K·d) per-row expression tree leaves codegen and
-    wall clock grows N^1.5 (the probe_r12c finding on ivf_assign,
-    which shares the pattern); headroom note — per-batch score blocks
-    are B×K float64 (~100 MB at B=10k, K=1250), so raise
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` DOWN if K grows
-    past ~10k.
-    """
-    import numpy as np
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    cents = sorted(cents)
-    cmat = np.asarray([c for _, c in cents], dtype=np.float64)  # (K, d)
-    cids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
-    c_norm2 = (cmat * cmat).sum(axis=1)  # exact: <= 64·4e12
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("cell", IntegerType()), StructField("dist", LongType())]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            x_norm2 = (x * x).sum(axis=1)
-            d2 = x_norm2[:, None] - 2.0 * (x @ cmat.T) + c_norm2[None, :]
-            best = np.argmin(d2, axis=1)
-            pdf = pdf.copy()
-            pdf["cell"] = cids[best].astype("int32")
-            pdf["dist"] = d2[np.arange(len(best)), best].astype("int64")
-            yield pdf
-
-    return df.mapInPandas(assign, schema=out_schema)
+    return assign_cells(corpus, cents, vec_col)

@@ -1,9 +1,11 @@
 """Vector similarity operators (SURVEY.md §2.J1-J4, J9-J10).
 
-All vector math is expressed with SQL higher-order functions
-(``zip_with`` / ``aggregate`` / ``transform``) — JVM-side, codegen'd, no
-Python in the hot path.  Elements are cast to double before arithmetic
-to match DuckDB (FIXTURES.md: embeddings are float32 at rest).
+Vector math is expressed with SQL higher-order functions
+(``zip_with`` / ``aggregate`` / ``transform``) — JVM-side, no Python in
+the hot path — except LSH bucketing, which is one exact int64 matmul
+per Arrow batch (``_lsh_buckets``).  Elements are cast to double
+before arithmetic to match DuckDB (FIXTURES.md: embeddings are float32
+at rest).
 
 Scale notes: exact knn is a blocked cross join — O(|Q|·|C|) — correct
 as the baseline and fine when |Q| is small (the interactive-search
@@ -229,105 +231,103 @@ def lsh_plane_signs(
     ]
 
 
+def _lsh_buckets(
+    df: DataFrame,
+    plane_signs: list[list[list[int]]],
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """One ``(id, _table, _bucket)`` row per (vector, table): the ±1
+    plane family evaluated as one int64 matmul per Arrow batch.
+
+    The projection is the exact integer sum ``Σ floor(x_i·1e6)·s_i``
+    (max |term| ~2e6, 64 terms — far under 2^63) and bucket bit p is
+    set iff projection p is >= 0.  Integer addition is associative, so
+    any engine replaying the same sign literals gets the same bucket
+    bit-for-bit: the DuckDB oracle's BIGINT fold does exactly that
+    (pinned against a plain-Python replay in
+    tests/test_pipeline_extra.py).
+
+    The vector column is deliberately dropped so the candidate dedup
+    downstream shuffles 16-byte id pairs, never embeddings.
+    """
+    import numpy as np
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    # (T, P, D) sign tensor -> per-table (D, P) projection matrices
+    smats = [np.asarray(tbl, dtype=np.int64).T for tbl in plane_signs]
+    pw2 = 1 << np.arange(smats[0].shape[1], dtype=np.int64)  # (P,)
+
+    id_field = next(f for f in df.schema.fields if f.name == id_col)
+    out_schema = StructType(
+        [
+            id_field,
+            StructField("_table", IntegerType()),
+            StructField("_bucket", LongType()),
+        ]
+    )
+
+    def bucketize(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            x = np.asarray(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            xi = np.floor(x * 1_000_000.0).astype(np.int64)  # (B, D)
+            ids = pdf[id_col].to_numpy()
+            yield pd.concat(
+                [
+                    pd.DataFrame(
+                        {
+                            id_col: ids,
+                            "_table": np.int32(t),
+                            "_bucket": (xi @ smat >= 0).astype(np.int64) @ pw2,
+                        }
+                    )
+                    for t, smat in enumerate(smats)
+                ],
+                ignore_index=True,
+            )
+
+    return df.mapInPandas(bucketize, schema=out_schema)
+
+
 def lsh_bucket_join(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_tables: int = 1,
-    plane_signs: list[list[list[int]]] | None = None,
+    plane_signs: list[list[list[int]]],
 ) -> DataFrame:
     """J3/J4 scale path: random-hyperplane LSH bucketed knn (approximate).
 
-    Sign-of-projection onto ``n_planes`` seeded pseudo-random hyperplanes
-    gives each vector a bucket id; candidates are same-bucket pairs only,
-    turning the cross join into an equi-join that shuffles on bucket.
-    Deterministic: hyperplanes derive from xxhash64(dim, plane, seed),
-    no RNG state.
+    ``plane_signs`` is a (tables × planes × dim) ±1 tensor
+    (``lsh_plane_signs``); the table and plane counts are its shape.
+    Sign-of-projection onto each table's planes gives every vector one
+    bucket id per table (``_lsh_buckets``); candidates are same-bucket
+    pairs only, turning the cross join into an equi-join on
+    (table, bucket).
 
     Recall knobs: fewer planes → bigger buckets → higher recall; and
-    ``n_tables`` independent hash tables (per-table seeds) whose
-    candidate sets UNION before ranking — the standard multi-table LSH
-    design (a true neighbor is missed only if it disagrees with the
-    query in EVERY table, so recall ≈ 1-(1-r)^L).  Single-table LSH
-    measured ~0.3 recall on the fixture embeddings; 3 tables ~0.8.
-    Each vector lands in exactly L buckets — candidate volume grows
-    linearly in L, never all-pairs.
+    more tables, whose candidate sets UNION before ranking — the
+    standard multi-table LSH design (a true neighbor is missed only if
+    it disagrees with the query in EVERY table, so recall ≈ 1-(1-r)^L).
+    Measured top-5 recall vs exact at 4 planes on the sf0.001 fixture
+    embeddings: 0.32 / 0.56 / 0.78 for 1 / 4 / 8 tables.  Each vector
+    lands in exactly L buckets — candidate volume grows linearly in L,
+    never all-pairs.
     """
-    def bucket(vec: Column, table_seed: int) -> Column:
-        bits = []
-        for p in range(n_planes):
-            # pseudo-random ±1 plane component per (dimension, plane)
-            proj = F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.sequence(F.lit(0), F.size(vec) - 1),
-                    lambda x, i: _d(x)
-                    * F.when(
-                        F.pmod(F.xxhash64(i, F.lit(p), F.lit(table_seed)), 2)
-                        == 0,
-                        1.0,
-                    ).otherwise(-1.0),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * (2**p))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
-    def bucket_exact(vec: Column, t_idx: int) -> Column:
-        # literal-sign-matrix form (oracle-checkable): projection is an
-        # exact BIGINT sum of floor(x·1e6)·s_i — integer addition is
-        # associative, so any engine replaying the same literals gets
-        # the same bucket bit-for-bit (no float-sum-order hazard).
-        bits = []
-        for p in range(n_planes):
-            sarr = F.array(*[F.lit(s) for s in plane_signs[t_idx][p]])
-            proj = F.aggregate(
-                F.zip_with(
-                    vec,
-                    sarr,
-                    lambda x, s: F.floor(_d(x) * F.lit(1000000.0)).cast("long")
-                    * s.cast("long"),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-            bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * (2**p))
-        out = bits[0]
-        for b in bits[1:]:
-            out = out + b
-        return out
-
     from pyspark.sql import Window
 
-    def table_buckets(df: DataFrame, col: str) -> DataFrame:
-        # (id, table, bucket) — one row per table, exploded from an array
-        return df.select(
-            "*",
-            F.posexplode(
-                F.array(
-                    *[
-                        (
-                            bucket_exact(F.col(col), t)
-                            if plane_signs is not None
-                            else bucket(F.col(col), seed + t)
-                        )
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("_table", "_bucket"),
-        )
-
-    q = table_buckets(queries, "q_embedding")
-    c = table_buckets(corpus, "c_embedding")
-    # dedup multi-table candidates on bare 16-byte id pairs (the
-    # embeddings would otherwise ride the dedup shuffle), then join
-    # the vectors back: queries broadcast, corpus equi-join on id
+    q = _lsh_buckets(queries, plane_signs, "q_embedding", "q_vec_id")
+    c = _lsh_buckets(corpus, plane_signs, "c_embedding", "c_vec_id")
+    # dedup multi-table candidates on bare id pairs, then join the
+    # vectors back: queries broadcast, corpus equi-join on id
     cand = (
         c.join(F.broadcast(q), ["_table", "_bucket"])
         .select("q_vec_id", "c_vec_id")
@@ -499,260 +499,5 @@ def pq_adc_topk(
     return (
         rerank.select("q_vec_id", "c_vec_id", score.alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def ivf_assign_blas(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "c_embedding",
-    id_col: str = "c_vec_id",
-) -> DataFrame:
-    """Scale-tier IVF coarse quantization: nearest-centroid assignment
-    as a blocked numpy matmul inside ``mapInPandas``.
-
-    ``ivf_assign``'s Catalyst-literal argmin is the right kernel while
-    the quantizer is small (K <= ~16: one ``array_sort`` over K structs,
-    fully codegen'd) but it materializes O(K·d) of *expression tree*
-    per row — at the production K ~ sqrt(N) rule (hundreds+ of cells)
-    wall clock grows ~N^1.5 (probe_r12c measured 5.5 -> 19.0 s for 10x
-    corpus at K = sqrt(N)).  This form computes the same argmin as one
-    GEMM per Arrow batch: ``argmin_k ||x - c_k||^2 =
-    argmin_k (||c_k||^2 - 2 x·c_k)`` — a B×K score block for a B×d
-    batch against the K×d centroid matrix.  The semantic_dedup Gram-
-    kernel lesson (queries/corpus_clean.py kernel history #3) applied
-    to the quantizer itself.
-
-    Tie-break parity with ``ivf_assign``: the centroid matrix is
-    ordered by cell_id and ``np.argmin`` returns the FIRST minimum, so
-    equal distances resolve to the lowest cell_id — the same
-    (dist, cell_id) total order; NaN scores are mapped to +inf so a
-    non-finite centroid sorts LAST exactly as Spark's NaN-is-largest
-    ordering places it in ``array_sort``.  Parity caveat (shared with
-    any kernel swap): the two formulations round differently —
-    sequential fold-of-squares + sqrt vs a rearranged GEMM — so two
-    centroids whose true distances agree to within ~1 ulp can in
-    principle rank in opposite order.  The fixture pin
-    (tests/test_similarity_blas.py) catches drift; at production the
-    contract that matters is the measured-recall gate, not bit-parity
-    between index variants.
-
-    The centroid collect is bounded model state (K rows — the same
-    driver-resident-quantizer contract as ``_centroid_scores``;
-    enumerated in tests/test_collect_allowlist.py).
-    """
-    import numpy as np
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    cmat, cell_ids, c_norm2 = _centroid_matrix(centroids)
-
-    out_schema = StructType(
-        list(corpus.schema.fields) + [StructField("cell_id", IntegerType())]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            # ||x||^2 is constant per row — drop it; scores are
-            # monotone in true distance, argmin unchanged.
-            scores = c_norm2[None, :] - 2.0 * (x @ cmat.T)
-            scores = np.where(np.isnan(scores), np.inf, scores)
-            pdf = pdf.copy()
-            pdf["cell_id"] = cell_ids[np.argmin(scores, axis=1)].astype(
-                "int32"
-            )
-            yield pdf
-
-    return corpus.mapInPandas(assign, schema=out_schema)
-
-
-def _centroid_matrix(centroids: DataFrame):
-    """Collect the quantizer once as (K×d matrix, cell_ids, ||c||²) —
-    shared by the BLAS assignment and probe-selection kernels.  Bounded
-    model state: K rows, the same contract as ``_centroid_scores``."""
-    import numpy as np
-
-    rows = centroids.select("cell_id", "centroid").orderBy("cell_id").collect()
-    cmat = np.asarray(
-        [[float(x) for x in r["centroid"]] for r in rows], dtype=np.float64
-    )
-    cell_ids = np.asarray([int(r["cell_id"]) for r in rows], dtype=np.int64)
-    return cmat, cell_ids, (cmat * cmat).sum(axis=1)
-
-
-def lsh_buckets_blas(
-    df: DataFrame,
-    plane_signs: list[list[list[int]]],
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Scale-tier LSH bucketing: the literal ±1 plane family evaluated
-    as one integer matmul per Arrow batch (vs ``lsh_bucket_join``'s
-    per-plane Catalyst ``aggregate`` folds — T·P fold expressions per
-    row, which leave codegen and go interpreted as T·P grows).
-
-    Bit-parity with ``bucket_exact``: the projection is the identical
-    exact integer sum ``Σ floor(x_i·1e6)·s_i`` (int64 — max |term|
-    ~2e6·1, 64 terms, far under 2^63), bucket bit p set iff the
-    projection is >= 0, so candidates match the registered literal
-    form bucket-for-bucket (asserted in tests/test_similarity_blas.py).
-
-    Output: one (id, _table, _bucket) row per (vector, table) — the
-    vector column is deliberately dropped so downstream candidate
-    dedup shuffles 16-byte id pairs, never embeddings (the same
-    design note as ``lsh_bucket_join``).
-    """
-    import numpy as np
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    # (T, P, D) sign tensor -> per-table (D, P) projection matrices
-    smats = [
-        np.asarray(tbl, dtype=np.int64).T for tbl in plane_signs
-    ]  # each (D, P)
-    pw2 = 1 << np.arange(smats[0].shape[1], dtype=np.int64)  # (P,)
-
-    id_field = next(f for f in df.schema.fields if f.name == id_col)
-    out_schema = StructType(
-        [
-            id_field,
-            StructField("_table", IntegerType()),
-            StructField("_bucket", LongType()),
-        ]
-    )
-
-    def bucketize(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            xi = np.floor(x * 1_000_000.0).astype(np.int64)  # (B, D)
-            ids = pdf[id_col].to_numpy()
-            outs = []
-            for t, smat in enumerate(smats):
-                proj = xi @ smat  # (B, P) exact int64
-                buckets = ((proj >= 0).astype(np.int64) @ pw2)  # (B,)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            id_col: ids,
-                            "_table": np.int32(t),
-                            "_bucket": buckets,
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-    return df.mapInPandas(bucketize, schema=out_schema)
-
-
-def lsh_bucket_join_blas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    plane_signs: list[list[list[int]]],
-) -> DataFrame:
-    """J3 at the 100 TB tier: multi-table LSH knn with BLAS bucketing.
-
-    Same candidate semantics as ``lsh_bucket_join`` with the literal
-    sign matrix (same buckets bit-for-bit — see ``lsh_buckets_blas``),
-    same scoring and (cos_sim desc, c_vec_id) tie-break; only the
-    bucket computation kernel differs, so the two agree row-for-row
-    and the cheap form wins as T·P·D grows.
-    """
-    from pyspark.sql import Window
-
-    q = lsh_buckets_blas(queries, plane_signs, "q_embedding", "q_vec_id")
-    c = lsh_buckets_blas(corpus, plane_signs, "c_embedding", "c_vec_id")
-    cand = (
-        c.join(F.broadcast(q), ["_table", "_bucket"])
-        .select("q_vec_id", "c_vec_id")
-        .dropDuplicates(["q_vec_id", "c_vec_id"])
-        .join(F.broadcast(queries), "q_vec_id")
-        .join(corpus, "c_vec_id")
-    )
-    score = F.round(cosine(F.col("q_embedding"), F.col("c_embedding")), 6)
-    pairs = cand.select("q_vec_id", "c_vec_id", score.alias("cos_sim"))
-    w = Window.partitionBy("q_vec_id").orderBy(
-        F.desc("cos_sim"), F.asc("c_vec_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def ivf_topk_blas(
-    queries: DataFrame,
-    indexed_corpus: DataFrame,
-    centroids: DataFrame,
-    k: int,
-    n_probe: int = 2,
-) -> DataFrame:
-    """Scale-tier IVF search: same contract as ``ivf_topk`` with the
-    query-side probe selection moved from the K-literal expression to
-    the ``ivf_assign_blas`` GEMM kernel.
-
-    Why: ``ivf_topk`` inlines the quantizer as an
-    ``array<struct<dist, cell_id>>`` literal per query row — ideal at
-    K <= ~16, but at the production K ~ sqrt(N) rule the expression
-    tree is K·d literals and Catalyst ANALYSIS/codegen time (not data)
-    dominates the plan (probe_r12c: the 100x tier spent ~10 s/run
-    compiling a 447-cell literal).  Here the K×d matrix stays a driver
-    numpy array (bounded model state, same contract as
-    ``_centroid_scores``), each query's ``n_probe`` nearest cells come
-    from one GEMM + stable argsort — equal scores resolve to the
-    lowest cell_id, the same (dist, cell_id) order as the literal
-    form — and the probe list joins exactly like ``ivf_topk``'s
-    (broadcast, equi-join on cell_id, identical scoring + tie-break).
-    Pinned result-equal to ``ivf_topk`` in tests/test_similarity_blas.py
-    (see ``ivf_assign_blas`` for the NaN mapping and the ~1-ulp
-    near-tie parity caveat, both shared by this kernel).
-    """
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    cmat, cell_ids, c_norm2 = _centroid_matrix(centroids)
-    n_probe = min(n_probe, len(cell_ids))
-
-    out_schema = StructType(
-        list(queries.schema.fields) + [StructField("cell_id", IntegerType())]
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["q_embedding"]]
-            )
-            scores = c_norm2[None, :] - 2.0 * (x @ cmat.T)
-            scores = np.where(np.isnan(scores), np.inf, scores)
-            # stable sort: equal scores keep matrix order = cell_id order
-            order = np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
-            reps = pdf.iloc[
-                np.repeat(np.arange(len(pdf)), n_probe)
-            ].reset_index(drop=True)
-            reps["cell_id"] = cell_ids[order.ravel()].astype("int32")
-            yield reps
-
-    probes = queries.mapInPandas(probe, schema=out_schema)
-    score = F.round(cosine(F.col("q_embedding"), F.col("c_embedding")), 6)
-    pairs = indexed_corpus.join(F.broadcast(probes), "cell_id").select(
-        "q_vec_id", "c_vec_id", score.alias("cos_sim")
-    )
-    w = Window.partitionBy("q_vec_id").orderBy(
-        F.desc("cos_sim"), F.asc("c_vec_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )

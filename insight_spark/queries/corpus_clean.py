@@ -297,12 +297,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", quantize_micro(F.col("embedding")).alias("e"))
-    # kernel="blas" (r12 opt): exact integer GEMM assignment, bit-
-    # identical to the literal form (see kmeans_lloyd docstring) and
-    # ~2x faster end-to-end at the registered knobs.
-    final = lloyd(
-        q, k=8, n_iter=2, vec_col="e", id_col="vec_id", kernel="blas"
-    ).select("vec_id", "cell", "e")
+    final = lloyd(q, k=8, n_iter=2, vec_col="e", id_col="vec_id").select(
+        "vec_id", "cell", "e"
+    )
     tau = _SEMDEDUP_TAU
 
     def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:

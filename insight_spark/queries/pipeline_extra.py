@@ -229,8 +229,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         corpus,
         k=5,
-        n_planes=4,
-        n_tables=8,
         plane_signs=lsh_plane_signs(8, 4, 64),
     )
 
@@ -934,8 +932,6 @@ def ann_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         corpus,
         k=5,
-        n_planes=4,
-        n_tables=8,
         plane_signs=lsh_plane_signs(8, 4, 64),
     ).select("q_vec_id", "c_vec_id")
     hits = exact.join(approx, ["q_vec_id", "c_vec_id"], "left_semi")

@@ -249,24 +249,17 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch GEMM against driver-resident centroids, the update is a
     map-side-combined K·d-row aggregate).
 
-    Kernel (r12 opt): ``kernel="blas"`` — exact integer GEMM, proven
-    bit-identical to the literal-expression assignment at every
-    intermediate (tests/test_similarity_blas.py).  Measured at the
-    registered K=8, d=64, 2k vectors: the literal form costs ~0.9 s
-    PER ACTION in Catalyst analysis + interpreted HOF evaluation of the
-    K·d-literal tree (plan overhead, not compute), and the full query
-    runs 3.3 s vs 1.7 s with the GEMM kernel — the same kernel that is
-    the K~sqrt(N) scale path.
+    The assignment GEMM is exact integer arithmetic (micro-int products
+    stay under 2^53 in float64; see ``clustering.assign_cells``), so
+    the DuckDB oracle's BIGINT folds are the kernel's reference at
+    every tier.
     """
     from insight_spark.operators.clustering import lloyd, quantize_micro
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize_micro(F.col("embedding")).alias("e")
     )
-    final = lloyd(
-        emb, k=_KMEANS_K, n_iter=2, vec_col="e", id_col="vec_id",
-        kernel="blas",
-    )
+    final = lloyd(emb, k=_KMEANS_K, n_iter=2, vec_col="e", id_col="vec_id")
     return final.groupBy(
         F.col("cell").cast("int").alias("cell_id")
     ).agg(
@@ -413,11 +406,16 @@ def ann_ivf_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality gate for the LSH path (twin of ann_ivf_recall_gate):
     in-plan recall of hyperplane-LSH top-5 vs exact brute-force top-5,
-    gate at mean recall ≥ 0.6 (8 independent tables — a true neighbor
-    is missed only if every table separates it from the query;
-    measured ~0.75 on the near-random fixture embeddings).  A
-    bucketing regression flips the driver hash."""
-    from insight_spark.operators.similarity import knn_topk, lsh_bucket_join
+    gate at mean recall ≥ 0.6 (8 independent 4-plane sign tables, the
+    `ann_lsh_topk` index — a true neighbor is missed only if every
+    table separates it from the query; measured 0.78 / 0.82 / 0.82 at
+    sf0.001 / sf0.01 / sf0.1 on the near-random fixture embeddings).
+    A bucketing regression that costs recall fails the oracle check."""
+    from insight_spark.operators.similarity import (
+        knn_topk,
+        lsh_bucket_join,
+        lsh_plane_signs,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10).select(
@@ -428,7 +426,7 @@ def ann_lsh_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = knn_topk(queries, corpus, k=5).select("q_vec_id", "c_vec_id")
     approx = lsh_bucket_join(
-        queries, corpus, k=5, n_planes=4, n_tables=8
+        queries, corpus, k=5, plane_signs=lsh_plane_signs(8, 4, 64)
     ).select("q_vec_id", "c_vec_id")
     hits = exact.join(approx, ["q_vec_id", "c_vec_id"], "left_semi")
     # Zero-hit queries anchored at recall 0 (see ann_ivf_recall_gate).

@@ -39,10 +39,9 @@ COLLECT_ALLOWLIST: dict[str, tuple[int, str]] = {
         "catalog-sized, never table rows",
     ),
     "operators/similarity.py": (
-        3,
-        "IVF/PQ model state: K cell centroids (literal-argmin form + "
-        "the shared _centroid_matrix for the BLAS kernels) / n_codes "
-        "codebook rows (all fixed model sizes)",
+        2,
+        "IVF/PQ model state: K cell centroids / n_codes codebook rows "
+        "(both fixed model sizes)",
     ),
     "queries/corpus_clean.py": (
         1,

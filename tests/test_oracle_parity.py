@@ -10,7 +10,8 @@ driver's pytest window (the whole suite is ~51 min and the driver's
 r12 run was cut off at ~73% with zero failures — the only red light on
 the board).  By default the parametrized sweeps here run a
 DETERMINISTIC ~20% sample of the registry (stable md5(name) selection,
-plus the 12 BASELINE.md headline queries always) so `pytest tests/`
+plus the 12 BASELINE.md headline queries and the vector-kernel
+references always) so `pytest tests/`
 completes inside the driver's window; set ``SPARK_GRAFT_FULL_PARITY=1``
 to parametrize over the full registry (the pre-r13 behavior).  Full-
 registry parity evidence for the round lives in the committed
@@ -51,19 +52,28 @@ _HEADLINE = {
     "knn_cosine_topk",
 }
 
+#: Queries whose DuckDB oracle is the only reference for a vector
+#: kernel (the LSH bucket GEMM, the k-means assignment GEMM) — always
+#: in the default tier, so every surviving kernel is checked each run.
+_KERNEL_REFERENCE = {
+    "kmeans_lloyd", "semantic_dedup", "ann_lsh_topk",
+    "ann_lsh_recall_eval", "ann_lsh_recall_gate",
+}
+
 
 def _tier(names: list[str]) -> list[str]:
     """Full list when SPARK_GRAFT_FULL_PARITY is set; otherwise the
-    deterministic ~20% md5 sample + the headline 12.  Content-blind
-    (keyed on the name string only) and stable across rounds, so the
-    same queries are re-checked every run and a regression in a
-    sampled query cannot hide by re-rolling."""
+    deterministic ~20% md5 sample + the headline 12 + the kernel
+    references.  Content-blind (keyed on the name string only) and
+    stable across rounds, so the same queries are re-checked every run
+    and a regression in a sampled query cannot hide by re-rolling."""
     if os.environ.get("SPARK_GRAFT_FULL_PARITY"):
         return names
     return [
         n
         for n in names
         if n in _HEADLINE
+        or n in _KERNEL_REFERENCE
         or int(hashlib.md5(n.encode()).hexdigest()[:4], 16) % 5 == 0
     ]
 

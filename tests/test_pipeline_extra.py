@@ -12,8 +12,14 @@ import os
 from pyspark.sql import functions as F
 
 from insight_spark.operators.dedup import simhash_fingerprints
-from insight_spark.operators.similarity import knn_topk, lsh_bucket_join
+from insight_spark.operators.similarity import (
+    _lsh_buckets,
+    knn_topk,
+    lsh_bucket_join,
+    lsh_plane_signs,
+)
 from insight_spark.sources import load_table, read_csv, read_json
+from tests.conftest import SF_DIR_T2
 
 SF = "/root/testdata/sf0.001"
 
@@ -58,13 +64,42 @@ def test_ann_lsh_recall_vs_exact(spark):
     approx = {
         (r["q_vec_id"], r["c_vec_id"])
         for r in lsh_bucket_join(
-            queries, corpus, k=5, n_planes=4, n_tables=8
+            queries, corpus, k=5, plane_signs=lsh_plane_signs(8, 4, 64)
         ).collect()
     }
     # every query returns k rows; recall is approximate but must be real
     assert len(approx) == 50
-    # multi-table LSH (8 tables): measured ~0.74 on fixture embeddings
+    # multi-table LSH (8 tables): measured 0.78 on fixture embeddings
     assert len(exact & approx) / len(exact) >= 0.6
+
+
+def test_lsh_buckets_bit_parity(spark):
+    """The int64 matmul projection reproduces the exact integer fold
+    Σ floor(x·1e6)·s bit-for-bit: same (id, table, bucket) triples as
+    a plain-Python replay (the DuckDB oracle's BIGINT arithmetic)."""
+    import math
+
+    corpus = load_table(spark, SF_DIR_T2, "embeddings").select(
+        F.col("vec_id").alias("c_vec_id"),
+        F.col("embedding").alias("c_embedding"),
+    )
+    signs = lsh_plane_signs(4, 6, 64)
+    got = {
+        (r["c_vec_id"], r["_table"], r["_bucket"])
+        for r in _lsh_buckets(
+            corpus, signs, "c_embedding", "c_vec_id"
+        ).collect()
+    }
+    expect = set()
+    for r in corpus.collect():
+        xi = [math.floor(float(x) * 1_000_000.0) for x in r["c_embedding"]]
+        for t, tbl in enumerate(signs):
+            b = 0
+            for p, plane in enumerate(tbl):
+                if sum(v * s for v, s in zip(xi, plane)) >= 0:
+                    b += 1 << p
+            expect.add((r["c_vec_id"], t, b))
+    assert got == expect
 
 
 def test_csv_scan_roundtrip(spark, tmp_path):

@@ -188,7 +188,11 @@ def test_lsh_recall_monotone_in_tables(spark):
     top-5 recall vs exact must be non-decreasing in n_tables."""
     from pyspark.sql import functions as F
 
-    from insight_spark.operators.similarity import knn_topk, lsh_bucket_join
+    from insight_spark.operators.similarity import (
+        knn_topk,
+        lsh_bucket_join,
+        lsh_plane_signs,
+    )
     from insight_spark.sources import load_table
     from tests.conftest import SF_DIR
 
@@ -203,12 +207,15 @@ def test_lsh_recall_monotone_in_tables(spark):
         (r["q_vec_id"], r["c_vec_id"])
         for r in knn_topk(queries, corpus, k=5).collect()
     }
+    # table t's planes do not depend on the table count, so the L-table
+    # sign tensors are nested: lsh_plane_signs(L, ...) == signs[:L]
+    signs = lsh_plane_signs(8, 4, 64)
     recalls = []
     for L in (1, 4, 8):
         approx = {
             (r["q_vec_id"], r["c_vec_id"])
             for r in lsh_bucket_join(
-                queries, corpus, k=5, n_planes=4, n_tables=L
+                queries, corpus, k=5, plane_signs=signs[:L]
             ).collect()
         }
         recalls.append(len(exact & approx) / len(exact))
