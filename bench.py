@@ -106,20 +106,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    # sf0.1 is the stress tier: the three O(n²)-by-design exact
-    # baselines (embedding_near_dup, blocked_fuzzy_match,
-    # jaccard_threshold_join) run on their documented deterministic
-    # md5-quarter sample, SAME convention as scripts/driver_sim.py and
-    # scripts/check_queries.py — not a silent cap: recorded in the
-    # JSON line as "stress_subset".  Must be set before the query
-    # modules import (they read it at module load).
-    if os.path.normpath(sf_dir).endswith("sf0.1"):
-        # fails loudly if the frozen-at-import modules already loaded
-        # with the flag unset (ADVICE r11)
-        from insight_spark.queries import require_stress_subset
-
-        require_stress_subset()
-    stress_subset = bool(os.environ.get("SPARK_GRAFT_STRESS_SUBSET"))
 
     from insight_spark.engine import get_spark
     from insight_spark.queries import all_queries, set_lint_default
@@ -266,7 +252,6 @@ def main() -> None:
         # the queries whose build ran Spark jobs, timed by rebuilding
         "rebuilt": sorted(rebuilt),
         "funnel_stages": stages,
-        "stress_subset": stress_subset,
         "calib_s": calib,
         "sf": sf,
     }
@@ -281,7 +266,6 @@ def main() -> None:
         "n_queries": len(timings),
         "n_errors": len(errors),
         "funnel_stages": stages,
-        "stress_subset": stress_subset,
         "calib_s": calib,
         "full": "BENCH_full.json",
         "sf": sf,

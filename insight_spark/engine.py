@@ -65,7 +65,7 @@ def scratch_base() -> str:
 
 #: Performance configs for the local test harness.
 LOCAL_PERF_CONF = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "8"),
+    "spark.sql.shuffle.partitions": "8",
     # file:// checkpoint I/O through the CRC-less raw local fs (guide
     # §6): Hadoop's default checksumming local fs writes+reads a
     # ``.crc`` side file per file, DOUBLING file creates for every

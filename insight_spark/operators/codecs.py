@@ -72,15 +72,11 @@ def decode_bmp(data: bytes) -> tuple[int, int, float]:
     return width, height, (total / n if n else 0.0)
 
 
-def encode_wav(
-    samples: list[int], sample_rate: int, n_channels: int = 1
-) -> bytes:
-    """PCM 16-bit WAV from int16 samples (interleaved if multichannel)."""
+def encode_wav(samples: list[int], sample_rate: int) -> bytes:
+    """Mono PCM 16-bit WAV from int16 samples."""
     data = struct.pack(f"<{len(samples)}h", *samples)
-    byte_rate = sample_rate * n_channels * 2
     fmt = struct.pack(
-        "<4sIHHIIHH", b"fmt ", 16, 1, n_channels, sample_rate, byte_rate,
-        n_channels * 2, 16,
+        "<4sIHHIIHH", b"fmt ", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16
     )
     data_chunk = struct.pack("<4sI", b"data", len(data)) + data
     riff_len = 4 + len(fmt) + len(data_chunk)

@@ -52,7 +52,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    check_every: int = 1,
 ) -> DataFrame:
     """Label every vertex with the minimum vertex id reachable from it.
 
@@ -74,10 +73,8 @@ def connected_components(
       aggregate also carries the vertex's previous label (``_prev``,
       tagged through the union), so "did anything change" is a filter
       scan of the just-checkpointed hop — not a V ⋈ V join job.  The
-      check runs every ``check_every`` rounds (default now 1: the scan
-      is colocated with the hop blocks and costs ~nothing next to a
-      propagation round, so checking every round saves the tail round
-      batched checks used to waste).
+      check runs every round: the scan is colocated with the hop
+      blocks and costs ~nothing next to a propagation round.
     - Hop-stability is a sound convergence test: if no vertex's label
       changed in the hop, then for every edge (v, n) both
       ``min_nbr ≥ label`` inequalities hold simultaneously, forcing
@@ -134,11 +131,9 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        if it % check_every == 0 or it == max_iter - 1:
-            # cheap scan of the checkpointed hop, not a join job
-            changed = hop.filter(F.col("label") != F.col("_prev")).count()
-            if changed == 0:
-                return hop.select("v", "label")
+        # cheap scan of the checkpointed hop, not a join job
+        if hop.filter(F.col("label") != F.col("_prev")).count() == 0:
+            return hop.select("v", "label")
         labels = _jump(hop.select("v", "label"))
     raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
@@ -147,15 +142,14 @@ def canonical_assignment(
     pairs: DataFrame,
     all_ids: DataFrame,
     id_col: str = "doc_id",
-    a_col: str = "a_id",
-    b_col: str = "b_id",
 ) -> DataFrame:
     """Dedup keep-rule: map every id to its cluster canonical (min id).
 
-    Ids that appear in no near-dup pair are their own canonical.
-    Returns (id_col, canonical_id) for ALL ids in ``all_ids``.
+    ``pairs`` are ``(a_id, b_id)`` edges.  Ids that appear in no
+    near-dup pair are their own canonical.  Returns (id_col,
+    canonical_id) for ALL ids in ``all_ids``.
     """
-    comp = connected_components(pairs, src=a_col, dst=b_col)
+    comp = connected_components(pairs, src="a_id", dst="b_id")
     return (
         all_ids.select(F.col(id_col))
         .join(comp, all_ids[id_col] == comp["v"], "left")

@@ -15,6 +15,18 @@ from pyspark.sql import functions as F
 
 from insight_spark.operators.text import ngrams, tokenize
 
+#: SimHash fingerprint width; ``simhash_oracle_sql`` defaults to it.
+SIMHASH_BITS = 16
+#: MinHash shingle width in words.  The md5 oracle SQL below spells
+#: the same word-trigram join, so the two must change together.
+SHINGLE_N = 3
+#: Hash and band counts of the md5 (value-oracled) MinHash family,
+#: shared by the Spark operators and their DuckDB replays.
+MD5_N_HASHES = 8
+MD5_N_BANDS = 4
+#: Base seed of the xxhash64 MinHash family (seed + i per hash).
+MINHASH_SEED = 42
+
 
 def content_hash(c: Column) -> Column:
     """J5: deterministic content fingerprint (sha256 hex, oracle-parity)."""
@@ -71,13 +83,9 @@ def jaccard(a: Column, b: Column) -> Column:
     )
 
 
-def simhash_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 16,
-) -> DataFrame:
-    """SimHash document fingerprints (LLM-pipeline dedup mandate).
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """SimHash document fingerprints (LLM-pipeline dedup mandate):
+    ``(doc_id, simhash)`` over ``docs.text``, ``SIMHASH_BITS`` wide.
 
     Classic Charikar simhash over the distinct-token set: each token
     votes ±1 on every bit of its hash; the fingerprint bit is the sign
@@ -85,17 +93,16 @@ def simhash_fingerprints(
     distance.
 
     Cross-engine determinism: the per-token hash is the first
-    ``n_bits/4`` hex nibbles of md5(token) — identical in Spark and
+    ``SIMHASH_BITS/4`` hex nibbles of md5(token) — identical in Spark and
     DuckDB — so the whole operator is value-oracle-checkable (unlike
     xxhash64-based sketches).  Everything is JVM-side SQL: explode →
     16 conditional sums in ONE hash aggregate (single shuffle on
     doc_id) → bit recombination.  At 100 TB this is a word-count-shaped
     job; no driver state, no UDF.
     """
-    assert n_bits % 4 == 0
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("_t"),
+        "doc_id",
+        F.explode(F.array_distinct(tokenize(F.col("text")))).alias("_t"),
     ).withColumn("_h", F.md5(F.col("_t")))
     # vote_i = sum over tokens of (2*bit_i - 1), bit_i from md5 nibbles
     votes = [
@@ -105,18 +112,18 @@ def simhash_fingerprints(
                 f" div {2 ** b} % 2 * 2 - 1"
             )
         ).alias(f"_v{j * 4 + b}")
-        for j in range(n_bits // 4)
+        for j in range(SIMHASH_BITS // 4)
         for b in range(4)
     ]
     summed = toks.groupBy("doc_id").agg(*votes)
     fp = None
-    for i in range(n_bits):
+    for i in range(SIMHASH_BITS):
         bit = F.when(F.col(f"_v{i}") >= 0, F.lit(2**i)).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
     return summed.select("doc_id", fp.cast("long").alias("simhash"))
 
 
-def simhash_oracle_sql(n_bits: int = 16) -> str:
+def simhash_oracle_sql(n_bits: int = SIMHASH_BITS) -> str:
     """DuckDB SQL computing identical fingerprints (same md5-nibble hash)."""
     assert n_bits % 4 == 0
     votes = ",\n           ".join(
@@ -145,16 +152,18 @@ def simhash_oracle_sql(n_bits: int = 16) -> str:
     """
 
 
-def minhash_signature(tokens: Column, n_hashes: int, seed: int = 42) -> Column:
+def minhash_signature(tokens: Column, n_hashes: int) -> Column:
     """J6: MinHash signature — array of per-seed minimum token hashes.
 
-    Seeded hash family via xxhash64(token, seed_i); fully deterministic,
-    computed rowwise JVM-side (no shuffle).
+    Seeded hash family via xxhash64(token, MINHASH_SEED + i); fully
+    deterministic, computed rowwise JVM-side (no shuffle).
     """
     return F.array(
         *[
             F.array_min(
-                F.transform(tokens, lambda t: F.xxhash64(t, F.lit(seed + i)))
+                F.transform(
+                    tokens, lambda t: F.xxhash64(t, F.lit(MINHASH_SEED + i))
+                )
             ).alias(f"h{i}")
             for i in range(n_hashes)
         ]
@@ -202,20 +211,17 @@ def _bucket_pair_candidates(bands: DataFrame, *key_cols: str) -> DataFrame:
 def near_dedup_minhash(
     docs: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    n_bands: int = 4,
     threshold: float = 0.7,
-    shingle_n: int = 3,
-    seed: int = 42,
     keep_all: bool = False,
 ) -> DataFrame:
-    """J6: MinHash+LSH near-duplicate pairs, exact-verified.
+    """J6: MinHash+LSH near-duplicate pairs over ``docs.doc_id``,
+    exact-verified.
 
-    shingles (``shingle_n``-gram word sequences, the GPT-3/Gopher-style
+    shingles (``SHINGLE_N``-gram word sequences, the GPT-3/Gopher-style
     dedup unit — unigram sets over-match templated corpora) → minhash
-    signature → band buckets → same-bucket candidate id pairs (a<b),
-    deduped as bare (long, long) ids → shingle sets joined back →
+    signature (16 xxhash64 hashes) → 4 band buckets → same-bucket
+    candidate id pairs (a<b), deduped as bare (long, long) ids →
+    shingle sets joined back →
     exact Jaccard verification ≥ threshold.  Returns
     (a_id, b_id, jaccard_sim); with ``keep_all`` every LSH candidate
     pair survives with an ``is_dup`` verdict column instead of being
@@ -230,7 +236,7 @@ def near_dedup_minhash(
     large) shingle arrays are shuffled once per side by the
     verification joins, never through the band stage.
 
-    Docs with an EMPTY shingle set (< ``shingle_n`` tokens) never band
+    Docs with an EMPTY shingle set (< ``SHINGLE_N`` tokens) never band
     and so never pair — by design: an empty set has Jaccard 0 (or 0/0)
     against everything, so no such pair can verify at ``threshold`` >
     0, and a shared null-signature bucket would only manufacture
@@ -238,11 +244,12 @@ def near_dedup_minhash(
     false positives).  The filter below makes the drop explicit,
     matching ``_md5_shingle_bands``' size guard.
     """
+    n_hashes, n_bands = 16, 4
     rows_per_band = n_hashes // n_bands
-    shingles = F.array_distinct(ngrams(tokenize(F.col(text_col)), shingle_n))
+    shingles = F.array_distinct(ngrams(tokenize(F.col(text_col)), SHINGLE_N))
     toks = (
-        _spread(docs, id_col)
-        .select(F.col(id_col).alias("_id"), shingles.alias("_sh"))
+        _spread(docs, "doc_id")
+        .select(F.col("doc_id").alias("_id"), shingles.alias("_sh"))
         .filter(F.size("_sh") > 0)
     )
     # Signature via explode + map-side-combined min aggregate (r6, same
@@ -256,7 +263,9 @@ def near_dedup_minhash(
     grams = toks.select("_id", F.explode("_sh").alias("_g"))
     sig = grams.groupBy("_id").agg(
         *[
-            F.min(F.xxhash64(F.col("_g"), F.lit(seed + i))).alias(f"_h{i}")
+            F.min(F.xxhash64(F.col("_g"), F.lit(MINHASH_SEED + i))).alias(
+                f"_h{i}"
+            )
             for i in range(n_hashes)
         ]
     )
@@ -306,11 +315,10 @@ def prefix_filtered_jaccard_join(
     docs: DataFrame,
     threshold_num: int,
     threshold_den: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """J7 scale path: corpus-wide Jaccard threshold self-join via
-    prefix filtering (the PPJoin candidate rule) — no all-pairs join.
+    """J7 scale path: corpus-wide Jaccard threshold self-join of
+    ``docs.text`` (pairs of ``doc_id``) via prefix filtering (the
+    PPJoin candidate rule) — no all-pairs join.
 
     Each doc keeps only its p = |s| - ceil(t·|s|) + 1 globally
     *rarest* tokens (ascending document frequency, token tie-break);
@@ -350,8 +358,8 @@ def prefix_filtered_jaccard_join(
     # cluster pipeline would swap in reliable checkpointing or a
     # write + read-back at the same two points.
     toks = docs.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(tokenize(F.col(text_col))).alias("_s"),
+        F.col("doc_id").alias("_id"),
+        F.array_distinct(tokenize(F.col("text"))).alias("_s"),
     ).where(F.size("_s") > 0).localCheckpoint()
     freq = (
         toks.select(F.explode("_s").alias("_tok"))
@@ -445,8 +453,9 @@ def _md5_shingle_bands(
     return sh, _md5_bands_from_sh(sh, n_hashes, n_bands)
 
 
-def md5_digest_concat_sql(n_hashes: int, var: str = "g") -> str:
-    """DuckDB lambda body for the per-gram chunked digest — generated
+def md5_digest_concat_sql(n_hashes: int) -> str:
+    """DuckDB lambda body (over gram ``g``) for the per-gram chunked
+    digest — generated
     from the SAME ``n_digests = n_hashes // 4`` formula as
     ``_md5_bands_from_sh`` so a non-default ``n_hashes`` (e.g. 16)
     can never silently desync Spark (which computes extra digests)
@@ -454,7 +463,7 @@ def md5_digest_concat_sql(n_hashes: int, var: str = "g") -> str:
     yield empty chunks)."""
     assert n_hashes % 4 == 0, "chunked family packs 4 chunks per digest"
     return " || ".join(
-        f"md5({var})" if d == 0 else f"md5('{'#' * d}' || {var})"
+        "md5(g)" if d == 0 else f"md5('{'#' * d}' || g)"
         for d in range(n_hashes // 4)
     )
 
@@ -525,15 +534,13 @@ def _md5_bands_from_sh(
 
 def minhash_lsh_pairs_md5(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    shingle_n: int = 3,
+    n_hashes: int = MD5_N_HASHES,
+    n_bands: int = MD5_N_BANDS,
     keep_all: bool = False,
 ) -> DataFrame:
-    """J6 value-oracled variant: MinHash+LSH near-dup pairs with an
-    md5 hash family, fully reproducible in DuckDB SQL.
+    """J6 value-oracled variant: MinHash+LSH near-dup pairs of
+    ``docs.doc_id`` over ``docs.text`` with an md5 hash family, fully
+    reproducible in DuckDB SQL.
 
     Same pipeline shape as ``near_dedup_minhash`` (shingle → signature
     → band bucket → candidate pair → exact-Jaccard verify at t=1/2),
@@ -568,7 +575,7 @@ def minhash_lsh_pairs_md5(
     # funnel 0.8 s SLOWER: writing the materialized gram arrays costs
     # more than recomputing the zip_with shingling per consumer.
     sh, bands = _md5_shingle_bands(
-        docs, text_col, id_col, n_hashes, n_bands, shingle_n
+        docs, "text", "doc_id", n_hashes, n_bands, SHINGLE_N
     )
     cand = _bucket_pair_candidates(bands, "_band", "_bkey")
     sets = sh.select("_id", "_sh")
@@ -592,7 +599,9 @@ def minhash_lsh_pairs_md5(
 
 
 def minhash_lsh_pairs_md5_oracle_sql(
-    n_hashes: int = 8, n_bands: int = 4, keep_all: bool = False
+    n_hashes: int = MD5_N_HASHES,
+    n_bands: int = MD5_N_BANDS,
+    keep_all: bool = False,
 ) -> str:
     """DuckDB SQL producing identical pairs (same md5 hash family).
     With ``keep_all``, replays the auditable form: every candidate with
@@ -661,13 +670,12 @@ def minhash_lsh_pairs_md5_oracle_sql(
     """
 
 
-def minhash_band_cardinality_oracle_sql(
-    n_hashes: int = 8, n_bands: int = 4
-) -> str:
+def minhash_band_cardinality_oracle_sql() -> str:
     """DuckDB SQL for the LSH band-load audit (M146): replays the SAME
     md5 band family as ``minhash_lsh_pairs_md5_oracle_sql`` (identical
     toks/sh/sig/bands CTE prefix) and aggregates per-band bucket-load
     statistics instead of exploding pairs."""
+    n_hashes, n_bands = MD5_N_HASHES, MD5_N_BANDS
     rows_per_band = n_hashes // n_bands
     sigs = ",\n               ".join(
         f"list_min(list_transform(ds, d -> substr(d, {1 + 8 * i}, 8)))"
@@ -724,15 +732,7 @@ def minhash_band_cardinality_oracle_sql(
     """
 
 
-def minhash_lsh_cross_pairs_md5(
-    left: DataFrame,
-    right: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 8,
-    n_bands: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_lsh_cross_pairs_md5(left: DataFrame, right: DataFrame) -> DataFrame:
     """Cross-corpus MinHash+LSH near-dup pairs (fuzzy decontamination
     shape): every verified (left, right) pair with shingle-Jaccard
     >= 1/2, md5 hash family so the whole sketch is oracle-checkable.
@@ -751,10 +751,10 @@ def minhash_lsh_cross_pairs_md5(
     b_id from ``right``.
     """
     sh_l, bands_l = _md5_shingle_bands(
-        left, text_col, id_col, n_hashes, n_bands, shingle_n
+        left, "text", "doc_id", MD5_N_HASHES, MD5_N_BANDS, SHINGLE_N
     )
     sh_r, bands_r = _md5_shingle_bands(
-        right, text_col, id_col, n_hashes, n_bands, shingle_n
+        right, "text", "doc_id", MD5_N_HASHES, MD5_N_BANDS, SHINGLE_N
     )
     cand = (
         bands_l.select(F.col("_id").alias("a_id"), "_band", "_bkey")
@@ -790,14 +790,10 @@ def minhash_lsh_cross_pairs_md5(
     )
 
 
-def incremental_dedup(
-    corpus: DataFrame,
-    batch: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Day-2 dedup: deduplicate an incoming BATCH against an existing
-    corpus snapshot without reshuffling the corpus documents.
+    corpus snapshot (both keyed ``doc_id``, content ``text``) without
+    reshuffling the corpus documents.
 
     Returns every batch row annotated with ``drop_reason``:
     ``'corpus_dup'`` (content already in the corpus), ``'batch_dup'``
@@ -816,7 +812,7 @@ def incremental_dedup(
     """
     from pyspark.sql.window import Window
 
-    dig = F.sha2(F.col(content_col), 256)
+    dig = F.sha2(F.col("text"), 256)
     corpus_digests = corpus.select(dig.alias("_digest")).distinct()
     b = batch.withColumn("_digest", dig)
     marked = b.join(
@@ -824,13 +820,13 @@ def incremental_dedup(
         "_digest",
         "left",
     )
-    w_min = F.min(id_col).over(Window.partitionBy("_digest"))
+    w_min = F.min("doc_id").over(Window.partitionBy("_digest"))
     return (
         marked.withColumn("_keep_id", w_min)
         .withColumn(
             "drop_reason",
             F.when(F.col("_in_corpus") == 1, "corpus_dup").when(
-                F.col(id_col) != F.col("_keep_id"), "batch_dup"
+                F.col("doc_id") != F.col("_keep_id"), "batch_dup"
             ),
         )
         .drop("_in_corpus", "_keep_id")

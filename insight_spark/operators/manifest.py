@@ -726,7 +726,6 @@ def log_append_checked(
     table_dir: str,
     constraints: dict[str, str],
     expected_version: int | None = None,
-    stats_cols: list[str] | None = None,
 ) -> int:
     """CHECK-constraint-enforcing append — the Delta ``ALTER TABLE ADD
     CONSTRAINT`` write path: ``constraints`` maps a constraint name to
@@ -763,12 +762,7 @@ def log_append_checked(
                 "append rejected, table unchanged — violated constraints "
                 f"(name: violator rows): {bad}"
             )
-    return log_append(
-        df,
-        table_dir,
-        expected_version=expected_version,
-        stats_cols=stats_cols,
-    )
+    return log_append(df, table_dir, expected_version=expected_version)
 
 
 def log_restore(

@@ -28,7 +28,6 @@ def write_bucketed(
     bucket_keys: list[str],
     n_buckets: int = 8,
     sort_keys: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """A6+: persist as a bucketed (and optionally sorted) parquet table.
 
@@ -37,7 +36,7 @@ def write_bucketed(
     additionally removes the join's Sort — a bucketed+sorted pair
     sort-merge-joins with no exchange and no sort.
     """
-    writer = df.write.mode(mode).format("parquet").bucketBy(
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(
         n_buckets, *bucket_keys
     )
     if sort_keys:

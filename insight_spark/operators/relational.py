@@ -32,7 +32,7 @@ def money(c: Column | str) -> Column:
     return F.col(c).cast(MONEY) if isinstance(c, str) else c.cast(MONEY)
 
 
-def money_out(c: Column | str, digits: int = 6) -> Column:
+def money_out(c: Column | str) -> Column:
     """Final projection for DECIMAL accumulators: rounded double.
 
     Accumulate in DECIMAL(38,6) (exact, order-independent), but never
@@ -43,16 +43,7 @@ def money_out(c: Column | str, digits: int = 6) -> Column:
     mirror ``ROUND(CAST(x AS DOUBLE), 6)`` in the oracle SQL.
     """
     col = F.col(c) if isinstance(c, str) else c
-    return F.round(col.cast("double"), digits)
-
-
-def decimal_avg(sum_col: Column, count_col: Column, digits: int = 6) -> Column:
-    """Deterministic mean: exact decimal sum / count, rounded as double.
-
-    Both the Spark and the DuckDB oracle sides compute the identical
-    formula, so the resulting doubles are bit-equal (SURVEY.md §7.4.1).
-    """
-    return F.round(sum_col.cast("double") / count_col, digits)
+    return F.round(col.cast("double"), 6)
 
 
 def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:

@@ -65,14 +65,7 @@ def normalize(a: Column) -> Column:
     )
 
 
-def knn_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str = "q_vec_id",
-    c_id: str = "c_vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
+def knn_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """J3: exact top-k cosine neighbors per query vector.
 
     Expects ``queries(q_vec_id, q_embedding)`` and
@@ -83,14 +76,12 @@ def knn_topk(
     """
     from pyspark.sql import Window
 
-    score = F.round(
-        cosine(F.col("q_embedding"), F.col("c_embedding")), round_digits
-    )
+    score = F.round(cosine(F.col("q_embedding"), F.col("c_embedding")), 6)
     pairs = corpus.crossJoin(F.broadcast(queries)).select(
-        q_id, c_id, score.alias("cos_sim")
+        "q_vec_id", "c_vec_id", score.alias("cos_sim")
     )
-    w = Window.partitionBy(q_id).orderBy(
-        F.desc("cos_sim"), F.asc(c_id)
+    w = Window.partitionBy("q_vec_id").orderBy(
+        F.desc("cos_sim"), F.asc("c_vec_id")
     )
     return (
         pairs.withColumn("rank", F.row_number().over(w))
@@ -130,14 +121,9 @@ def _centroid_scores(centroids: DataFrame, vec_col: str) -> Column:
     )
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "c_embedding",
-    id_col: str = "c_vec_id",
-) -> DataFrame:
-    """IVF coarse quantization: tag each vector with its nearest-centroid
-    cell id.
+def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
+    """IVF coarse quantization: tag each ``c_embedding`` vector with its
+    nearest-centroid cell id.
 
     Pure per-row projection: ``array_sort`` of the K (dist, cell_id)
     structs picks the argmin (struct comparison = dist, then cell_id
@@ -145,7 +131,7 @@ def ivf_assign(
     shuffle, no row explosion; the corpus plan gains a single Project.
     Rebuilding the index = rerunning this projection.
     """
-    best = F.array_sort(_centroid_scores(centroids, vec_col))[0]
+    best = F.array_sort(_centroid_scores(centroids, "c_embedding"))[0]
     return corpus.withColumn("cell_id", best["cell_id"])
 
 
@@ -208,7 +194,7 @@ def seeded_centroids(corpus: DataFrame, n_cells: int) -> DataFrame:
 
 
 def lsh_plane_signs(
-    n_tables: int, n_planes: int, dim: int, seed: int = 42
+    n_tables: int, n_planes: int, dim: int
 ) -> list[list[list[int]]]:
     """Deterministic ±1 hyperplane components from md5 (driver-side,
     O(tables·planes·dim) — bounded model state, never per-row).  Because
@@ -221,7 +207,7 @@ def lsh_plane_signs(
         [
             [
                 1
-                if hashlib.md5(f"{seed}|{t}|{p}|{i}".encode()).digest()[0] < 128
+                if hashlib.md5(f"42|{t}|{p}|{i}".encode()).digest()[0] < 128
                 else -1
                 for i in range(dim)
             ]
@@ -359,10 +345,9 @@ def pq_codebooks(
     corpus: DataFrame,
     n_subspaces: int = 8,
     n_codes: int = 16,
-    vec_col: str = "c_embedding",
-    id_col: str = "c_vec_id",
 ) -> list[list[list[float]]]:
-    """J3 scale path #3 (model build): product-quantization codebooks.
+    """J3 scale path #3 (model build): product-quantization codebooks
+    over ``corpus(c_vec_id, c_embedding)``.
 
     Splits the d-dim space into ``n_subspaces`` contiguous subspaces
     and gives each a codebook of ``n_codes`` codes, seeded
@@ -382,7 +367,7 @@ def pq_codebooks(
     production ANN (FAISS IVFPQ) composes both.
     """
     rows = (
-        corpus.orderBy(id_col).limit(n_codes).select(vec_col).collect()
+        corpus.orderBy("c_vec_id").limit(n_codes).select("c_embedding").collect()
     )
     vecs = [[float(x) for x in r[0]] for r in rows]
     d = len(vecs[0])
@@ -394,12 +379,10 @@ def pq_codebooks(
 
 
 def pq_encode(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "c_embedding",
+    corpus: DataFrame, codebooks: list[list[list[float]]]
 ) -> DataFrame:
-    """PQ encode: replace each vector with ``array<int>`` of per-subspace
-    nearest-code ids.
+    """PQ encode: replace each ``c_embedding`` vector with ``array<int>``
+    of per-subspace nearest-code ids.
 
     Pure per-row Project (the ``ivf_assign`` pattern): each subspace
     scores its ``n_codes`` inlined codes with one ``transform`` and
@@ -422,7 +405,7 @@ def pq_encode(
                 for j, code in enumerate(codebooks[s])
             ]
         )
-        sub = F.slice(F.col(vec_col), s * ds + 1, ds)
+        sub = F.slice(F.col("c_embedding"), s * ds + 1, ds)
         scored = F.transform(
             cb,
             lambda c: F.struct(
@@ -431,7 +414,7 @@ def pq_encode(
         )
         codes.append(F.array_sort(scored)[0]["j"])
     return corpus.select(
-        *[c for c in corpus.columns if c != vec_col],
+        *[c for c in corpus.columns if c != "c_embedding"],
         F.array(*codes).alias("pq_codes"),
     )
 

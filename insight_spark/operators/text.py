@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 #: (SURVEY.md §7.4.5: keep to the POSIX/RE2-safe common dialect).
 NON_WORD_RE = "[^a-z0-9 ]"
 WS_RE = r"\s+"
+#: BM25 term-saturation and length-normalization constants (the
+#: Lucene/ES defaults); ``bm25_search``'s oracle spells the same values.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def normalize_text(c: Column) -> Column:
@@ -34,35 +38,33 @@ def tokenize(c: Column) -> Column:
     return F.filter(F.split(c, WS_RE), lambda t: t != "")
 
 
-def tokens_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def tokens_df(docs: DataFrame) -> DataFrame:
     """documents → (doc_id, token) exploded long form."""
-    return docs.select(
-        "doc_id", F.explode(tokenize(F.col(text_col))).alias("token")
-    )
+    return docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("token"))
 
 
-def term_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def term_freq(docs: DataFrame) -> DataFrame:
     """I5: corpus-level term frequency (token, tf)."""
     return (
-        tokens_df(docs, text_col)
+        tokens_df(docs)
         .groupBy("token")
         .agg(F.count("*").alias("tf"))
     )
 
 
-def doc_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_freq(docs: DataFrame) -> DataFrame:
     """I6: document frequency (token, df) — one count per containing doc."""
     return (
         docs.select(
             "doc_id",
-            F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("token"),
+            F.explode(F.array_distinct(tokenize(F.col("text")))).alias("token"),
         )
         .groupBy("token")
         .agg(F.count("*").alias("df"))
     )
 
 
-def tf_idf(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def tf_idf(docs: DataFrame) -> DataFrame:
     """I7: per-(doc, token) tf·idf with idf = ln((N+1)/(df+1)) + 1.
 
     The df table is |vocab|-sized → broadcast join against the per-doc
@@ -70,11 +72,11 @@ def tf_idf(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     n_docs = docs.select(F.countDistinct("doc_id").alias("n")).first()["n"]
     per_doc_tf = (
-        tokens_df(docs, text_col)
+        tokens_df(docs)
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
     )
-    dfreq = doc_freq(docs, text_col)
+    dfreq = doc_freq(docs)
     idf = F.log((F.lit(float(n_docs) + 1.0)) / (F.col("df") + 1.0)) + 1.0
     return per_doc_tf.join(F.broadcast(dfreq), "token").select(
         "doc_id",
@@ -108,24 +110,18 @@ def ngrams(tokens: Column, n: int) -> Column:
     return F.filter(grams, lambda g: g.isNotNull())
 
 
-def bm25_scores(
-    docs: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
     """I11: BM25 ranking of documents for a bag-of-terms query.
 
     score(d) = Σ_t  idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
-    with idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))  (k1/b are the
-    standard Lucene/ES defaults — SURVEY.md §2.I11).
+    with idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)) and k1/b =
+    ``BM25_K1``/``BM25_B`` (SURVEY.md §2.I11).
 
     Shape at scale: per-doc TF of only the query terms (explode +
     filter + groupBy), df per term (tiny, broadcast), one final agg per
     doc.  N and avgdl are scalar aggregates (two cheap jobs).
     """
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(F.col("text"))
     with_len = docs.select(
         "doc_id", F.explode(toks).alias("token"), F.size(toks).alias("dl")
     )
@@ -144,7 +140,7 @@ def bm25_scores(
     dfreq = (
         docs.select(
             "doc_id",
-            F.explode(F.array_distinct(tokenize(F.col(text_col)))).alias("token"),
+            F.explode(F.array_distinct(tokenize(F.col("text")))).alias("token"),
         )
         .filter(F.col("token").isin(terms))
         .groupBy("token")
@@ -154,6 +150,7 @@ def bm25_scores(
         1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     tf_d = F.col("tf").cast("double")
+    k1, b = BM25_K1, BM25_B
     denom = tf_d + k1 * (1.0 - b + b * (F.col("dl").cast("double") / F.lit(avgdl)))
     contrib = idf * (tf_d * (k1 + 1.0)) / denom
     # decimal-exact term sum: addition order independent (SURVEY §7.4.1)

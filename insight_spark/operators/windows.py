@@ -21,18 +21,15 @@ def top_k_per_group(
     partition: Sequence[str],
     order: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
-    """Top-k rows per group via row_number (E10).
+    """Top-k rows per group via row_number (E10), ranked in ``rn``.
 
     ``order`` must be a total order (unique tie-break) for determinism.
     Spark ≥3.5 rewrites the rank-filter into WindowGroupLimit: each
     group short-circuits after k rows instead of ranking everything.
     """
     w = Window.partitionBy(*partition).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def sessionize(

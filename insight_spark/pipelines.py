@@ -111,8 +111,6 @@ def build_suggestions(docs: DataFrame, min_tf: int = 2) -> DataFrame:
 def prepare_training_corpus(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
-    near_dup_threshold: float = 0.7,
-    decontaminate_n: int = 3,
 ) -> dict[str, DataFrame]:
     """The LLM-training-data prep job, end to end in one lazy plan pair.
 
@@ -125,10 +123,11 @@ def prepare_training_corpus(
     2. PII scrub          — typed placeholders, map-only regexp chain
     3. quality gate       — Gopher-style rules (Rae et al. 2021 §A1.1),
                             map-only higher-order array functions
-    4. near-dup removal   — MinHash+LSH pairs → connected components →
-                            keep cluster-min canonical
-    5. decontamination    — drop docs sharing any ``decontaminate_n``-gram
-                            with ``benchmark`` (skipped when None)
+    4. near-dup removal   — MinHash+LSH pairs (Jaccard >= 0.7) →
+                            connected components → keep cluster-min
+                            canonical
+    5. decontamination    — drop docs sharing any word 3-gram with
+                            ``benchmark`` (skipped when None)
     6. token stats        — tokens / n_tokens / n_chars for the packer
                             and shard export
 
@@ -175,11 +174,7 @@ def prepare_training_corpus(
     quality = survivors.filter(passes)
 
     pairs = (
-        near_dedup_minhash(
-            quality,
-            text_col="clean_text",
-            threshold=near_dup_threshold,
-        )
+        near_dedup_minhash(quality, text_col="clean_text")
         .select("a_id", "b_id")
         .localCheckpoint()
     )
@@ -194,9 +189,7 @@ def prepare_training_corpus(
         bench_grams = (
             benchmark.select(
                 F.explode(
-                    F.array_distinct(
-                        ngrams(tokenize(F.col("text")), decontaminate_n)
-                    )
+                    F.array_distinct(ngrams(tokenize(F.col("text")), 3))
                 ).alias("gram")
             )
             .select(F.xxhash64("gram").alias("gram_h"))
@@ -205,9 +198,7 @@ def prepare_training_corpus(
         doc_grams = canonical.select(
             "doc_id",
             F.explode(
-                F.array_distinct(
-                    ngrams(tokenize(F.col("clean_text")), decontaminate_n)
-                )
+                F.array_distinct(ngrams(tokenize(F.col("clean_text")), 3))
             ).alias("gram"),
         ).select("doc_id", F.xxhash64("gram").alias("gram_h"))
         contaminated = (
@@ -241,20 +232,17 @@ def prepare_training_corpus(
 
 
 def resolve_entities(
-    records: DataFrame,
-    id_col: str = "c_custkey",
-    name_col: str = "c_name",
-    max_edit: int = 1,
-    max_block: int | None = None,
+    records: DataFrame, max_block: int | None = None
 ) -> DataFrame:
-    """Entity resolution job: multi-pass blocking → verify → cluster.
+    """Entity resolution job over ``records(c_custkey, c_name)``:
+    multi-pass blocking → verify → cluster.
 
     The standard two-phase ER shape scaled out: candidate pairs come
     from the UNION of two blocking passes (soundex phonetic code +
     3-char prefix — multi-pass blocking is how production ER recovers
     the recall a single key loses), each pass a per-block equi-join
     whose volume is the sum of squared block sizes, never |n|².
-    Verification (Levenshtein ≤ ``max_edit``) runs only on candidates;
+    Verification (Levenshtein ≤ 1) runs only on candidates;
     verified pairs close transitively through the distributed
     connected-components operator, and every record maps to its
     cluster-min canonical — the ``entity_id``.
@@ -275,15 +263,13 @@ def resolve_entities(
     from insight_spark.operators.components import canonical_assignment
 
     named = records.select(
-        F.col(id_col), F.col(name_col).alias("_name")
+        "c_custkey", F.col("c_name").alias("_name")
     ).withColumn("_blk_snd", F.soundex("_name")).withColumn(
         "_blk_pre", F.substring("_name", 1, 3)
     )
 
     def _pass(blk: str) -> DataFrame:
-        side = named.select(
-            F.col(id_col), "_name", F.col(blk).alias("_blk")
-        )
+        side = named.select("c_custkey", "_name", F.col(blk).alias("_blk"))
         if max_block is not None:
             ok = (
                 side.groupBy("_blk")
@@ -293,12 +279,12 @@ def resolve_entities(
             )
             side = side.join(F.broadcast(ok), "_blk", "left_semi")
         a = side.select(
-            F.col(id_col).alias("a_id"),
+            F.col("c_custkey").alias("a_id"),
             F.col("_name").alias("_a_name"),
             "_blk",
         )
         b = side.select(
-            F.col(id_col).alias("b_id"),
+            F.col("c_custkey").alias("b_id"),
             F.col("_name").alias("_b_name"),
             "_blk",
         )
@@ -311,11 +297,13 @@ def resolve_entities(
     cand = _pass("_blk_snd").unionByName(_pass("_blk_pre")).dropDuplicates(
         ["a_id", "b_id"]
     )
-    pairs = cand.filter(
-        F.levenshtein("_a_name", "_b_name") <= max_edit
-    ).select("a_id", "b_id")
-    canon = canonical_assignment(pairs, records.select(id_col), id_col=id_col)
-    return records.join(canon, id_col).withColumnRenamed(
+    pairs = cand.filter(F.levenshtein("_a_name", "_b_name") <= 1).select(
+        "a_id", "b_id"
+    )
+    canon = canonical_assignment(
+        pairs, records.select("c_custkey"), id_col="c_custkey"
+    )
+    return records.join(canon, "c_custkey").withColumnRenamed(
         "canonical_id", "entity_id"
     )
 

@@ -23,6 +23,7 @@ import functools
 import importlib
 import os
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -190,38 +191,49 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
 
 _loaded = False
 
-#: Query modules that freeze SPARK_GRAFT_STRESS_SUBSET at import time
-#: (their O(n²)-baseline oracle SQL is an f-string baked then).
-_SUBSET_FROZEN_MODULES = (
-    "insight_spark.queries.pipeline_extra",
-    "insight_spark.queries.text_extra",
-    "insight_spark.queries.corpus_extra",
-)
 
+@dataclass(frozen=True)
+class StressCap:
+    """Cost cap for an O(n²)-by-design exact baseline: when ``table``
+    holds more than ``max_rows`` rows, BOTH sides keep only the
+    deterministic md5-range quarter of it (hex digit 0-3 of
+    md5(``key``)), so pair volume drops /16 while the baseline's
+    property is still asserted on a content-blind sample.
 
-def require_stress_subset() -> None:
-    """Turn on the stress-tier md5-sample subset for the three
-    O(n²)-by-design exact baselines — FAILING LOUDLY if their modules
-    already imported with the flag unset (ADVICE r11: the subset
-    choice freezes at module import, so a late flag flip would
-    silently run the full quadratic form at sf0.1 — answers stay
-    right, wall clock blows up).  Entry points (bench, driver_sim,
-    check_queries) call this BEFORE touching the registry."""
-    import sys
+    The choice is made per call from the input itself: the Spark side
+    reads the row count from the parquet footer (no Spark job), the
+    oracle from ``count(*)`` over the same table — so every tier, in
+    any process order, runs the form its input size calls for.
+    """
 
-    if os.environ.get("SPARK_GRAFT_STRESS_SUBSET"):
-        return  # set before any import — modules saw/will see it
-    frozen = [m for m in _SUBSET_FROZEN_MODULES if m in sys.modules]
-    if frozen:
-        raise RuntimeError(
-            "SPARK_GRAFT_STRESS_SUBSET requested after these modules "
-            f"already imported with it unset: {frozen} — the subset "
-            "is frozen at import, so this run would silently execute "
-            "the full O(n²) baselines.  Set the env var before the "
-            "first insight_spark.queries import (or start a fresh "
-            "process)."
+    table: str
+    key: str
+    max_rows: int
+
+    @property
+    def sql(self) -> str:
+        """DuckDB predicate over ``table``'s rows (true for all of them
+        at or under the cap)."""
+        return (
+            f"((SELECT count(*) FROM {self.table}) <= {self.max_rows}"
+            f" OR substr(md5(CAST({self.key} AS VARCHAR)), 1, 1) <= '3')"
         )
-    os.environ["SPARK_GRAFT_STRESS_SUBSET"] = "1"
+
+    def load(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """``table`` from ``sf_dir``, restricted to the quarter above
+        the cap."""
+        from pyspark.sql import functions as F
+
+        from insight_spark.sources.parquet import load_table, parquet_rows
+
+        df = load_table(spark, sf_dir, self.table)
+        path = os.path.join(sf_dir, f"{self.table}.parquet")
+        if parquet_rows(path) <= self.max_rows:
+            return df
+        return df.filter(
+            F.substring(F.md5(F.col(self.key).cast("string")), 1, 1) <= "3"
+        )
+
 
 #: Registration-time plan lint default (VERDICT r10 task 8): ON, so a
 #: new query with a scale-killer plan fails the moment a dev builds it

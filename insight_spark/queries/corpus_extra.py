@@ -9,7 +9,6 @@ mixture weighting.  All JVM-side DataFrame ops with DuckDB oracles.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,7 +16,7 @@ from pyspark.sql.window import Window
 
 from insight_spark.operators.dedup import prefix_filtered_jaccard_join
 from insight_spark.operators.text import ngrams, tokenize, tokens_df
-from insight_spark.queries import query
+from insight_spark.queries import StressCap, query
 from insight_spark.sources import load_table
 
 #: Collision n-gram width.  Real pipelines use 8-13 whitespace tokens
@@ -436,21 +435,12 @@ def top_ngram_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Stress-tier cost cap for the O(n²) brute-force ORACLE below
-# (VERDICT r6 task 8): at sf0.1 the uncapped ground truth dominated the
-# full-registry sweep at 228.7 s.  With SPARK_GRAFT_STRESS_SUBSET set
-# (scripts/driver_sim.py sets it automatically for sf0.1 runs), BOTH
-# sides restrict to the deterministic md5-range quarter of docs
-# (hex digit 0-3 of md5(doc_id)) — pair count /16 — so the
-# candidate-completeness property is still asserted, on a content-blind
-# sample.  The driver tier (sf0.01, env unset) keeps the exact
-# full-corpus oracle.
-_JTJ_SUBSET = bool(os.environ.get("SPARK_GRAFT_STRESS_SUBSET"))
-_JTJ_ORACLE_PRED = (
-    " AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= '3'"
-    if _JTJ_SUBSET
-    else ""
-)
+# Cost cap for the O(n²) brute-force ORACLE below (VERDICT r6 task 8):
+# at sf0.1 (5,000 docs) the uncapped ground truth dominated the
+# full-registry sweep at 228.7 s, so above 1,000 docs both sides keep
+# the md5-range quarter of docs; the driver tier (500 docs) keeps the
+# exact full-corpus oracle.
+_JTJ_CAP = StressCap("documents", "doc_id", 1_000)
 
 
 @query(
@@ -462,7 +452,7 @@ _JTJ_ORACLE_PRED = (
                                          t -> t <> '')) AS s
         FROM documents
     ),
-    sized AS (SELECT * FROM toks WHERE len(s) > 0{_JTJ_ORACLE_PRED}),
+    sized AS (SELECT * FROM toks WHERE len(s) > 0 AND {_JTJ_CAP.sql}),
     pairs AS (
         SELECT a.doc_id AS a_id, b.doc_id AS b_id,
                len(list_intersect(a.s, b.s)) AS i,
@@ -482,15 +472,10 @@ def jaccard_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the prefix-filter candidate set misses no true pair, which
     is exactly the property that lets the Spark side skip |docs|² at
     100 TB.  Threshold 9/10 as exact integer math on both sides.
-    At the stress tier both sides restrict to the same deterministic
-    md5-range doc subset (see ``_JTJ_SUBSET`` above).
+    Above ``_JTJ_CAP`` both sides restrict to the same deterministic
+    md5-range doc subset.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    if _JTJ_SUBSET:
-        docs = docs.filter(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) <= "3"
-        )
-    return prefix_filtered_jaccard_join(docs, 9, 10)
+    return prefix_filtered_jaccard_join(_JTJ_CAP.load(spark, sf_dir), 9, 10)
 
 
 #: RAG chunking contract: window/stride in whitespace tokens.  Fixture

@@ -8,7 +8,6 @@ GROUPING SETS (D13).
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +25,7 @@ from insight_spark.operators.similarity import (
     lsh_bucket_join,
 )
 from insight_spark.operators.text import ngrams, tokenize
-from insight_spark.queries import query
+from insight_spark.queries import StressCap, query
 from insight_spark.sources import load_table
 
 MONEY = "decimal(38,6)"
@@ -66,20 +65,11 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Stress-tier cost cap for the O(n²) exact baseline below — the
-# jaccard_threshold_join idiom (corpus_extra.py): with
-# SPARK_GRAFT_STRESS_SUBSET set (driver_sim / check_queries / bench set
-# it for sf0.1 runs), BOTH sides restrict to the deterministic
-# md5-range quarter of vectors, so pair volume drops /16 while the
-# brute-force-vs-LSH completeness property is still exercised on a
-# content-blind sample.  The driver tier (sf0.01, env unset) keeps the
-# exact full-corpus form.
-_ENDUP_SUBSET = bool(os.environ.get("SPARK_GRAFT_STRESS_SUBSET"))
-_ENDUP_ORACLE_PRED = (
-    " WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) <= '3'"
-    if _ENDUP_SUBSET
-    else ""
-)
+# Cost cap for the O(n²) exact baseline below (the
+# jaccard_threshold_join idiom, corpus_extra.py): above 1,000 vectors
+# (sf0.1 has 2,000) both sides keep the md5-range quarter of vectors;
+# the driver tier (500 vectors) keeps the exact full-corpus form.
+_ENDUP_CAP = StressCap("embeddings", "vec_id", 1_000)
 
 
 @query(
@@ -88,7 +78,7 @@ _ENDUP_ORACLE_PRED = (
     WITH e AS (
         SELECT vec_id, label,
                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings{_ENDUP_ORACLE_PRED}
+        FROM embeddings WHERE {_ENDUP_CAP.sql}
     )
     SELECT a.vec_id AS a_id, b.vec_id AS b_id,
            ROUND(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
@@ -110,12 +100,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cold at sf0.01); the arithmetic is the identical expression tree
     just hoisted, so scores stay bit-equal to the naive form.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    if _ENDUP_SUBSET:
-        emb = emb.filter(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-            <= "3"
-        )
+    emb = _ENDUP_CAP.load(spark, sf_dir)
     a = emb.select(
         F.col("vec_id").alias("a_id"),
         F.col("embedding").alias("a_v"),

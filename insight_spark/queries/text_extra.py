@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -21,7 +19,7 @@ from insight_spark.operators.text import (
     tokens_df,
 )
 from insight_spark.operators.relational import MONEY, money_out
-from insight_spark.queries import query
+from insight_spark.queries import StressCap, query
 from insight_spark.sources import load_table
 
 #: Stopword list shared verbatim with the oracle SQL (I3).
@@ -434,18 +432,12 @@ def doc_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Stress-tier cost cap (the jaccard_threshold_join idiom): the demo
-# block key (name's last char, ~10 blocks) makes candidate volume
-# Σ block² ≈ N²/10 — fine at the driver tier, 22M levenshteins at
-# sf0.1.  With SPARK_GRAFT_STRESS_SUBSET set, BOTH sides restrict to
-# the deterministic md5-range quarter of customers (pair volume /16);
-# the driver tier (sf0.01, env unset) keeps the exact full form.
-_BFM_SUBSET = bool(os.environ.get("SPARK_GRAFT_STRESS_SUBSET"))
-_BFM_ORACLE_PRED = (
-    " WHERE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 1) <= '3'"
-    if _BFM_SUBSET
-    else ""
-)
+# Cost cap (the jaccard_threshold_join idiom): the demo block key
+# (name's last char, ~10 blocks) makes candidate volume Σ block² ≈
+# N²/10 — fine at the driver tier (1,500 customers), 22M levenshteins
+# at sf0.1 (15,000).  Above 5,000 customers both sides keep the
+# md5-range quarter of customers (pair volume /16).
+_BFM_CAP = StressCap("customer", "c_custkey", 5_000)
 
 
 @query(
@@ -453,7 +445,7 @@ _BFM_ORACLE_PRED = (
     oracle=f"""
     WITH named AS (
         SELECT c_custkey, c_name, substr(c_name, length(c_name), 1) AS blk
-        FROM customer{_BFM_ORACLE_PRED}
+        FROM customer WHERE {_BFM_CAP.sql}
     )
     SELECT a.c_custkey AS a_id, b.c_custkey AS b_id,
            CAST(levenshtein(a.c_name, b.c_name) AS INTEGER) AS edit_dist
@@ -475,13 +467,7 @@ def blocked_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates.  Both engines share the Wagner-Fischer levenshtein
     definition, so the verdict column is value-exact.
     """
-    cust = load_table(spark, sf_dir, "customer")
-    if _BFM_SUBSET:
-        cust = cust.filter(
-            F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 1)
-            <= "3"
-        )
-    named = cust.select(
+    named = _BFM_CAP.load(spark, sf_dir).select(
         "c_custkey",
         "c_name",
         F.substring(F.col("c_name"), -1, 1).alias("blk"),

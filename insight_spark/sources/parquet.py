@@ -104,6 +104,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return cache[key]
 
 
+def parquet_rows(path: str) -> int:
+    """Row count of one parquet file, read from its footer (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
@@ -124,11 +131,11 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType | str | None = None,
-    header: bool = True,
     **options,
 ) -> DataFrame:
-    """CSV scan (A3): explicit schema preferred; inference only for ad-hoc."""
-    reader = spark.read.options(header=header, **options)
+    """CSV scan (A3) of files with a header row: explicit schema
+    preferred; inference only for ad-hoc."""
+    reader = spark.read.options(header=True, **options)
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -154,26 +161,17 @@ def from_rows(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def read_orc(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    **options,
-) -> DataFrame:
+def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
     """ORC scan (A-family: columnar alternative to parquet, built into
     Spark).  Same pushdown/pruning behavior as the parquet scan —
     PushedFilters and ReadSchema appear in the plan identically."""
-    reader = spark.read.options(**options)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+    return spark.read.options(**options).orc(path)
 
 
 def read_binary_files(
     spark: SparkSession,
     path: str,
     glob: str | None = None,
-    recursive: bool = False,
 ) -> DataFrame:
     """Raw-file scan (A11): Spark's ``binaryFile`` format — the ingest
     path for media corpora (images/audio/video as whole files).
@@ -189,23 +187,20 @@ def read_binary_files(
     reader = spark.read.format("binaryFile")
     if glob is not None:
         reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
     return reader.load(path)
 
 
-def write_hidden_partitioned(
-    df: DataFrame, path: str, ts_col: str = "ts"
-) -> None:
+def write_hidden_partitioned(df: DataFrame, path: str) -> None:
     """Hidden day-partitioning (the Iceberg headline feature, public
     design): lay the table out by a DERIVED partition value
-    (``to_date(ts)``) the user never has to know about — queries keep
-    filtering on the raw timestamp and ``read_ts_range`` maps that
+    (``to_date(ts)`` of the ``ts`` column) the user never has to know
+    about — queries keep filtering on the raw timestamp and
+    ``read_ts_range`` maps that
     predicate onto the layout.  The derived column is written as the
     hive partition key and dropped again on read, so the logical
     schema is unchanged."""
     (
-        df.withColumn("_part_day", F.to_date(F.col(ts_col)))
+        df.withColumn("_part_day", F.to_date(F.col("ts")))
         .repartition(F.col("_part_day"))
         .write.mode("overwrite")
         .partitionBy("_part_day")
@@ -213,9 +208,7 @@ def write_hidden_partitioned(
     )
 
 
-def read_ts_range(
-    spark: SparkSession, path: str, lo: str, hi: str, ts_col: str = "ts"
-) -> DataFrame:
+def read_ts_range(spark: SparkSession, path: str, lo: str, hi: str) -> DataFrame:
     """Range scan over a hidden-partitioned table: the caller supplies
     only the TIMESTAMP predicate [lo, hi); the reader derives the
     matching partition predicate (day(lo) ≤ _part_day ≤ day(hi)) so
@@ -234,6 +227,6 @@ def read_ts_range(
             (F.col("_part_day") >= F.to_date(lo_c))
             & (F.col("_part_day") <= F.to_date(hi_c))
         )
-        .filter((F.col(ts_col) >= lo_c) & (F.col(ts_col) < hi_c))
+        .filter((F.col("ts") >= lo_c) & (F.col("ts") < hi_c))
         .drop("_part_day")
     )

@@ -39,6 +39,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from insight_spark.sources.parquet import parquet_rows
+
 _SCHEMA = (
     "event_id bigint, ts_ms bigint, user_id bigint, "
     "event_type string, value double"
@@ -85,12 +87,6 @@ def _read_range(path: str, lo: int, hi: int):
         )
 
 
-def _total_rows(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 def _split(lo: int, hi: int, n: int) -> list[_RangePartition]:
     span = hi - lo
     if span <= 0:
@@ -108,7 +104,7 @@ class _EventTopicBatchReader(DataSourceReader):
         self._n = int(options.get("numPartitions", 4))
 
     def partitions(self):
-        return _split(0, _total_rows(self._path), self._n)
+        return _split(0, parquet_rows(self._path), self._n)
 
     def read(self, partition: _RangePartition):
         yield from _read_range(self._path, partition.lo, partition.hi)
@@ -129,7 +125,7 @@ class _EventTopicStreamReader(DataSourceStreamReader):
         self._batch_rows = int(options.get("batchRows", 250))
         self._n = int(options.get("numPartitions", 4))
         self._cursor = options.get("cursorFile", self._path + ".cursor")
-        self._total = _total_rows(self._path)
+        self._total = parquet_rows(self._path)
 
     def _read_cursor(self) -> int:
         import os

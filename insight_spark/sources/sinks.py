@@ -49,11 +49,9 @@ def _local_dir(out_dir: str) -> str:
     return url.path if url.scheme else out_dir
 
 
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """A6: partitioned parquet sink (hive-style directory pruning)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_search_index(
@@ -177,14 +175,12 @@ def suggest_lookup(
     )
 
 
-def write_jdbc_standin(
-    df: DataFrame, out_dir: str, table: str, mode: str = "overwrite"
-) -> str:
+def write_jdbc_standin(df: DataFrame, out_dir: str, table: str) -> str:
     """A8: PG sink stand-in — parquet payload + the DDL that would be
     issued over JDBC (offline env has no PG; ``df.write.jdbc(url,
     table, properties)`` is the production call)."""
     path = os.path.join(out_dir, table)
-    df.write.mode(mode).parquet(path)
+    df.write.mode("overwrite").parquet(path)
     ddl_cols = ",\n  ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -200,7 +196,6 @@ def write_training_shards(
     out_dir: str,
     id_col: str,
     n_shards: int,
-    mode: str = "overwrite",
 ) -> str:
     """Training-export sink: deterministic shard layout for a trainer.
 
@@ -227,7 +222,7 @@ def write_training_shards(
         hashed.repartition(n_shards, "shard")
         .sortWithinPartitions("_h", id_col)
         .drop("_h")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(out_dir)
     )
@@ -413,15 +408,14 @@ def read_additive_mv(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def write_orc(
-    df: DataFrame, path: str, partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_cols: list[str] | None = None
 ) -> None:
     """ORC sink (A-family).  Spark bundles the ORC datasource, so this
     is a first-class round-trippable format offline; Avro's external
     ``spark-avro`` module is NOT bundled and cannot be fetched in this
     container, so Avro remains an unsupported documented gap alongside
     the ES/JDBC connector stand-ins."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.orc(path)
@@ -432,11 +426,11 @@ def write_orc(
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "overwrite") -> None:
+def write_jdbc(df: DataFrame, url: str, table: str) -> None:
     """A8 real JDBC sink: the actual ``df.write.jdbc`` path (executors
     open driver connections and batch INSERTs — the same code path a
     PostgreSQL serving layer uses, pointed at embedded Derby here)."""
-    df.write.mode(mode).jdbc(url, table, properties={"driver": DERBY_DRIVER})
+    df.write.mode("overwrite").jdbc(url, table, properties={"driver": DERBY_DRIVER})
 
 
 def read_jdbc(spark: SparkSession, url: str, table: str) -> DataFrame:

@@ -133,15 +133,15 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def sessionize_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """K3 streaming: native session windows with watermark.
 
-    ``session_window`` merges events within ``gap``; state per open
+    ``session_window`` merges events within a 30-minute gap; state per open
     session, evicted once the watermark passes the session close.
     """
     return (
         events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -152,10 +152,10 @@ def sessionize_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def stream_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """K5: drop duplicate event_ids within the watermark horizon —
+def stream_dedup(events: DataFrame) -> DataFrame:
+    """K5: drop duplicate event_ids within the 2-hour watermark horizon —
     bounded-state streaming twin of exact dedup (J5)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -346,15 +346,16 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
-def sliding_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
     """K2 streaming: 10-min window sliding every 5 min, watermarked.
 
     Identical expression to the batch ``sliding_window_counts`` query
     (each event belongs to exactly 2 overlapping epoch-aligned
-    windows); state per open (window, ) group, evicted by watermark.
+    windows); state per open (window, ) group, evicted by the 2-hour
+    watermark.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
@@ -482,7 +483,7 @@ def recent_events_tws(events: DataFrame, n_keep: int = 5) -> DataFrame:
 
 
 def inactivity_sessions_tws(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "1 second"
+    events: DataFrame, gap_minutes: int = 30
 ) -> DataFrame:
     """K6 depth — event-time TIMERS: per-user inactivity sessionization
     via ``transformWithStateInPandas`` with ``timeMode="EventTime"``,
@@ -576,7 +577,7 @@ def inactivity_sessions_tws(
             pass
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 second")
         .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=_Sessions(),

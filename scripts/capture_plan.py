@@ -29,10 +29,6 @@ def main() -> int:
         sf_dir = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
     tag, names = argv[0], argv[1:]
-    if os.path.normpath(sf_dir).endswith("sf0.1"):
-        from insight_spark.queries import require_stress_subset
-
-        require_stress_subset()
     from insight_spark.engine import get_spark
     from insight_spark.queries import all_queries, set_lint_default
 

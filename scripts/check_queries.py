@@ -1,12 +1,18 @@
-"""Oracle-check a NAMED list of registry queries (driver-style compare).
+"""Oracle-check registry queries the way the external driver does.
 
-Usage: python scripts/check_queries.py name1 name2 ... [--sf DIR]
-                                          [--out FILE]
-Defaults to sf0.01 (the driver's correctness tier).  --out writes a
-JSON artifact {name: {"ok": bool, "secs": float, "detail": str}} —
-the per-round standalone parity evidence ADVICE r10 #3 asked for
-(CHECK_r{N}.json), so queries the driver window does not sample still
-leave a committed, reproducible correctness record.
+Usage: python scripts/check_queries.py [name1 name2 ...] [--first N]
+                                       [--sf DIR] [--out FILE]
+
+Vanilla SparkSession (NOT the engine builder — the driver builds its
+own), oracle compare via the same canonicalization the driver's pandas
+hash uses.  With no names, checks the whole registry in driver order;
+``--first N`` checks the first N of that order (the driver window).
+Defaults to sf0.01 (the driver's correctness tier).  Prints one line
+per query and a summary, and exits nonzero on any failure.  --out
+writes a JSON artifact {name: {"ok": bool, "secs": float, "detail":
+str}} — the per-round standalone parity evidence ADVICE r10 #3 asked
+for (CHECK_r{N}.json), so queries the driver window does not sample
+still leave a committed, reproducible correctness record.
 """
 
 from __future__ import annotations
@@ -30,12 +36,11 @@ def main() -> int:
         i = argv.index("--out")
         out_path = argv[i + 1]
         argv = argv[:i] + argv[i + 2 :]
-    if os.path.normpath(sf_dir).endswith("sf0.1"):
-        # loud-failure form: refuses if the frozen-at-import modules
-        # already loaded with the flag unset (ADVICE r11)
-        from insight_spark.queries import require_stress_subset
-
-        require_stress_subset()
+    first = None
+    if "--first" in argv:
+        i = argv.index("--first")
+        first = int(argv[i + 1])
+        argv = argv[:i] + argv[i + 2 :]
 
     from pyspark.sql import SparkSession
 
@@ -50,9 +55,10 @@ def main() -> int:
 
     queries = contract.queries()
     oracles = contract.oracle_sql()
+    names = argv or list(queries)[:first]
     failures: list[str] = []
     report: dict[str, dict] = {}
-    for name in argv:
+    for name in names:
         if name not in queries:
             print(f"FAIL {name} — not registered")
             failures.append(name)
@@ -82,7 +88,7 @@ def main() -> int:
         report[name] = {"ok": ok, "secs": round(dt, 2), "detail": detail}
         if not ok:
             failures.append(name)
-    print(f"SUMMARY: {len(argv) - len(failures)}/{len(argv)}; failures={failures}")
+    print(f"SUMMARY: {len(names) - len(failures)}/{len(names)}; failures={failures}")
     if out_path:
         import json
 

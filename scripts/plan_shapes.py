@@ -9,6 +9,10 @@ noise in BENCH.  Regenerate each round and diff:
     python scripts/plan_shapes.py            # writes PLAN_SHAPES.json
     git diff PLAN_SHAPES.json                # the round's plan drift
 
+A full run rewrites PLAN_SHAPES.json only when every query built and
+none has a fatal shape; otherwise it exits 1 and leaves the committed
+inventory as it was.
+
 Per query (built at sf0.001, lint off, pre-execution initial plan —
 deterministic for a fixed Spark version + fixture):
 
@@ -42,6 +46,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+#: The committed inventory that a clean full run rewrites.
+OUT_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "PLAN_SHAPES.json",
+)
 
 #: Queries whose RETURNED DataFrame is deliberately a driver-local
 #: result (collected inside the build for resource-lifetime reasons),
@@ -109,22 +119,18 @@ def main() -> int:
         for n, s in out.items()
         if s["cartesian"] or s["batch_eval_python"]
     }
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    doc = {"sf_dir": SF_DIR, "shapes": out, "shape_opaque": SHAPE_OPAQUE}
-    if errors:
-        doc["errors"] = errors
-    if not sys.argv[1:]:  # full runs own the committed artifact
-        with open(os.path.join(here, "PLAN_SHAPES.json"), "w") as fh:
+    if not sys.argv[1:] and not errors and not bad:
+        # only a clean full run owns the committed artifact
+        doc = {"sf_dir": SF_DIR, "shapes": out, "shape_opaque": SHAPE_OPAQUE}
+        with open(OUT_PATH, "w") as fh:
             json.dump(doc, fh, indent=1, sort_keys=True)
-    totals = {
-        k: sum(s[k] for s in out.values())
-        for k in next(iter(out.values()))
-    }
+    totals = {k: sum(s[k] for s in out.values()) for k in shape("")}
     print(json.dumps({"n": len(out), "totals": totals, "n_errors": len(errors)}))
+    if errors:
+        print(f"build errors: {errors}", file=sys.stderr)
     if bad:
         print(f"FATAL shapes: {sorted(bad)}", file=sys.stderr)
-        return 1
-    return 1 if errors else 0
+    return 1 if errors or bad else 0
 
 
 if __name__ == "__main__":

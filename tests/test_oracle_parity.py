@@ -145,3 +145,40 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "revenue" in df.columns
+
+
+def test_stress_cap_is_decided_per_call_from_the_input(spark):
+    """The three O(n²)-by-design baselines take their md5-quarter
+    subset from each call's own input size, so one process can move
+    between tiers in any order: full form at sf0.01 before AND after
+    an sf0.1 build, the quarter at sf0.1.  Plans only (nothing runs)
+    except one sf0.1 oracle compare on the cheapest of the three."""
+    from insight_spark.queries.corpus_extra import _JTJ_CAP
+    from insight_spark.queries.pipeline_extra import _ENDUP_CAP
+    from insight_spark.queries.text_extra import _BFM_CAP
+    from tests.conftest import SF_DIR_T2
+
+    sf_stress = os.path.join(os.path.dirname(SF_DIR_T2), "sf0.1")
+    if not os.path.isdir(sf_stress):
+        pytest.skip("no sf0.1 fixture")
+
+    def has_quarter(df) -> bool:
+        return "md5(" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    queries = contract.queries()
+    for sf, quartered in ((SF_DIR_T2, False), (sf_stress, True),
+                          (SF_DIR_T2, False)):
+        # jaccard_threshold_join checkpoints its token table while it
+        # builds, so its decision is read off the cap's own load
+        for cap in (_JTJ_CAP, _ENDUP_CAP, _BFM_CAP):
+            assert has_quarter(cap.load(spark, sf)) is quartered, (cap, sf)
+        for name in ("embedding_near_dup", "blocked_fuzzy_match"):
+            assert has_quarter(queries[name](spark, sf)) is quartered, (
+                name, sf,
+            )
+
+    name = "blocked_fuzzy_match"
+    report = compare_query(
+        queries[name](spark, sf_stress), contract.oracle_sql()[name], sf_stress
+    )
+    assert report["ok"], report

@@ -455,3 +455,42 @@ def test_capped_running_balance_is_map_in_pandas(spark):
     assert "MapInPandas" in plan
     assert "FlatMapGroupsInPandas" not in plan
     assert plan.count("Exchange") == 1
+
+
+def test_plan_shapes_failed_run_keeps_the_committed_inventory(
+    spark, tmp_path, monkeypatch
+):
+    """A full ``scripts/plan_shapes.py`` run in which one query's build
+    raises exits 1 and leaves the inventory file as it was — a failed
+    run must not replace the committed record with a partial one."""
+    import importlib.util
+    import os
+    import sys
+
+    import insight_spark.engine as engine
+    import insight_spark.queries as registry
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "plan_shapes", os.path.join(here, "scripts", "plan_shapes.py")
+    )
+    plan_shapes = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_shapes)
+
+    def broken(spark, sf_dir):
+        raise ImportError("mid-edit tree")
+
+    out = tmp_path / "PLAN_SHAPES.json"
+    out.write_text("committed\n")
+    monkeypatch.setattr(plan_shapes, "OUT_PATH", str(out))
+    monkeypatch.setattr(
+        registry,
+        "all_queries",
+        lambda: {"ok": lambda s, d: s.range(3), "broken": broken},
+    )
+    monkeypatch.setattr(engine, "get_spark", lambda app_name: spark)
+    # main() turns the build-time lint off; restore it for later tests
+    monkeypatch.setattr(registry, "_LINT_DEFAULT", registry._LINT_DEFAULT)
+    monkeypatch.setattr(sys, "argv", ["plan_shapes.py"])
+    assert plan_shapes.main() == 1
+    assert out.read_text() == "committed\n"
