@@ -15,15 +15,21 @@ from pyspark.sql import functions as F
 
 from insight_spark.operators.text import ngrams, tokenize
 
-#: SimHash fingerprint width; ``simhash_oracle_sql`` defaults to it.
+#: SimHash fingerprint width, read by the fingerprints and their oracle.
 SIMHASH_BITS = 16
-#: MinHash shingle width in words.  The md5 oracle SQL below spells
-#: the same word-trigram join, so the two must change together.
+#: MinHash shingle width in words, read by both engines' shingle stage.
 SHINGLE_N = 3
 #: Hash and band counts of the md5 (value-oracled) MinHash family,
 #: shared by the Spark operators and their DuckDB replays.
 MD5_N_HASHES = 8
 MD5_N_BANDS = 4
+#: The md5 family's integer verify predicate ``2·|∩| >= |∪|`` (Jaccard
+#: >= 1/2, no float compare) over the DuckDB shingle lists of a
+#: candidate's two sides, ``sa.s`` and ``sb.s``.
+MD5_VERIFY_SQL = (
+    "2 * len(list_intersect(sa.s, sb.s))"
+    " >= len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))"
+)
 #: Base seed of the xxhash64 MinHash family (seed + i per hash).
 MINHASH_SEED = 42
 
@@ -123,17 +129,17 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return summed.select("doc_id", fp.cast("long").alias("simhash"))
 
 
-def simhash_oracle_sql(n_bits: int = SIMHASH_BITS) -> str:
+def simhash_oracle_sql() -> str:
     """DuckDB SQL computing identical fingerprints (same md5-nibble hash)."""
-    assert n_bits % 4 == 0
     votes = ",\n           ".join(
         f"SUM((strpos('0123456789abcdef', substr(h, {j + 1}, 1)) - 1)"
         f" // {2 ** b} % 2 * 2 - 1) AS v{j * 4 + b}"
-        for j in range(n_bits // 4)
+        for j in range(SIMHASH_BITS // 4)
         for b in range(4)
     )
     fp = " + ".join(
-        f"(CASE WHEN v{i} >= 0 THEN {2 ** i} ELSE 0 END)" for i in range(n_bits)
+        f"(CASE WHEN v{i} >= 0 THEN {2 ** i} ELSE 0 END)"
+        for i in range(SIMHASH_BITS)
     )
     return rf"""
     WITH toks AS (
@@ -208,6 +214,23 @@ def _bucket_pair_candidates(bands: DataFrame, *key_cols: str) -> DataFrame:
     )
 
 
+def _shingle_sets(docs: DataFrame, text_col: str) -> DataFrame:
+    """Shingle sets ``(_id, _sh)`` keyed by ``docs.doc_id``: the
+    distinct ``SHINGLE_N``-gram word sequences of ``text_col``, docs
+    with an empty set dropped (see ``near_dedup_minhash``).  The first
+    stage of both MinHash families."""
+    return (
+        _spread(docs, "doc_id")
+        .select(
+            F.col("doc_id").alias("_id"),
+            F.array_distinct(
+                ngrams(tokenize(F.col(text_col)), SHINGLE_N)
+            ).alias("_sh"),
+        )
+        .filter(F.size("_sh") > 0)
+    )
+
+
 def near_dedup_minhash(
     docs: DataFrame,
     text_col: str = "text",
@@ -241,19 +264,14 @@ def near_dedup_minhash(
     against everything, so no such pair can verify at ``threshold`` >
     0, and a shared null-signature bucket would only manufacture
     candidate volume (visible under ``keep_all``, but as guaranteed
-    false positives).  The filter below makes the drop explicit,
-    matching ``_md5_shingle_bands``' size guard.
+    false positives).  ``_shingle_sets`` makes the drop explicit for
+    both MinHash families.
     """
     n_hashes, n_bands = 16, 4
     rows_per_band = n_hashes // n_bands
-    shingles = F.array_distinct(ngrams(tokenize(F.col(text_col)), SHINGLE_N))
-    toks = (
-        _spread(docs, "doc_id")
-        .select(F.col("doc_id").alias("_id"), shingles.alias("_sh"))
-        .filter(F.size("_sh") > 0)
-    )
+    toks = _shingle_sets(docs, text_col)
     # Signature via explode + map-side-combined min aggregate (r6, same
-    # rationale as _md5_bands_from_sh): a transform-per-seed over a
+    # rationale as _md5_shingle_bands): a transform-per-seed over a
     # projected shingle column gets the shingle expression INLINED by
     # CollapseProject and re-evaluated n_hashes times per row (HOF
     # lambdas see no subexpression elimination); row-wise xxhash64
@@ -433,47 +451,15 @@ def prefix_filtered_jaccard_join(
 
 def _md5_shingle_bands(
     docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int,
-    n_bands: int,
-    shingle_n: int,
+    n_hashes: int = MD5_N_HASHES,
+    n_bands: int = MD5_N_BANDS,
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared md5-family sketch stages: shingle sets ``(_id, _sh)`` and
-    LSH band buckets ``(_id, _band, _bkey)`` for a corpus.  Used by the
-    within-corpus pair join and the cross-corpus (decontamination)
-    variant — signatures are per-document, so banding each corpus
-    separately is bit-identical to banding their union."""
-    sh = _spread(docs, id_col).select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(ngrams(tokenize(F.col(text_col)), shingle_n)).alias(
-            "_sh"
-        ),
-    ).filter(F.size("_sh") > 0)
-    return sh, _md5_bands_from_sh(sh, n_hashes, n_bands)
-
-
-def md5_digest_concat_sql(n_hashes: int) -> str:
-    """DuckDB lambda body (over gram ``g``) for the per-gram chunked
-    digest — generated
-    from the SAME ``n_digests = n_hashes // 4`` formula as
-    ``_md5_bands_from_sh`` so a non-default ``n_hashes`` (e.g. 16)
-    can never silently desync Spark (which computes extra digests)
-    from an oracle hardcoding two (whose substr past char 64 would
-    yield empty chunks)."""
-    assert n_hashes % 4 == 0, "chunked family packs 4 chunks per digest"
-    return " || ".join(
-        "md5(g)" if d == 0 else f"md5('{'#' * d}' || g)"
-        for d in range(n_hashes // 4)
-    )
-
-
-def _md5_bands_from_sh(
-    sh: DataFrame, n_hashes: int, n_bands: int
-) -> DataFrame:
-    """Band buckets ``(_id, _band, _bkey)`` from a shingle-set table
-    ``(_id, _sh)`` — split out so callers can materialize ``sh`` once
-    and feed the SAME barrier to banding and verification."""
+    """Shared md5-family sketch stages over ``docs.text``: shingle sets
+    ``(_id, _sh)`` and LSH band buckets ``(_id, _band, _bkey)``.  Used
+    by the within-corpus pair join, the band-load audit and the
+    cross-corpus (decontamination) variant — signatures are
+    per-document, so banding each corpus separately is bit-identical
+    to banding their union.  ``md5_band_ctes`` is its DuckDB replay."""
     rows_per_band = n_hashes // n_bands
     assert rows_per_band * n_bands == n_hashes
     # Hash family (r6 rewrite): n_hashes values are 8-hex-char (32-bit)
@@ -488,6 +474,7 @@ def _md5_bands_from_sh(
     # tie is replayed bit-identically by the DuckDB oracle.
     assert n_hashes % 4 == 0, "chunked family packs 4 chunks per digest"
     n_digests = n_hashes // 4
+    sh = _shingle_sets(docs, "text")
 
     # Signature via EXPLODE + row-wise digest + map-side-combined min
     # aggregate, NOT array higher-order functions: HOF lambdas are
@@ -529,7 +516,86 @@ def _md5_bands_from_sh(
             )
         ).alias("_band", "_bkey"),
     )
-    return bands
+    return sh, bands
+
+
+def _md5_digest_concat_sql(n_hashes: int) -> str:
+    """DuckDB lambda body (over gram ``g``) for the per-gram chunked
+    digest — generated from the SAME ``n_digests = n_hashes // 4``
+    formula as ``_md5_shingle_bands`` so a non-default ``n_hashes``
+    (e.g. 16) can never silently desync Spark (which computes extra
+    digests) from an oracle hardcoding two (whose substr past char 64
+    would yield empty chunks)."""
+    assert n_hashes % 4 == 0, "chunked family packs 4 chunks per digest"
+    return " || ".join(
+        "md5(g)" if d == 0 else f"md5('{'#' * d}' || g)"
+        for d in range(n_hashes // 4)
+    )
+
+
+def md5_band_ctes(
+    source: str, n_hashes: int = MD5_N_HASHES, n_bands: int = MD5_N_BANDS
+) -> str:
+    """DuckDB replay of ``_md5_shingle_bands`` over the relation
+    ``source`` (``doc_id``, ``text``): the CTE list ``toks, sh, sh2,
+    shd, sig, bands`` for a caller's ``WITH``.  ``sh2`` holds the
+    non-empty shingle sets ``(doc_id, s)`` and ``bands`` the buckets
+    ``(doc_id, band, bkey)``, bit-identical to the Spark stages."""
+    rows_per_band = n_hashes // n_bands
+    gram = " || ' ' || ".join(
+        "t[i]" if k == 0 else f"t[i + {k}]" for k in range(SHINGLE_N)
+    )
+    sigs = ",\n               ".join(
+        f"list_min(list_transform(ds, d -> substr(d, {1 + 8 * i}, 8)))"
+        f" AS h{i}"
+        for i in range(n_hashes)
+    )
+    band_rows = "\n        UNION ALL ".join(
+        "SELECT doc_id, {b} AS band, {key} AS bkey FROM sig".format(
+            b=b,
+            key=" || '|' || ".join(
+                f"h{b * rows_per_band + r}" for r in range(rows_per_band)
+            ),
+        )
+        for b in range(n_bands)
+    )
+    return rf"""toks AS (
+        SELECT doc_id,
+               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
+        FROM {source}
+    ),
+    sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   range(1, greatest(len(t) - {SHINGLE_N - 2}, 1)),
+                   i -> {gram})) AS s
+        FROM toks
+    ),
+    sh2 AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
+    shd AS (
+        SELECT doc_id, s,
+               list_transform(s, g -> {_md5_digest_concat_sql(n_hashes)}) AS ds
+        FROM sh2
+    ),
+    sig AS (
+        SELECT doc_id, s,
+               {sigs}
+        FROM shd
+    ),
+    bands AS (
+        {band_rows}
+    )"""
+
+
+def _md5_verdict() -> tuple[Column, Column]:
+    """``(jaccard_sim, is_dup)`` of a candidate pair whose shingle sets
+    are joined in as ``_a`` and ``_b``: the rounded Jaccard and the
+    integer verify ``2·|∩| >= |∪|``, the Spark side of
+    ``MD5_VERIFY_SQL``."""
+    inter = F.size(F.array_intersect("_a", "_b"))
+    union = F.size("_a") + F.size("_b") - inter
+    sim = F.round(inter.cast("double") / union.cast("double"), 6)
+    return sim.alias("jaccard_sim"), F.lit(2) * inter >= union
 
 
 def minhash_lsh_pairs_md5(
@@ -544,15 +610,16 @@ def minhash_lsh_pairs_md5(
 
     Same pipeline shape as ``near_dedup_minhash`` (shingle → signature
     → band bucket → candidate pair → exact-Jaccard verify at t=1/2),
-    but the per-seed hash is ``md5(seed || '#' || gram)`` and the
-    signature element is the **lexicographic** minimum of the fixed-
-    width lowercase hex strings — which equals the numeric minimum of
-    the 128-bit values, and both engines compare ASCII strings
-    bytewise.  That makes every intermediate (signatures, band keys,
-    candidate set, verified pairs) bit-identical across engines, so
-    the driver's value-hash check covers the whole sketch pipeline
-    instead of a rows-only count (the simhash md5-nibble trick,
-    extended to MinHash).
+    but hash i is the i-th 8-hex-char chunk of the per-gram digest
+    ``md5(g) || md5('#' || g)`` (one more ``'#'``-prefixed md5 per 4
+    further hashes), and the signature element is the
+    **lexicographic** minimum of those fixed-width lowercase hex
+    chunks — which equals the numeric minimum of the 32-bit values,
+    and both engines compare ASCII strings bytewise.  That makes every
+    intermediate (signatures, band keys, candidate set, verified
+    pairs) bit-identical across engines, so the driver's value-hash
+    check covers the whole sketch pipeline instead of a rows-only
+    count (the simhash md5-nibble trick, extended to MinHash).
 
     The xxhash64 twin stays the 100 TB default (JVM hash, no hex
     materialization); this variant trades ~2× signature cost for
@@ -574,28 +641,20 @@ def minhash_lsh_pairs_md5(
     # localCheckpoint barrier on ``sh`` was tried and made the sf0.1
     # funnel 0.8 s SLOWER: writing the materialized gram arrays costs
     # more than recomputing the zip_with shingling per consumer.
-    sh, bands = _md5_shingle_bands(
-        docs, "text", "doc_id", n_hashes, n_bands, SHINGLE_N
-    )
+    sh, bands = _md5_shingle_bands(docs, n_hashes, n_bands)
     cand = _bucket_pair_candidates(bands, "_band", "_bkey")
     sets = sh.select("_id", "_sh")
     cand = cand.join(
         sets.select(F.col("_id").alias("a_id"), F.col("_sh").alias("_a")), "a_id"
     ).join(sets.select(F.col("_id").alias("b_id"), F.col("_sh").alias("_b")), "b_id")
-    inter = F.size(F.array_intersect("_a", "_b"))
-    union = F.size("_a") + F.size("_b") - inter
-    sim = F.round(inter.cast("double") / union.cast("double"), 6).alias(
-        "jaccard_sim"
-    )
+    sim, is_dup = _md5_verdict()
     if keep_all:
         # auditable form (near_dedup_minhash's keep_all): every LSH
         # candidate survives with its exact Jaccard and an integer-form
         # verdict — verification evidence in the output, false-positive
         # rate observable downstream.
-        return cand.select(
-            "a_id", "b_id", sim, (F.lit(2) * inter >= union).alias("is_dup")
-        )
-    return cand.filter(F.lit(2) * inter >= union).select("a_id", "b_id", sim)
+        return cand.select("a_id", "b_id", sim, is_dup.alias("is_dup"))
+    return cand.filter(is_dup).select("a_id", "b_id", sim)
 
 
 def minhash_lsh_pairs_md5_oracle_sql(
@@ -606,53 +665,10 @@ def minhash_lsh_pairs_md5_oracle_sql(
     """DuckDB SQL producing identical pairs (same md5 hash family).
     With ``keep_all``, replays the auditable form: every candidate with
     an ``is_dup`` verdict instead of the verification WHERE."""
-    rows_per_band = n_hashes // n_bands
-    sigs = ",\n               ".join(
-        f"list_min(list_transform(ds, d -> substr(d, {1 + 8 * i}, 8)))"
-        f" AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_rows = "\n        UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {key} AS bkey FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(
-                f"h{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    _verify = (
-        "2 * len(list_intersect(sa.s, sb.s))"
-        " >= len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))"
-    )
-    _verdict_sql = f",\n           {_verify} AS is_dup" if keep_all else ""
-    _where_sql = "" if keep_all else f"WHERE {_verify}"
-    return rf"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                   i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-        FROM toks
-    ),
-    sh2 AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    shd AS (
-        SELECT doc_id, s,
-               list_transform(s, g -> {md5_digest_concat_sql(n_hashes)}) AS ds
-        FROM sh2
-    ),
-    sig AS (
-        SELECT doc_id, s,
-               {sigs}
-        FROM shd
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    verdict = f",\n           {MD5_VERIFY_SQL} AS is_dup" if keep_all else ""
+    where = "" if keep_all else f"WHERE {MD5_VERIFY_SQL}"
+    return f"""
+    WITH {md5_band_ctes("documents", n_hashes, n_bands)},
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
         FROM bands a
@@ -662,61 +678,20 @@ def minhash_lsh_pairs_md5_oracle_sql(
     SELECT a_id, b_id,
            ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
                  / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))),
-                 6) AS jaccard_sim{_verdict_sql}
+                 6) AS jaccard_sim{verdict}
     FROM cand
     JOIN sh2 sa ON sa.doc_id = a_id
     JOIN sh2 sb ON sb.doc_id = b_id
-    {_where_sql}
+    {where}
     """
 
 
 def minhash_band_cardinality_oracle_sql() -> str:
-    """DuckDB SQL for the LSH band-load audit (M146): replays the SAME
-    md5 band family as ``minhash_lsh_pairs_md5_oracle_sql`` (identical
-    toks/sh/sig/bands CTE prefix) and aggregates per-band bucket-load
-    statistics instead of exploding pairs."""
-    n_hashes, n_bands = MD5_N_HASHES, MD5_N_BANDS
-    rows_per_band = n_hashes // n_bands
-    sigs = ",\n               ".join(
-        f"list_min(list_transform(ds, d -> substr(d, {1 + 8 * i}, 8)))"
-        f" AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_rows = "\n        UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {key} AS bkey FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(
-                f"h{b * rows_per_band + r}" for r in range(rows_per_band)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    return rf"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                   i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-        FROM toks
-    ),
-    sh2 AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    shd AS (
-        SELECT doc_id, s,
-               list_transform(s, g -> {md5_digest_concat_sql(n_hashes)}) AS ds
-        FROM sh2
-    ),
-    sig AS (
-        SELECT doc_id, s,
-               {sigs}
-        FROM shd
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    """DuckDB SQL for the LSH band-load audit (M146): the md5 band
+    family's per-band bucket-load statistics instead of exploding
+    pairs."""
+    return f"""
+    WITH {md5_band_ctes("documents")},
     bsz AS (
         SELECT band, bkey, CAST(COUNT(*) AS BIGINT) AS n
         FROM bands GROUP BY band, bkey
@@ -750,12 +725,8 @@ def minhash_lsh_cross_pairs_md5(left: DataFrame, right: DataFrame) -> DataFrame:
     Returns ``(a_id, b_id, jaccard_sim)`` with a_id from ``left``,
     b_id from ``right``.
     """
-    sh_l, bands_l = _md5_shingle_bands(
-        left, "text", "doc_id", MD5_N_HASHES, MD5_N_BANDS, SHINGLE_N
-    )
-    sh_r, bands_r = _md5_shingle_bands(
-        right, "text", "doc_id", MD5_N_HASHES, MD5_N_BANDS, SHINGLE_N
-    )
+    sh_l, bands_l = _md5_shingle_bands(left)
+    sh_r, bands_r = _md5_shingle_bands(right)
     cand = (
         bands_l.select(F.col("_id").alias("a_id"), "_band", "_bkey")
         .join(
@@ -776,18 +747,8 @@ def minhash_lsh_cross_pairs_md5(left: DataFrame, right: DataFrame) -> DataFrame:
         ),
         "b_id",
     )
-    inter = F.size(F.array_intersect("_a", "_b"))
-    union = F.size("_a") + F.size("_b") - inter
-    return (
-        cand.filter(F.lit(2) * inter >= union)
-        .select(
-            "a_id",
-            "b_id",
-            F.round(inter.cast("double") / union.cast("double"), 6).alias(
-                "jaccard_sim"
-            ),
-        )
-    )
+    sim, is_dup = _md5_verdict()
+    return cand.filter(is_dup).select("a_id", "b_id", sim)
 
 
 def incremental_dedup(corpus: DataFrame, batch: DataFrame) -> DataFrame:

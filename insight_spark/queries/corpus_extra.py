@@ -14,7 +14,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from insight_spark.operators.dedup import prefix_filtered_jaccard_join
+from insight_spark.operators.dedup import (
+    MD5_VERIFY_SQL,
+    md5_band_ctes,
+    prefix_filtered_jaccard_join,
+)
 from insight_spark.operators.text import ngrams, tokenize, tokens_df
 from insight_spark.queries import StressCap, query
 from insight_spark.sources import load_table
@@ -668,56 +672,14 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fuzzy_decon_oracle(n_hashes: int = 8, n_bands: int = 4) -> str:
+def _fuzzy_decon_oracle() -> str:
     """DuckDB replay of the cross-corpus MinHash+LSH decontamination:
-    same md5 hash family / banding as ``minhash_lsh_pairs_md5``, with
-    the corpus split into train (doc_id % 7 != 0) and eval (% 7 == 0)
-    AFTER signing — per-document math, so splitting before or after
-    banding is identical."""
-    from insight_spark.operators.dedup import (
-        md5_digest_concat_sql as _digest_sql,
-    )
-
-    rpb = n_hashes // n_bands
-    # chunked md5 family (r6, mirrors operators/dedup._md5_shingle_bands)
-    sigs = ",\n               ".join(
-        f"list_min(list_transform(ds, d -> substr(d, {1 + 8 * i}, 8)))"
-        f" AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_rows = "\n        UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {key} AS bkey FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(f"h{b * rpb + r}" for r in range(rpb)),
-        )
-        for b in range(n_bands)
-    )
-    return rf"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
-        FROM documents
-    ),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                   i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-        FROM toks
-    ),
-    sh2 AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    shd AS (
-        SELECT doc_id, s,
-               list_transform(s, g -> {_digest_sql(n_hashes)}) AS ds
-        FROM sh2
-    ),
-    sig AS (
-        SELECT doc_id, s,
-               {sigs}
-        FROM shd
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    the md5 band family of ``minhash_lsh_pairs_md5``, with the corpus
+    split into train (doc_id % 7 != 0) and eval (% 7 == 0) AFTER
+    signing — per-document math, so splitting before or after banding
+    is identical."""
+    return f"""
+    WITH {md5_band_ctes("documents")},
     cand AS (
         SELECT DISTINCT t.doc_id AS a_id, e.doc_id AS b_id
         FROM bands t
@@ -732,8 +694,7 @@ def _fuzzy_decon_oracle(n_hashes: int = 8, n_bands: int = 4) -> str:
         FROM cand
         JOIN sh2 sa ON sa.doc_id = a_id
         JOIN sh2 sb ON sb.doc_id = b_id
-        WHERE 2 * len(list_intersect(sa.s, sb.s))
-              >= len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))
+        WHERE {MD5_VERIFY_SQL}
     )
     SELECT a_id AS doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_eval_matches,

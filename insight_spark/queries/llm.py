@@ -6,8 +6,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from insight_spark.operators.dedup import (
+    MD5_VERIFY_SQL,
     _md5_shingle_bands,
     exact_dedup,
+    md5_band_ctes,
     minhash_band_cardinality_oracle_sql,
     minhash_lsh_pairs_md5,
     minhash_lsh_pairs_md5_oracle_sql,
@@ -170,8 +172,8 @@ def minhash_recall_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_band_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-load audit (M146): per-band bucket statistics for the
-    production J6 MinHash config (8 hashes / 4 bands / 3-shingles, md5
-    family — the exact bands ``minhash_lsh_pairs`` joins on).
+    production J6 MinHash config (the md5 family's ``MD5_N_HASHES`` /
+    ``MD5_N_BANDS`` — the exact bands ``minhash_lsh_pairs`` joins on).
 
     The skew PRE-FLIGHT for banded dedup: ``candidate_pairs`` =
     Σ n·(n−1)/2 over buckets is the exact number of pairs the LSH
@@ -189,9 +191,7 @@ def minhash_band_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match exactly.
     """
     docs = load_table(spark, sf_dir, "documents")
-    _sh, bands = _md5_shingle_bands(
-        docs, "text", "doc_id", n_hashes=8, n_bands=4, shingle_n=3
-    )
+    _sh, bands = _md5_shingle_bands(docs)
     bucket_sizes = bands.groupBy("_band", "_bkey").agg(
         F.count("*").alias("n")
     )
@@ -413,31 +413,10 @@ def incremental_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _md5_cluster_ctes() -> str:
     """Shared recursive-CTE chain for dedup-cluster oracles: exact-dedup
     keep map -> md5-family MinHash+LSH pairs over survivors ->
-    transitive closure -> per-survivor canonical (``canon``).  Mirrors
-    ``minhash_lsh_pairs_md5`` (8 hashes / 4 bands / 3-shingles,
-    integer-form verify at t=1/2) restricted to exact survivors.
-    Consumers append their own final SELECT (and any extra CTEs)."""
-    from insight_spark.operators.dedup import (
-        md5_digest_concat_sql as _digest_sql,
-    )
-
-    n_hashes, n_bands = 8, 4
-    rpb = n_hashes // n_bands
-    # chunked md5 family (r6, mirrors operators/dedup._md5_shingle_bands):
-    # per-gram digest = md5(g) || md5('#' || g); h_i = min 8-hex chunk i
-    sigs = ",\n               ".join(
-        f"list_min(list_transform(ds, d -> substr(d, {1 + 8 * i}, 8)))"
-        f" AS h{i}"
-        for i in range(n_hashes)
-    )
-    band_rows = "\n        UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {key} AS bkey FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(f"h{b * rpb + r}" for r in range(rpb)),
-        )
-        for b in range(n_bands)
-    )
-    return rf"""
+    transitive closure -> per-survivor canonical (``canon``).  The
+    DuckDB twin of ``_md5_clusters``; consumers append their own final
+    SELECT (and any extra CTEs)."""
+    return f"""
     WITH RECURSIVE keepmap AS (
         SELECT sha256(text) AS h, MIN(doc_id) AS keep_id
         FROM documents GROUP BY sha256(text)
@@ -446,31 +425,7 @@ def _md5_cluster_ctes() -> str:
         SELECT d.doc_id, d.text
         FROM documents d JOIN keepmap k ON d.doc_id = k.keep_id
     ),
-    toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
-        FROM docs2
-    ),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                   i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-        FROM toks
-    ),
-    sh2 AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    shd AS (
-        SELECT doc_id, s,
-               list_transform(s, g -> {_digest_sql(n_hashes)}) AS ds
-        FROM sh2
-    ),
-    sig AS (
-        SELECT doc_id, s,
-               {sigs}
-        FROM shd
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    {md5_band_ctes("docs2")},
     cand AS (
         SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
         FROM bands a
@@ -482,8 +437,7 @@ def _md5_cluster_ctes() -> str:
         FROM cand
         JOIN sh2 sa ON sa.doc_id = a_id
         JOIN sh2 sb ON sb.doc_id = b_id
-        WHERE 2 * len(list_intersect(sa.s, sb.s))
-              >= len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))
+        WHERE {MD5_VERIFY_SQL}
     ),
     edges AS (
         SELECT a_id AS u, b_id AS w FROM pairs
@@ -497,6 +451,35 @@ def _md5_cluster_ctes() -> str:
     ),
     canon AS (SELECT v, MIN(w) AS c FROM reach GROUP BY v)
     """
+
+
+def _md5_clusters(
+    docs: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Dedup-cluster chain over ``docs``, the Spark twin of
+    ``_md5_cluster_ctes``: exact-dedup survivors, their md5-family
+    near-dup ``(a_id, b_id)`` pairs, and each survivor's
+    ``(doc_id, canonical_id)`` from distributed connected components.
+
+    Survivors and pairs are each materialized once.  The sketch stage,
+    the survivor count and the CC id universe all consume the
+    survivors — without the barrier the sha256 digest-shuffle subplan
+    re-runs per consumer (measured ~0.9 s of the sf0.1 funnel).  The
+    CC rounds and every downstream count reuse the (small) pair list
+    instead of re-running the sketch pipeline per consumer."""
+    from insight_spark.operators.components import canonical_assignment
+
+    keep = exact_dedup(docs, content_col="text", id_col="doc_id").select(
+        F.col("keep_id").alias("doc_id")
+    )
+    survivors = docs.join(keep, "doc_id", "left_semi").localCheckpoint()
+    pairs = (
+        minhash_lsh_pairs_md5(survivors)
+        .select("a_id", "b_id")
+        .localCheckpoint()
+    )
+    canon = canonical_assignment(pairs, survivors.select("doc_id"))
+    return survivors, pairs, canon
 
 
 def _md5_pipeline_oracle() -> str:
@@ -534,26 +517,8 @@ def dedup_pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on bounded keys -> O(log d) pointer-jumping rounds; no
     driver state beyond CC's convergence flag.
     """
-    from insight_spark.operators.components import canonical_assignment
-
     docs = load_table(spark, sf_dir, "documents")
-    keep = exact_dedup(docs, content_col="text", id_col="doc_id").select(
-        F.col("keep_id").alias("doc_id")
-    )
-    # checkpoint the survivor set once: the sketch stage, the survivor
-    # count, and the CC id universe all consume it — without the
-    # barrier the sha256 digest-shuffle subplan re-runs per consumer
-    # (measured ~0.9 s of the sf0.1 funnel)
-    survivors = docs.join(keep, "doc_id", "left_semi").localCheckpoint()
-    # one eager materialization of the (small) id-pair list: the CC
-    # rounds, the pair count, and the canonical count all reuse it
-    # instead of re-running the sketch pipeline per consumer
-    pairs = (
-        minhash_lsh_pairs_md5(survivors)
-        .select("a_id", "b_id")
-        .localCheckpoint()
-    )
-    canon = canonical_assignment(pairs, survivors.select("doc_id"))
+    survivors, pairs, canon = _md5_clusters(docs)
     m1 = docs.agg(F.count("*").alias("n_docs"))
     m2 = survivors.agg(F.count("*").alias("n_exact_survivors"))
     m3 = pairs.agg(F.count("*").alias("n_near_pairs"))
@@ -621,14 +586,13 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     not asserted), and the safe split's train/test sizes.
 
     Cluster id for every document = near-dup canonical of its
-    exact-dup group representative (the dedup_pipeline_summary
-    machinery reused unchanged: digest shuffle -> band-bucket LSH over
+    exact-dup group representative (``_md5_clusters``, shared with
+    dedup_pipeline_summary: digest shuffle -> band-bucket LSH over
     survivors -> O(log d) pointer-jumping closure).  The split itself
     adds only map-side md5 projections plus one bounded per-cluster
     aggregate — append-stable (md5-keyed, no RNG), so re-running after
     corpus growth never migrates an existing cluster between splits.
     """
-    from insight_spark.operators.components import canonical_assignment
     from insight_spark.operators.dedup import content_hash
 
     docs = load_table(spark, sf_dir, "documents")
@@ -636,17 +600,8 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docmap = docs.select(
         "doc_id", content_hash(F.col("text")).alias("content_sha256")
     ).join(groups.select("content_sha256", "keep_id"), "content_sha256")
-    survivors = docs.join(
-        groups.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
-    ).localCheckpoint()
-    pairs = (
-        minhash_lsh_pairs_md5(survivors)
-        .select("a_id", "b_id")
-        .localCheckpoint()
-    )
-    canon = canonical_assignment(pairs, survivors.select("doc_id")).select(
-        F.col("doc_id").alias("keep_id"), "canonical_id"
-    )
+    _survivors, _pairs, canon = _md5_clusters(docs)
+    canon = canon.select(F.col("doc_id").alias("keep_id"), "canonical_id")
     full = docmap.join(canon, "keep_id", "left").select(
         "doc_id",
         F.coalesce("canonical_id", F.col("keep_id")).alias("cluster_id"),

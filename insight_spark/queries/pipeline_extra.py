@@ -33,7 +33,7 @@ MONEY = "decimal(38,6)"
 
 @query(
     "simhash_near_dup",
-    oracle=simhash_oracle_sql(16)
+    oracle=simhash_oracle_sql()
     + """
     SELECT a.doc_id AS a_id, b.doc_id AS b_id,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming

@@ -343,7 +343,7 @@ def test_md5_family_signature_matches_hashlib(spark):
     from insight_spark.operators.dedup import _md5_shingle_bands
 
     docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 20)
-    sh, bands = _md5_shingle_bands(docs, "text", "doc_id", 8, 4, 3)
+    sh, bands = _md5_shingle_bands(docs)
     shingles = {r["_id"]: list(r["_sh"]) for r in sh.collect()}
     got_bands = {}
     for r in bands.collect():
@@ -363,6 +363,30 @@ def test_md5_family_signature_matches_hashlib(spark):
         ]
         want = {b: f"{h[2 * b]}|{h[2 * b + 1]}" for b in range(4)}
         assert got_bands[_id] == want, f"doc {_id} signature drifted"
+
+
+def test_md5_band_keys_match_duckdb_ctes(spark):
+    """Every ``(_id, _band, _bkey)`` bucket of ``_md5_shingle_bands``
+    equals its ``md5_band_ctes`` DuckDB replay row for row — the bucket
+    keys themselves, which the band-cardinality oracle only sees as
+    per-band totals."""
+    from insight_spark.operators.dedup import _md5_shingle_bands, md5_band_ctes
+    from tests.oracle_harness import duckdb_connection
+
+    _sh, bands = _md5_shingle_bands(load_table(spark, SF, "documents"))
+    got = sorted(tuple(r) for r in bands.select("_id", "_band", "_bkey").collect())
+    con = duckdb_connection(SF)
+    try:
+        want = sorted(
+            con.execute(
+                f"WITH {md5_band_ctes('documents')} "
+                "SELECT doc_id, band, bkey FROM bands"
+            ).fetchall()
+        )
+    finally:
+        con.close()
+    assert got, "fixture must band at least one document"
+    assert got == want
 
 
 def test_line_dedup_ratio_bounds(spark, sf_dir):
