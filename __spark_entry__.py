@@ -24,19 +24,15 @@ def entry(spark: SparkSession) -> DataFrame:
     Top-10 customers by revenue with their region (SURVEY.md §7.1
     Phase 0): scan → broadcast dim joins → shuffle agg → top-k.
     """
-    from insight_spark.queries import all_queries, set_lint_default
+    from insight_spark.queries import all_queries
 
-    # the driver's runs are timed evidence — no build-time plan lint
-    # (dev paths keep it on; see queries.set_lint_default)
-    set_lint_default(False)
     return all_queries()["flagship_top_customers"](spark, SF0001_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator group from SURVEY.md §2."""
-    from insight_spark.queries import all_queries, set_lint_default
+    from insight_spark.queries import all_queries
 
-    set_lint_default(False)
     return all_queries()
 
 

@@ -108,15 +108,12 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     from insight_spark.engine import get_spark
-    from insight_spark.queries import all_queries, set_lint_default
+    from insight_spark.queries import all_queries
     from insight_spark.sources import load_table, load_tables
 
-    # timed runs — the build-time plan lint (default-on for dev since
-    # r11) must not sit inside a measured interval
-    set_lint_default(False)
     spark = get_spark("insight_spark_bench")
-    # The only remaining unpartitioned windows are the 4 plan-guarded
-    # bounded-input ones (tests/test_plans.py allowlist), so WARN-level
+    # The only remaining unpartitioned windows are the proven
+    # bounded-input ones (plans/audit.py allowlist), so WARN-level
     # WindowExec noise carries no signal — ERROR keeps the bench log
     # clean enough that a real regression stands out in `tail`.
     spark.sparkContext.setLogLevel("ERROR")

@@ -30,6 +30,12 @@ MD5_VERIFY_SQL = (
     "2 * len(list_intersect(sa.s, sb.s))"
     " >= len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))"
 )
+#: The md5 family's rounded Jaccard over the same two shingle lists —
+#: the DuckDB side of ``_md5_verdict``'s ``jaccard_sim``.
+MD5_JACCARD_SQL = (
+    "ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)"
+    " / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))), 6)"
+)
 #: Base seed of the xxhash64 MinHash family (seed + i per hash).
 MINHASH_SEED = 42
 
@@ -591,7 +597,7 @@ def _md5_verdict() -> tuple[Column, Column]:
     """``(jaccard_sim, is_dup)`` of a candidate pair whose shingle sets
     are joined in as ``_a`` and ``_b``: the rounded Jaccard and the
     integer verify ``2·|∩| >= |∪|``, the Spark side of
-    ``MD5_VERIFY_SQL``."""
+    ``MD5_JACCARD_SQL`` and ``MD5_VERIFY_SQL``."""
     inter = F.size(F.array_intersect("_a", "_b"))
     union = F.size("_a") + F.size("_b") - inter
     sim = F.round(inter.cast("double") / union.cast("double"), 6)
@@ -675,10 +681,7 @@ def minhash_lsh_pairs_md5_oracle_sql(
         JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
                     AND a.doc_id < b.doc_id
     )
-    SELECT a_id, b_id,
-           ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-                 / (len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s))),
-                 6) AS jaccard_sim{verdict}
+    SELECT a_id, b_id, {MD5_JACCARD_SQL} AS jaccard_sim{verdict}
     FROM cand
     JOIN sh2 sa ON sa.doc_id = a_id
     JOIN sh2 sb ON sb.doc_id = b_id

@@ -29,15 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Typed blob reference: where it lives, what it is, how big it is.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("uri", T.StringType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("size_bytes", T.LongType()),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -9,8 +9,6 @@ fine for exploration, wrong for a reproducible engine.
 Scale notes (100 TB posture):
 - ``topk`` compiles to a single ``TakeOrderedAndProject`` physical op —
   per-partition heap + driver merge of k rows; no global sort.
-- ``keep_one_per_key`` is one hash-shuffle by key + ``min_by`` — map-side
-  partial aggregation applies, state per key is one row.
 - ``top_k_per_group`` (windows.py) benefits from Spark ≥3.5's
   ``InferWindowGroupLimit``: rank-filter is pushed to a per-group limit.
 """
@@ -53,18 +51,3 @@ def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     Physical plan: TakeOrderedAndProject (no full sort, no extra shuffle).
     """
     return df.orderBy(*order).limit(k)
-
-
-def keep_one_per_key(
-    df: DataFrame, keys: Sequence[str], tie: str
-) -> DataFrame:
-    """Deterministic keyed dedup (D17): keep the row minimizing ``tie``.
-
-    Expressed as ``min_by(struct(*), tie)`` so it is a single hash
-    aggregate (partial+final), not a window over a global sort.
-    """
-    others = [c for c in df.columns if c not in keys]
-    agg = df.groupBy(*keys).agg(
-        F.min_by(F.struct(*[F.col(c) for c in others]), F.col(tie)).alias("_row")
-    )
-    return agg.select(*keys, *[F.col(f"_row.{c}").alias(c) for c in others])

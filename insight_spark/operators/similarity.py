@@ -57,14 +57,6 @@ def l2_distance(a: Column, b: Column) -> Column:
     )
 
 
-def normalize(a: Column) -> Column:
-    """J1: unit vector (null-safe for zero vectors → unchanged)."""
-    n = l2_norm(a)
-    return F.when(n == 0.0, a).otherwise(
-        F.transform(a, lambda x: _d(x) / n)
-    )
-
-
 def knn_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """J3: exact top-k cosine neighbors per query vector.
 

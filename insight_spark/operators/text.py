@@ -165,23 +165,6 @@ def bm25_scores(docs: DataFrame, terms: list[str]) -> DataFrame:
     )
 
 
-def prefix_suggest(
-    term_freq_df: DataFrame, prefix: str, k: int
-) -> DataFrame:
-    """I9: top-k completion candidates for a prefix, by frequency.
-
-    Serving-side this is an index lookup (ES completion suggester role);
-    engine-side it is a sargable startswith filter over the TF table —
-    pushed down to the parquet scan when the TF table is materialized
-    sorted by token.
-    """
-    return (
-        term_freq_df.filter(F.col("token").startswith(prefix))
-        .orderBy(F.desc("tf"), F.asc("token"))
-        .limit(k)
-    )
-
-
 #: PII patterns (RE2/POSIX-safe, shared dialect — SURVEY §7.4.5).
 PII_PATTERNS = {
     "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",

@@ -33,9 +33,9 @@ Rules (severity in parentheses):
 - ``shuffle-count`` (info): number of shuffle exchanges in the plan —
   the unit of cluster cost to minimize, reported for trend-watching.
 
-The engine-wide test guards import ``window_specs`` /
-``is_unpartitioned`` from here, so the lint the tests enforce and the
-lint users run are the same code.
+The engine-wide test guard calls ``lint_query_plan`` from here on
+every registered query, so the lint the tests enforce and the lint
+users run are the same code.
 """
 
 from __future__ import annotations
@@ -59,10 +59,11 @@ __all__ = [
 
 #: Declared queries allowed to plan an unpartitioned Window — each
 #: input is bounded BY CONSTRUCTION before the window, so the single
-#: task holds metadata-scale rows, not data.  ONE list, shared by the
-#: engine-wide test guard (tests/test_plans.py) and the
-#: registration-time lint below — a new query earns an entry only with
-#: a documented bound.  Since r12 an entry here is a CLAIM, not a
+#: task holds metadata-scale rows, not data.  ONE list, read only by
+#: ``lint_query_plan`` below — which the engine-wide test guard
+#: (tests/test_plans.py) and scripts/plan_shapes.py run over every
+#: registered query; a new query earns an entry only with a documented
+#: bound.  Since r12 an entry here is a CLAIM, not a
 #: pass: ``unproven_window_paths`` machine-verifies from the physical
 #: plan that every root-to-leaf path under the global window crosses a
 #: bounding node (TakeOrdered / Limit / Aggregate); all 24 current
@@ -263,22 +264,19 @@ def unproven_window_paths(plan: str) -> list[str]:
 class PlanScaleError(AssertionError):
     """A declared query planned a fatal scale-killer shape.
 
-    Raised at query-build time when ``SPARK_GRAFT_LINT_PLANS`` is set
-    (the registration-time lint the round-5/round-6 regressions showed
-    was needed: both rounds shipped a query that failed the repo's own
-    engine-wide plan guard because nothing ran the guard at build
-    time)."""
+    Raised by ``lint_query_plan`` (the round-5/round-6 regressions both
+    shipped a query whose plan broke the engine-wide guard)."""
 
 
 def lint_query_plan(name: str, df: DataFrame) -> None:
     """Raise ``PlanScaleError`` if ``df``'s physical plan contains a
     fatal finding not covered by the query's documented exemption.
 
-    Wired into the ``@query`` decorator behind the
-    ``SPARK_GRAFT_LINT_PLANS`` env flag, so
-    ``SPARK_GRAFT_LINT_PLANS=1 python scripts/lint_plans.py`` fails a
-    guard-breaking query the day it is written instead of at the next
-    engine-wide test sweep."""
+    The one place the fatal rules are decided: the tier-1 registry
+    guard (tests/test_plans.py) and ``scripts/plan_shapes.py`` both
+    call it on every registered query, and the PLAN_SHAPES.json
+    freshness test makes a new query go through plan_shapes.py the day
+    it is written."""
     allow = (
         {"unpartitioned-window"} if name in BOUNDED_GLOBAL_WINDOW_OK else set()
     )

@@ -19,7 +19,6 @@ Alignment discipline (SURVEY.md §7.4), applied inside every pair:
 
 from __future__ import annotations
 
-import functools
 import importlib
 import os
 from collections.abc import Callable
@@ -235,30 +234,6 @@ class StressCap:
         )
 
 
-#: Registration-time plan lint default (VERDICT r10 task 8): ON, so a
-#: new query with a scale-killer plan fails the moment a dev builds it
-#: — not at the next full suite run (rounds 5 and 6 each shipped one
-#: because nothing ran the guard at write time).  The driver's timed
-#: correctness runs and bench flip this off via ``set_lint_default``
-#: (zero planning overhead there); ``SPARK_GRAFT_LINT_PLANS=1/0`` in
-#: the environment overrides in either direction.
-_LINT_DEFAULT: bool = True
-
-
-def set_lint_default(enabled: bool) -> None:
-    """Flip the build-time plan lint for paths where it must not run
-    (the external driver's timed window, bench) or must (dev loops)."""
-    global _LINT_DEFAULT
-    _LINT_DEFAULT = enabled
-
-
-def _lint_enabled() -> bool:
-    env = os.environ.get("SPARK_GRAFT_LINT_PLANS")
-    if env is not None:
-        return env not in ("", "0")
-    return _LINT_DEFAULT
-
-
 def _load() -> None:
     global _loaded
     if not _loaded:
@@ -270,30 +245,15 @@ def _load() -> None:
 def query(name: str, oracle: str | None = None):
     """Register a declared query (and its DuckDB oracle, if hashable).
 
-    Every registered query lints its own physical plan at build time
-    (plans/audit.lint_query_plan) and raises ``PlanScaleError`` on a
-    fatal scale-killer shape — the registration-time gate the
-    round-5/round-6 regressions called for (both rounds shipped a
-    query that failed the engine-wide test guard because nothing ran
-    the guard when the query was written).  ON by default since r11
-    (VERDICT r10 task 8); the driver's timed path (__spark_entry__)
-    and bench flip it off via ``set_lint_default(False)``, and
-    ``SPARK_GRAFT_LINT_PLANS=1/0`` overrides either way."""
+    Registration only records the builder: the fatal plan rules
+    (plans/audit.lint_query_plan) run over every registered query in
+    tests/test_plans.py and in scripts/plan_shapes.py, never inside
+    the builder itself."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-
-        @functools.wraps(fn)
-        def linted(spark: SparkSession, sf_dir: str) -> DataFrame:
-            df = fn(spark, sf_dir)
-            if _lint_enabled():
-                from insight_spark.plans.audit import lint_query_plan
-
-                lint_query_plan(name, df)
-            return df
-
-        _QUERIES[name] = linted
+        _QUERIES[name] = fn
         if oracle is not None:
             _ORACLE[name] = oracle
         return fn

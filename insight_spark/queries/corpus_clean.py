@@ -842,11 +842,10 @@ def observed_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: downstream expression is unchanged.
 _BLOCKLIST = ("dup", "slow", "stale")
 
-#: Flag threshold: blocklist tokens >= 4% of the document's tokens.
-#: Expressed as the integer cross-multiplication 25*hits >= n_tokens
-#: (1e6*hits/n >= 40000 <=> 25*hits >= n) so the gate never touches a
-#: float on either engine.
-_BLOCK_DENSITY_PCT = 4
+# Flag threshold: blocklist tokens >= 4% of the document's tokens,
+# expressed as the integer cross-multiplication 25*hits >= n_tokens
+# (1e6*hits/n >= 40000 <=> 25*hits >= n) so the gate never touches a
+# float on either engine.
 
 
 @query(

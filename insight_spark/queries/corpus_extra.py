@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from insight_spark.operators.dedup import (
+    MD5_JACCARD_SQL,
     MD5_VERIFY_SQL,
     md5_band_ctes,
     prefix_filtered_jaccard_join,
@@ -687,10 +688,7 @@ def _fuzzy_decon_oracle() -> str:
         WHERE t.doc_id % 7 <> 0 AND e.doc_id % 7 = 0
     ),
     ver AS (
-        SELECT a_id, b_id,
-               ROUND(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-                     / (len(sa.s) + len(sb.s)
-                        - len(list_intersect(sa.s, sb.s))), 6) AS j
+        SELECT a_id, b_id, {MD5_JACCARD_SQL} AS j
         FROM cand
         JOIN sh2 sa ON sa.doc_id = a_id
         JOIN sh2 sb ON sb.doc_id = b_id

@@ -676,11 +676,10 @@ def search_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-#: Synthetic PII tail appended per document (fixtures carry no real
-#: PII, so the audit injects known spans keyed by doc_id — both
-#: engines see the same augmented text, making redaction counts
-#: value-checkable).
-_PII_TAIL = " reach u{ID}@ex.org or 987-65-4321 or +1 (555) 010-2233 ok"
+# pii_scrub_audit appends a synthetic PII tail per document (fixtures
+# carry no real PII, so the audit injects known spans keyed by doc_id —
+# both engines see the same augmented text, making redaction counts
+# value-checkable).
 
 
 @query(
@@ -2446,7 +2445,7 @@ def phrase_match_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     POSITIONAL postings with an adjacency constraint — the phrase
     operator of a real search engine (the positional complement of
     `bm25_search` (bag scoring), `term_proximity_rank` (unordered
-    window), and `prefix_suggest` (dictionary)): quoted queries,
+    window), and `prefix_suggest_th` (dictionary)): quoted queries,
     entity names, and code identifiers all need positions, not bags.
 
     The Spark side intersects postings the way a search engine does

@@ -52,29 +52,18 @@ def prepare_stream_input(
     """
     from insight_spark.sources import load_table
 
-    import glob
-    import shutil
-
     ev = load_table(spark, sf_dir, "events")
     # single-partition window is fine here: test-prep only, small data
     chunks = ev.withColumn(
         "_chunk", F.ntile(n_chunks).over(Window.orderBy("ts", "event_id"))
     )
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(1, n_chunks + 1):
-        staging = os.path.join(out_dir, f"_staging_{i}")
-        chunks.filter(F.col("_chunk") == i).drop("_chunk").coalesce(
-            1
-        ).write.mode("overwrite").parquet(staging)
-        # the stream source lists plain files, not directories — surface
-        # the single part file as <out_dir>/chunk_i.parquet
-        part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-        dest = os.path.join(out_dir, f"chunk_{i}.parquet")
-        shutil.move(part, dest)
-        shutil.rmtree(staging)
-        paths.append(dest)
-    return paths
+    return [
+        write_single_parquet(
+            chunks.filter(F.col("_chunk") == i).drop("_chunk"),
+            os.path.join(out_dir, f"chunk_{i}.parquet"),
+        )
+        for i in range(1, n_chunks + 1)
+    ]
 
 
 def write_single_parquet(df: DataFrame, dest_file: str) -> str:
@@ -84,10 +73,14 @@ def write_single_parquet(df: DataFrame, dest_file: str) -> str:
     import shutil
     import tempfile
 
-    staging = tempfile.mkdtemp(prefix="_single_pq_")
+    dest_dir = os.path.dirname(dest_file)
+    os.makedirs(dest_dir, exist_ok=True)
+    # staged beside the destination: the file stream source skips
+    # ``_``-prefixed entries, and the final move is a same-filesystem
+    # rename
+    staging = tempfile.mkdtemp(prefix="_single_pq_", dir=dest_dir)
     df.coalesce(1).write.mode("overwrite").parquet(staging)
     part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-    os.makedirs(os.path.dirname(dest_file), exist_ok=True)
     shutil.move(part, dest_file)
     shutil.rmtree(staging, ignore_errors=True)
     return dest_file

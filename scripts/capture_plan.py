@@ -30,9 +30,8 @@ def main() -> int:
         argv = argv[:i] + argv[i + 2 :]
     tag, names = argv[0], argv[1:]
     from insight_spark.engine import get_spark
-    from insight_spark.queries import all_queries, set_lint_default
+    from insight_spark.queries import all_queries
 
-    set_lint_default(False)
     spark = get_spark("capture_plan")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()

@@ -8,12 +8,17 @@ noise in BENCH.  Regenerate each round and diff:
 
     python scripts/plan_shapes.py            # writes PLAN_SHAPES.json
     git diff PLAN_SHAPES.json                # the round's plan drift
+    python scripts/plan_shapes.py topk knn_cosine_topk   # check just these
 
+Every built query also goes through ``plans/audit.lint_query_plan``
+(fatal: cartesian product, rowwise Python, unpartitioned window off
+the proven-bounded allowlist), so this is the check to run on a new
+query before registering it.  A lint failure counts as a build error.
 A full run rewrites PLAN_SHAPES.json only when every query built and
-none has a fatal shape; otherwise it exits 1 and leaves the committed
-inventory as it was.
+linted clean; otherwise it exits 1 and leaves the committed inventory
+as it was.  A run over named queries never writes it.
 
-Per query (built at sf0.001, lint off, pre-execution initial plan —
+Per query (built at sf0.001, pre-execution initial plan —
 deterministic for a fixed Spark version + fixture):
 
 - exchanges:   shuffle Exchange nodes (the unit of cluster cost)
@@ -27,13 +32,12 @@ deterministic for a fixed Spark version + fixture):
 - global_sorts: global Sort nodes that are not TakeOrderedAndProject
 - file_scans:  FileScan source nodes (a source re-scanned B times for
                one result shows up here — the r10 zorder loop shape)
-
-Invariants asserted here AND in tests over the committed file: zero
-CartesianProduct, zero BatchEvalPython (rowwise Python) anywhere.
+- cartesian / batch_eval_python: CartesianProduct / BatchEvalPython
+               nodes — zero in any written inventory, since the lint
+               rejects both
 
 Build-side-effect queries (stream drains, manifest writes) execute
-during the build exactly as in scripts/lint_plans.py; the recorded
-shape is the RETURNED DataFrame's plan.
+during the build; the recorded shape is the RETURNED DataFrame's plan.
 """
 
 from __future__ import annotations
@@ -98,10 +102,9 @@ def shape(plan: str) -> dict:
 
 def main() -> int:
     from insight_spark.engine import get_spark
-    from insight_spark.plans.audit import physical_plan
-    from insight_spark.queries import all_queries, set_lint_default
+    from insight_spark.plans.audit import lint_query_plan, physical_plan
+    from insight_spark.queries import all_queries
 
-    set_lint_default(False)
     spark = get_spark("plan_shapes")
     spark.sparkContext.setLogLevel("ERROR")
     names = sys.argv[1:] or list(all_queries())
@@ -110,16 +113,13 @@ def main() -> int:
     errors: dict[str, str] = {}
     for name in names:
         try:
-            out[name] = shape(physical_plan(reg[name](spark, SF_DIR)))
+            df = reg[name](spark, SF_DIR)
+            lint_query_plan(name, df)
+            out[name] = shape(physical_plan(df))
         except Exception as exc:  # noqa: BLE001 — inventory must complete
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
         print(f"{name}: {out.get(name, 'ERR')}", file=sys.stderr)
-    bad = {
-        n: s
-        for n, s in out.items()
-        if s["cartesian"] or s["batch_eval_python"]
-    }
-    if not sys.argv[1:] and not errors and not bad:
+    if not sys.argv[1:] and not errors:
         # only a clean full run owns the committed artifact
         doc = {"sf_dir": SF_DIR, "shapes": out, "shape_opaque": SHAPE_OPAQUE}
         with open(OUT_PATH, "w") as fh:
@@ -127,10 +127,8 @@ def main() -> int:
     totals = {k: sum(s[k] for s in out.values()) for k in shape("")}
     print(json.dumps({"n": len(out), "totals": totals, "n_errors": len(errors)}))
     if errors:
-        print(f"build errors: {errors}", file=sys.stderr)
-    if bad:
-        print(f"FATAL shapes: {sorted(bad)}", file=sys.stderr)
-    return 1 if errors or bad else 0
+        print(f"build/lint errors: {errors}", file=sys.stderr)
+    return 1 if errors else 0
 
 
 if __name__ == "__main__":

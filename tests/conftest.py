@@ -35,28 +35,24 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def registry_builds(spark):
     """Every declared query built ONCE per test session, cached as
-    ``name -> (DataFrame, executed-plan string)``.
+    ``name -> DataFrame``, each planned right after its build.
 
     The registry-wide structural gates (the collect lint, the decimal
-    lint, the unpartitioned-window lint, the rowwise-Python lint, the
-    oracle result-type lint) each used to build all 480 queries
-    themselves — five separate full-registry builds, and a build is
+    lint, the fatal-plan lint, the oracle result-type lint) share this
+    one build instead of each building all 480 queries, and a build is
     not free: the side-effecting queries (stream drains, manifest
     commits, iterative rounds) EXECUTE while their DataFrame is being
-    built.  Those five tests were 17 of the non-parity suite's 26
-    minutes (r13 measurement), which is what pushed the suite past the
-    driver's pytest window (VERDICT r12 task 1).  One shared build per
-    session keeps every gate's full-registry coverage at a fifth of
-    the cost."""
+    built.  Separate builds per gate were 17 of the non-parity suite's
+    26 minutes (r13 measurement)."""
     from insight_spark.queries import all_queries
 
     builds = {}
     for name, fn in all_queries().items():
         df = fn(spark, SF_DIR)
-        builds[name] = (
-            df,
-            df._jdf.queryExecution().executedPlan().toString(),
-        )
+        # plan now, before a later build changes shared session state;
+        # the gates read this physical plan, cached on the frame
+        df._jdf.queryExecution().executedPlan()
+        builds[name] = df
     return builds
 
 

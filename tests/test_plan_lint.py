@@ -1,12 +1,12 @@
-"""Registration-time plan lint (plans/audit.lint_query_plan wired into
-the @query decorator behind SPARK_GRAFT_LINT_PLANS).
+"""The fatal plan rules of plans/audit.lint_query_plan, one rule a test.
 
 The round-5 (rowwise UDTF plan) and round-6 (constant-folded window
-partition key) regressions both shipped guard-breaking queries because
-the engine-wide guards only ran in the full test sweep.  These tests
-pin the build-time gate: a query whose plan contains a fatal
-scale-killer raises PlanScaleError the first time it is BUILT with the
-flag set, and documented bounded-window exemptions still pass.
+partition key) regressions both shipped guard-breaking queries.  These
+tests pin each rule on a hand-built plan: a fatal scale-killer raises
+PlanScaleError, and documented bounded-window exemptions still pass.
+The same function gates every registered query, in
+tests/test_plans.py::test_no_fatal_plan_anywhere_in_declared_surface
+and in scripts/plan_shapes.py.
 """
 
 from __future__ import annotations
@@ -84,60 +84,3 @@ def test_bounded_window_exemption_passes(spark):
 def test_clean_plan_passes(spark):
     df = _docs(spark).groupBy("k").agg(F.count("*").alias("n"))
     lint_query_plan("good_query", df)  # no raise
-
-
-def test_decorator_lints_by_default_and_exempts_driver_paths(
-    spark, monkeypatch
-):
-    """End-to-end (VERDICT r10 task 8): a guard-breaking query
-    registered via @query fails at BUILD time by DEFAULT (dev loops),
-    builds normally after set_lint_default(False) (the driver/bench
-    path), and the env var overrides in both directions."""
-    import insight_spark.queries as reg
-
-    # another test may have routed through __spark_entry__.queries()
-    # (which legitimately flips the default off for the driver path) —
-    # this test's subject is the DEFAULT-ON behavior, so pin it
-    reg.set_lint_default(True)
-    name = "_lint_demo_bad_query"
-    try:
-
-        @reg.query(name)
-        def _bad(sp, sf_dir):
-            return _docs(sp).withColumn(
-                "rn", F.row_number().over(Window.orderBy("doc_id"))
-            )
-
-        fn = reg._QUERIES[name]
-        monkeypatch.delenv("SPARK_GRAFT_LINT_PLANS", raising=False)
-        # default-on: a dev building a scale-killer fails immediately
-        with pytest.raises(PlanScaleError, match=name):
-            fn(spark, "unused")
-        # driver/bench path: timed runs pay zero lint overhead
-        reg.set_lint_default(False)
-        fn(spark, "unused")  # builds fine
-        # env overrides win either way
-        monkeypatch.setenv("SPARK_GRAFT_LINT_PLANS", "1")
-        with pytest.raises(PlanScaleError, match=name):
-            fn(spark, "unused")
-        reg.set_lint_default(True)
-        monkeypatch.setenv("SPARK_GRAFT_LINT_PLANS", "0")
-        fn(spark, "unused")  # builds fine
-    finally:
-        reg._QUERIES.pop(name, None)
-        reg.set_lint_default(True)
-
-
-def test_spark_entry_disables_lint_for_driver_window(spark):
-    """__spark_entry__.queries() is the driver's import path — it must
-    flip the build-time lint off so CORRECTNESS/bench timings never
-    include (or fail on) plan linting."""
-    import insight_spark.queries as reg
-    import __spark_entry__ as contract
-
-    reg.set_lint_default(True)
-    try:
-        contract.queries()
-        assert reg._LINT_DEFAULT is False
-    finally:
-        reg.set_lint_default(True)

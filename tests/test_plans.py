@@ -84,7 +84,7 @@ def test_no_query_collects_in_plan_building(registry_builds):
     no Spark job except explicitly documented driver-side lookups.
     (Build happens once per session in the registry_builds fixture —
     a failing build fails there, with the query name in the trace.)"""
-    for name, (df, _) in registry_builds.items():
+    for name, df in registry_builds.items():
         assert df.columns, f"{name} returned no columns"
 
 
@@ -439,59 +439,24 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
     assert set(rows) == {"purchase"}
 
 
-def test_no_rowwise_python_anywhere_in_bench_surface(registry_builds):
-    """Engine-wide guard: no benched query may plan a row-at-a-time
-    Python eval (BatchEvalPython).  Arrow-batched forms
-    (ArrowEvalPython, FlatMapGroupsInPandas, MapInPandas/Arrow) are the
-    sanctioned Python surface."""
-    for name, (_, plan) in registry_builds.items():
-        assert "BatchEvalPython" not in plan, f"{name} plans rowwise Python"
+def test_no_fatal_plan_anywhere_in_declared_surface(registry_builds):
+    """Engine-wide guard: no declared query may plan a fatal
+    scale-killer — a cartesian product, a row-at-a-time Python eval
+    (BatchEvalPython), or a Window whose partition spec is empty
+    unless the query is on the bounded-window allowlist AND its plan
+    proves the bound.  The rules, the allowlist and the proof are the
+    PRODUCT's plan lint (insight_spark/plans/audit.lint_query_plan),
+    the same code scripts/plan_shapes.py runs over each query it
+    builds and users run via scale_audit(df)."""
+    from insight_spark.plans.audit import PlanScaleError, lint_query_plan
 
-
-# The window-spec parser AND the bounded-window allowlist are the
-# PRODUCT's plan lint (insight_spark/plans/audit.py) — the tests
-# enforce the same rules users run via scale_audit(df) and the
-# registration-time lint runs via SPARK_GRAFT_LINT_PLANS, from the
-# same code and the same exemption list.
-from insight_spark.plans.audit import (  # noqa: E402
-    BOUNDED_GLOBAL_WINDOW_OK as _SHARED_WINDOW_OK,
-    BOUNDED_GLOBAL_WINDOW_OPAQUE as _SHARED_WINDOW_OPAQUE,
-    is_unpartitioned as _is_unpartitioned,
-    unproven_window_paths as _unproven_window_paths,
-    window_specs as _window_specs,
-)
-
-
-#: Single source of truth for the per-query bounded-window exemptions
-#: (with per-entry rationale) lives in insight_spark/plans/audit.py.
-_BOUNDED_GLOBAL_WINDOW_OK = _SHARED_WINDOW_OK
-
-
-def test_no_unpartitioned_window_anywhere_in_declared_surface(registry_builds):
-    """Engine-wide guard (companion to the rowwise-Python guard): no
-    declared query may plan a Window whose partition spec is empty —
-    the shape that serializes the whole input onto ONE task at scale —
-    unless the query is on the documented bounded-input allowlist.
-    Catches the `WARN WindowExec: No Partition Defined` class of
-    regression at test time instead of in a 100 TB run."""
     offenders = {}
-    for name, (_, plan) in registry_builds.items():
-        if name in _BOUNDED_GLOBAL_WINDOW_OK:
-            # an allowlist entry is a boundedness CLAIM, machine-
-            # verified from the plan (VERDICT r11 task 8): every
-            # root-to-leaf path under each global window must cross a
-            # bounding node, unless the query carries the documented
-            # shape-opaque waiver
-            if name in _SHARED_WINDOW_OPAQUE:
-                continue
-            unproven = _unproven_window_paths(plan)
-            if unproven:
-                offenders[name] = "UNPROVEN waiver: " + unproven[0][:120]
-            continue
-        bad = [s for s in _window_specs(plan) if _is_unpartitioned(s)]
-        if bad:
-            offenders[name] = bad[0][:120]
-    assert not offenders, f"unpartitioned windows: {offenders}"
+    for name, df in registry_builds.items():
+        try:
+            lint_query_plan(name, df)
+        except PlanScaleError as exc:
+            offenders[name] = str(exc)[:200]
+    assert not offenders, f"fatal plan shapes: {offenders}"
 
 
 def test_unproven_window_checker_catches_unbounded_shape(spark):

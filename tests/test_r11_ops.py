@@ -461,11 +461,15 @@ def test_plan_shapes_failed_run_keeps_the_committed_inventory(
     spark, tmp_path, monkeypatch
 ):
     """A full ``scripts/plan_shapes.py`` run in which one query's build
-    raises exits 1 and leaves the inventory file as it was — a failed
-    run must not replace the committed record with a partial one."""
+    raises, or one query's plan fails ``lint_query_plan``, exits 1 and
+    leaves the inventory file as it was — a failed run must not replace
+    the committed record with a partial or unclean one."""
     import importlib.util
     import os
     import sys
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     import insight_spark.engine as engine
     import insight_spark.queries as registry
@@ -482,15 +486,20 @@ def test_plan_shapes_failed_run_keeps_the_committed_inventory(
 
     out = tmp_path / "PLAN_SHAPES.json"
     out.write_text("committed\n")
+
+    def global_window(spark, sf_dir):
+        return spark.range(3).withColumn(
+            "rn", F.row_number().over(Window.orderBy("id"))
+        )
+
     monkeypatch.setattr(plan_shapes, "OUT_PATH", str(out))
-    monkeypatch.setattr(
-        registry,
-        "all_queries",
-        lambda: {"ok": lambda s, d: s.range(3), "broken": broken},
-    )
     monkeypatch.setattr(engine, "get_spark", lambda app_name: spark)
-    # main() turns the build-time lint off; restore it for later tests
-    monkeypatch.setattr(registry, "_LINT_DEFAULT", registry._LINT_DEFAULT)
     monkeypatch.setattr(sys, "argv", ["plan_shapes.py"])
-    assert plan_shapes.main() == 1
-    assert out.read_text() == "committed\n"
+    for bad in (broken, global_window):
+        monkeypatch.setattr(
+            registry,
+            "all_queries",
+            lambda bad=bad: {"ok": lambda s, d: s.range(3), "bad": bad},
+        )
+        assert plan_shapes.main() == 1
+        assert out.read_text() == "committed\n"

@@ -2,7 +2,7 @@
 
 These cover the invariants the driver hash can't see: the generalized
 md5 digest family staying in sync at NON-default n_hashes (the r6
-advice finding that motivated md5_digest_concat_sql), quantization
+advice finding that motivated _md5_digest_concat_sql), quantization
 error bounds, MMR selection laws, DP noise bounds, and
 exact-substring removal accounting.
 """
@@ -21,7 +21,7 @@ def test_md5_digest_family_n16_oracle_parity(spark):
     """The r6 advice defect class: with n_hashes=16 the Spark side
     computes 4 digests per gram while a hardcoded 2-digest oracle
     would read empty substr chunks past char 64 and silently desync.
-    md5_digest_concat_sql generates the oracle from the same
+    _md5_digest_concat_sql generates the oracle from the same
     n_digests formula — prove the pair agrees end-to-end at n=16."""
     from insight_spark.operators.dedup import (
         minhash_lsh_pairs_md5,

@@ -32,7 +32,7 @@ from tests.conftest import SF_DIR
 
 def test_no_decimal_output_columns(registry_builds):
     offenders = {}
-    for name, (df, _) in registry_builds.items():
+    for name, df in registry_builds.items():
         dec = [
             f.name
             for f in df.schema.fields
@@ -198,7 +198,7 @@ def test_oracle_result_types_match_spark(registry_builds):
     offenders: dict[str, list[str]] = {}
     for name, sql in all_oracle_sql().items():
         rel = con.sql(sql)
-        sdf = registry_builds[name][0]
+        sdf = registry_builds[name]
         sfields = {f.name: _spark_class(f.dataType) for f in sdf.schema.fields}
         problems = []
         if sorted(rel.columns) != sorted(sfields):
