@@ -265,7 +265,13 @@ class PlanScaleError(AssertionError):
     """A declared query planned a fatal scale-killer shape.
 
     Raised by ``lint_query_plan`` (the round-5/round-6 regressions both
-    shipped a query whose plan broke the engine-wide guard)."""
+    shipped a query whose plan broke the engine-wide guard).  ``rules``
+    holds the ids of the broken rules; an allowlisted window whose bound
+    the plan does not prove counts as ``unpartitioned-window``."""
+
+    def __init__(self, message: str, rules) -> None:
+        super().__init__(message)
+        self.rules = frozenset(rules)
 
 
 def lint_query_plan(name: str, df: DataFrame) -> None:
@@ -287,7 +293,10 @@ def lint_query_plan(name: str, df: DataFrame) -> None:
     ]
     if fatal:
         detail = "; ".join(f"{f.rule}: {f.detail}" for f in fatal)
-        raise PlanScaleError(f"query '{name}' plans a scale-killer — {detail}")
+        raise PlanScaleError(
+            f"query '{name}' plans a scale-killer — {detail}",
+            {f.rule for f in fatal},
+        )
     # An allowlist entry is a CLAIM of boundedness, not a blanket pass
     # (VERDICT r11 task 8): machine-verify the claim from the plan —
     # every root-to-leaf path under each global window must cross a
@@ -300,7 +309,8 @@ def lint_query_plan(name: str, df: DataFrame) -> None:
         if unproven:
             raise PlanScaleError(
                 f"query '{name}' is on the bounded-window allowlist but "
-                f"its plan does not PROVE the bound — {unproven[0]}"
+                f"its plan does not PROVE the bound — {unproven[0]}",
+                {"unpartitioned-window"},
             )
 
 

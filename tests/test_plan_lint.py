@@ -32,8 +32,9 @@ def test_unpartitioned_window_is_fatal(spark):
     df = _docs(spark).withColumn(
         "rn", F.row_number().over(Window.orderBy("doc_id"))
     )
-    with pytest.raises(PlanScaleError, match="unpartitioned-window"):
+    with pytest.raises(PlanScaleError, match="unpartitioned-window") as exc:
         lint_query_plan("bad_window_query", df)
+    assert exc.value.rules == {"unpartitioned-window"}
 
 
 def test_constant_folded_partition_key_is_fatal(spark):
@@ -53,8 +54,9 @@ def test_cartesian_product_is_fatal(spark):
     a, b = _docs(spark), _docs(spark).select(F.col("doc_id").alias("b_id"))
     # hint forces CartesianProductExec (tiny sides otherwise broadcast)
     df = a.hint("shuffle_replicate_nl").crossJoin(b)
-    with pytest.raises(PlanScaleError, match="cartesian-product"):
+    with pytest.raises(PlanScaleError, match="cartesian-product") as exc:
         lint_query_plan("bad_cross_query", df)
+    assert exc.value.rules == {"cartesian-product"}
 
 
 def test_rowwise_python_is_fatal(spark):
@@ -62,8 +64,9 @@ def test_rowwise_python_is_fatal(spark):
 
     plain_udf = F.udf(lambda x: x + 1, LongType(), useArrow=False)
     df = _docs(spark).select(plain_udf("doc_id").alias("y"))
-    with pytest.raises(PlanScaleError, match="rowwise-python"):
+    with pytest.raises(PlanScaleError, match="rowwise-python") as exc:
         lint_query_plan("bad_udf_query", df)
+    assert exc.value.rules == {"rowwise-python"}
 
 
 def test_bounded_window_exemption_passes(spark):
@@ -79,6 +82,17 @@ def test_bounded_window_exemption_passes(spark):
     lint_query_plan("hybrid_search_rrf", df)  # no raise
     with pytest.raises(PlanScaleError):
         lint_query_plan("not_exempt", df)
+
+
+def test_unproven_allowlisted_window_is_fatal(spark):
+    # An allowlist entry is a claim the plan must prove: the same global
+    # window straight over the data leaf fails under the exempt name.
+    df = _docs(spark).withColumn(
+        "rn", F.row_number().over(Window.orderBy("doc_id"))
+    )
+    with pytest.raises(PlanScaleError, match="does not PROVE") as exc:
+        lint_query_plan("hybrid_search_rrf", df)
+    assert exc.value.rules == {"unpartitioned-window"}
 
 
 def test_clean_plan_passes(spark):

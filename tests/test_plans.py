@@ -10,6 +10,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from insight_spark.queries import all_queries
 from tests.conftest import file_scans
 
@@ -439,15 +441,13 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
     assert set(rows) == {"purchase"}
 
 
-def test_no_fatal_plan_anywhere_in_declared_surface(registry_builds):
-    """Engine-wide guard: no declared query may plan a fatal
-    scale-killer — a cartesian product, a row-at-a-time Python eval
-    (BatchEvalPython), or a Window whose partition spec is empty
-    unless the query is on the bounded-window allowlist AND its plan
-    proves the bound.  The rules, the allowlist and the proof are the
-    PRODUCT's plan lint (insight_spark/plans/audit.lint_query_plan),
-    the same code scripts/plan_shapes.py runs over each query it
-    builds and users run via scale_audit(df)."""
+@pytest.fixture(scope="module")
+def plan_lint_offenders(registry_builds):
+    """``name -> PlanScaleError`` for every declared query the
+    PRODUCT's plan lint (insight_spark/plans/audit.lint_query_plan)
+    rejects — the same code scripts/plan_shapes.py runs over each query
+    it builds and users run via scale_audit(df).  Linted once; the
+    registry guards below read it."""
     from insight_spark.plans.audit import PlanScaleError, lint_query_plan
 
     offenders = {}
@@ -455,8 +455,47 @@ def test_no_fatal_plan_anywhere_in_declared_surface(registry_builds):
         try:
             lint_query_plan(name, df)
         except PlanScaleError as exc:
-            offenders[name] = str(exc)[:200]
+            offenders[name] = exc
+    return offenders
+
+
+def _broke(offenders, rule=None) -> dict:
+    return {
+        name: str(exc)[:200]
+        for name, exc in offenders.items()
+        if rule is None or rule in exc.rules
+    }
+
+
+def test_no_fatal_plan_anywhere_in_declared_surface(plan_lint_offenders):
+    """Engine-wide guard: no declared query may plan a fatal
+    scale-killer — a cartesian product, a row-at-a-time Python eval
+    (BatchEvalPython), or a Window whose partition spec is empty
+    unless the query is on the bounded-window allowlist AND its plan
+    proves the bound."""
+    offenders = _broke(plan_lint_offenders)
     assert not offenders, f"fatal plan shapes: {offenders}"
+
+
+def test_no_rowwise_python_anywhere_in_bench_surface(plan_lint_offenders):
+    """Engine-wide guard: no benched query may plan a row-at-a-time
+    Python eval (BatchEvalPython).  Arrow-batched forms
+    (ArrowEvalPython, FlatMapGroupsInPandas, MapInPandas/Arrow) are the
+    sanctioned Python surface."""
+    offenders = _broke(plan_lint_offenders, "rowwise-python")
+    assert not offenders, f"rowwise Python: {offenders}"
+
+
+def test_no_unpartitioned_window_anywhere_in_declared_surface(
+    plan_lint_offenders,
+):
+    """Engine-wide guard: no declared query may plan a Window whose
+    partition spec is empty — the shape that serializes the whole input
+    onto ONE task at scale — unless the query is on the documented
+    bounded-input allowlist and its plan proves the bound (or it
+    carries the documented shape-opaque waiver)."""
+    offenders = _broke(plan_lint_offenders, "unpartitioned-window")
+    assert not offenders, f"unpartitioned windows: {offenders}"
 
 
 def test_unproven_window_checker_catches_unbounded_shape(spark):
