@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from insight_spark.engine import conf_override
 from insight_spark.operators.dedup import exact_dedup, simhash_fingerprints
 from insight_spark.operators.text import (
     doc_freq,
@@ -308,6 +309,11 @@ def resolve_entities(
     )
 
 
+# Shuffle (and so state-store) partitions of the ingest query; see
+# streaming_ingest.
+_INGEST_STATE_PARTITIONS = 1
+
+
 def streaming_ingest(
     spark: SparkSession,
     in_dir: str,
@@ -319,6 +325,18 @@ def streaming_ingest(
     File-source stand-in for the topic (SURVEY §3.3); idempotent
     foreachBatch upsert into a keyed parquet serving table (the ES/PG
     role).  Returns the started StreamingQuery (caller awaits/stops).
+
+    The query starts with ``_INGEST_STATE_PARTITIONS`` (1) shuffle
+    partitions, so the hourly rollup's state store, and the upsert's
+    merge shuffle, run one task per micro-batch instead of the
+    session's count.  The rollup's state is the hourly windows still
+    open under the 2 h watermark × event types (10 rows for in-order
+    10-minute files), and partial aggregation bounds the reducer's
+    input to keys × map tasks whatever the event volume.  ``start()``
+    clones the session, so the stream keeps the value and the caller's
+    session is restored on return.  The count is fixed in the
+    checkpoint at its first start: a query resumed from an existing
+    checkpoint keeps the count that checkpoint was started with.
     """
     from insight_spark.sources.sinks import foreach_batch_upsert
     from insight_spark.streaming.core import (
@@ -327,9 +345,14 @@ def streaming_ingest(
     )
 
     stream = hourly_counts_stream(read_events_stream(spark, in_dir))
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(foreach_batch_upsert(out_dir, ["window_start", "event_type"]))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    with conf_override(
+        spark, {"spark.sql.shuffle.partitions": str(_INGEST_STATE_PARTITIONS)}
+    ):
+        return (
+            stream.writeStream.outputMode("update")
+            .foreachBatch(
+                foreach_batch_upsert(out_dir, ["window_start", "event_type"])
+            )
+            .option("checkpointLocation", checkpoint_dir)
+            .start()
+        )

@@ -239,23 +239,41 @@ def foreach_batch_upsert(
     the same upsert contract an ES/PG sink gives, exactly-once per
     micro-batch via the checkpoint's batch id.
 
+    The batch is read once.  A micro-batch DataFrame is an uncached
+    plan that recomputes its whole lineage, the stateful stage
+    included, on every read, so the merge is one union and one
+    shuffle rather than a join of the batch against itself: the
+    serving copy is tagged ``_src = 0`` and the batch ``_src = 1``,
+    and each key keeps the value struct of its highest tag.  A batch
+    row replaces the served row, a key only served survives, and
+    duplicate batch keys collapse to one of the batch's rows.  Both
+    parquet reads take the batch's schema, so no schema-inference job
+    runs either.
+
     ``barrier`` picks how the merge is materialized before the
     overwrite clears the very files it read (VERDICT r12 #7):
 
     - ``"local"`` (default, the bench posture): one eager
-      ``localCheckpoint`` — a single write job per batch, correct in
-      local mode and on healthy executors, but the checkpoint blocks
-      are executor-local and NON-recomputable.  On a cluster, an
-      executor lost between the checkpoint and the overwrite aborts
-      the batch after the serving dir may already be cleared; the
-      batch retry then fails loudly (see the narrowed first-batch
-      check below — a half-destroyed serving dir is NOT re-seeded).
+      ``localCheckpoint`` — one barrier job plus the write job per
+      batch, correct in local mode and on healthy executors, but the
+      checkpoint blocks are executor-local and NON-recomputable.  On a
+      cluster, an executor lost between the checkpoint and the
+      overwrite aborts the batch after the serving dir may already be
+      cleared; the batch retry then fails loudly (see the guard
+      below — a half-destroyed serving dir is NOT re-seeded).
     - ``"reliable"`` (cluster posture): stage the merged table to a
-      per-batch dir and read it back before the overwrite — two write
-      jobs and 2× the serving bytes per batch, but the barrier
-      survives any executor loss because the staged files are durable
-      and the read-back is re-plannable.  This is the r11 form, kept
-      behind the knob instead of deleted.
+      per-batch dir and read it back before the overwrite — a staging
+      write job plus the write job and 2× the serving bytes per batch,
+      but the barrier survives any executor loss because the staged
+      files are durable and the read-back is re-plannable.  This is
+      the r11 form, kept behind the knob instead of deleted.
+
+    Only a MISSING serving dir means first batch.  A serving dir that
+    exists without its ``_SUCCESS`` marker — emptied, or left by an
+    overwrite whose job died before its commit, whatever part files
+    survived — raises instead of being merged onto or re-seeded from
+    one micro-batch.  The check is a driver-side ``FileSystem.exists``
+    and runs no job.
     """
     if barrier not in ("local", "reliable"):
         raise ValueError(f"barrier must be 'local' or 'reliable': {barrier}")
@@ -263,38 +281,48 @@ def foreach_batch_upsert(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         path = os.path.join(out_dir, "serving")
-        new = batch_df.dropDuplicates(key_cols)
+        cols = batch_df.columns
+        value = F.struct(*[c for c in cols if c not in key_cols])
+        tagged = batch_df.withColumn("_src", F.lit(1))
+        # Existence is asked of the path's own Hadoop FileSystem, so a
+        # file:// / hdfs:// / s3a:// out_dir sees its earlier batches
+        # too (ADVICE r13).
         fs, hpath = _hadoop_fs(spark, path)
-        # Only a MISSING serving dir means first batch (ADVICE r12:
-        # the old bare `except Exception` treated ANY read failure —
-        # including a serving dir half-destroyed by an aborted
-        # overwrite — as first-batch and silently re-seeded the table
-        # from one micro-batch; same narrowing as
-        # foreach_batch_additive_merge).  Existence is asked of the
-        # path's own Hadoop FileSystem, so a file:// / hdfs:// / s3a://
-        # out_dir sees its earlier batches too (ADVICE r13).
         if fs.exists(hpath):
-            current = spark.read.parquet(path)
-            merged = current.join(
-                new.select(*key_cols), key_cols, "left_anti"
-            ).unionByName(new)
-        else:
-            merged = new
+            if not fs.exists(_hadoop_fs(spark, os.path.join(path, "_SUCCESS"))[1]):
+                raise RuntimeError(
+                    f"serving dir {path} has no _SUCCESS marker: its last "
+                    "overwrite did not commit; refusing to merge onto it"
+                )
+            served = spark.read.schema(batch_df.schema).parquet(path)
+            tagged = served.withColumn("_src", F.lit(0)).unionByName(tagged)
         # The merge reads the very files it is about to replace, so the
         # overwrite needs a barrier (selected above).  coalesce(1)
         # sizes the output for a key-bounded table (guide §6
-        # small-files: the 8-shuffle-partition agg otherwise leaves
-        # 8 tiny files per version for every later batch/reader to
-        # re-open); a cluster serving a large key space would
-        # repartition to a target file size here instead.
-        merged = merged.coalesce(1)
+        # small-files: the merge's shuffle partitions would otherwise
+        # leave one tiny file each per version for every later
+        # batch/reader to re-open); a cluster serving a large key space
+        # would repartition to a target file size here instead.
+        merged = (
+            tagged.groupBy(*key_cols)
+            .agg(F.max_by(value, "_src").alias("_v"))
+            .select(
+                *[
+                    c if c in key_cols else F.col("_v").getField(c).alias(c)
+                    for c in cols
+                ]
+            )
+            .coalesce(1)
+        )
         if barrier == "local":
             merged.localCheckpoint().write.mode("overwrite").parquet(path)
             return
         staging = os.path.join(out_dir, f"_staging_{batch_id}")
         try:
             merged.write.mode("overwrite").parquet(staging)
-            spark.read.parquet(staging).write.mode("overwrite").parquet(path)
+            spark.read.schema(batch_df.schema).parquet(staging).write.mode(
+                "overwrite"
+            ).parquet(path)
         finally:
             # a failed batch must not strand its staged copy either
             fs.delete(_hadoop_fs(spark, staging)[1], True)

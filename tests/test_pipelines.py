@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -206,3 +207,39 @@ def test_streaming_ingest_matches_batch_rollup(spark, tmp_path):
         for r in batch.collect()
     }
     assert got == want
+
+
+def test_streaming_ingest_runs_its_stateful_stage_once(spark, tmp_path):
+    """Each micro-batch of the ingest stream runs its stateful stage once
+    and submits at most two jobs (the upsert's barrier and its write).
+
+    A micro-batch DataFrame recomputes its lineage on every read, so an
+    upsert that reads it twice runs the state store twice and its
+    ``numRowsTotal`` reads double what the state-store reader finds in
+    the checkpoint at that batch.  The state also runs on one shuffle
+    partition, sized to the rollup's key space."""
+    in_dir = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    prepare_stream_input(spark, SF, in_dir, n_chunks=3)
+    q = streaming_ingest(spark, in_dir, str(tmp_path / "out"), ckpt)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    last = [p for p in progress if p["numInputRows"] > 0][-1]
+    state = last["stateOperators"][0]
+    stored = (
+        spark.read.format("statestore")
+        .option("batchId", last["batchId"])
+        .load(ckpt)
+        .count()
+    )
+    assert state["numRowsTotal"] == stored > 0
+    assert state["numShufflePartitions"] == 1
+
+    offsets = os.listdir(os.path.join(ckpt, "offsets"))
+    n_batches = len([n for n in offsets if n.isdigit()])
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 2 * n_batches

@@ -225,6 +225,50 @@ def test_foreach_batch_upsert_no_silent_reseed(spark, tmp_path):
         upsert(b1, 1)
 
 
+@pytest.mark.parametrize("barrier", ["local", "reliable"])
+def test_foreach_batch_upsert_merge_semantics(spark, tmp_path, barrier):
+    """The one-shuffle merge keeps the upsert contract: a batch row
+    replaces the served row, a key only served survives, duplicate
+    batch keys collapse to one of the batch's rows for that key, and
+    the served table keeps the batch's column order and types (the key
+    sits mid-row here, so a key-first rebuild would show)."""
+    out = str(tmp_path / f"serving_merge_{barrier}")
+    upsert = foreach_batch_upsert(out, ["user_id"], barrier)
+
+    def frame(rows):
+        return spark.createDataFrame(
+            rows, "name string, user_id bigint, amount string"
+        ).withColumn("amount", F.col("amount").cast("decimal(12,2)"))
+
+    upsert(frame([("a", 1, "1.00"), ("b", 2, "2.00"), ("c", 3, "3.00")]), 0)
+    batch = frame([("x", 2, "20.00"), ("y", 2, "21.00"), ("z", 4, "40.00")])
+    upsert(batch, 1)
+
+    served = spark.read.parquet(os.path.join(out, "serving"))
+    assert [(f.name, f.dataType) for f in served.schema] == [
+        (f.name, f.dataType) for f in batch.schema
+    ]
+    rows = {r["user_id"]: (r["name"], str(r["amount"])) for r in served.collect()}
+    assert served.count() == len(rows) == 4
+    assert rows[1] == ("a", "1.00") and rows[3] == ("c", "3.00")
+    assert rows[2] in {("x", "20.00"), ("y", "21.00")}
+    assert rows[4] == ("z", "40.00")
+
+
+def test_foreach_batch_upsert_refuses_uncommitted_serving_dir(spark, tmp_path):
+    """A serving dir that keeps its part files but lost its ``_SUCCESS``
+    marker (an overwrite whose job died after moving some parts) must
+    fail the batch, not be merged onto."""
+    out = str(tmp_path / "serving_uncommitted")
+    upsert = foreach_batch_upsert(out, ["user_id"])
+    ev = load_table(spark, SF_DIR, "events")
+    b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
+    upsert(b1, 0)
+    os.unlink(os.path.join(out, "serving", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="_SUCCESS"):
+        upsert(b1, 1)
+
+
 def test_multimodal_plumbing(spark):
     docs = load_table(spark, SF_DIR, "documents")
     media = attach_media_columns(docs)
