@@ -176,15 +176,3 @@ def conf_override(spark: SparkSession, conf: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def conf_snapshot(spark: SparkSession, keys) -> dict[str, str | None]:
-    """Read the named confs, None for unresolvable keys — the compare
-    form the conf-isolation tests diff before/after a query."""
-    out: dict[str, str | None] = {}
-    for k in keys:
-        try:
-            out[k] = spark.conf.get(k)
-        except Exception:
-            out[k] = None
-    return out

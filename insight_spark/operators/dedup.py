@@ -164,24 +164,6 @@ def simhash_oracle_sql() -> str:
     """
 
 
-def minhash_signature(tokens: Column, n_hashes: int) -> Column:
-    """J6: MinHash signature — array of per-seed minimum token hashes.
-
-    Seeded hash family via xxhash64(token, MINHASH_SEED + i); fully
-    deterministic, computed rowwise JVM-side (no shuffle).
-    """
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    tokens, lambda t: F.xxhash64(t, F.lit(MINHASH_SEED + i))
-                )
-            ).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def _bucket_pair_candidates(bands: DataFrame, *key_cols: str) -> DataFrame:
     """LSH candidate generation via bucket arrays (single source of
     truth for both the xxhash64 production path and the md5
@@ -282,8 +264,7 @@ def near_dedup_minhash(
     # CollapseProject and re-evaluated n_hashes times per row (HOF
     # lambdas see no subexpression elimination); row-wise xxhash64
     # post-explode is whole-stage-codegen'd and the groupBy shuffles
-    # only n_hashes longs per doc.  Same signature values:
-    # min over the same hash family, per test_properties pins.
+    # only n_hashes longs per doc.
     grams = toks.select("_id", F.explode("_sh").alias("_g"))
     sig = grams.groupBy("_id").agg(
         *[

@@ -34,7 +34,6 @@ __all__ = [
     "bloom_semi_join",
     "z_value_expr",
     "z_value_sql",
-    "z_order_layout",
 ]
 
 
@@ -147,24 +146,3 @@ def z_value_sql(x: str, y: str, bits: int = 10) -> str:
     """The DuckDB-dialect rendering of the same Z-curve formula, for
     oracle SQL parity."""
     return f"CAST({_z_terms(x, y, bits, spark=False)} AS BIGINT)"
-
-
-def z_order_layout(
-    df: DataFrame, x: str, y: str, n_partitions: int, bits: int = 10
-) -> DataFrame:
-    """Cluster ``df`` for 2-D locality: range-partition and sort within
-    partitions by the Z-value of ``(x, y)`` (both masked to ``bits``).
-
-    Written out, every file covers a small contiguous Z-range — a tight
-    rectangle in (x, y) space — so min/max row-group stats prune scans
-    filtered on *either* column.  ``repartitionByRange`` samples the
-    Z-values to pick balanced boundaries (one extra lightweight job),
-    then a single exchange + local sort.
-    """
-    mask = (1 << bits) - 1
-    zx = f"(cast({x} as bigint) & {mask}L)"
-    zy = f"(cast({y} as bigint) & {mask}L)"
-    with_z = df.withColumn("_zval", z_value_expr(zx, zy, bits))
-    return with_z.repartitionByRange(n_partitions, "_zval").sortWithinPartitions(
-        "_zval"
-    )

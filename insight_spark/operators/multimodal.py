@@ -5,11 +5,10 @@ struct — the Spark-side plumbing (schema, partitioning, Arrow batch
 shape through mapInPandas) is real and tested.  The ``*_real`` family
 parses genuine bytes for all three modalities via the zero-dependency
 codecs in ``operators/codecs.py`` (BMP / PCM WAV / Y4M video); the
-original stub family remains for the formats that DO need external
-libraries (PNG/JPEG/MP4...), where decode either raises
-NotImplementedError (real-codec path) or produces a deterministic fake
-derived from the payload bytes, so tests can assert the full pipeline
-shape end-to-end either way.
+stub ``decode_media`` remains for the formats that DO need external
+libraries (PNG/JPEG/MP4...), producing a deterministic fake derived
+from the payload bytes, so the pipeline shape is still asserted
+end-to-end.
 
 Scale notes: payloads stay in executor memory one Arrow batch at a
 time (mapInPandas is a streaming iterator — nothing accumulates);
@@ -61,22 +60,16 @@ def attach_media_columns(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_media(media_df: DataFrame, real_codecs: bool = False) -> DataFrame:
+def decode_media(media_df: DataFrame) -> DataFrame:
     """J8 'decode' via mapInPandas (L4 surface): payload → features.
 
-    With ``real_codecs=True`` this is where PIL/ffmpeg would run — it
-    raises NotImplementedError here by design.  The default produces
-    deterministic fake dimensions from the byte length so the Arrow
-    batch plumbing is fully exercised.
+    Produces deterministic fake dimensions from the byte length so the
+    Arrow batch plumbing is fully exercised; the genuine-bytes decode
+    is :func:`decode_media_real`.
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_codecs:
-                raise NotImplementedError(
-                    "codec libraries unavailable in this container; "
-                    "plug PIL/torchaudio/ffmpeg here"
-                )
             n_bytes = pdf["payload"].map(len).astype("int32")
             yield pd.DataFrame(
                 {
@@ -89,110 +82,6 @@ def decode_media(media_df: DataFrame, real_codecs: bool = False) -> DataFrame:
             )
 
     return media_df.mapInPandas(decode, DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def resize_media(media_df: DataFrame, width: int, height: int) -> DataFrame:
-    """J8 'resize': payload → fixed-dimension payload via mapInPandas.
-
-    Stub transform (no PIL in container): deterministic byte slice/pad
-    to width*height — the real version swaps only the body of the inner
-    function; schema, batching and partitioning are production-shaped.
-    """
-    target = width * height
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf["payload"].map(
-                lambda b: bytes(b[:target]).ljust(target, b"\0")
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": out,
-                }
-            )
-
-    return media_df.mapInPandas(resize, RESIZED_SCHEMA)
-
-
-def sample_frames(media_df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """J8 'frame-sample': one input row → N frame rows (video path).
-
-    mapInPandas may emit more rows than it receives — the natural shape
-    for frame extraction.  Frames here are deterministic byte windows
-    standing in for ffmpeg keyframe decode.
-    """
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, blobs = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                for i, off in enumerate(range(0, len(b), every_n_bytes)):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    blobs.append(b[off : off + every_n_bytes])
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": blobs}
-            )
-
-    return media_df.mapInPandas(frames, FRAMES_SCHEMA)
-
-
-def extract_features(media_df: DataFrame, dim: int = 16) -> DataFrame:
-    """J8 'feature-extract': payload → float vector (the embedding that
-    would come from a vision/audio model; here a deterministic
-    byte-histogram so the output feeds the real ANN operators
-    (similarity.knn_topk / lsh_bucket_join) in tests)."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            vecs = []
-            for payload in pdf["payload"]:
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                hist = np.bincount(arr % dim, minlength=dim).astype("float32")
-                n = np.linalg.norm(hist)
-                vecs.append((hist / n if n else hist).tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": vecs})
-
-    return media_df.mapInPandas(feats, FEATURES_SCHEMA)
-
-
-def media_stats(media_df: DataFrame) -> DataFrame:
-    """Metadata-only profile (payload column pruned at scan)."""
-    return media_df.groupBy(F.col("media.mime").alias("mime")).agg(
-        F.count("*").alias("n_items"),
-        F.sum(F.col("media.size_bytes")).alias("total_bytes"),
-    )
 
 
 def payload_entropy_arrow(media_df: DataFrame) -> DataFrame:

@@ -6,8 +6,8 @@ These are the knobs the 100 TB posture actually turns:
   join (fact ⋈ fact on the same key): each side is pre-hash-partitioned
   into the same bucket count at write time, so the join runs with ZERO
   runtime exchange — the dominant shuffle in a daily pipeline becomes a
-  one-time write cost (tests/test_partitioning.py asserts the
-  exchange-free plan).
+  one-time write cost (written by ``sources.sinks.write_bucketed``;
+  tests/test_partitioning.py asserts the exchange-free plan).
 - **Salting** is the manual fallback for extreme key skew that AQE's
   skew-join splitting can't fix (e.g. one key = 30% of rows joined to a
   non-broadcastable side): the hot side spreads each key over
@@ -20,28 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_keys: list[str],
-    n_buckets: int = 8,
-    sort_keys: list[str] | None = None,
-) -> None:
-    """A6+: persist as a bucketed (and optionally sorted) parquet table.
-
-    Bucketed tables register in the session catalog (bucket metadata
-    lives in the metastore, not the files).  Sorting within buckets
-    additionally removes the join's Sort — a bucketed+sorted pair
-    sort-merge-joins with no exchange and no sort.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        n_buckets, *bucket_keys
-    )
-    if sort_keys:
-        writer = writer.sortBy(*sort_keys)
-    writer.saveAsTable(table)
 
 
 def salt_column(unique_col: str | Column, n_salts: int) -> Column:

@@ -7,17 +7,16 @@ order including a unique tie-break key.  Plain Spark ``dropDuplicates`` /
 fine for exploration, wrong for a reproducible engine.
 
 Scale notes (100 TB posture):
-- ``topk`` compiles to a single ``TakeOrderedAndProject`` physical op —
-  per-partition heap + driver merge of k rows; no global sort.
+- a global top-k (``orderBy(...).limit(k)``) compiles to a single
+  ``TakeOrderedAndProject`` physical op — per-partition heap + driver
+  merge of k rows; no global sort.
 - ``top_k_per_group`` (windows.py) benefits from Spark ≥3.5's
   ``InferWindowGroupLimit``: rank-filter is pushed to a per-group limit.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Exact money/measure arithmetic type — the float-determinism escape
@@ -42,12 +41,3 @@ def money_out(c: Column | str) -> Column:
     """
     col = F.col(c) if isinstance(c, str) else c
     return F.round(col.cast("double"), 6)
-
-
-def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
-    """Global top-k with a caller-supplied *total* order (F5).
-
-    ``order`` must end in a unique key so results are deterministic.
-    Physical plan: TakeOrderedAndProject (no full sort, no extra shuffle).
-    """
-    return df.orderBy(*order).limit(k)

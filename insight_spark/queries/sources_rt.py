@@ -401,6 +401,8 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import re as _re
 
+    from insight_spark.sources.sinks import write_bucketed
+
     tag = _re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
     base = _rt_path(sf_dir, "bucketed")
     n_buckets = 8
@@ -409,33 +411,31 @@ def bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.6): the two bucketed table writes are independent
     # jobs over distinct tables/paths — overlap them from two driver
     # threads (the lineitem write is ~6× the orders write, so the
-    # orders job back-fills its tail for free).
+    # orders job back-fills its tail for free).  Each side repartitions
+    # by the same hash as bucketBy, so each write leaves exactly 1 file
+    # per bucket.
     def _write_orders() -> None:
-        (
+        write_bucketed(
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderpriority")
-            .repartition(n_buckets, "o_orderkey")  # same hash as bucketBy
-            .write.mode("overwrite")               # -> exactly 1 file/bucket
-            .bucketBy(n_buckets, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", os.path.join(base, t_orders))
-            .format("parquet")
-            .saveAsTable(t_orders)
+            .repartition(n_buckets, "o_orderkey"),
+            t_orders,
+            base,
+            ["o_orderkey"],
+            n_buckets,
         )
 
     def _write_lineitem() -> None:
-        (
+        write_bucketed(
             load_table(spark, sf_dir, "lineitem")
             .select(
                 "l_orderkey", F.col("l_quantity").cast("long").alias("qty")
             )
-            .repartition(n_buckets, "l_orderkey")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", os.path.join(base, t_lineitem))
-            .format("parquet")
-            .saveAsTable(t_lineitem)
+            .repartition(n_buckets, "l_orderkey"),
+            t_lineitem,
+            base,
+            ["l_orderkey"],
+            n_buckets,
         )
 
     run_concurrently(_write_orders, _write_lineitem)

@@ -1268,13 +1268,11 @@ def retriever_agreement_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_bm25",
             "n_tfidf",
             "n_overlap",
-            (
-                F.col("n_overlap").cast("double")
-                / (
-                    F.col("n_bm25")
-                    + F.col("n_tfidf")
-                    - F.col("n_overlap")
-                )
+            # NULL, not an ANSI error, when neither ranker returns a
+            # doc: 0 / 0 is NULL in the oracle too
+            F.try_divide(
+                F.col("n_overlap").cast("double"),
+                F.col("n_bm25") + F.col("n_tfidf") - F.col("n_overlap"),
             ).alias("jaccard_at_10"),
         )
     )

@@ -14,9 +14,10 @@ so swapping in the real connectors (``format("es")``,
 
 Scale notes: ``partitionBy`` on write gives partition pruning to every
 downstream reader; ``bucketBy`` pre-shuffles once at write time so
-later term lookups and doc joins are shuffle-free.  The posting-list
-build is explode + groupBy — the same bounded-key shuffle shape as
-term_freq.
+later term lookups and doc joins are shuffle-free.  Every bucketed
+table, the search index's and the registry's alike, is written by
+``write_bucketed``.  The posting-list build is explode + groupBy — the
+same bounded-key shuffle shape as term_freq.
 """
 
 from __future__ import annotations
@@ -49,9 +50,34 @@ def _local_dir(out_dir: str) -> str:
     return url.path if url.scheme else out_dir
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """A6: partitioned parquet sink (hive-style directory pruning)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+def write_bucketed(
+    df: DataFrame,
+    table: str,
+    out_dir: str,
+    bucket_keys: list[str],
+    n_buckets: int,
+    sort_keys: list[str] | None = None,
+) -> None:
+    """A6b: persist ``df`` as the external bucketed parquet table
+    ``table`` at ``out_dir/table``, sorted within buckets by
+    ``sort_keys`` (default: the bucket keys).
+
+    Bucket metadata lives in the session catalog and the data under
+    ``out_dir``, so no static warehouse conf is needed.  A bucketed+sorted
+    pair sort-merge-joins with no exchange and no sort, and an equality
+    on the bucket key reads 1 of ``n_buckets`` files.  One file per
+    bucket needs the caller to ``repartition(n_buckets, *bucket_keys)``
+    first (same hash as ``bucketBy``); without it every write task
+    leaves up to one file per bucket.
+    """
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, *bucket_keys)
+        .sortBy(*(sort_keys or bucket_keys))
+        .option("path", os.path.join(out_dir, table))
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def write_search_index(
@@ -66,8 +92,9 @@ def write_search_index(
     Writes (1) the doc store, bucketed by doc_id and sorted within
     buckets — ES's doc segments; (2) the inverted index: one row per
     term with a sorted posting list of doc ids and the df — ES's term
-    dictionary + postings.  Returns the two table names registered in
-    the session catalog (bucketed tables must go through the catalog).
+    dictionary + postings; (3) the suggest table (below).  Returns the
+    three table names registered in the session catalog (bucketed
+    tables must go through the catalog).
     """
     doc_table = f"{table_prefix}_docs"
     post_table = f"{table_prefix}_postings"
@@ -83,16 +110,7 @@ def write_search_index(
     # a degraded box; re-measured r13 on a quiet box — see
     # OPTIMIZATION_r13.md.)
     def _write_docs() -> None:
-        # external tables (explicit path): bucketing metadata lives in
-        # the catalog, data at out_dir — no static warehouse conf needed
-        (
-            docs.write.mode("overwrite")
-            .bucketBy(n_buckets, "doc_id")
-            .sortBy("doc_id")
-            .option("path", os.path.join(out_dir, doc_table))
-            .format("parquet")
-            .saveAsTable(doc_table)
-        )
+        write_bucketed(docs, doc_table, out_dir, ["doc_id"], n_buckets)
 
     def _write_postings_then_suggest() -> None:
         postings = (
@@ -108,14 +126,7 @@ def write_search_index(
                 F.count("*").alias("df"),
             )
         )
-        (
-            postings.write.mode("overwrite")
-            .bucketBy(n_buckets, "term")
-            .sortBy("term")
-            .option("path", os.path.join(out_dir, post_table))
-            .format("parquet")
-            .saveAsTable(post_table)
-        )
+        write_bucketed(postings, post_table, out_dir, ["term"], n_buckets)
 
         # the completion-suggester structure — ES keeps this SEPARATE
         # from the inverted index (an FST keyed by input prefixes); the
@@ -127,13 +138,13 @@ def write_search_index(
         suggest = spark.table(post_table).select(
             F.substring("term", 1, 2).alias("prefix2"), "term", "df"
         )
-        (
-            suggest.write.mode("overwrite")
-            .bucketBy(n_buckets, "prefix2")
-            .sortBy("prefix2", "term")
-            .option("path", os.path.join(out_dir, suggest_table))
-            .format("parquet")
-            .saveAsTable(suggest_table)
+        write_bucketed(
+            suggest,
+            suggest_table,
+            out_dir,
+            ["prefix2"],
+            n_buckets,
+            sort_keys=["prefix2", "term"],
         )
 
     run_concurrently(_write_docs, _write_postings_then_suggest)
@@ -433,20 +444,6 @@ def read_additive_mv(spark: SparkSession, out_dir: str) -> DataFrame:
             "wrong out_dir) — the MV read has nothing serveable yet"
         ) from None
     return spark.read.parquet(os.path.join(out_dir, state["dir"]))
-
-
-def write_orc(
-    df: DataFrame, path: str, partition_cols: list[str] | None = None
-) -> None:
-    """ORC sink (A-family).  Spark bundles the ORC datasource, so this
-    is a first-class round-trippable format offline; Avro's external
-    ``spark-avro`` module is NOT bundled and cannot be fetched in this
-    container, so Avro remains an unsupported documented gap alongside
-    the ES/JDBC connector stand-ins."""
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.orc(path)
 
 
 #: Embedded Derby ships with Spark (metastore dependency) — a REAL JDBC

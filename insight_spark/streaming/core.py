@@ -253,53 +253,6 @@ def tws_runtime_available() -> bool:
         return False
 
 
-def user_totals_tws(events: DataFrame) -> DataFrame:
-    """K6 (Spark 4 form): per-key running totals via
-    ``transformWithStateInPandas`` — the ``StatefulProcessor`` API that
-    supersedes ``applyInPandasWithState``.
-
-    Same semantics as :func:`user_totals_stateful` (running count/sum
-    per user, last emission equals the batch aggregate), but state lives
-    in named, schema-typed handles (``getValueState``) with optional
-    TTL and timers — the surface a production decaying-counter or
-    per-key-model operator would use.  State is partitioned by the
-    group key across executors; the fixture key space is bounded, and
-    at real scale a TTL (``ttlDurationMs``) evicts idle keys.
-
-    Runtime requirement: Spark's TWS Python runner speaks a
-    protobuf-framed state-server protocol, so executing the returned
-    stream needs ``google.protobuf`` installed (check
-    :func:`tws_runtime_available` first).  Building the plan does not.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _USER_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserTotals(),
-        outputStructType=USER_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def run_to_completion(writer: DataStreamWriter, checkpoint_dir: str) -> None:
     """Start a configured stream writer on ``checkpoint_dir`` and drain
     every pending input (``processAllAvailable``, test-harness use).
@@ -339,33 +292,19 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
-def sliding_counts_stream(events: DataFrame) -> DataFrame:
-    """K2 streaming: 10-min window sliding every 5 min, watermarked.
-
-    Identical expression to the batch ``sliding_window_counts`` query
-    (each event belongs to exactly 2 overlapping epoch-aligned
-    windows); state per open (window, ) group, evicted by the 2-hour
-    watermark.
-    """
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def user_type_counts_tws(events: DataFrame) -> DataFrame:
     """K6/M12 depth: per-(user, event_type) running counts held in a
     TWS **MapState** handle — the keyed-dictionary state a per-key
     model registry or feature store uses (vs the single-struct
-    ValueState of :func:`user_totals_tws`).
+    ValueState that :func:`recent_events_tws` and
+    :func:`inactivity_sessions_tws` hold).
 
     Emits each key's full map every batch in update mode; the LAST
     emission per user must equal the batch groupBy — order-insensitive
     within the map, so deterministic under any micro-batch chunking.
-    Same runtime requirements as user_totals_tws
-    (:func:`tws_runtime_available`, RocksDB state store).
+    Runtime requirements: :func:`tws_runtime_available` (the TWS
+    Python runner's state-server protocol needs ``google.protobuf``;
+    building the plan does not) and the RocksDB state store.
     """
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
@@ -412,10 +351,10 @@ def recent_events_tws(events: DataFrame, n_keep: int = 5) -> DataFrame:
     """K6 depth — **ListState**: a bounded per-user recent-events
     buffer (last ``n_keep`` by event time), the rolling-context window
     a feature store or an online-inference cache keeps per key.
-    Completes the TWS state-handle family: ValueState
-    (:func:`user_totals_tws`), MapState (:func:`user_type_counts_tws`),
-    event-time timers (:func:`inactivity_sessions_tws`), and now the
-    ordered-collection handle.
+    Completes the TWS state-handle family: MapState
+    (:func:`user_type_counts_tws`), event-time timers
+    (:func:`inactivity_sessions_tws`), the ordered-collection handle,
+    and a ValueState (the ``seen`` counter) beside it.
 
     Each batch merges arrivals into the buffer, trims to ``n_keep`` by
     (ts, event_id) descending, and ``put``-overwrites the list state —

@@ -56,6 +56,18 @@ def registry_builds(spark):
     return builds
 
 
+def conf_snapshot(spark, keys) -> dict[str, str | None]:
+    """Read the named confs, None for unresolvable keys — the compare
+    form the conf-isolation tests diff before/after a query."""
+    out: dict[str, str | None] = {}
+    for k in keys:
+        try:
+            out[k] = spark.conf.get(k)
+        except Exception:
+            out[k] = None
+    return out
+
+
 def file_scans(df) -> list:
     """The FileSourceScanExec nodes of ``df``'s executed plan."""
     stack, scans = [df._jdf.queryExecution().executedPlan()], []

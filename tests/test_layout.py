@@ -1,4 +1,4 @@
-"""Bloom runtime filter + Z-order layout: semantics and scale posture."""
+"""Bloom runtime filter + Z-order code: semantics and scale posture."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from insight_spark.operators.layout import (
     bloom_build,
     bloom_probe_filter,
     bloom_semi_join,
-    z_order_layout,
     z_value_expr,
 )
 from insight_spark.sources import load_table
@@ -93,33 +92,3 @@ def test_z_value_matches_reference_interleave(spark):
     )
     for r in df.collect():
         assert r.z == _interleave(r.x, r.y, 10), (r.x, r.y, r.z)
-
-
-def test_z_order_layout_tightens_partition_bboxes(spark):
-    """Range-partitioning on the Z-value must give per-partition (x, y)
-    bounding boxes with far smaller total area than the unclustered
-    layout — that area maps 1:1 to parquet min/max pruning power."""
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        (F.col("l_partkey") % 1024).alias("x"),
-        (F.col("l_suppkey") % 1024).alias("y"),
-    )
-    n_parts = 8
-
-    def bbox_area(df):
-        rows = (
-            df.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(
-                (F.max("x") - F.min("x")).alias("wx"),
-                (F.max("y") - F.min("y")).alias("wy"),
-            )
-            .collect()
-        )
-        return sum((r.wx + 1) * (r.wy + 1) for r in rows) / len(rows)
-
-    clustered = z_order_layout(li, "x", "y", n_parts, bits=10)
-    baseline = li.repartition(n_parts)
-    a_clustered, a_baseline = bbox_area(clustered), bbox_area(baseline)
-    assert a_clustered < a_baseline / 2, (
-        f"z-order bbox {a_clustered} not < half of random {a_baseline}"
-    )

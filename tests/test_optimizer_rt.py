@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from insight_spark.engine import LOCAL_PERF_CONF, conf_override, conf_snapshot
+from insight_spark.engine import LOCAL_PERF_CONF, conf_override
 from insight_spark.queries import all_queries
 from insight_spark.queries.optimizer_rt import (
     BHJ_PROBE_CONF,
@@ -17,6 +17,7 @@ from insight_spark.queries.optimizer_rt import (
     SKEW_PROBE_CONF,
 )
 from insight_spark.sources import load_table
+from tests.conftest import conf_snapshot
 
 SF_DIR = "/root/testdata/sf0.001"
 

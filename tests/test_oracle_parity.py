@@ -27,16 +27,13 @@ import os
 import pytest
 
 import __spark_entry__ as contract
-from insight_spark.engine import (
-    LOCAL_PERF_CONF,
-    SEMANTIC_CONF,
-    conf_snapshot,
-)
+from insight_spark.engine import LOCAL_PERF_CONF, SEMANTIC_CONF
 from insight_spark.queries.optimizer_rt import (
     BHJ_PROBE_CONF,
     BLOOM_PROBE_CONF,
     SKEW_PROBE_CONF,
 )
+from tests.conftest import conf_snapshot
 from tests.oracle_harness import canonical_rows, compare_query
 
 ALL = sorted(contract.queries().keys())

@@ -9,8 +9,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from insight_spark.operators.partitioning import salted_join, write_bucketed
+from insight_spark.operators.partitioning import salted_join
 from insight_spark.sources import load_table
+from insight_spark.sources.sinks import write_bucketed
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,11 +24,12 @@ def _plan(df) -> str:
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark):
+def bucketed_tables(spark, tmp_path_factory):
+    out_dir = str(tmp_path_factory.mktemp("bucketed"))
     li = load_table(spark, SF, "lineitem")
     orders = load_table(spark, SF, "orders")
-    write_bucketed(li, "li_b", ["l_orderkey"], 4, sort_keys=["l_orderkey"])
-    write_bucketed(orders, "ord_b", ["o_orderkey"], 4, sort_keys=["o_orderkey"])
+    write_bucketed(li, "li_b", out_dir, ["l_orderkey"], 4)
+    write_bucketed(orders, "ord_b", out_dir, ["o_orderkey"], 4)
     yield
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS ord_b")

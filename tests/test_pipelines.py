@@ -11,7 +11,6 @@ from insight_spark.pipelines import (
     build_search_index,
     build_suggestions,
     prepare_corpus,
-    prepare_training_corpus,
     streaming_ingest,
 )
 from insight_spark.sources import load_table
@@ -66,117 +65,6 @@ def test_build_suggestions_prefix_lookup(spark):
         .collect()
     )
     assert top and all(r["token"].startswith(some_prefix) for r in top)
-
-
-def test_prepare_training_corpus_funnel_and_invariants(spark):
-    from insight_spark.operators.text import tokenize
-
-    base = load_table(spark, SF, "documents")
-    # pick a real doc that passes the pipeline's quality gate (same four
-    # rules, same tokenizer) to seed the dedup-stage synthetic rows
-    toks = tokenize(F.col("text"))
-    sum_len = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-    )
-    stopset = ("the", "be", "to", "of", "and", "that", "have", "with", "a")
-    gate = (
-        F.size(toks).between(25, 90)
-        & (sum_len.cast("double") / F.size(toks)).between(4.0, 10.0)
-        & (F.size(F.filter(toks, lambda t: t.rlike("[a-z]"))).cast("double")
-           / F.size(toks) >= 0.8)
-        & (F.size(F.filter(toks, lambda t: t.isin(*stopset))) >= 2)
-    )
-    seed = base.filter(gate).orderBy("doc_id").first()
-
-    # standalone quality-passing text (27 words, mean len 4.8, 9 stop
-    # hits) carrying PII and sharing no 3-gram with any benchmark text
-    pii_text = (
-        "the quick brown fox and the lazy dog have agreed to meet with a "
-        "friendly walrus of considerable charm that should satisfy "
-        "quality rules contact bob@example.com now"
-    )
-    extra = spark.createDataFrame(
-        [
-            # verbatim duplicate of a real doc — must die at exact dedup
-            (90001, seed["text"], "en", "synthetic", len(seed["text"])),
-            # near-duplicate (one word appended) — must die at near-dup
-            (90002, seed["text"] + " appended", "en", "synthetic",
-             len(seed["text"]) + 9),
-            # PII-bearing quality doc — must survive, scrubbed
-            (90003, pii_text, "en", "synthetic", len(pii_text)),
-        ],
-        base.schema,
-    )
-    docs = base.unionByName(extra)
-    benchmark = spark.createDataFrame([(seed["text"],)], "text string")
-
-    out = prepare_training_corpus(docs, benchmark=benchmark)
-    funnel = out["funnel"].first()
-    corpus = out["corpus"]
-
-    # funnel is monotone non-increasing and starts at the raw count
-    stages = [funnel[c] for c in
-              ("n_raw", "n_exact", "n_quality", "n_canonical", "n_clean")]
-    assert stages[0] == docs.count()
-    assert all(a >= b for a, b in zip(stages, stages[1:]))
-    # each synthetic stage actually fired
-    assert funnel["n_exact"] < funnel["n_raw"]          # 90001 dropped
-    assert funnel["n_canonical"] < funnel["n_quality"]  # 90002 dropped
-    assert funnel["n_clean"] < funnel["n_canonical"]    # benchmark overlap
-
-    ids = {r["doc_id"] for r in
-           corpus.select("doc_id")
-           .filter(F.col("doc_id").isin(90001, 90002, 90003, seed["doc_id"]))
-           .collect()}
-    assert 90001 not in ids  # exact duplicate removed
-    assert 90002 not in ids  # near-duplicate canonicalized away
-    assert seed["doc_id"] not in ids  # decontaminated (it IS the benchmark)
-    assert 90003 in ids  # clean, standalone, quality-passing
-    scrubbed = corpus.filter(F.col("doc_id") == 90003).first()["text"]
-    assert "bob@example.com" not in scrubbed
-    assert "<EMAIL>" in scrubbed
-    # no exact-duplicate texts remain, token stats are consistent
-    n, nd = corpus.agg(
-        F.count("*"), F.countDistinct("text")
-    ).first()
-    assert n == nd
-    bad = corpus.filter(
-        (F.size("tokens") != F.col("n_tokens"))
-        | (F.length("text") != F.col("n_chars"))
-    ).count()
-    assert bad == 0
-
-
-def test_resolve_entities_clusters_typos(spark):
-    from insight_spark.pipelines import resolve_entities
-
-    records = spark.createDataFrame(
-        [
-            (1, "john smith"),
-            (2, "jon smith"),      # d=1 of 1 → same entity, canonical 1
-            (3, "john smyth"),     # d=1 of 1 → chains into entity 1
-            (4, "jane doe"),
-            (5, "j4ne doe"),       # d=1 of 4 → entity 4
-            (6, "alice wong"),     # singleton
-            (7, "robert b brown"),
-            (8, "carla mendes"),   # d(7,8) huge → both singletons
-        ],
-        "c_custkey long, c_name string",
-    )
-    resolved = resolve_entities(records)
-    ent = {r["c_custkey"]: r["entity_id"] for r in resolved.collect()}
-    assert len(ent) == 8  # one row per record, none lost or duplicated
-    assert ent[1] == ent[2] == ent[3] == 1  # transitive typo cluster
-    assert ent[4] == ent[5] == 4
-    assert ent[6] == 6 and ent[7] == 7 and ent[8] == 8
-    # skew safeguard: a degenerate shared-stem corpus (every block
-    # identical) with a tiny cap is skipped wholesale — no pairs, every
-    # record its own entity, and the join volume never goes quadratic
-    cust = load_table(spark, SF, "customer").select("c_custkey", "c_name")
-    capped = resolve_entities(cust, max_block=2)
-    ent2 = {r["c_custkey"]: r["entity_id"] for r in capped.collect()}
-    assert len(ent2) == cust.count()
-    assert all(e == k for k, e in ent2.items())
 
 
 def test_streaming_ingest_matches_batch_rollup(spark, tmp_path):

@@ -417,11 +417,10 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from insight_spark.sources import load_table
-    from insight_spark.sources.sinks import write_partitioned
 
     fact_path = str(tmp_path / "events_by_type")
     ev = load_table(spark, SF, "events")
-    write_partitioned(ev, fact_path, ["event_type"])
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(fact_path)
     fact = spark.read.parquet(fact_path)
     dim = spark.createDataFrame(
         [("purchase", 1.0), ("click", 0.5)], "event_type string, w double"

@@ -17,7 +17,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from insight_spark.operators.dedup import exact_dedup, jaccard, minhash_signature
+from insight_spark.operators.dedup import exact_dedup, jaccard
 from insight_spark.operators.similarity import cosine, l2_norm
 from insight_spark.sources import load_table
 
@@ -106,21 +106,6 @@ def test_jaccard_symmetric_bounded(spark, a, b):
     ).first()
     assert math.isclose(row["ab"], row["ba"], abs_tol=1e-12)
     assert 0.0 <= row["ab"] <= 1.0
-
-
-@PROP
-@given(toks=st.lists(st.text(st.characters(categories=("Ll",)), min_size=1, max_size=4),
-                     min_size=1, max_size=10))
-def test_minhash_signature_deterministic_and_permutation_invariant(spark, toks):
-    import random
-
-    shuffled = toks[:]
-    random.Random(0).shuffle(shuffled)
-    df = spark.createDataFrame(
-        [(toks,), (shuffled,)], "toks array<string>"
-    ).select(minhash_signature(F.array_distinct(F.col("toks")), 8).alias("sig"))
-    sigs = [tuple(r["sig"]) for r in df.collect()]
-    assert sigs[0] == sigs[1]  # signature depends on the token SET only
 
 
 def test_hll_within_error_bound(spark):
@@ -402,11 +387,18 @@ def test_line_dedup_ratio_bounds(spark, sf_dir):
     assert bad == 0
 
 
-def test_line_dedup_skips_empty_docs(spark, tmp_path):
+@pytest.mark.parametrize(
+    "name", ["line_dedup_stats", "retriever_agreement_audit"]
+)
+def test_line_dedup_skips_empty_docs(spark, tmp_path, name):
     """A whitespace-only document tokenizes to an empty array; the
     descending F.sequence(1, 0) would emit two spurious empty 'lines'
     (ADVICE r4).  The empty-doc filter must drop it on BOTH engines —
-    oracle parity on a fixture that actually contains one."""
+    oracle parity on a fixture that actually contains one.
+
+    The same 3-doc fixture holds neither of ``retriever_agreement_audit``'s
+    query terms, so both rankers return no doc and its agreement ratio
+    divides 0 by 0: NULL on both engines, not an ANSI error."""
     import os
 
     import pandas as pd
@@ -427,10 +419,11 @@ def test_line_dedup_skips_empty_docs(spark, tmp_path):
             "lang": ["en", "en", "en"],
         }
     ).to_parquet(os.path.join(tmp, "documents.parquet"))
-    df = all_queries()["line_dedup_stats"](spark, tmp)
-    rep = compare_query(df, all_oracle_sql()["line_dedup_stats"], tmp)
+    df = all_queries()[name](spark, tmp)
+    rep = compare_query(df, all_oracle_sql()[name], tmp)
     assert rep["ok"], rep
-    assert {r["doc_id"] for r in df.collect()} == {1, 3}
+    if name == "line_dedup_stats":
+        assert {r["doc_id"] for r in df.collect()} == {1, 3}
 
 
 def test_jl_norm_ratio_concentrates(spark, sf_dir):

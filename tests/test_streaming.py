@@ -373,93 +373,6 @@ def rocksdb_state_store(spark):
             spark.conf.set(key, prev)
 
 
-def test_tws_user_totals_converges_to_batch(spark, stream_env):
-    """K6 (Spark 4 StatefulProcessor): transformWithStateInPandas running
-    per-user totals — last emission per user == batch aggregate.
-
-    The TWS runtime needs google.protobuf (absent in this container) —
-    the plan still must BUILD here; execution is skipped without it.
-    """
-    from insight_spark.streaming.core import tws_runtime_available, user_totals_tws
-
-    if not tws_runtime_available():
-        stream0 = read_events_stream(spark, stream_env["in_dir"])
-        df = user_totals_tws(stream0)  # plan construction must succeed
-        assert df.isStreaming and set(df.columns) == {
-            "user_id",
-            "n_events",
-            "sum_value",
-        }
-        import pytest
-
-        pytest.skip("google.protobuf absent: TWS runtime cannot start")
-
-    with rocksdb_state_store(spark):
-        stream = read_events_stream(spark, stream_env["in_dir"])
-        result = run_stream_to_memory(
-            spark,
-            user_totals_tws(stream),
-            "user_totals_tws_stream",
-            os.path.join(stream_env["base"], "ckpt_tws"),
-            output_mode="update",
-        )
-        _assert_tws_matches_batch(spark, result)
-
-
-def _assert_tws_matches_batch(spark, result):
-    import pyspark.sql.window as W
-
-    w = W.Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        result.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    batch = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("sum_value"))
-    )
-    got = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6))
-        for r in final.collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 6))
-        for r in batch.collect()
-    }
-    assert set(got) == set(want)
-    for uid in want:
-        assert got[uid][0] == want[uid][0], f"count mismatch user {uid}"
-        assert abs(got[uid][1] - want[uid][1]) < 1e-4, f"sum mismatch user {uid}"
-
-
-def test_sliding_window_stream_matches_batch(spark, stream_env):
-    """K2: sliding-window streaming agg — every watermark-closed window
-    emitted in append mode must equal its batch twin."""
-    from insight_spark.streaming.core import sliding_counts_stream
-
-    stream = read_events_stream(spark, stream_env["in_dir"])
-    result = run_stream_to_memory(
-        spark,
-        sliding_counts_stream(stream),
-        "sliding_stream",
-        os.path.join(stream_env["base"], "ckpt_sliding"),
-        output_mode="append",
-    )
-    batch = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-    emitted = _canon(result)
-    batch_canon = set(_canon(batch))
-    assert len(emitted) > 0, "stream emitted nothing"
-    for row in emitted:
-        assert row in batch_canon, f"stream row not in batch result: {row}"
-
-
 def test_tws_mapstate_type_counts_converges_to_batch(spark, stream_env):
     """K6/M12 depth: MapState-backed per-(user, type) running counts —
     the keyed-dictionary state handle — must converge to the batch
