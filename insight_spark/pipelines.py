@@ -125,7 +125,9 @@ def streaming_ingest(
 
     File-source stand-in for the topic (SURVEY §3.3); idempotent
     foreachBatch upsert into a keyed parquet serving table (the ES/PG
-    role).  Returns the started StreamingQuery (caller awaits/stops).
+    role), one job per micro-batch: the merge's staged write, swapped
+    in by renames (``sinks.foreach_batch_upsert``).  Returns the
+    started StreamingQuery (caller awaits/stops).
 
     The query starts with ``_INGEST_STATE_PARTITIONS`` (1) shuffle
     partitions, so the hourly rollup's state store, and the upsert's
@@ -135,8 +137,7 @@ def streaming_ingest(
     10-minute files), and partial aggregation bounds the reducer's
     input to keys × map tasks whatever the event volume.  ``start()``
     clones the session, so the stream keeps the value and the caller's
-    session is restored on return.  The count is fixed in the
-    checkpoint at its first start: a query resumed from an existing
+    session is restored on return.  A query resumed from an existing
     checkpoint keeps the count that checkpoint was started with.
     """
     from insight_spark.sources.sinks import foreach_batch_upsert

@@ -1570,7 +1570,9 @@ def delta_index_merge_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("is_delta"),
         )
     )
-    return merged.groupBy("term").agg(
+    # one global row, as in the oracle: an absent term reads df = 0
+    return merged.agg(
+        F.lit("join").alias("term"),
         F.count("*").alias("df"),
         F.sum("is_delta").cast("long").alias("df_delta"),
         F.min("doc_id").alias("min_doc"),

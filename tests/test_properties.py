@@ -426,6 +426,36 @@ def test_line_dedup_skips_empty_docs(spark, tmp_path, name):
         assert {r["doc_id"] for r in df.collect()} == {1, 3}
 
 
+def test_delta_index_merge_read_absent_term(spark, tmp_path):
+    """A lookup of a term no document holds is the oracle's one global
+    row (df = 0, NULL id range) on both engines, not zero groups.  The
+    fixture is the sf0.01 tables with every ``join`` in the corpus
+    respelled."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from insight_spark.queries import all_oracle_sql, all_queries
+    from tests.conftest import SF_DIR_T2
+    from tests.oracle_harness import compare_query
+
+    tmp = str(tmp_path / "sf_nojoin")
+    os.makedirs(tmp)
+    for t in os.listdir(SF_DIR_T2):
+        if t != "documents.parquet":
+            os.symlink(os.path.join(SF_DIR_T2, t), os.path.join(tmp, t))
+    docs = pq.read_table(os.path.join(SF_DIR_T2, "documents.parquet"))
+    text = pc.replace_substring(docs["text"], "join", "jion")
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text", text)
+    pq.write_table(docs, os.path.join(tmp, "documents.parquet"))
+    name = "delta_index_merge_read"
+    df = all_queries()[name](spark, tmp)
+    rep = compare_query(df, all_oracle_sql()[name], tmp)
+    assert rep["ok"], rep
+    assert [tuple(r) for r in df.collect()] == [("join", 0, None, None, None)]
+
+
 def test_jl_norm_ratio_concentrates(spark, sf_dir):
     """JL lemma in action: the norm ratio must concentrate near 1 —
     mean within [0.7, 1.3] and every value positive."""

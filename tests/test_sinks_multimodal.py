@@ -109,6 +109,20 @@ def test_index_lookups_are_one_task_and_match_bucketed_scans(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_search_index_tables_hold_one_file_per_bucket(spark, tmp_path):
+    """Each bucketed index table is written as at most one part file per
+    bucket, so a bucket-pruned lookup opens one file."""
+    from insight_spark.pipelines import prepare_corpus
+    from tests.conftest import SF_DIR_T2
+
+    docs = prepare_corpus(load_table(spark, SF_DIR_T2, "documents"))
+    tables = write_search_index(spark, docs, str(tmp_path), n_buckets=8)
+    for table in tables.values():
+        parts = [f for f in os.listdir(tmp_path / table) if f.startswith("part-")]
+        buckets = {f.rsplit("_", 1)[1].split(".")[0] for f in parts}
+        assert len(parts) == len(buckets) <= 8, (table, sorted(parts))
+
+
 def test_jdbc_standin_writes_ddl(spark, tmp_path):
     profile = (
         load_table(spark, SF_DIR, "documents")
@@ -133,54 +147,91 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path):
     assert served.select("user_id").distinct().count() == b1.count()
 
 
-def test_foreach_batch_upsert_reliable_barrier(spark, tmp_path, monkeypatch):
-    """VERDICT r12 #7: the cluster-posture 'reliable' (staged, durable)
-    barrier yields the same serving content as the default
-    localCheckpoint barrier, stays idempotent under replay, and cleans
-    up its staging dirs — also when the serving overwrite fails (the
-    error propagates and the staged copy is still removed)."""
-    from pyspark.sql.readwriter import DataFrameWriter
+def _served_bytes(out: str) -> dict[str, bytes]:
+    serving = os.path.join(out, "serving")
+    return {
+        f: open(os.path.join(serving, f), "rb").read() for f in os.listdir(serving)
+    }
 
+
+def _leftovers(out: str) -> list[str]:
+    return [d for d in os.listdir(out) if d.startswith(("_staging", "_serving_prev"))]
+
+
+def test_foreach_batch_upsert_failed_staged_write(spark, tmp_path):
+    """A batch whose staged write fails raises; the committed serving
+    copy stays byte-identical and no staged dir is left behind."""
+    out = str(tmp_path / "serving_failed_stage")
+    upsert = foreach_batch_upsert(out, ["user_id"])
+    ev = load_table(spark, SF_DIR, "events")
+    b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
+    upsert(b1, 0)
+    before = _served_bytes(out)
+    # the assertion fails inside the write job's tasks, after the
+    # staged dir was created
+    poisoned = b1.withColumn(
+        "n",
+        F.coalesce(F.assert_true(F.col("user_id") < 0).cast("long"), "n"),
+    )
+    with pytest.raises(Exception, match="is not true"):
+        upsert(poisoned, 1)
+    assert _served_bytes(out) == before
+    assert not _leftovers(out)
+
+
+def test_foreach_batch_upsert_recovers_interrupted_swap(spark, tmp_path):
+    """A swap that died after moving ``serving`` aside is rolled back by
+    the next batch, which then merges onto the restored table: the
+    result equals an uninterrupted run, not a re-seed from one batch."""
+    ev = load_table(spark, SF_DIR, "events")
+    per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
+    b0 = per_user.filter(F.col("user_id") % 2 == 0)
+    b1 = per_user.filter(F.col("user_id") % 2 == 1)
+    runs, leftovers = {}, []
+    for name in ("clean", "interrupted"):
+        out = str(tmp_path / f"serving_{name}")
+        upsert = foreach_batch_upsert(out, ["user_id"])
+        upsert(b0, 0)
+        if name == "interrupted":
+            os.rename(
+                os.path.join(out, "serving"), os.path.join(out, "_serving_prev")
+            )
+        upsert(b1, 1)
+        served = spark.read.parquet(os.path.join(out, "serving"))
+        runs[name] = sorted(tuple(r) for r in served.collect())
+        leftovers += _leftovers(out)
+    assert runs["interrupted"] == runs["clean"]
+    assert runs["clean"] == sorted(tuple(r) for r in per_user.collect())
+    assert not leftovers
+
+
+def test_foreach_batch_upsert_discards_stale_prev(spark, tmp_path):
+    """A ``_serving_prev`` left beside a committed ``serving`` (a swap
+    that died before its delete) is discarded, not restored."""
+    out = str(tmp_path / "serving_stale_prev")
+    upsert = foreach_batch_upsert(out, ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     b2 = b1.withColumn("n", F.col("n") + F.lit(1)).limit(5)
-    outs = {}
-    for barrier in ("local", "reliable"):
-        out = str(tmp_path / f"serving_{barrier}")
-        upsert = foreach_batch_upsert(out, ["user_id"], barrier=barrier)
-        upsert(b1, 0)
-        upsert(b2, 1)
-        upsert(b2, 1)  # replay of the last batch must be a no-op merge
-        served = spark.read.parquet(os.path.join(out, "serving"))
-        outs[barrier] = sorted(tuple(r) for r in served.collect())
-        assert not [
-            d for d in os.listdir(out) if d.startswith("_staging")
-        ], "reliable barrier must GC its staging dirs"
-    assert outs["local"] == outs["reliable"]
-
-    real_parquet = DataFrameWriter.parquet
-
-    def failing_serving_write(self, path, *args, **kwargs):
-        if path.endswith("serving"):
-            raise RuntimeError("injected serving overwrite failure")
-        return real_parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", failing_serving_write)
-    out = str(tmp_path / "serving_reliable")
-    upsert = foreach_batch_upsert(out, ["user_id"], barrier="reliable")
-    with pytest.raises(RuntimeError, match="injected serving overwrite"):
-        upsert(b2, 2)
-    assert not [d for d in os.listdir(out) if d.startswith("_staging")]
+    upsert(b1, 0)
+    stale = spark.createDataFrame([(-1, 99)], "user_id bigint, n bigint")
+    stale.write.parquet(os.path.join(out, "_serving_prev"))
+    upsert(b2, 1)
+    served = spark.read.parquet(os.path.join(out, "serving"))
+    got = {r["user_id"]: r["n"] for r in served.collect()}
+    want = {r["user_id"]: r["n"] for r in b1.collect()}
+    want.update({r["user_id"]: r["n"] for r in b2.collect()})
+    assert got == want
+    assert not _leftovers(out)
 
 
-@pytest.mark.parametrize("barrier", ["local", "reliable"])
-def test_foreach_batch_upsert_on_uri_out_dir(spark, tmp_path, barrier):
+def test_foreach_batch_upsert_on_uri_out_dir(spark, tmp_path):
     """ADVICE r13: on a URI out_dir (file:// here; hdfs:// / s3a:// on
     a cluster) a later micro-batch must still merge onto the earlier
     ones — the serving dir's existence is asked of its Hadoop
     FileSystem, not of os.path, which sees no URI as a directory."""
-    out_path = tmp_path / f"serving_uri_{barrier}"
-    upsert = foreach_batch_upsert(out_path.as_uri(), ["user_id"], barrier)
+    out_path = tmp_path / "serving_uri"
+    upsert = foreach_batch_upsert(out_path.as_uri(), ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     upsert(per_user.filter(F.col("user_id") % 2 == 0), 0)
@@ -189,7 +240,7 @@ def test_foreach_batch_upsert_on_uri_out_dir(spark, tmp_path, barrier):
     assert sorted(tuple(r) for r in served.collect()) == sorted(
         tuple(r) for r in per_user.collect()
     )
-    assert not [d for d in os.listdir(out_path) if d.startswith("_staging")]
+    assert not _leftovers(str(out_path))
 
 
 def test_foreach_batch_upsert_no_silent_reseed(spark, tmp_path):
@@ -211,15 +262,14 @@ def test_foreach_batch_upsert_no_silent_reseed(spark, tmp_path):
         upsert(b1, 1)
 
 
-@pytest.mark.parametrize("barrier", ["local", "reliable"])
-def test_foreach_batch_upsert_merge_semantics(spark, tmp_path, barrier):
+def test_foreach_batch_upsert_merge_semantics(spark, tmp_path):
     """The one-shuffle merge keeps the upsert contract: a batch row
     replaces the served row, a key only served survives, duplicate
     batch keys collapse to one of the batch's rows for that key, and
     the served table keeps the batch's column order and types (the key
     sits mid-row here, so a key-first rebuild would show)."""
-    out = str(tmp_path / f"serving_merge_{barrier}")
-    upsert = foreach_batch_upsert(out, ["user_id"], barrier)
+    out = str(tmp_path / "serving_merge")
+    upsert = foreach_batch_upsert(out, ["user_id"])
 
     def frame(rows):
         return spark.createDataFrame(
