@@ -129,16 +129,30 @@ def streaming_ingest(
     in by renames (``sinks.foreach_batch_upsert``).  Returns the
     started StreamingQuery (caller awaits/stops).
 
+    One micro-batch per backlog: the source has no per-trigger file
+    cap, so every file listed when a trigger fires, a burst or the
+    backlog a restart finds, is one batch and pays the per-batch
+    upsert once.  An aggregate consumer needs no cap: the batch's
+    output, its state and the upsert's merge input are bounded by
+    hourly windows × event types, not by the files it read, and
+    partial aggregation bounds the reducer's input to keys × scan
+    tasks.  Rows of one batch are judged late against the previous
+    batch's watermark, so a backlog admits rows that one-file slicing
+    might have dropped as late; on ts-ordered input nothing changes.
+
     The query starts with ``_INGEST_STATE_PARTITIONS`` (1) shuffle
     partitions, so the hourly rollup's state store, and the upsert's
     merge shuffle, run one task per micro-batch instead of the
     session's count.  The rollup's state is the hourly windows still
     open under the 2 h watermark × event types (10 rows for in-order
-    10-minute files), and partial aggregation bounds the reducer's
-    input to keys × map tasks whatever the event volume.  ``start()``
-    clones the session, so the stream keeps the value and the caller's
-    session is restored on return.  A query resumed from an existing
-    checkpoint keeps the count that checkpoint was started with.
+    10-minute files).  No-data micro-batches are off: in update mode
+    such a batch only evicts state, which the next data batch does
+    against the same watermark, yet it would run a full staged
+    rewrite of the serving table for an empty batch.  ``start()``
+    clones the session, so the stream keeps both values and the
+    caller's session is restored on return.  A query resumed from an
+    existing checkpoint keeps the partition count that checkpoint was
+    started with.
     """
     from insight_spark.sources.sinks import foreach_batch_upsert
     from insight_spark.streaming.core import (
@@ -146,9 +160,15 @@ def streaming_ingest(
         read_events_stream,
     )
 
-    stream = hourly_counts_stream(read_events_stream(spark, in_dir))
+    stream = hourly_counts_stream(
+        read_events_stream(spark, in_dir, max_files_per_trigger=None)
+    )
     with conf_override(
-        spark, {"spark.sql.shuffle.partitions": str(_INGEST_STATE_PARTITIONS)}
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(_INGEST_STATE_PARTITIONS),
+            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+        },
     ):
         return (
             stream.writeStream.outputMode("update")

@@ -87,7 +87,7 @@ def write_single_parquet(df: DataFrame, dest_file: str) -> str:
 
 
 def read_events_stream(
-    spark: SparkSession, in_dir: str, max_files_per_trigger: int = 1
+    spark: SparkSession, in_dir: str, max_files_per_trigger: int | None = 1
 ) -> DataFrame:
     """A9: file-source stream of events (Pulsar stand-in).
 
@@ -95,13 +95,22 @@ def read_events_stream(
     arriving file, matching per-ingestion processing; consumers whose
     semantics are batch-slicing-invariant (order-preserving stateful
     ops over ts-ordered chunks) may raise it to amortize the fixed
-    per-trigger scheduler cost.
+    per-trigger scheduler cost.  ``None`` sets no cap (Spark's
+    default): each trigger admits every file listed when it fires, so
+    a backlog is one micro-batch.
+
+    ``1`` stays the default because the registry drains audit what
+    the slicing decides, and their oracles were pinned under it: a
+    row is judged late against the previous batch's watermark, so
+    ``stream_late_drop`` drops its re-delivered chunk only because
+    the chunks before it ran in earlier batches and advanced the
+    watermark; one uncapped batch over the whole directory would
+    accept it.
     """
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(in_dir)
-    )
+    reader = spark.readStream.schema(EVENTS_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(in_dir)
 
 
 def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
