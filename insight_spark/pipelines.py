@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from insight_spark.engine import conf_override
+from insight_spark.engine import SEMANTIC_CONF
 from insight_spark.operators.dedup import exact_dedup, simhash_fingerprints
 from insight_spark.operators.text import (
     doc_freq,
@@ -110,9 +110,12 @@ def build_suggestions(docs: DataFrame, min_tf: int = 2) -> DataFrame:
     )
 
 
-# Shuffle (and so state-store) partitions of the ingest query; see
-# streaming_ingest.
-_INGEST_STATE_PARTITIONS = 1
+# Confs of the ingest query's own session; see streaming_ingest.
+_INGEST_CONF = {
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    "spark.sql.files.minPartitionNum": "1",
+}
 
 
 def streaming_ingest(
@@ -140,19 +143,25 @@ def streaming_ingest(
     batch's watermark, so a backlog admits rows that one-file slicing
     might have dropped as late; on ts-ordered input nothing changes.
 
-    The query starts with ``_INGEST_STATE_PARTITIONS`` (1) shuffle
-    partitions, so the hourly rollup's state store, and the upsert's
-    merge shuffle, run one task per micro-batch instead of the
-    session's count.  The rollup's state is the hourly windows still
-    open under the 2 h watermark × event types (10 rows for in-order
-    10-minute files).  No-data micro-batches are off: in update mode
-    such a batch only evicts state, which the next data batch does
-    against the same watermark, yet it would run a full staged
-    rewrite of the serving table for an empty batch.  ``start()``
-    clones the session, so the stream keeps both values and the
-    caller's session is restored on return.  A query resumed from an
-    existing checkpoint keeps the partition count that checkpoint was
-    started with.
+    Two tasks per micro-batch.  The query runs in its own session,
+    ``spark.newSession()``, carrying ``engine.SEMANTIC_CONF`` and
+    ``_INGEST_CONF``; the caller's session is never changed.  The
+    file source plans every batch's scan under the session it was
+    read with, so the scan, packed by bytes (``minPartitionNum`` 1)
+    rather than by core count, is one task up to
+    ``spark.sql.files.maxPartitionBytes``; a large backlog still fans
+    out, one task per ``maxPartitionBytes`` of input.  One shuffle
+    partition makes the rollup's state store one task, in which the
+    upsert also merges and writes.  The state is the hourly windows
+    still open under the 2 h watermark × event types (10 rows for
+    in-order 10-minute files).  No-data micro-batches are off: in
+    update mode such a batch only evicts state, which the next data
+    batch does against the same watermark, yet it would run a full
+    staged rewrite of the serving table for an empty batch.  A query
+    resumed from an existing checkpoint keeps the partition count
+    that checkpoint was started with.  The query is listed in its
+    own session's ``streams.active``, not the caller's: stop it
+    through the returned handle.
     """
     from insight_spark.sources.sinks import foreach_batch_upsert
     from insight_spark.streaming.core import (
@@ -160,21 +169,15 @@ def streaming_ingest(
         read_events_stream,
     )
 
+    ingest = spark.newSession()
+    for k, v in {**SEMANTIC_CONF, **_INGEST_CONF}.items():
+        ingest.conf.set(k, v)
     stream = hourly_counts_stream(
-        read_events_stream(spark, in_dir, max_files_per_trigger=None)
+        read_events_stream(ingest, in_dir, max_files_per_trigger=None)
     )
-    with conf_override(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": str(_INGEST_STATE_PARTITIONS),
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-        },
-    ):
-        return (
-            stream.writeStream.outputMode("update")
-            .foreachBatch(
-                foreach_batch_upsert(out_dir, ["window_start", "event_type"])
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
+    return (
+        stream.writeStream.outputMode("update")
+        .foreachBatch(foreach_batch_upsert(out_dir, ["window_start", "event_type"]))
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )

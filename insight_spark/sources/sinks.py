@@ -256,16 +256,18 @@ def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
 
     The batch is read once.  A micro-batch DataFrame is an uncached
     plan that recomputes its whole lineage, the stateful stage
-    included, on every read, so the merge is one union and one
-    shuffle rather than a join of the batch against itself: the
-    serving copy is tagged ``_src = 0`` and the batch ``_src = 1``,
-    and each key keeps the value struct of its highest tag.  A batch
-    row replaces the served row, a key only served survives, and
-    duplicate batch keys collapse to one of the batch's rows.  Both
-    parquet reads take the batch's schema, so no schema-inference job
-    runs either.
+    included, on every read, so the merge is one union rather than a
+    join of the batch against itself: the serving copy is tagged
+    ``_src = 0`` and the batch ``_src = 1``, and each key keeps the
+    value struct of its highest tag.  A batch row replaces the served
+    row, a key only served survives, and duplicate batch keys collapse
+    to one of the batch's rows.  The serving read takes the batch's
+    schema, so no schema-inference job runs either.
 
-    One job per batch: the merge is written once, to
+    One job per batch and one merge task: the union is coalesced to
+    one partition ahead of the merge, so no merge shuffle runs; in the
+    ingest stream that task is the state stage's own.  The merge is
+    written once, to
     ``_staging_<batch_id>``, reading ``serving`` and never writing it.
     Driver-side ``FileSystem`` renames (no job) then swap it in:
     ``serving`` → ``_serving_prev``, staged copy → ``serving``, delete
@@ -309,13 +311,15 @@ def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
                 )
             served = spark.read.schema(batch_df.schema).parquet(serving.toString())
             tagged = served.withColumn("_src", F.lit(0)).unionByName(tagged)
-        # coalesce(1) sizes the output for a key-bounded table (guide §6
-        # small-files: the merge's shuffle partitions would otherwise
-        # leave one tiny file each per version for every later
-        # batch/reader to re-open); a cluster serving a large key space
-        # would repartition to a target file size here instead.
+        # coalesce(1) ahead of the merge: one job, one merge task.  One
+        # partition satisfies the aggregate's distribution, so no merge
+        # shuffle runs, and the single file sizes the output for a
+        # key-bounded table (guide §6 small-files).  A cluster serving a
+        # large key space would repartition to a target file size here
+        # instead.
         merged = (
-            tagged.groupBy(*key_cols)
+            tagged.coalesce(1)
+            .groupBy(*key_cols)
             .agg(F.max_by(value, "_src").alias("_v"))
             .select(
                 *[
@@ -323,7 +327,6 @@ def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
                     for c in cols
                 ]
             )
-            .coalesce(1)
         )
         try:
             merged.write.parquet(staging.toString())
@@ -390,21 +393,21 @@ def foreach_batch_additive_merge(
             # Pointer exists => the version it names was fully written
             # before the pointer commit; a failure reading it is real.
             current = spark.read.parquet(os.path.join(out_dir, state["dir"]))
-            merged = (
-                current.unionByName(batch_df)
-                .groupBy(*key_cols)
-                .agg(*[F.sum(c).alias(c) for c in add_cols])
-            )
+            merged = current.unionByName(batch_df)
         vdir = f"serving_b{batch_id}"
         # One file per MV version (guide §6 small-files): the merged
         # table is key-bounded (one row per rollup key), and every
         # later batch re-reads the live version — 8 shuffle-partition
-        # shards per version were pure open overhead.  A cluster
-        # serving a large key space repartitions to a target file
-        # size here instead.
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, vdir)
-        )
+        # shards per version were pure open overhead.  Coalescing ahead
+        # of the sum needs no merge shuffle: one task reads, adds and
+        # writes.  A cluster serving a large key space repartitions to
+        # a target file size here instead.
+        merged = merged.coalesce(1)
+        if state["dir"] is not None:
+            merged = merged.groupBy(*key_cols).agg(
+                *[F.sum(c).alias(c) for c in add_cols]
+            )
+        merged.write.mode("overwrite").parquet(os.path.join(out_dir, vdir))
         tmp_ptr = os.path.join(out_dir, f"_ptr_{batch_id}")
         with open(tmp_ptr, "w") as fh:
             json.dump({"dir": vdir, "last_applied": batch_id}, fh)

@@ -178,7 +178,9 @@ def _land(path, in_dir):
 def test_streaming_ingest_admits_a_backlog_in_one_batch(spark, tmp_path):
     """Files that landed before the query started are one micro-batch:
     the ingest source sets no per-trigger file cap, so the backlog pays
-    the upsert's job once."""
+    the upsert's job once.  That job is two stages of one task each:
+    the scan packs every file into one task, and the state stage's task
+    also merges and writes the upsert (no merge shuffle)."""
     in_dir = str(tmp_path / "in")
     prepare_stream_input(spark, SF, in_dir, n_chunks=3)
     q = streaming_ingest(spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"))
@@ -191,8 +193,47 @@ def test_streaming_ingest_admits_a_backlog_in_one_batch(spark, tmp_path):
     data = [p for p in progress if p["numInputRows"] > 0]
     events = _rows(os.path.join(SF, "events.parquet"))
     assert [p["numInputRows"] for p in data] == [events]
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
     assert len(jobs) == 1
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+    assert (len(stages), tasks) == (2, 2)
+
+
+def test_streaming_ingest_leaves_the_callers_session_unchanged(spark, tmp_path):
+    """The ingest query runs in its own session: the caller's session
+    reads the same confs while the stream runs and after, and the
+    query's session carries the engine's semantic confs even when the
+    caller's session does not."""
+    from insight_spark.engine import conf_override
+
+    keys = [
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.files.minPartitionNum",
+    ]
+    in_dir = str(tmp_path / "in")
+    prepare_stream_input(spark, SF, in_dir, n_chunks=1)
+    tz = "spark.sql.session.timeZone"
+    with conf_override(spark, {tz: "America/New_York"}):
+        before = {k: spark.conf.get(k, None) for k in keys}
+        q = streaming_ingest(
+            spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        )
+        try:
+            q.processAllAvailable()
+            running = {k: spark.conf.get(k, None) for k in keys}
+            assert q.isActive
+            # the JVM query's session; pyspark's handle does not expose it
+            assert q._jsq.sparkSession().conf().get(tz) == "UTC"
+            assert spark.conf.get(tz) == "America/New_York"
+        finally:
+            q.stop()
+        after = {k: spark.conf.get(k, None) for k in keys}
+    assert running == before == after
 
 
 @pytest.fixture(scope="module")

@@ -291,6 +291,37 @@ def test_foreach_batch_upsert_merge_semantics(spark, tmp_path):
     assert rows[4] == ("z", "40.00")
 
 
+def test_foreach_batch_upsert_merges_without_a_shuffle(spark, tmp_path):
+    """A batch merged onto an existing serving dir is one job of one
+    stage: the single partition ahead of the merge needs no shuffle, so
+    one task reads the served copy and the batch, merges and writes."""
+    out = str(tmp_path / "serving_one_stage")
+    upsert = foreach_batch_upsert(out, ["user_id"])
+
+    def batch(lo, hi):
+        return spark.range(lo, hi, 1, numPartitions=2).select(
+            F.col("id").alias("user_id"), (F.col("id") * 10).alias("n")
+        )
+
+    upsert(batch(0, 20), 0)
+    sc = spark.sparkContext
+    group = "upsert_one_stage"
+    sc.setJobGroup(group, "upsert merge onto a served copy")
+    try:
+        upsert(batch(10, 30), 1)
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [st for j in jobs for st in tracker.getJobInfo(j).stageIds]
+    assert (len(jobs), len(stages)) == (1, 1), (jobs, stages)
+    served = spark.read.parquet(os.path.join(out, "serving")).collect()
+    assert sorted((r["user_id"], r["n"]) for r in served) == [
+        (i, i * 10) for i in range(30)
+    ]
+
+
 def test_foreach_batch_upsert_refuses_uncommitted_serving_dir(spark, tmp_path):
     """A serving dir that keeps its part files but lost its ``_SUCCESS``
     marker (an overwrite whose job died after moving some parts) must
