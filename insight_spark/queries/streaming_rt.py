@@ -873,10 +873,7 @@ def stream_mv_additive_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     — DECIMAL partials make the equality exact regardless of how many
     batches the stream was sliced into.
     """
-    from insight_spark.sources.sinks import (
-        foreach_batch_additive_merge,
-        read_additive_mv,
-    )
+    from insight_spark.sources.sinks import foreach_batch_additive_merge
     from insight_spark.streaming.core import read_events_stream
 
     events = read_events_stream(spark, _chunk_dir(spark, sf_dir))
@@ -898,7 +895,7 @@ def stream_mv_additive_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _checkpoint_dir() as ckpt:
         run_to_completion(events.writeStream.foreachBatch(partials_then_merge), ckpt)
-    mv = read_additive_mv(spark, out_dir)
+    mv = spark.read.parquet(os.path.join(out_dir, "serving"))
     return mv.select(
         "hour",
         "event_type",

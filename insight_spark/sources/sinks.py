@@ -23,7 +23,7 @@ same bounded-key shuffle shape as term_freq.
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,15 +45,6 @@ def _rename(fs, src, dst) -> None:
     """``FileSystem.rename`` that raises instead of returning False."""
     if not fs.rename(src, dst):
         raise RuntimeError(f"rename {src} -> {dst} failed")
-
-
-def _local_dir(out_dir: str) -> str:
-    """``out_dir`` as a local path (a ``file:`` URI maps to its path);
-    any other scheme raises — ``os.replace`` commits are local-only."""
-    url = urlparse(out_dir)
-    if url.scheme not in ("", "file"):
-        raise ValueError(f"out_dir {out_dir!r}: os.replace commits are local-only")
-    return url.path if url.scheme else out_dir
 
 
 def write_bucketed(
@@ -246,80 +237,111 @@ def write_training_shards(
     return out_dir
 
 
-def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
-    """A10/K8: idempotent micro-batch upsert into a parquet serving dir.
-
-    Returns a ``foreachBatch`` function: each micro-batch overwrites
-    the keys it contains (read-merge-write on the serving copy) —
-    the same upsert contract an ES/PG sink gives, exactly-once per
-    micro-batch via the checkpoint's batch id.
+def _commit_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    out_dir: str,
+    merge: Callable[[DataFrame], DataFrame],
+) -> None:
+    """Merge one micro-batch onto the parquet table ``out_dir/serving``
+    and commit it by rename: the crash-safe commit of every
+    foreachBatch sink here.
 
     The batch is read once.  A micro-batch DataFrame is an uncached
     plan that recomputes its whole lineage, the stateful stage
-    included, on every read, so the merge is one union rather than a
-    join of the batch against itself: the serving copy is tagged
-    ``_src = 0`` and the batch ``_src = 1``, and each key keeps the
-    value struct of its highest tag.  A batch row replaces the served
-    row, a key only served survives, and duplicate batch keys collapse
-    to one of the batch's rows.  The serving read takes the batch's
-    schema, so no schema-inference job runs either.
+    included, on every read, so the served copy and the batch meet in
+    one union rather than a join: the served copy is tagged
+    ``_src = 0`` and the batch ``_src = 1``.  The serving read takes
+    the batch's schema, so no schema-inference job runs, and ``merge``
+    must return a table of the batch's column types.  ``merge`` maps
+    that union, coalesced to one partition, to the new table.
 
-    One job per batch and one merge task: the union is coalesced to
-    one partition ahead of the merge, so no merge shuffle runs; in the
+    One job per batch and one merge task: one partition satisfies the
+    merge aggregate's distribution, so no merge shuffle runs; in the
     ingest stream that task is the state stage's own.  The merge is
-    written once, to
-    ``_staging_<batch_id>``, reading ``serving`` and never writing it.
-    Driver-side ``FileSystem`` renames (no job) then swap it in:
-    ``serving`` → ``_serving_prev``, staged copy → ``serving``, delete
-    ``_serving_prev``.  Nothing is deleted before a complete,
-    ``_SUCCESS``-marked copy exists, and a reader finds a committed
-    table except between the two renames.  The next batch mends a
-    crash before the replayed batch re-merges: a swap that died
-    between its renames (``serving`` missing, ``_serving_prev``
-    present) is rolled back; any other ``_serving_prev`` or
-    ``_staging_*`` is deleted, and a failed staged write never touched
-    ``serving``.  Rename is atomic metadata on ``file://`` and HDFS;
-    on object stores (s3a://, gs://) it copies the table, not atomically.
+    written once, to ``_staging_<batch_id>``, reading ``serving`` and
+    never writing it, and an empty ``_batch_<batch_id>`` marker is
+    added beside its ``_SUCCESS``.  Driver-side ``FileSystem`` renames
+    (no job) then swap it in: ``serving`` → ``_serving_prev``, staged
+    copy → ``serving``, delete ``_serving_prev``.  One rename thus
+    commits the table and the id of the batch it holds.  Nothing is
+    deleted before a complete, ``_SUCCESS``-marked copy exists, and a
+    reader finds a committed table except between the two renames.
+
+    The next batch mends a crash before the replayed batch re-merges:
+    a swap that died between its renames (``serving`` missing,
+    ``_serving_prev`` present) is rolled back; any other
+    ``_serving_prev`` or ``_staging_*`` is deleted, and a failed staged
+    write never touched ``serving``.  Every path is asked of its own
+    Hadoop FileSystem, so a file:// / hdfs:// / s3a:// ``out_dir``
+    sees its earlier batches too (ADVICE r13).  Rename is atomic
+    metadata on ``file://`` and HDFS; on object stores (s3a://, gs://)
+    it copies the table, not atomically.
 
     Only a MISSING serving dir means first batch.  One that exists
     without its ``_SUCCESS`` marker (emptied or damaged out of band)
     raises instead of being merged onto or re-seeded from one batch.
     """
+    spark = batch_df.sparkSession
+    fs, root = _hadoop_fs(spark, out_dir)
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    serving, prev = Path(root, "serving"), Path(root, "_serving_prev")
+    staging = Path(root, f"_staging_{batch_id}")
+    if not fs.exists(serving) and fs.exists(prev):
+        _rename(fs, prev, serving)
+    fs.delete(prev, True)
+    for leftover in fs.globStatus(Path(root, "_staging_*")) or []:
+        fs.delete(leftover.getPath(), True)
+    rows = batch_df.withColumn("_src", F.lit(1))
+    if fs.exists(serving):
+        if not fs.exists(Path(serving, "_SUCCESS")):
+            raise RuntimeError(
+                f"serving dir {serving} has no _SUCCESS marker: its last "
+                "write did not commit; refusing to merge onto it"
+            )
+        served = spark.read.schema(batch_df.schema).parquet(serving.toString())
+        rows = served.withColumn("_src", F.lit(0)).unionByName(rows)
+    try:
+        # One file sizes the output for a key-bounded table (guide §6
+        # small-files).  A cluster serving a large key space would
+        # repartition to a target file size here instead.
+        merge(rows.coalesce(1)).write.parquet(staging.toString())
+        fs.create(Path(staging, f"_batch_{batch_id}")).close()
+    except Exception:
+        fs.delete(staging, True)
+        raise
+    if fs.exists(serving):
+        _rename(fs, serving, prev)
+    _rename(fs, staging, serving)
+    fs.delete(prev, True)
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # Every path is asked of its own Hadoop FileSystem, so a
-        # file:// / hdfs:// / s3a:// out_dir sees its earlier batches
-        # too (ADVICE r13).
-        fs, root = _hadoop_fs(spark, out_dir)
-        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        serving, prev = Path(root, "serving"), Path(root, "_serving_prev")
-        staging = Path(root, f"_staging_{batch_id}")
-        if not fs.exists(serving) and fs.exists(prev):
-            _rename(fs, prev, serving)
-        fs.delete(prev, True)
-        for leftover in fs.globStatus(Path(root, "_staging_*")) or []:
-            fs.delete(leftover.getPath(), True)
-        cols = batch_df.columns
+
+def _served_batch(spark: SparkSession, out_dir: str) -> int:
+    """Id of the batch whose commit made ``out_dir/serving``, from its
+    ``_batch_<id>`` marker; -1 before the first commit."""
+    fs, markers = _hadoop_fs(spark, os.path.join(out_dir, "serving", "_batch_*"))
+    names = [m.getPath().getName() for m in fs.globStatus(markers) or []]
+    return max((int(n[len("_batch_"):]) for n in names), default=-1)
+
+
+def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
+    """A10/K8: idempotent micro-batch upsert into a parquet serving dir.
+
+    Returns a ``foreachBatch`` function: each micro-batch overwrites
+    the keys it contains (read-merge-write on the serving copy,
+    committed by :func:`_commit_batch`) — the same upsert contract an
+    ES/PG sink gives, exactly-once per micro-batch via the checkpoint's
+    batch id.  Each key keeps the value struct of its highest ``_src``
+    tag: a batch row replaces the served row, a key only served
+    survives, and duplicate batch keys collapse to one of the batch's
+    rows.
+    """
+
+    def latest(rows: DataFrame) -> DataFrame:
+        cols = [c for c in rows.columns if c != "_src"]
         value = F.struct(*[c for c in cols if c not in key_cols])
-        tagged = batch_df.withColumn("_src", F.lit(1))
-        if fs.exists(serving):
-            if not fs.exists(Path(serving, "_SUCCESS")):
-                raise RuntimeError(
-                    f"serving dir {serving} has no _SUCCESS marker: its last "
-                    "write did not commit; refusing to merge onto it"
-                )
-            served = spark.read.schema(batch_df.schema).parquet(serving.toString())
-            tagged = served.withColumn("_src", F.lit(0)).unionByName(tagged)
-        # coalesce(1) ahead of the merge: one job, one merge task.  One
-        # partition satisfies the aggregate's distribution, so no merge
-        # shuffle runs, and the single file sizes the output for a
-        # key-bounded table (guide §6 small-files).  A cluster serving a
-        # large key space would repartition to a target file size here
-        # instead.
-        merged = (
-            tagged.coalesce(1)
-            .groupBy(*key_cols)
+        return (
+            rows.groupBy(*key_cols)
             .agg(F.max_by(value, "_src").alias("_v"))
             .select(
                 *[
@@ -328,15 +350,9 @@ def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
                 ]
             )
         )
-        try:
-            merged.write.parquet(staging.toString())
-        except Exception:
-            fs.delete(staging, True)
-            raise
-        if fs.exists(serving):
-            _rename(fs, serving, prev)
-        _rename(fs, staging, serving)
-        fs.delete(prev, True)
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        _commit_batch(batch_df, batch_id, out_dir, latest)
 
     return upsert
 
@@ -350,100 +366,35 @@ def foreach_batch_additive_merge(
 
     Returns a ``foreachBatch`` function: each micro-batch arrives as
     RAW pre-aggregated partials (count / DECIMAL sums per key) and is
-    merged by ADDING onto the serving copy (read-modify-write), so
-    the engine keeps no aggregation state at all — the pattern that
-    scales a 100 TB rollup without a 100 TB state store.  Unlike the
-    overwrite upsert, an additive merge is NOT naturally idempotent,
-    so exactly-once needs explicit batch-id fencing.
+    merged by ADDING onto the serving copy, so the engine keeps no
+    aggregation state at all — the pattern that scales a 100 TB rollup
+    without a 100 TB state store.  Duplicate keys within a batch add
+    up too.  The sums keep the batch's column types, so partials
+    should come in the type the MV holds (long counts, DECIMAL(38,s)
+    sums).  Readers scan ``out_dir/serving``.
 
-    Commit protocol (crash-safe): each batch writes its merged result
-    to a fresh versioned dir ``serving_b{id}``, then atomically
-    promotes it by ``os.replace``-ing a pointer file (``CURRENT``)
-    that records BOTH the live dir and the highest applied batch id —
-    one atomic rename commits the data and the fence together.  A
-    crash before the rename leaves the old pointer (batch unapplied —
-    redelivery re-merges from the OLD version, correct); a crash
-    after leaves the new pointer (redelivery is fenced out).  The
-    fence can be a single high-water-mark because Structured
-    Streaming batch ids are monotonically increasing and only the
-    last uncommitted batch is ever replayed.
-
-    Failure posture: only a MISSING serving version is treated as
-    first-batch; any other read error (transient IO, corruption)
-    re-raises rather than silently re-initializing the MV from one
-    batch's partials.  A non-local ``out_dir`` raises ``ValueError``.
+    The commit is :func:`_commit_batch`'s, the upsert's.  Unlike the
+    upsert, an additive merge is NOT naturally idempotent, so
+    exactly-once needs batch-id fencing: a batch whose id is not above
+    the one in the committed ``serving``'s ``_batch_<id>`` marker is
+    already folded in and is skipped.  One rename commits the data and
+    the fence together.  The fence can be a single high-water mark
+    because Structured Streaming batch ids increase monotonically and
+    only the last uncommitted batch is ever replayed; a swap that died
+    between its renames leaves no ``serving``, and the rolled-back copy
+    holds an earlier batch than the replayed one.
     """
-    out_dir = _local_dir(out_dir)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        import json
+    def sums(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*key_cols).agg(
+            *[F.sum(c).cast(rows.schema[c].dataType).alias(c) for c in add_cols]
+        )
 
-        spark = batch_df.sparkSession
-        os.makedirs(out_dir, exist_ok=True)
-        pointer = os.path.join(out_dir, "CURRENT")
-        state: dict = {"dir": None, "last_applied": -1}
-        if os.path.exists(pointer):
-            with open(pointer) as fh:
-                state = json.load(fh)
-        if batch_id <= state["last_applied"]:
-            return  # redelivery: already folded in
-        if state["dir"] is None:
-            merged = batch_df
-        else:
-            # Pointer exists => the version it names was fully written
-            # before the pointer commit; a failure reading it is real.
-            current = spark.read.parquet(os.path.join(out_dir, state["dir"]))
-            merged = current.unionByName(batch_df)
-        vdir = f"serving_b{batch_id}"
-        # One file per MV version (guide §6 small-files): the merged
-        # table is key-bounded (one row per rollup key), and every
-        # later batch re-reads the live version — 8 shuffle-partition
-        # shards per version were pure open overhead.  Coalescing ahead
-        # of the sum needs no merge shuffle: one task reads, adds and
-        # writes.  A cluster serving a large key space repartitions to
-        # a target file size here instead.
-        merged = merged.coalesce(1)
-        if state["dir"] is not None:
-            merged = merged.groupBy(*key_cols).agg(
-                *[F.sum(c).alias(c) for c in add_cols]
-            )
-        merged.write.mode("overwrite").parquet(os.path.join(out_dir, vdir))
-        tmp_ptr = os.path.join(out_dir, f"_ptr_{batch_id}")
-        with open(tmp_ptr, "w") as fh:
-            json.dump({"dir": vdir, "last_applied": batch_id}, fh)
-        os.replace(tmp_ptr, pointer)  # the atomic commit point
-        if state["dir"] is not None:  # GC the superseded version
-            import shutil
+    def add(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id > _served_batch(batch_df.sparkSession, out_dir):
+            _commit_batch(batch_df, batch_id, out_dir, sums)
 
-            shutil.rmtree(os.path.join(out_dir, state["dir"]), ignore_errors=True)
-
-    return merge
-
-
-def read_additive_mv(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the live version of an additive-merge MV: resolve the
-    ``CURRENT`` pointer written by :func:`foreach_batch_additive_merge`
-    and scan only the committed serving dir.
-
-    A missing pointer means NO batch ever committed (e.g. the stream
-    drained zero micro-batches) — surfaced as a descriptive error
-    rather than a bare FileNotFoundError, because "empty stream" and
-    "wrong path" need different fixes and the raw errno can't tell
-    them apart."""
-    import json
-
-    out_dir = _local_dir(out_dir)
-    pointer = os.path.join(out_dir, "CURRENT")
-    try:
-        with open(pointer) as fh:
-            state = json.load(fh)
-    except FileNotFoundError:
-        raise FileNotFoundError(
-            f"additive MV at {out_dir!r} has no CURRENT pointer: no "
-            "micro-batch has ever committed (empty/failed stream, or "
-            "wrong out_dir) — the MV read has nothing serveable yet"
-        ) from None
-    return spark.read.parquet(os.path.join(out_dir, state["dir"]))
+    return add
 
 
 #: Embedded Derby ships with Spark (metastore dependency) — a REAL JDBC

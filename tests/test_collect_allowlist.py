@@ -102,12 +102,10 @@ SINGLE_PARTITION_ALLOWLIST: dict[str, tuple[int, str]] = {
         "chunk-per-trigger contract)",
     ),
     "sources/sinks.py": (
-        2,
-        "foreachBatch upsert serving version + additive-MV version: "
-        "both merged tables are key-bounded (one row per key), so "
-        "each version is a small bounded slice written as one file; "
-        "the in-line comments carry the at-scale "
-        "repartition(target_file_size) form",
+        1,
+        "the one foreachBatch commit: key-bounded merged table (one "
+        "row per key) written as one file; the in-line comment "
+        "carries the at-scale repartition(target_file_size) form",
     ),
 }
 

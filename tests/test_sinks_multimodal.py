@@ -13,6 +13,7 @@ from insight_spark.operators.multimodal import (
 )
 from insight_spark.sources import load_table
 from insight_spark.sources.sinks import (
+    foreach_batch_additive_merge,
     foreach_batch_upsert,
     search_term_lookup,
     write_jdbc_standin,
@@ -158,25 +159,34 @@ def _leftovers(out: str) -> list[str]:
     return [d for d in os.listdir(out) if d.startswith(("_staging", "_serving_prev"))]
 
 
+#: Both foreachBatch sinks over a ``(user_id, n)`` batch.  They share
+#: one commit protocol, so each commit-protocol test below runs both.
+_SINKS = {
+    "upsert": lambda out: foreach_batch_upsert(out, ["user_id"]),
+    "additive": lambda out: foreach_batch_additive_merge(out, ["user_id"], ["n"]),
+}
+
+
 def test_foreach_batch_upsert_failed_staged_write(spark, tmp_path):
     """A batch whose staged write fails raises; the committed serving
     copy stays byte-identical and no staged dir is left behind."""
-    out = str(tmp_path / "serving_failed_stage")
-    upsert = foreach_batch_upsert(out, ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
-    upsert(b1, 0)
-    before = _served_bytes(out)
     # the assertion fails inside the write job's tasks, after the
     # staged dir was created
     poisoned = b1.withColumn(
         "n",
         F.coalesce(F.assert_true(F.col("user_id") < 0).cast("long"), "n"),
     )
-    with pytest.raises(Exception, match="is not true"):
-        upsert(poisoned, 1)
-    assert _served_bytes(out) == before
-    assert not _leftovers(out)
+    for name, make_sink in _SINKS.items():
+        out = str(tmp_path / f"serving_failed_stage_{name}")
+        sink = make_sink(out)
+        sink(b1, 0)
+        before = _served_bytes(out)
+        with pytest.raises(Exception, match="is not true"):
+            sink(poisoned, 1)
+        assert _served_bytes(out) == before, name
+        assert not _leftovers(out), name
 
 
 def test_foreach_batch_upsert_recovers_interrupted_swap(spark, tmp_path):
@@ -187,42 +197,47 @@ def test_foreach_batch_upsert_recovers_interrupted_swap(spark, tmp_path):
     per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     b0 = per_user.filter(F.col("user_id") % 2 == 0)
     b1 = per_user.filter(F.col("user_id") % 2 == 1)
-    runs, leftovers = {}, []
-    for name in ("clean", "interrupted"):
-        out = str(tmp_path / f"serving_{name}")
-        upsert = foreach_batch_upsert(out, ["user_id"])
-        upsert(b0, 0)
-        if name == "interrupted":
-            os.rename(
-                os.path.join(out, "serving"), os.path.join(out, "_serving_prev")
-            )
-        upsert(b1, 1)
-        served = spark.read.parquet(os.path.join(out, "serving"))
-        runs[name] = sorted(tuple(r) for r in served.collect())
-        leftovers += _leftovers(out)
-    assert runs["interrupted"] == runs["clean"]
-    assert runs["clean"] == sorted(tuple(r) for r in per_user.collect())
-    assert not leftovers
+    want = sorted(tuple(r) for r in per_user.collect())
+    for sink_name, make_sink in _SINKS.items():
+        runs, leftovers = {}, []
+        for name in ("clean", "interrupted"):
+            out = str(tmp_path / f"serving_{name}_{sink_name}")
+            sink = make_sink(out)
+            sink(b0, 0)
+            if name == "interrupted":
+                os.rename(
+                    os.path.join(out, "serving"), os.path.join(out, "_serving_prev")
+                )
+            sink(b1, 1)
+            served = spark.read.parquet(os.path.join(out, "serving"))
+            runs[name] = sorted(tuple(r) for r in served.collect())
+            leftovers += _leftovers(out)
+        assert runs["interrupted"] == runs["clean"] == want, sink_name
+        assert not leftovers, sink_name
 
 
 def test_foreach_batch_upsert_discards_stale_prev(spark, tmp_path):
     """A ``_serving_prev`` left beside a committed ``serving`` (a swap
     that died before its delete) is discarded, not restored."""
-    out = str(tmp_path / "serving_stale_prev")
-    upsert = foreach_batch_upsert(out, ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
     b2 = b1.withColumn("n", F.col("n") + F.lit(1)).limit(5)
-    upsert(b1, 0)
+    first = {r["user_id"]: r["n"] for r in b1.collect()}
+    second = {r["user_id"]: r["n"] for r in b2.collect()}
     stale = spark.createDataFrame([(-1, 99)], "user_id bigint, n bigint")
-    stale.write.parquet(os.path.join(out, "_serving_prev"))
-    upsert(b2, 1)
-    served = spark.read.parquet(os.path.join(out, "serving"))
-    got = {r["user_id"]: r["n"] for r in served.collect()}
-    want = {r["user_id"]: r["n"] for r in b1.collect()}
-    want.update({r["user_id"]: r["n"] for r in b2.collect()})
-    assert got == want
-    assert not _leftovers(out)
+    for name, make_sink in _SINKS.items():
+        out = str(tmp_path / f"serving_stale_prev_{name}")
+        sink = make_sink(out)
+        sink(b1, 0)
+        stale.write.parquet(os.path.join(out, "_serving_prev"))
+        sink(b2, 1)
+        served = spark.read.parquet(os.path.join(out, "serving"))
+        got = {r["user_id"]: r["n"] for r in served.collect()}
+        want = dict(first)
+        for k, n in second.items():
+            want[k] = n if name == "upsert" else want[k] + n
+        assert got == want, name
+        assert not _leftovers(out), name
 
 
 def test_foreach_batch_upsert_on_uri_out_dir(spark, tmp_path):
@@ -230,17 +245,17 @@ def test_foreach_batch_upsert_on_uri_out_dir(spark, tmp_path):
     a cluster) a later micro-batch must still merge onto the earlier
     ones — the serving dir's existence is asked of its Hadoop
     FileSystem, not of os.path, which sees no URI as a directory."""
-    out_path = tmp_path / "serving_uri"
-    upsert = foreach_batch_upsert(out_path.as_uri(), ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     per_user = ev.groupBy("user_id").agg(F.count("*").alias("n"))
-    upsert(per_user.filter(F.col("user_id") % 2 == 0), 0)
-    upsert(per_user.filter(F.col("user_id") % 2 == 1), 1)
-    served = spark.read.parquet(out_path.as_uri() + "/serving")
-    assert sorted(tuple(r) for r in served.collect()) == sorted(
-        tuple(r) for r in per_user.collect()
-    )
-    assert not _leftovers(str(out_path))
+    want = sorted(tuple(r) for r in per_user.collect())
+    for name, make_sink in _SINKS.items():
+        out_path = tmp_path / f"serving_uri_{name}"
+        sink = make_sink(out_path.as_uri())
+        sink(per_user.filter(F.col("user_id") % 2 == 0), 0)
+        sink(per_user.filter(F.col("user_id") % 2 == 1), 1)
+        served = spark.read.parquet(out_path.as_uri() + "/serving")
+        assert sorted(tuple(r) for r in served.collect()) == want, name
+        assert not _leftovers(str(out_path)), name
 
 
 def test_foreach_batch_upsert_no_silent_reseed(spark, tmp_path):
@@ -248,22 +263,21 @@ def test_foreach_batch_upsert_no_silent_reseed(spark, tmp_path):
     half-destroyed by an aborted overwrite) must fail the batch loudly,
     not be treated as first-batch and silently re-seeded from one
     micro-batch."""
-    import pytest
-
-    out = str(tmp_path / "serving_damaged")
-    upsert = foreach_batch_upsert(out, ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
-    upsert(b1, 0)
-    serving = os.path.join(out, "serving")
-    for f in os.listdir(serving):  # keep the dir, destroy its contents
-        os.unlink(os.path.join(serving, f))
-    with pytest.raises(Exception):
-        upsert(b1, 1)
+    for name, make_sink in _SINKS.items():
+        out = str(tmp_path / f"serving_damaged_{name}")
+        sink = make_sink(out)
+        sink(b1, 0)
+        serving = os.path.join(out, "serving")
+        for f in os.listdir(serving):  # keep the dir, destroy its contents
+            os.unlink(os.path.join(serving, f))
+        with pytest.raises(Exception):
+            sink(b1, 1)
 
 
 def test_foreach_batch_upsert_merge_semantics(spark, tmp_path):
-    """The one-shuffle merge keeps the upsert contract: a batch row
+    """The single-task merge keeps the upsert contract: a batch row
     replaces the served row, a key only served survives, duplicate
     batch keys collapse to one of the batch's rows for that key, and
     the served table keeps the batch's column order and types (the key
@@ -326,14 +340,15 @@ def test_foreach_batch_upsert_refuses_uncommitted_serving_dir(spark, tmp_path):
     """A serving dir that keeps its part files but lost its ``_SUCCESS``
     marker (an overwrite whose job died after moving some parts) must
     fail the batch, not be merged onto."""
-    out = str(tmp_path / "serving_uncommitted")
-    upsert = foreach_batch_upsert(out, ["user_id"])
     ev = load_table(spark, SF_DIR, "events")
     b1 = ev.groupBy("user_id").agg(F.count("*").alias("n"))
-    upsert(b1, 0)
-    os.unlink(os.path.join(out, "serving", "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="_SUCCESS"):
-        upsert(b1, 1)
+    for name, make_sink in _SINKS.items():
+        out = str(tmp_path / f"serving_uncommitted_{name}")
+        sink = make_sink(out)
+        sink(b1, 0)
+        os.unlink(os.path.join(out, "serving", "_SUCCESS"))
+        with pytest.raises(RuntimeError, match="_SUCCESS"):
+            sink(b1, 1)
 
 
 def test_multimodal_plumbing(spark):

@@ -800,55 +800,34 @@ def test_funnel_stateful_multichunk_key_ordering(spark, tmp_path):
 
 def test_additive_merge_batch_fencing(spark, tmp_path):
     """The additive MV merge is NOT naturally idempotent — replaying a
-    batch id (at-least-once redelivery) must be a no-op, and a new
-    batch id must fold in additively."""
-    from pyspark.sql import functions as F
-
-    from insight_spark.sources.sinks import (
-        foreach_batch_additive_merge,
-        read_additive_mv,
-    )
+    batch id (at-least-once redelivery) must be a no-op, a new batch id
+    must fold in additively, and duplicate keys within a batch, the
+    first included, add up."""
+    from insight_spark.sources.sinks import foreach_batch_additive_merge
 
     out = str(tmp_path / "mv")
     merge = foreach_batch_additive_merge(out, ["k"], ["n"])
-    b0 = spark.createDataFrame([("a", 2), ("b", 3)], "k string, n long")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k string, n long")
+
+    def served():
+        mv = spark.read.parquet(os.path.join(out, "serving"))
+        return sorted((r["k"], r["n"]) for r in mv.collect())
+
+    b0 = batch([("a", 2), ("a", 3), ("b", 3)])
     merge(b0, 0)
+    assert served() == [("a", 5), ("b", 3)]
     merge(b0, 0)  # redelivery of batch 0: must be fenced out
-    merge(spark.createDataFrame([("a", 5)], "k string, n long"), 1)
-    got = {r["k"]: r["n"] for r in read_additive_mv(spark, out).collect()}
-    assert got == {"a": 7, "b": 3}, got
-    # A crash BETWEEN the version write and the pointer commit must
-    # leave the MV readable at the pre-crash state (batch unapplied):
-    # simulate by writing a version dir without promoting the pointer.
-    spark.createDataFrame([("a", 99)], "k string, n long").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out, "serving_b2"))
-    got = {r["k"]: r["n"] for r in read_additive_mv(spark, out).collect()}
-    assert got == {"a": 7, "b": 3}, got
-    # ...and redelivering batch 2 after that crash folds it in once.
-    merge(spark.createDataFrame([("b", 1)], "k string, n long"), 2)
-    got = {r["k"]: r["n"] for r in read_additive_mv(spark, out).collect()}
-    assert got == {"a": 7, "b": 4}, got
-
-
-def test_additive_merge_refuses_uri_out_dir(spark, tmp_path):
-    """The additive MV commits through os calls, so a non-local
-    out_dir is refused when the merge is built (not mid-stream) and on
-    read; a file: URI is the local path it names."""
-    from insight_spark.sources.sinks import (
-        foreach_batch_additive_merge,
-        read_additive_mv,
-    )
-
-    for remote in ("hdfs://nn:8020/mv", "s3a://bucket/mv"):
-        with pytest.raises(ValueError, match="os.replace"):
-            foreach_batch_additive_merge(remote, ["k"], ["n"])
-        with pytest.raises(ValueError, match="os.replace"):
-            read_additive_mv(spark, remote)
-    local = tmp_path / "mv"
-    merge = foreach_batch_additive_merge(local.as_uri(), ["k"], ["n"])
-    merge(spark.createDataFrame([("a", 2)], "k string, n long"), 0)
-    merge(spark.createDataFrame([("a", 5)], "k string, n long"), 1)
-    assert (local / "CURRENT").is_file()
-    got = {r["k"]: r["n"] for r in read_additive_mv(spark, str(local)).collect()}
-    assert got == {"a": 7}, got
+    merge(batch([("a", 5)]), 1)
+    assert served() == [("a", 10), ("b", 3)]
+    # A crash after batch 2's staged write but before its swap leaves
+    # _staging_2 beside the committed table: the MV still reads the
+    # pre-crash state (batch unapplied)...
+    batch([("a", 99)]).write.parquet(os.path.join(out, "_staging_2"))
+    assert served() == [("a", 10), ("b", 3)]
+    # ...and batch 2, redelivered twice after that crash, folds in once.
+    merge(batch([("b", 1)]), 2)
+    merge(batch([("b", 1)]), 2)
+    assert served() == [("a", 10), ("b", 4)]
+    assert sorted(os.listdir(out)) == ["serving"]
