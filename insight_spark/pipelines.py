@@ -114,7 +114,6 @@ def build_suggestions(docs: DataFrame, min_tf: int = 2) -> DataFrame:
 _INGEST_CONF = {
     "spark.sql.shuffle.partitions": "1",
     "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-    "spark.sql.files.minPartitionNum": "1",
 }
 
 
@@ -143,38 +142,40 @@ def streaming_ingest(
     batch's watermark, so a backlog admits rows that one-file slicing
     might have dropped as late; on ts-ordered input nothing changes.
 
-    Two tasks per micro-batch.  The query runs in its own session,
+    One task per micro-batch.  The query runs in its own session,
     ``spark.newSession()``, carrying ``engine.SEMANTIC_CONF`` and
-    ``_INGEST_CONF``; the caller's session is never changed.  The
-    file source plans every batch's scan under the session it was
-    read with, so the scan, packed by bytes (``minPartitionNum`` 1)
-    rather than by core count, is one task up to
-    ``spark.sql.files.maxPartitionBytes``; a large backlog still fans
-    out, one task per ``maxPartitionBytes`` of input.  One shuffle
-    partition makes the rollup's state store one task, in which the
-    upsert also merges and writes.  The state is the hourly windows
-    still open under the 2 h watermark × event types (10 rows for
-    in-order 10-minute files).  No-data micro-batches are off: in
-    update mode such a batch only evicts state, which the next data
-    batch does against the same watermark, yet it would run a full
-    staged rewrite of the serving table for an empty batch.  A query
-    resumed from an existing checkpoint keeps the partition count
-    that checkpoint was started with.  The query is listed in its
-    own session's ``streams.active``, not the caller's: stop it
-    through the returned handle.
+    ``_INGEST_CONF``; the caller's session is never changed.  One
+    shuffle partition makes the rollup's state store one task, and
+    the events are coalesced to one partition between the watermark
+    and the rollup: one partition satisfies the state store's
+    distribution, so no exchange runs, and the scan, the partial
+    aggregate, the state store and the upsert's merge and staged
+    write are one stage of one task.  The coalesce sits above the
+    watermark because the watermark node does not pass its child's
+    partitioning up; below it, the exchange stays.  The cost is the
+    scan's parallelism: a backlog over
+    ``spark.sql.files.maxPartitionBytes`` (128 MB) is still one batch,
+    but it is scanned by one task instead of one per 128 MB (SCALE.md
+    has the measured cost).  The state is the hourly windows still
+    open under the 2 h watermark × event types (10 rows for in-order
+    10-minute files).  No-data micro-batches are off: in update mode
+    such a batch only evicts state, which the next data batch does
+    against the same watermark, yet it would run a full staged
+    rewrite of the serving table for an empty batch.  A query resumed
+    from an existing checkpoint keeps the partition count that
+    checkpoint was started with; one started with more than one
+    partition keeps its exchange.  The query is listed in its own
+    session's ``streams.active``, not the caller's: stop it through
+    the returned handle.
     """
     from insight_spark.sources.sinks import foreach_batch_upsert
-    from insight_spark.streaming.core import (
-        hourly_counts_stream,
-        read_events_stream,
-    )
+    from insight_spark.streaming.core import hourly_rollup, read_events_stream
 
     ingest = spark.newSession()
     for k, v in {**SEMANTIC_CONF, **_INGEST_CONF}.items():
         ingest.conf.set(k, v)
-    stream = hourly_counts_stream(
-        read_events_stream(ingest, in_dir, max_files_per_trigger=None)
-    )
+    events = read_events_stream(ingest, in_dir, max_files_per_trigger=None)
+    stream = hourly_rollup(events.withWatermark("ts", "2 hours").coalesce(1))
     return (
         stream.writeStream.outputMode("update")
         .foreachBatch(foreach_batch_upsert(out_dir, ["window_start", "event_type"]))

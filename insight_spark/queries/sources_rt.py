@@ -635,13 +635,24 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The value hash proves type mapping (BIGINT/VARCHAR) and row
     fidelity survive the SQL-database round trip.
+
+    Derby writes its ``derby.log`` where ``derby.stream.error.file``
+    points when the engine boots (the process's working directory by
+    default), so the property is set to this query's dir first.  It is
+    a JVM-wide system property, read once per boot: a JVM that already
+    booted Derby keeps its log where it is.
     """
     import re as _re
 
     from insight_spark.sources.sinks import read_jdbc, write_jdbc
 
     tag = _re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    url = f"jdbc:derby:{_rt_path(sf_dir, 'derby')}/db;create=true"
+    path = _rt_path(sf_dir, "derby")
+    os.makedirs(path, exist_ok=True)
+    spark.sparkContext._jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", os.path.join(path, "derby.log")
+    )
+    url = f"jdbc:derby:{path}/db;create=true"
     table = f"orders_subset_{tag}"
     write_jdbc(_subset(spark, sf_dir), url, table)
     return read_jdbc(spark, url, table)

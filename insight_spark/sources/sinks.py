@@ -258,13 +258,15 @@ def _commit_batch(
 
     One job per batch and one merge task: one partition satisfies the
     merge aggregate's distribution, so no merge shuffle runs; in the
-    ingest stream that task is the state stage's own.  The merge is
-    written once, to ``_staging_<batch_id>``, reading ``serving`` and
-    never writing it, and an empty ``_batch_<batch_id>`` marker is
-    added beside its ``_SUCCESS``.  Driver-side ``FileSystem`` renames
-    (no job) then swap it in: ``serving`` → ``_serving_prev``, staged
-    copy → ``serving``, delete ``_serving_prev``.  One rename thus
-    commits the table and the id of the batch it holds.  Nothing is
+    ingest stream that task is the batch's only task, which also
+    scans the events and runs the state store.  The merge is written
+    once, to ``_staging_<batch_id>``, reading ``serving`` and never
+    writing it, and an empty ``_batch_<queryId>_<batch_id>`` marker
+    (``_batch_<batch_id>`` for a call outside a stream) is added
+    beside its ``_SUCCESS``.  Driver-side ``FileSystem`` renames (no
+    job) then swap it in: ``serving`` → ``_serving_prev``, staged copy
+    → ``serving``, delete ``_serving_prev``.  One rename thus commits
+    the table and the stream and id of the batch it holds.  Nothing is
     deleted before a complete, ``_SUCCESS``-marked copy exists, and a
     reader finds a committed table except between the two renames.
 
@@ -306,7 +308,9 @@ def _commit_batch(
         # small-files).  A cluster serving a large key space would
         # repartition to a target file size here instead.
         merge(rows.coalesce(1)).write.parquet(staging.toString())
-        fs.create(Path(staging, f"_batch_{batch_id}")).close()
+        query = _query_id(spark)
+        marker = f"_batch_{query}_{batch_id}" if query else f"_batch_{batch_id}"
+        fs.create(Path(staging, marker)).close()
     except Exception:
         fs.delete(staging, True)
         raise
@@ -316,12 +320,24 @@ def _commit_batch(
     fs.delete(prev, True)
 
 
-def _served_batch(spark: SparkSession, out_dir: str) -> int:
-    """Id of the batch whose commit made ``out_dir/serving``, from its
-    ``_batch_<id>`` marker; -1 before the first commit."""
+def _query_id(spark: SparkSession) -> str | None:
+    """Id of the streaming query whose ``foreachBatch`` call is running
+    on this thread, None outside a stream.  It is the same across
+    restarts from one checkpoint and new for a new checkpoint."""
+    return spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+
+
+def _served_batch(spark: SparkSession, out_dir: str) -> tuple[str | None, int]:
+    """Query id and batch id of the batch whose commit made
+    ``out_dir/serving``, from its ``_batch_[<queryId>_]<id>`` marker;
+    ``(None, -1)`` before the first commit."""
     fs, markers = _hadoop_fs(spark, os.path.join(out_dir, "serving", "_batch_*"))
-    names = [m.getPath().getName() for m in fs.globStatus(markers) or []]
-    return max((int(n[len("_batch_"):]) for n in names), default=-1)
+    served = []
+    for m in fs.globStatus(markers) or []:
+        query, _, batch = m.getPath().getName()[len("_batch_"):].rpartition("_")
+        served.append((int(batch), query or None))
+    batch, query = max(served, default=(-1, None))
+    return query, batch
 
 
 def foreach_batch_upsert(out_dir: str, key_cols: list[str]):
@@ -375,14 +391,22 @@ def foreach_batch_additive_merge(
 
     The commit is :func:`_commit_batch`'s, the upsert's.  Unlike the
     upsert, an additive merge is NOT naturally idempotent, so
-    exactly-once needs batch-id fencing: a batch whose id is not above
-    the one in the committed ``serving``'s ``_batch_<id>`` marker is
+    exactly-once needs a fence: a batch whose id is not above the one
+    in the committed ``serving``'s ``_batch_<queryId>_<id>`` marker is
     already folded in and is skipped.  One rename commits the data and
     the fence together.  The fence can be a single high-water mark
     because Structured Streaming batch ids increase monotonically and
     only the last uncommitted batch is ever replayed; a swap that died
     between its renames leaves no ``serving``, and the rolled-back copy
     holds an earlier batch than the replayed one.
+
+    Batch ids are only ordered within one query: a new checkpoint
+    restarts them at 0.  So a batch of a query other than the one that
+    committed ``serving`` raises ``RuntimeError`` naming both ids.
+    Skipping it as a redelivery would drop its rows silently, and
+    adding it could count twice a source the new checkpoint replays
+    from its start.  Calls outside a stream carry no query id and
+    fence by batch id alone.
     """
 
     def sums(rows: DataFrame) -> DataFrame:
@@ -391,7 +415,16 @@ def foreach_batch_additive_merge(
         )
 
     def add(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id > _served_batch(batch_df.sparkSession, out_dir):
+        spark = batch_df.sparkSession
+        query = _query_id(spark)
+        served_query, served = _served_batch(spark, out_dir)
+        if served >= 0 and served_query != query:
+            raise RuntimeError(
+                f"{out_dir}/serving holds batch {served} of query "
+                f"{served_query}; refusing batch {batch_id} of query "
+                f"{query}: its batch ids do not continue that query's"
+            )
+        if batch_id > served:
             _commit_batch(batch_df, batch_id, out_dir, sums)
 
     return add

@@ -117,11 +117,20 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     """K1 streaming: tumbling 1-hour counts with watermark.
 
     Identical expression to the batch ``events_hourly`` query; the
-    watermark bounds window state and drops late rows (K4).
+    watermark bounds window state and drops late rows (K4).  The
+    watermark step and :func:`hourly_rollup` compose here; a consumer
+    that repartitions its input composes them itself, since the
+    watermark node does not pass its child's partitioning up.
     """
+    return hourly_rollup(events.withWatermark("ts", watermark))
+
+
+def hourly_rollup(events: DataFrame) -> DataFrame:
+    """The rollup body of :func:`hourly_counts_stream`: hourly counts
+    and DECIMAL value sums per (window, event_type) of ``events``,
+    which carry their ``ts`` watermark already."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_value"),

@@ -78,3 +78,31 @@ def file_scans(df) -> list:
         children = node.children()
         stack.extend(children.apply(i) for i in range(children.size()))
     return scans
+
+
+def drain_kn_stream(spark, files, in_dir, ckpt, sink):
+    """Add one JSON file of ``(k string, n long)`` rows to ``in_dir`` per
+    row list in ``files``, then run a file stream over ``in_dir`` from
+    checkpoint ``ckpt`` into the foreachBatch function ``sink``, one
+    file per batch, until it has read every file; returns the stopped
+    query."""
+    import json
+
+    os.makedirs(in_dir, exist_ok=True)
+    for rows in files:
+        path = os.path.join(in_dir, f"part_{len(os.listdir(in_dir)):03d}.json")
+        with open(path, "w") as fh:
+            fh.writelines(json.dumps({"k": k, "n": n}) + "\n" for k, n in rows)
+    q = (
+        spark.readStream.schema("k string, n long")
+        .option("maxFilesPerTrigger", 1)
+        .json(in_dir)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q

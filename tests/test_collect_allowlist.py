@@ -101,6 +101,14 @@ SINGLE_PARTITION_ALLOWLIST: dict[str, tuple[int, str]] = {
         "single-file staging for the file-source fixture writer (same "
         "chunk-per-trigger contract)",
     ),
+    "pipelines.py": (
+        1,
+        "the ingest stream's events coalesced to one partition ahead of "
+        "its rollup, so the one-partition state store needs no exchange; "
+        "the state store was already one task, but a batch over 128 MB "
+        "(maxPartitionBytes) now scans in one task instead of one per "
+        "128 MB (SCALE.md 2026-10-19 note has the measured cost)",
+    ),
     "sources/sinks.py": (
         1,
         "the one foreachBatch commit: key-bounded merged table (one "

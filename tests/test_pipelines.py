@@ -175,17 +175,32 @@ def _land(path, in_dir):
     return dest
 
 
+def _job_shapes(spark, q):
+    """``(stages, tasks)`` of each job the query's run submitted."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    shapes = []
+    for job in tracker.getJobIdsForGroup(str(q.runId)):
+        stages = tracker.getJobInfo(job).stageIds
+        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+        shapes.append((len(stages), tasks))
+    return shapes
+
+
 def test_streaming_ingest_admits_a_backlog_in_one_batch(spark, tmp_path):
     """Files that landed before the query started are one micro-batch:
     the ingest source sets no per-trigger file cap, so the backlog pays
-    the upsert's job once.  That job is two stages of one task each:
-    the scan packs every file into one task, and the state stage's task
-    also merges and writes the upsert (no merge shuffle)."""
+    the upsert's job once.  That job is one stage of one task: the
+    events are coalesced to one partition above the watermark, which
+    satisfies the one-partition state store, so no exchange runs, and
+    the same task scans, aggregates, merges and writes the upsert."""
     in_dir = str(tmp_path / "in")
     prepare_stream_input(spark, SF, in_dir, n_chunks=3)
     q = streaming_ingest(spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
+        plan = q._jsq.explainInternal(False)
     finally:
         q.stop()
 
@@ -193,14 +208,8 @@ def test_streaming_ingest_admits_a_backlog_in_one_batch(spark, tmp_path):
     data = [p for p in progress if p["numInputRows"] > 0]
     events = _rows(os.path.join(SF, "events.parquet"))
     assert [p["numInputRows"] for p in data] == [events]
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(str(q.runId))
-    assert len(jobs) == 1
-    stages = tracker.getJobInfo(jobs[0]).stageIds
-    tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
-    assert (len(stages), tasks) == (2, 2)
+    assert "StateStoreSave" in plan and "Exchange" not in plan
+    assert _job_shapes(spark, q) == [(1, 1)]
 
 
 def test_streaming_ingest_leaves_the_callers_session_unchanged(spark, tmp_path):
@@ -331,9 +340,11 @@ def _capped_ingest(spark, in_dir, out_dir, ckpt):
 @pytest.mark.parametrize("first_run", [streaming_ingest, _capped_ingest])
 def test_streaming_ingest_resumes_a_backlog_in_one_batch(spark, tmp_path, first_run):
     """Chunks that land while the query is down are one batch on
-    restart, and the upsert stays exactly-once across the restart.  A
-    checkpoint started with ``maxFilesPerTrigger=1`` resumes uncapped:
-    the option is a rate limit, not something the checkpoint pins."""
+    restart, of one task, and the upsert stays exactly-once across the
+    restart.  A checkpoint started with ``maxFilesPerTrigger=1`` and an
+    exchange ahead of its state store resumes uncapped and without the
+    exchange: the option is a rate limit and the exchange a plan
+    choice, neither of which the checkpoint pins."""
     in_dir, out_dir, ckpt = (str(tmp_path / n) for n in ("in", "out", "ckpt"))
     staged = prepare_stream_input(
         spark, SF, os.path.join(in_dir, "_staging"), n_chunks=3
@@ -354,4 +365,5 @@ def test_streaming_ingest_resumes_a_backlog_in_one_batch(spark, tmp_path, first_
     progress = [json.loads(p.json) for p in q.recentProgress]
     data = [p["numInputRows"] for p in progress if p["numInputRows"] > 0]
     assert data == [sum(_rows(p) for p in backlog)]
+    assert _job_shapes(spark, q) == [(1, 1)]
     assert _served(spark, out_dir) == _batch_rollup(spark)

@@ -19,7 +19,7 @@ from insight_spark.sources.sinks import (
     write_jdbc_standin,
     write_search_index,
 )
-from tests.conftest import SF_DIR, file_scans
+from tests.conftest import SF_DIR, drain_kn_stream, file_scans
 
 
 def test_search_index_sink_and_lookup(spark, tmp_path):
@@ -134,6 +134,37 @@ def test_jdbc_standin_writes_ddl(spark, tmp_path):
     ddl = open(os.path.join(path, "_ddl.sql")).read()
     assert "CREATE TABLE lang_profile" in ddl and "n_docs bigint" in ddl
     assert spark.read.parquet(path).count() == profile.count()
+
+
+def test_jdbc_roundtrip_keeps_derby_log_out_of_the_cwd(tmp_path):
+    """Embedded Derby writes ``derby.log`` into the JVM's working
+    directory unless ``derby.stream.error.file`` names a file, and it
+    reads that property once, when it boots.  So the query runs in a
+    fresh JVM whose working directory is a tmp dir: the log lands
+    under the query's own scratch dir, and nothing in the cwd."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cwd, scratch = tmp_path / "cwd", tmp_path / "scratch"
+    cwd.mkdir()
+    script = (
+        "from pyspark.sql import SparkSession\n"
+        "import __spark_entry__ as entry\n"
+        "spark = SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        f"df = entry.queries()['jdbc_roundtrip'](spark, {SF_DIR!r})\n"
+        "assert df.count() == 100\n"
+        "spark.stop()\n"
+    )
+    path = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+    env = {**os.environ, "PYTHONPATH": path, "SPARK_GRAFT_SCRATCH": str(scratch)}
+    subprocess.run(
+        [sys.executable, "-c", script], cwd=cwd, env=env, check=True, timeout=300
+    )
+    assert "derby.log" not in os.listdir(cwd)
+    rt_dir = scratch / "sources_rt" / os.path.basename(SF_DIR) / "derby"
+    assert (rt_dir / "derby.log").is_file()
 
 
 def test_foreach_batch_upsert_idempotent(spark, tmp_path):
@@ -303,6 +334,19 @@ def test_foreach_batch_upsert_merge_semantics(spark, tmp_path):
     assert rows[1] == ("a", "1.00") and rows[3] == ("c", "3.00")
     assert rows[2] in {("x", "20.00"), ("y", "21.00")}
     assert rows[4] == ("z", "40.00")
+
+
+def test_foreach_batch_upsert_new_checkpoint_merges_onto_served(spark, tmp_path):
+    """The upsert needs no fence: a stream with a new checkpoint, whose
+    batch ids restart at 0, merges onto the table an earlier stream
+    served rather than being skipped or re-seeding it."""
+    out = str(tmp_path / "serving_out")
+    upsert = foreach_batch_upsert(out, ["k"])
+    for run, rows in (("a", [("a", 1), ("b", 1)]), ("b", [("a", 100)])):
+        ins, ckpt = (str(tmp_path / f"{n}_{run}") for n in ("in", "ckpt"))
+        drain_kn_stream(spark, [rows], ins, ckpt, upsert)
+    served = spark.read.parquet(os.path.join(out, "serving")).collect()
+    assert sorted((r["k"], r["n"]) for r in served) == [("a", 100), ("b", 1)]
 
 
 def test_foreach_batch_upsert_merges_without_a_shuffle(spark, tmp_path):

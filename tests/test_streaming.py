@@ -26,7 +26,7 @@ from insight_spark.streaming import (
     stream_dedup,
 )
 from insight_spark.streaming.core import run_to_completion, write_single_parquet
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain_kn_stream
 from tests.oracle_harness import canonical_rows
 
 
@@ -831,3 +831,33 @@ def test_additive_merge_batch_fencing(spark, tmp_path):
     merge(batch([("b", 1)]), 2)
     assert served() == [("a", 10), ("b", 4)]
     assert sorted(os.listdir(out)) == ["serving"]
+
+
+def test_additive_merge_refuses_a_new_streams_batches(spark, tmp_path):
+    """The additive MV's fence knows its stream.  A query restarted from
+    its checkpoint continues its batch ids and its fence; a query with
+    a new checkpoint restarts its ids at 0, so its batches raise, naming
+    both query ids, instead of being skipped as redeliveries and lost."""
+    import json
+
+    from insight_spark.sources.sinks import foreach_batch_additive_merge
+
+    out = str(tmp_path / "mv")
+    merge = foreach_batch_additive_merge(out, ["k"], ["n"])
+
+    def served():
+        mv = spark.read.parquet(os.path.join(out, "serving"))
+        return sorted((r["k"], r["n"]) for r in mv.collect())
+
+    first = [str(tmp_path / n) for n in ("in_a", "ckpt_a")]
+    old = drain_kn_stream(spark, [[("a", 1)], [("a", 1)]], *first, merge)
+    again = drain_kn_stream(spark, [[("a", 1)]], *first, merge)
+    assert again.id == old.id
+    assert served() == [("a", 3)]
+    new = [str(tmp_path / n) for n in ("in_b", "ckpt_b")]
+    with pytest.raises(Exception, match=f"query {old.id}; refusing batch 0") as err:
+        drain_kn_stream(spark, [[("a", 100)]], *new, merge)
+    with open(os.path.join(new[1], "metadata")) as fh:
+        new_id = json.load(fh)["id"]
+    assert new_id != old.id and new_id in str(err.value)
+    assert served() == [("a", 3)]
