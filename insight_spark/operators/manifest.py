@@ -34,13 +34,26 @@ parquet scan, so partition pruning / pushdown work unchanged.  At
 100 TB the manifest of a 1e6-file table is ~100 MB of JSON — the
 design point checkpointing exists for; ``log_versions`` is the hook a
 checkpoint writer would consume.
+
+Paths: a table dir is a local directory.  A bare path is used as given
+and a ``file:`` URI as its percent-decoded local path; any other scheme
+raises ``ValueError`` before anything is written.  The reason is the
+commit: here only the local O_EXCL create is an atomic put-if-absent.
+Hadoop's ``RawLocalFileSystem.create(overwrite=false)`` calls
+``exists()`` and then opens, so two writers can both pass the check
+and one commit silently replaces the other.  The percent-encoded URIs
+``input_file_name()`` returns go through the same resolver before they
+are matched against manifest paths.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from functools import reduce
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,20 +65,41 @@ class ConflictError(RuntimeError):
     """Another writer committed the version this writer targeted."""
 
 
-def _manifest_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:06d}.json")
+def _local(path: str) -> str:
+    """The local path behind a table dir or an ``input_file_name()``
+    URI (module docstring): bare paths pass unchanged, ``file:`` URIs
+    are percent-decoded, any other scheme is refused."""
+    parts = urlsplit(path)
+    if not parts.scheme:
+        return path
+    if parts.scheme != "file":
+        raise ValueError(
+            f"{path}: the manifest log commits with a local O_EXCL create; "
+            f"{parts.scheme}:// has no atomic put-if-absent here"
+        )
+    return unquote(parts.path)
+
+
+def _manifest_path(table_dir: str, version: int, prefix: str = "v") -> str:
+    return os.path.join(
+        _local(table_dir), _MANIFEST_DIR, f"{prefix}{version:06d}.json"
+    )
+
+
+def _listed(table_dir: str, prefix: str) -> list[int]:
+    mdir = os.path.join(_local(table_dir), _MANIFEST_DIR)
+    if not os.path.isdir(mdir):
+        return []
+    return sorted(
+        int(n[len(prefix):-5])
+        for n in os.listdir(mdir)
+        if n.startswith(prefix) and n.endswith(".json")
+    )
 
 
 def log_versions(table_dir: str) -> list[int]:
     """All committed versions, ascending.  Empty for a fresh table."""
-    mdir = os.path.join(table_dir, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in os.listdir(mdir):
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    return _listed(table_dir, "v")
 
 
 def latest_version(table_dir: str) -> int:
@@ -74,9 +108,77 @@ def latest_version(table_dir: str) -> int:
     return versions[-1] if versions else 0
 
 
-def _read_manifest(table_dir: str, version: int) -> dict:
-    with open(_manifest_path(table_dir, version)) as fh:
+def _version(table_dir: str, version: int | None) -> int:
+    """``version``, or the latest if None; an empty log has none."""
+    if version is None:
+        version = latest_version(table_dir)
+    if version == 0:
+        raise ValueError(f"no committed versions in {table_dir}")
+    return version
+
+
+def _read_manifest(table_dir: str, version: int, prefix: str = "v") -> dict:
+    with open(_manifest_path(table_dir, version, prefix)) as fh:
         return json.load(fh)
+
+
+def _commit(
+    table_dir: str, version: int, manifest: dict, prefix: str = "v"
+) -> int:
+    """The one put-if-absent: create the commit file with O_EXCL, or
+    raise ``ConflictError`` when another writer already holds it."""
+    path = _manifest_path(table_dir, version, prefix)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    try:
+        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError as exc:
+        raise ConflictError(
+            f"{path} already committed — re-read the log and retry"
+        ) from exc
+    with os.fdopen(fd, "w") as fh:
+        json.dump({"version": version, **manifest}, fh)
+    return version
+
+
+def _stage(
+    df: DataFrame, table_dir: str, partition_by: list[str] | None = None
+) -> list[str]:
+    """Write ``df`` under a fresh ``data/<uuid>`` dir (invisible until a
+    commit names its files) and return its parquet files, sorted —
+    flat, or one level per ``partition_by`` column."""
+    stage = os.path.join(_local(table_dir), "data", uuid.uuid4().hex)
+    writer = df.write.mode("error")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(stage)
+    return _parquet_under(stage)
+
+
+def _parquet_under(root: str) -> list[str]:
+    return sorted(
+        os.path.join(d, f)
+        for d, _dirs, names in os.walk(root)
+        for f in names
+        if f.endswith(".parquet")
+    )
+
+
+def _split_touched(
+    spark: SparkSession, files: list[str], match
+) -> tuple[list[str], list[str]]:
+    """(touched, kept) split of ``files``: a file is touched when
+    ``match`` (scan → matching rows) keeps any of its rows.  The file
+    tag is projected AT the scan — Spark rejects ``input_file_name()``
+    above a multi-source join — and aggregated map-side."""
+    scan = spark.read.parquet(*files).withColumn(
+        "_input_file", F.input_file_name()
+    )
+    hit = {
+        os.path.realpath(_local(r[0]))
+        for r in match(scan).select("_input_file").distinct().collect()
+    }
+    touched = [f for f in files if os.path.realpath(f) in hit]
+    return touched, [f for f in files if os.path.realpath(f) not in hit]
 
 
 def log_append(
@@ -115,28 +217,14 @@ def log_append(
     """
     if expected_version is None:
         expected_version = latest_version(table_dir)
-    new_version = expected_version + 1
+    files = _stage(df, table_dir, partition_by)
 
-    stage = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    writer = df.write.mode("error")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(stage)
-    files = sorted(
-        os.path.join(root, f)
-        for root, _dirs, names in os.walk(stage)
-        for f in names
-        if f.endswith(".parquet")
+    prior = (
+        _read_manifest(table_dir, expected_version)
+        if expected_version > 0
+        else {}
     )
-
-    prior_files: list[str] = []
-    prior_stats: dict = {}
-    if expected_version > 0:
-        prior = _read_manifest(table_dir, expected_version)
-        prior_files = prior["files"]
-        prior_stats = prior.get("stats", {})
-
-    stats = dict(prior_stats)
+    stats = dict(prior.get("stats", {}))
     if stats_cols:
         stats.update(_file_stats(df.sparkSession, files, stats_cols))
 
@@ -154,36 +242,25 @@ def log_append(
     # manifest's, so mixing layouts fails at commit, not at read.
     # Plain appends stay free to evolve additively (mergeSchema reads
     # — see manifest_schema_evolution).
-    if partition_by and expected_version > 0:
-        prior_schema = prior["schema"]
-        if staged_schema.jsonValue() != prior_schema:
-            raise ValueError(
-                "partitioned append's leaf-file schema differs from "
-                "the table's committed manifest schema (mixing "
-                "partition_by and plain appends on one table?) — "
-                "migrate via log_overwrite instead: "
-                f"staged={staged_schema.simpleString()}"
-            )
-    manifest = {
-        "version": new_version,
-        "op": op,
-        "files": prior_files + files,
-        "added": files,
-        "schema": staged_schema.jsonValue(),
-        "stats": stats,
-    }
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    path = _manifest_path(table_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"version {new_version} already committed (writer based on "
-            f"v{expected_version} lost the race) — re-read and retry"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
+    if partition_by and prior and staged_schema.jsonValue() != prior["schema"]:
+        raise ValueError(
+            "partitioned append's leaf-file schema differs from "
+            "the table's committed manifest schema (mixing "
+            "partition_by and plain appends on one table?) — "
+            "migrate via log_overwrite instead: "
+            f"staged={staged_schema.simpleString()}"
+        )
+    return _commit(
+        table_dir,
+        expected_version + 1,
+        {
+            "op": op,
+            "files": prior.get("files", []) + files,
+            "added": files,
+            "schema": staged_schema.jsonValue(),
+            "stats": stats,
+        },
+    )
 
 
 def log_overwrite(
@@ -194,32 +271,17 @@ def log_overwrite(
     time travel; only the new version's file list drops the history."""
     if expected_version is None:
         expected_version = latest_version(table_dir)
-    new_version = expected_version + 1
-    stage = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    df.write.mode("error").parquet(stage)
-    files = sorted(
-        os.path.join(stage, f)
-        for f in os.listdir(stage)
-        if f.endswith(".parquet")
+    files = _stage(df, table_dir)
+    return _commit(
+        table_dir,
+        expected_version + 1,
+        {
+            "op": "overwrite",
+            "files": files,
+            "added": files,
+            "schema": df.schema.jsonValue(),
+        },
     )
-    manifest = {
-        "version": new_version,
-        "op": "overwrite",
-        "files": files,
-        "added": files,
-        "schema": df.schema.jsonValue(),
-    }
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    path = _manifest_path(table_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"version {new_version} already committed"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
 
 
 def _file_stats(
@@ -227,8 +289,6 @@ def _file_stats(
 ) -> dict[str, dict[str, list]]:
     """Per-file [min, max] of each column — one aggregation keyed by
     ``input_file_name`` (map-side combined; |files| result rows)."""
-    from pyspark.sql import functions as F
-
     aggs = []
     for c in cols:
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
@@ -239,54 +299,54 @@ def _file_stats(
         .collect()
     )
     by_real = {os.path.realpath(f): f for f in files}
-    out: dict[str, dict[str, list]] = {}
-    for r in rows:
-        real = os.path.realpath(r["f"].removeprefix("file:"))
-        key = by_real[real]
-        out[key] = {c: [r[f"min_{c}"], r[f"max_{c}"]] for c in cols}
-    return out
+    return {
+        by_real[os.path.realpath(_local(r["f"]))]: {
+            c: [r[f"min_{c}"], r[f"max_{c}"]] for c in cols
+        }
+        for r in rows
+    }
 
 
 def read_snapshot_pruned(
     spark: SparkSession,
     table_dir: str,
-    col: str,
-    lo,
-    hi,
+    preds: list[tuple[str, object, object]],
     version: int | None = None,
 ) -> tuple[DataFrame, int, int]:
     """Zone-map data skipping: plan a scan over ONLY the files whose
-    recorded [min, max] for ``col`` intersects [lo, hi], then apply the
-    exact row filter on top.  Returns (df, n_files_scanned,
+    recorded [min, max] intersects EVERY (col, lo, hi) predicate, then
+    apply the exact row filter on top.  Returns (df, n_files_scanned,
     n_files_total) so callers/tests can pin the skipping itself.
 
-    Files with no recorded stats for ``col`` are conservatively
-    scanned (correctness first — exactly Delta's behavior for columns
-    outside dataSkippingNumIndexedCols).  At 100 TB this is the
-    difference between touching 3 files and 3 million for a key-range
-    probe; the decision runs driver-side over the manifest's stats map
-    (bounded metadata, no data IO)."""
-    from pyspark.sql import functions as F
-
-    if version is None:
-        version = latest_version(table_dir)
-    if version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
-    manifest = _read_manifest(table_dir, version)
+    Conjunctive pruning is what makes Z-ORDER clustering pay off: a
+    linear sort gives tight stats on one column only, the Z-curve
+    moderately tight stats on every interleaved column, so a
+    multi-dimensional tile probe prunes on each of them.  A file with
+    no recorded stats for a predicate column cannot be pruned on it
+    (correctness first — Delta's behavior for columns outside
+    dataSkippingNumIndexedCols).  At 100 TB this is the difference
+    between touching 3 files and 3 million for a key-range probe; the
+    decision runs driver-side over the manifest's stats map (bounded
+    metadata, no data IO)."""
+    manifest = _read_manifest(table_dir, _version(table_dir, version))
     stats = manifest.get("stats", {})
-    scan = []
-    for f in manifest["files"]:
-        s = stats.get(f, {}).get(col)
-        if s is None or s[0] is None:
-            scan.append(f)  # no stats ⇒ must scan
-        elif not (s[1] < lo or s[0] > hi):
-            scan.append(f)
+
+    def intersects(f: str) -> bool:
+        for col, lo, hi in preds:
+            s = stats.get(f, {}).get(col)
+            if s is not None and s[0] is not None and (s[1] < lo or s[0] > hi):
+                return False
+        return True
+
+    scan = [f for f in manifest["files"] if intersects(f)]
+    row_filter = reduce(
+        lambda a, b: a & b,
+        (F.col(c).between(lo, hi) for c, lo, hi in preds),
+    )
     df = (
-        spark.read.parquet(*scan).filter(F.col(col).between(lo, hi))
+        spark.read.parquet(*scan).filter(row_filter)
         if scan
-        else spark.read.parquet(*manifest["files"])
-        .filter(F.col(col).between(lo, hi))
-        .limit(0)
+        else spark.read.parquet(*manifest["files"]).filter(row_filter).limit(0)
     )
     return df, len(scan), len(manifest["files"])
 
@@ -316,70 +376,19 @@ def vacuum(table_dir: str, retain_from_version: int) -> dict[str, int]:
             os.path.realpath(f) for f in _read_manifest(table_dir, v)["files"]
         )
     removed = kept = 0
-    data_root = os.path.join(table_dir, "data")
+    data_root = os.path.join(_local(table_dir), "data")
     for stage in sorted(os.listdir(data_root)):
         sdir = os.path.join(data_root, stage)
-        for name in sorted(os.listdir(sdir)):
-            if not name.endswith(".parquet"):
-                continue
-            path = os.path.join(sdir, name)
+        # a partitioned stage nests its files one dir per value
+        for path in _parquet_under(sdir):
             if os.path.realpath(path) in referenced:
                 kept += 1
             else:
                 os.remove(path)
                 removed += 1
-        if not any(n.endswith(".parquet") for n in os.listdir(sdir)):
-            import shutil
-
+        if not _parquet_under(sdir):
             shutil.rmtree(sdir, ignore_errors=True)
     return {"files_removed": removed, "files_kept": kept}
-
-
-def read_snapshot_pruned_multi(
-    spark: SparkSession,
-    table_dir: str,
-    preds: list[tuple[str, object, object]],
-    version: int | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Multi-column zone-map skipping: scan only files whose recorded
-    [min, max] intersects EVERY (col, lo, hi) predicate — the
-    conjunctive pruning that makes Z-ORDER clustering pay off (a
-    linear sort gives tight stats on one column only; the Z-curve
-    gives moderately tight stats on all interleaved columns, so a
-    multi-dimensional tile probe prunes on each of them).  Files
-    missing stats for any predicate column are scanned conservatively.
-    Returns (df, n_files_scanned, n_files_total)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    if version is None:
-        version = latest_version(table_dir)
-    if version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
-    manifest = _read_manifest(table_dir, version)
-    stats = manifest.get("stats", {})
-
-    def intersects(f: str) -> bool:
-        for col, lo, hi in preds:
-            s = stats.get(f, {}).get(col)
-            if s is None or s[0] is None:
-                continue  # no stats for this column ⇒ can't prune on it
-            if s[1] < lo or s[0] > hi:
-                return False
-        return True
-
-    scan = [f for f in manifest["files"] if intersects(f)]
-    row_filter = reduce(
-        lambda a, b: a & b,
-        (F.col(c).between(lo, hi) for c, lo, hi in preds),
-    )
-    df = (
-        spark.read.parquet(*scan).filter(row_filter)
-        if scan
-        else spark.read.parquet(*manifest["files"]).filter(row_filter).limit(0)
-    )
-    return df, len(scan), len(manifest["files"])
 
 
 def write_checkpoint(table_dir: str, version: int | None = None) -> str:
@@ -391,33 +400,22 @@ def write_checkpoint(table_dir: str, version: int | None = None) -> str:
 
     Idempotent per version (atomic put-if-absent like commits; an
     existing checkpoint at the same version is simply reused)."""
-    if version is None:
-        version = latest_version(table_dir)
-    if version == 0:
-        raise ValueError(f"nothing to checkpoint in {table_dir}")
-    manifest = _read_manifest(table_dir, version)
-    path = os.path.join(
-        table_dir, _MANIFEST_DIR, f"checkpoint_v{version:06d}.json"
-    )
+    version = _version(table_dir, version)
     try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        return path  # idempotent: same version ⇒ same content
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return path
+        _commit(
+            table_dir,
+            version,
+            _read_manifest(table_dir, version),
+            "checkpoint_v",
+        )
+    except ConflictError:
+        pass  # idempotent: same version ⇒ same content
+    return _manifest_path(table_dir, version, "checkpoint_v")
 
 
 def checkpoint_versions(table_dir: str) -> list[int]:
     """All checkpointed versions, ascending."""
-    mdir = os.path.join(table_dir, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(n[len("checkpoint_v"):-5])
-        for n in os.listdir(mdir)
-        if n.startswith("checkpoint_v") and n.endswith(".json")
-    )
+    return _listed(table_dir, "checkpoint_v")
 
 
 def read_snapshot_via_checkpoint(
@@ -433,21 +431,13 @@ def read_snapshot_via_checkpoint(
     but an OVERWRITE/DELETE rewrites the list, and a checkpoint-aware
     reader must still land on the target version's list; this walks
     the same path a log-structured reader walks, checkpoint-first."""
-    if version is None:
-        version = latest_version(table_dir)
-    if version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
+    version = _version(table_dir, version)
     base = max(
         (c for c in checkpoint_versions(table_dir) if c <= version),
         default=0,
     )
     if base == version:
-        with open(
-            os.path.join(
-                table_dir, _MANIFEST_DIR, f"checkpoint_v{base:06d}.json"
-            )
-        ) as fh:
-            manifest = json.load(fh)
+        manifest = _read_manifest(table_dir, base, "checkpoint_v")
         return spark.read.parquet(*manifest["files"]), 0
     # replay the tail: each manifest is self-contained (embeds its full
     # file list), so the tail walk terminates at the target version —
@@ -476,55 +466,26 @@ def log_delete(
     inverted and staged as replacement files.  Commit is the same
     atomic put-if-absent as append — a concurrent writer triggers
     ConflictError, never a half-deleted table."""
-    from pyspark.sql import functions as F
-
-    if expected_version is None:
-        expected_version = latest_version(table_dir)
-    if expected_version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
+    expected_version = _version(table_dir, expected_version)
     files = _read_manifest(table_dir, expected_version)["files"]
-
-    cur = spark.read.parquet(*files)
-    touched = {
-        os.path.realpath(r["f"].removeprefix("file:"))
-        for r in cur.filter(predicate)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    }
-    kept = [f for f in files if os.path.realpath(f) not in touched]
-    touched_files = [f for f in files if os.path.realpath(f) in touched]
-
+    touched, kept = _split_touched(
+        spark, files, lambda scan: scan.filter(predicate)
+    )
     new_files = list(kept)
-    if touched_files:
-        stage = os.path.join(table_dir, "data", uuid.uuid4().hex)
-        survivors = spark.read.parquet(*touched_files).filter(~predicate)
-        survivors.write.mode("error").parquet(stage)
-        new_files += sorted(
-            os.path.join(stage, f)
-            for f in os.listdir(stage)
-            if f.endswith(".parquet")
+    if touched:
+        new_files += _stage(
+            spark.read.parquet(*touched).filter(~predicate), table_dir
         )
-
-    new_version = expected_version + 1
-    manifest = {
-        "version": new_version,
-        "op": "delete",
-        "files": new_files,
-        "rewrote": len(touched_files),
-        "kept": len(kept),
-    }
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    path = _manifest_path(table_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"version {new_version} already committed"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
+    return _commit(
+        table_dir,
+        expected_version + 1,
+        {
+            "op": "delete",
+            "files": new_files,
+            "rewrote": len(touched),
+            "kept": len(kept),
+        },
+    )
 
 
 def log_merge(
@@ -549,64 +510,29 @@ def log_merge(
     versions of matched rows); (3) survivors + ALL update rows staged
     as the replacement files.  Commit is the usual put-if-absent;
     stale writers get ConflictError."""
-    from pyspark.sql import functions as F
-
-    if expected_version is None:
-        expected_version = latest_version(table_dir)
-    if expected_version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
+    expected_version = _version(table_dir, expected_version)
     files = _read_manifest(table_dir, expected_version)["files"]
-
-    keys = updates.select(key).distinct()
-    # input_file_name() must be projected AT the scan (Spark rejects it
-    # above a multi-source join), so tag rows with their file first
-    cur_files = spark.read.parquet(*files).select(
-        key, F.input_file_name().alias("f")
+    keys = F.broadcast(updates.select(key).distinct())
+    touched, kept = _split_touched(
+        spark, files, lambda scan: scan.join(keys, key, "left_semi")
     )
-    touched = {
-        os.path.realpath(r["f"].removeprefix("file:"))
-        for r in cur_files.join(F.broadcast(keys), key, "left_semi")
-        .select("f")
-        .distinct()
-        .collect()
-    }
-    kept = [f for f in files if os.path.realpath(f) not in touched]
-    touched_files = [f for f in files if os.path.realpath(f) in touched]
-
-    stage = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    if touched_files:
-        survivors = spark.read.parquet(*touched_files).join(
-            F.broadcast(keys), key, "left_anti"
+    staged = updates
+    if touched:
+        staged = (
+            spark.read.parquet(*touched)
+            .join(keys, key, "left_anti")
+            .unionByName(updates)
         )
-        staged = survivors.unionByName(updates)
-    else:
-        staged = updates
-    staged.write.mode("error").parquet(stage)
-    new_files = list(kept) + sorted(
-        os.path.join(stage, f)
-        for f in os.listdir(stage)
-        if f.endswith(".parquet")
+    return _commit(
+        table_dir,
+        expected_version + 1,
+        {
+            "op": "merge",
+            "files": kept + _stage(staged, table_dir),
+            "rewrote": len(touched),
+            "kept": len(kept),
+        },
     )
-
-    new_version = expected_version + 1
-    manifest = {
-        "version": new_version,
-        "op": "merge",
-        "files": new_files,
-        "rewrote": len(touched_files),
-        "kept": len(kept),
-    }
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    path = _manifest_path(table_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"version {new_version} already committed"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
 
 
 def log_clone(src_table_dir: str, dst_table_dir: str) -> int:
@@ -618,27 +544,20 @@ def log_clone(src_table_dir: str, dst_table_dir: str) -> int:
     (A vacuum on the source can break a clone's history — the
     documented Delta caveat; production either retains or deep-copies
     before vacuuming a cloned table.)"""
-    src_version = latest_version(src_table_dir)
-    if src_version == 0:
-        raise ValueError(f"nothing to clone in {src_table_dir}")
+    src_version = _version(src_table_dir, None)
     src_manifest = _read_manifest(src_table_dir, src_version)
-    manifest = {
-        "version": 1,
-        "op": f"clone:{os.path.abspath(src_table_dir)}@v{src_version}",
-        "files": src_manifest["files"],
-        "added": [],
-        "stats": src_manifest.get("stats", {}),
-    }
-    os.makedirs(os.path.join(dst_table_dir, _MANIFEST_DIR), exist_ok=True)
-    os.makedirs(os.path.join(dst_table_dir, "data"), exist_ok=True)
-    path = _manifest_path(dst_table_dir, 1)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(f"{dst_table_dir} already has a v1") from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return 1
+    os.makedirs(os.path.join(_local(dst_table_dir), "data"), exist_ok=True)
+    return _commit(
+        dst_table_dir,
+        1,
+        {
+            "op": f"clone:{os.path.abspath(_local(src_table_dir))}"
+            f"@v{src_version}",
+            "files": src_manifest["files"],
+            "added": [],
+            "stats": src_manifest.get("stats", {}),
+        },
+    )
 
 
 def log_compact(
@@ -654,38 +573,21 @@ def log_compact(
     small files; scan cost is dominated by file-open overhead until
     compaction).  Old versions keep reading the small files via time
     travel until vacuum; conflict detection as usual."""
-    if expected_version is None:
-        expected_version = latest_version(table_dir)
-    if expected_version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
+    expected_version = _version(table_dir, expected_version)
     files = _read_manifest(table_dir, expected_version)["files"]
-    stage = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    spark.read.parquet(*files).coalesce(target_files).write.mode(
-        "error"
-    ).parquet(stage)
-    new_files = sorted(
-        os.path.join(stage, f)
-        for f in os.listdir(stage)
-        if f.endswith(".parquet")
+    new_files = _stage(
+        spark.read.parquet(*files).coalesce(target_files), table_dir
     )
-    new_version = expected_version + 1
-    manifest = {
-        "version": new_version,
-        "op": "compact",
-        "files": new_files,
-        "added": new_files,
-        "compacted_from": len(files),
-    }
-    path = _manifest_path(table_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"version {new_version} already committed"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
+    return _commit(
+        table_dir,
+        expected_version + 1,
+        {
+            "op": "compact",
+            "files": new_files,
+            "added": new_files,
+            "compacted_from": len(files),
+        },
+    )
 
 
 def read_snapshot(
@@ -703,11 +605,7 @@ def read_snapshot(
     read): files written before a column existed surface NULL for it —
     additive evolution with zero rewrite of history, the parquet
     ``mergeSchema`` contract."""
-    if version is None:
-        version = latest_version(table_dir)
-    if version == 0:
-        raise ValueError(f"no committed versions in {table_dir}")
-    manifest = _read_manifest(table_dir, version)
+    manifest = _read_manifest(table_dir, _version(table_dir, version))
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
@@ -780,27 +678,19 @@ def log_restore(
         raise ValueError(f"version {to_version} not in {table_dir}")
     if expected_version is None:
         expected_version = latest_version(table_dir)
-    new_version = expected_version + 1
     target = _read_manifest(table_dir, to_version)
-    manifest = {
-        "version": new_version,
-        "op": "restore",
-        "restored_from": to_version,
-        "files": target["files"],
-        "added": [],
-        "schema": target.get("schema"),
-        "stats": target.get("stats", {}),
-    }
-    path = _manifest_path(table_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"version {new_version} already committed"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
+    return _commit(
+        table_dir,
+        expected_version + 1,
+        {
+            "op": "restore",
+            "restored_from": to_version,
+            "files": target["files"],
+            "added": [],
+            "schema": target.get("schema"),
+            "stats": target.get("stats", {}),
+        },
+    )
 
 
 def log_append_isolated(
@@ -836,14 +726,7 @@ def log_append_isolated(
     """
     if expected_version is None:
         expected_version = latest_version(table_dir)
-
-    stage = os.path.join(table_dir, "data", uuid.uuid4().hex)
-    df.write.mode("error").parquet(stage)
-    files = sorted(
-        os.path.join(stage, f)
-        for f in os.listdir(stage)
-        if f.endswith(".parquet")
-    )
+    files = _stage(df, table_dir)
     my_stats = (
         _file_stats(df.sparkSession, files, stats_cols)
         if stats_cols
@@ -852,27 +735,25 @@ def log_append_isolated(
     mine = set(partitions)
 
     for _ in range(max_retries + 1):
-        new_version = expected_version + 1
-        prior_files: list[str] = []
-        prior_stats: dict = {}
-        if expected_version > 0:
-            prior = _read_manifest(table_dir, expected_version)
-            prior_files = prior["files"]
-            prior_stats = prior.get("stats", {})
-        manifest = {
-            "version": new_version,
-            "op": "append",
-            "partitions": sorted(mine),
-            "files": prior_files + files,
-            "added": files,
-            "schema": df.schema.jsonValue(),
-            "stats": {**prior_stats, **my_stats},
-        }
-        os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-        path = _manifest_path(table_dir, new_version)
+        prior = (
+            _read_manifest(table_dir, expected_version)
+            if expected_version > 0
+            else {}
+        )
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
+            return _commit(
+                table_dir,
+                expected_version + 1,
+                {
+                    "op": "append",
+                    "partitions": sorted(mine),
+                    "files": prior.get("files", []) + files,
+                    "added": files,
+                    "schema": df.schema.jsonValue(),
+                    "stats": {**prior.get("stats", {}), **my_stats},
+                },
+            )
+        except ConflictError:
             head = latest_version(table_dir)
             for v in range(expected_version + 1, head + 1):
                 theirs = _read_manifest(table_dir, v).get("partitions")
@@ -883,10 +764,6 @@ def log_append_isolated(
                         "— logical conflict, cannot auto-retry"
                     ) from None
             expected_version = head
-            continue
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
-        return new_version
     raise ConflictError(f"gave up after {max_retries} retries")
 
 
@@ -906,23 +783,11 @@ def publish_set(
             raise ValueError(f"{tdir} has no committed v{v}")
     if expected_version is None:
         expected_version = latest_version(meta_dir)
-    new_version = expected_version + 1
-    manifest = {
-        "version": new_version,
-        "op": "publish_set",
-        "tables": {t: v for t, v in sorted(tables.items())},
-    }
-    os.makedirs(os.path.join(meta_dir, _MANIFEST_DIR), exist_ok=True)
-    path = _manifest_path(meta_dir, new_version)
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ConflictError(
-            f"publish-set version {new_version} already committed"
-        ) from exc
-    with os.fdopen(fd, "w") as fh:
-        json.dump(manifest, fh)
-    return new_version
+    return _commit(
+        meta_dir,
+        expected_version + 1,
+        {"op": "publish_set", "tables": dict(sorted(tables.items()))},
+    )
 
 
 def read_set(
@@ -932,11 +797,7 @@ def read_set(
     every member table AT THE PUBLISHED VERSIONS — the consistent
     cross-table view.  Each member read is the ordinary explicit-file
     snapshot scan, so pruning/pushdown are unchanged."""
-    if version is None:
-        version = latest_version(meta_dir)
-    if version == 0:
-        raise ValueError(f"no publish sets in {meta_dir}")
-    manifest = _read_manifest(meta_dir, version)
+    manifest = _read_manifest(meta_dir, _version(meta_dir, version))
     return {
         tdir: read_snapshot(spark, tdir, v)
         for tdir, v in manifest["tables"].items()

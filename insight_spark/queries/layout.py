@@ -339,7 +339,7 @@ def zorder_zone_map_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from insight_spark.operators.layout import z_value_expr
     from insight_spark.operators.manifest import (
         log_append,
-        read_snapshot_pruned_multi,
+        read_snapshot_pruned,
     )
 
     from insight_spark.engine import run_concurrently, scratch_base
@@ -384,10 +384,10 @@ def zorder_zone_map_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_concurrently(
         lambda: _write_layout("z", zpts), lambda: _write_layout("lin", lpts)
     )
-    zdf, z_scan, z_total = read_snapshot_pruned_multi(
+    zdf, z_scan, z_total = read_snapshot_pruned(
         spark, os.path.join(base, "z"), [("y", 8, 11)]
     )
-    _, l_scan, l_total = read_snapshot_pruned_multi(
+    _, l_scan, l_total = read_snapshot_pruned(
         spark, os.path.join(base, "lin"), [("y", 8, 11)]
     )
     return zdf.agg(

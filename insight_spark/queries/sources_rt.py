@@ -999,7 +999,7 @@ def manifest_zone_map_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=["o_orderkey"],
         )
     df, n_scan, n_total = read_snapshot_pruned(
-        spark, path, "o_orderkey", 150, 350
+        spark, path, [("o_orderkey", 150, 350)]
     )
     return df.select(
         "o_orderkey",

@@ -193,9 +193,12 @@ def write_jdbc_standin(df: DataFrame, out_dir: str, table: str) -> str:
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
     ddl = f"CREATE TABLE {table} (\n  {ddl_cols}\n);\n"
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_ddl.sql"), "w") as fh:
-        fh.write(ddl)
+    fs, ddl_path = _hadoop_fs(df.sparkSession, os.path.join(path, "_ddl.sql"))
+    out = fs.create(ddl_path, True)
+    try:
+        out.write(ddl.encode())
+    finally:
+        out.close()
     return path
 
 

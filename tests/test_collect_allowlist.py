@@ -34,7 +34,7 @@ COLLECT_ALLOWLIST: dict[str, tuple[int, str]] = {
         "Lloyd's k-means: K centroid rows per round (K fixed, tiny)",
     ),
     "operators/manifest.py": (
-        4,
+        3,
         "manifest/commit metadata: version rows + per-file stats rows — "
         "catalog-sized, never table rows",
     ),

@@ -198,14 +198,14 @@ def test_zone_map_prunes_and_stays_conservative(spark, tmp_path):
     # third file appended WITHOUT stats — must always be scanned
     log_append(_orders(spark, 200, 300).coalesce(1), tbl)
     df, n_scan, n_total = read_snapshot_pruned(
-        spark, tbl, "o_orderkey", 1, 100
+        spark, tbl, [("o_orderkey", 1, 100)]
     )
     assert n_total == 3
     assert n_scan == 2, "file1 (match) + file3 (no stats, conservative)"
     assert df.count() == _orders(spark, 0, 100).count()
     # disjoint probe: only the stats-less file is scanned, zero rows
     df2, n_scan2, _ = read_snapshot_pruned(
-        spark, tbl, "o_orderkey", 5000, 6000
+        spark, tbl, [("o_orderkey", 5000, 6000)]
     )
     assert n_scan2 == 1
     assert df2.count() == 0  # table holds keys <= 300 only
@@ -406,3 +406,74 @@ def test_partitioned_append_layout_mixing_fails_at_commit(spark, tmp_path):
     log_append(b, tbl2, partition_by=["o_orderstatus"])
     got = read_snapshot(spark, tbl2)
     assert got.count() == a.count() + b.count()
+
+
+def _ten_rows(spark):
+    return spark.range(10).select(F.col("id").alias("x")).repartition(2)
+
+
+@pytest.mark.parametrize("name", ["plain", "with space", "pct%41"])
+def test_file_matches_survive_percent_encoding(spark, tmp_path, name):
+    """``input_file_name()`` percent-encodes a space or ``%`` in the
+    path; delete, merge and stats still match those rows to the
+    manifest's files."""
+    from insight_spark.operators.manifest import (
+        _read_manifest,
+        log_delete,
+        log_merge,
+    )
+
+    tbl = str(tmp_path / name / "tbl")
+    log_append(_ten_rows(spark), tbl)
+    log_delete(spark, tbl, F.col("x") < 3)
+    assert read_snapshot(spark, tbl).count() == 7
+    updates = spark.range(5, 7).select(F.col("id").alias("x"))
+    log_merge(spark, updates, tbl, key="x")
+    assert read_snapshot(spark, tbl).count() == 7
+
+    stats_tbl = str(tmp_path / name / "stats")
+    log_append(_ten_rows(spark), stats_tbl, stats_cols=["x"])
+    man = _read_manifest(stats_tbl, 1)
+    assert sorted(man["stats"]) == sorted(man["files"])
+
+
+def test_file_uri_table_dir_round_trips(spark, tmp_path, monkeypatch):
+    """A ``file://`` table dir commits its files to the table's own
+    ``_manifest``, not to a relative ``file:`` dir under the cwd."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    tbl = (tmp_path / "tbl").as_uri()
+    assert log_append(_ten_rows(spark), tbl) == 1
+    got = read_snapshot(spark, tbl)
+    assert sorted(r["x"] for r in got.collect()) == list(range(10))
+    assert log_versions(str(tmp_path / "tbl")) == [1]
+    assert os.listdir(cwd) == []
+
+
+@pytest.mark.parametrize("uri", ["hdfs://nn:8020/t", "s3a://bucket/t"])
+def test_non_local_table_dir_is_refused_before_any_write(
+    spark, tmp_path, monkeypatch, uri
+):
+    """Only the local O_EXCL create is an atomic put-if-absent, so a
+    remote scheme is refused before a data file is staged."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="put-if-absent"):
+        log_append(_ten_rows(spark), uri, expected_version=0)
+    with pytest.raises(ValueError, match="put-if-absent"):
+        log_append(_ten_rows(spark), uri)
+    assert os.listdir(tmp_path) == []
+
+
+def test_vacuum_keeps_files_of_a_partitioned_table(spark, tmp_path):
+    """A partitioned stage nests its files one dir per value; vacuum
+    keeps the ones a retained version references."""
+    from insight_spark.operators.manifest import vacuum
+
+    tbl = str(tmp_path / "tbl")
+    rows = spark.range(10).select((F.col("id") % 2).alias("b"), "id")
+    log_append(rows, tbl, partition_by=["b"])
+    log_append(rows, tbl, partition_by=["b"])
+    audit = vacuum(tbl, retain_from_version=1)
+    assert audit["files_removed"] == 0 and audit["files_kept"] >= 2
+    assert read_snapshot(spark, tbl).count() == 20

@@ -134,7 +134,9 @@ def test_log_append_partition_by_survives_bucket_collisions(spark, tmp_path):
     for f in man["files"]:
         lo, hi = man["stats"][f]["o_orderkey"]
         assert lo is not None and lo <= hi
-    df, n_scan, n_total = read_snapshot_pruned(spark, tbl, "o_orderkey", 1, 5)
+    df, n_scan, n_total = read_snapshot_pruned(
+        spark, tbl, [("o_orderkey", 1, 5)]
+    )
     assert n_total == n_buckets
     assert n_scan <= n_buckets  # stats present => pruning decision ran
     assert df.count() == orders.filter(
@@ -158,7 +160,7 @@ def test_log_append_isolated_records_stats_and_prunes(spark, tmp_path):
     log_append_isolated(lo, tbl, ["day=1"], stats_cols=["o_orderkey"])
     log_append_isolated(hi, tbl, ["day=2"], stats_cols=["o_orderkey"])
     df, n_scan, n_total = read_snapshot_pruned(
-        spark, tbl, "o_orderkey", 1, 50
+        spark, tbl, [("o_orderkey", 1, 50)]
     )
     assert n_total == 2
     assert n_scan == 1, "isolated-commit files must be prunable now"

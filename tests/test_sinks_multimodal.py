@@ -124,16 +124,27 @@ def test_search_index_tables_hold_one_file_per_bucket(spark, tmp_path):
         assert len(parts) == len(buckets) <= 8, (table, sorted(parts))
 
 
-def test_jdbc_standin_writes_ddl(spark, tmp_path):
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_jdbc_standin_writes_ddl(spark, tmp_path, monkeypatch, uri):
+    """The DDL lands next to the parquet payload for a plain path and
+    for its ``file://`` URI alike — never under the working dir."""
+    cwd, out = tmp_path / "cwd", tmp_path / "out"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
     profile = (
         load_table(spark, SF_DIR, "documents")
         .groupBy("lang")
         .agg(F.count("*").alias("n_docs"))
     )
-    path = write_jdbc_standin(profile, str(tmp_path), "lang_profile")
-    ddl = open(os.path.join(path, "_ddl.sql")).read()
+    write_jdbc_standin(
+        profile, out.as_uri() if uri else str(out), "lang_profile"
+    )
+    ddl = (out / "lang_profile" / "_ddl.sql").read_text()
     assert "CREATE TABLE lang_profile" in ddl and "n_docs bigint" in ddl
-    assert spark.read.parquet(path).count() == profile.count()
+    assert spark.read.parquet(str(out / "lang_profile")).count() == (
+        profile.count()
+    )
+    assert os.listdir(cwd) == []
 
 
 def test_jdbc_roundtrip_keeps_derby_log_out_of_the_cwd(tmp_path):
