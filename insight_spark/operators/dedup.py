@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from insight_spark.operators.text import ngrams, tokenize
+from insight_spark.operators.text import (
+    ngrams,
+    token_set_sql,
+    tokenize,
+    tokens_sql,
+)
 
 #: SimHash fingerprint width, read by the fingerprints and their oracle.
 SIMHASH_BITS = 16
@@ -149,9 +154,7 @@ def simhash_oracle_sql() -> str:
     )
     return rf"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(
-                   list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-               )) AS t
+        SELECT doc_id, unnest({token_set_sql('text')}) AS t
         FROM documents
     ),
     hashed AS (SELECT doc_id, md5(t) AS h FROM toks),
@@ -548,7 +551,7 @@ def md5_band_ctes(
     )
     return rf"""toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
+               {tokens_sql('text')} AS t
         FROM {source}
     ),
     sh AS (

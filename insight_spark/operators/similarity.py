@@ -25,6 +25,12 @@ def _d(x: Column) -> Column:
     return x.cast("double")
 
 
+def embedding_sql() -> str:
+    """DuckDB spelling of the element-wise :func:`_d` cast over the
+    float32 ``embedding`` column, for oracle strings."""
+    return "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+
+
 def dot(a: Column, b: Column) -> Column:
     """J2: dot product — sequential left-to-right fold, same as the
     oracle's list_reduce, so accumulation order is deterministic."""
@@ -183,6 +189,30 @@ def seeded_centroids(corpus: DataFrame, n_cells: int) -> DataFrame:
         (F.row_number().over(w) - 1).alias("cell_id"),
         F.col("c_embedding").alias("centroid"),
     )
+
+
+def ivf_cells_ctes(src: str, id_col: str, k: int) -> str:
+    """DuckDB replay of :func:`seeded_centroids` + :func:`ivf_assign`
+    over the relation ``src`` (``id_col``, ``e``): the CTE pair
+    ``cents`` (``cell_id``, ``centroid``) and ``assigned`` (``id_col``,
+    ``e``, ``cell_id``) for a caller's ``WITH``.  Ties in distance go
+    to the lower cell id, as in ``ivf_assign``'s struct sort."""
+    return f"""cents AS MATERIALIZED (
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY {id_col}) - 1 AS INTEGER)
+                   AS cell_id,
+               e AS centroid
+        FROM (SELECT * FROM {src} ORDER BY {id_col} LIMIT {k})
+    ),
+    assigned AS MATERIALIZED (
+        SELECT {id_col}, e, cell_id FROM (
+            SELECT {src}.{id_col}, {src}.e, cents.cell_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY {src}.{id_col}
+                       ORDER BY list_distance({src}.e, cents.centroid),
+                                cents.cell_id) AS rn
+            FROM {src} CROSS JOIN cents
+        ) WHERE rn = 1
+    )"""
 
 
 def lsh_plane_signs(

@@ -20,7 +20,10 @@ from pyspark.sql import functions as F
 #: Shared normalization regex — identical literal on the oracle side
 #: (SURVEY.md §7.4.5: keep to the POSIX/RE2-safe common dialect).
 NON_WORD_RE = "[^a-z0-9 ]"
-WS_RE = r"\s+"
+#: The tokenizer's whitespace class, spelled out: Java reads ``\s`` as
+#: these six characters and RE2 (DuckDB) as five of them, without the
+#: vertical tab, so ``\s+`` split ``'a\x0bb'`` differently per engine.
+WS_RE = r"[ \t\n\x0B\f\r]+"
 #: BM25 term-saturation and length-normalization constants (the
 #: Lucene/ES defaults); ``bm25_search``'s oracle spells the same values.
 BM25_K1 = 1.2
@@ -36,6 +39,18 @@ def normalize_text(c: Column) -> Column:
 def tokenize(c: Column) -> Column:
     """I2: whitespace-split into array<string>, dropping empty tokens."""
     return F.filter(F.split(c, WS_RE), lambda t: t != "")
+
+
+def tokens_sql(col: str) -> str:
+    """DuckDB spelling of :func:`tokenize` over the SQL expression
+    ``col``, rendered into each oracle string (an oracle runs alone on
+    a fresh DuckDB connection, so it cannot rely on a macro)."""
+    return f"list_filter(string_split_regex({col}, '{WS_RE}'), t -> t <> '')"
+
+
+def token_set_sql(col: str) -> str:
+    """DuckDB spelling of ``array_distinct(tokenize(col))``."""
+    return f"list_distinct({tokens_sql(col)})"
 
 
 def tokens_df(docs: DataFrame) -> DataFrame:

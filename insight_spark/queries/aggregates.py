@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from insight_spark.operators.relational import MONEY, money_out
+from insight_spark.operators.text import tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -358,11 +359,10 @@ def unpivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "explode_variants",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(list_filter(string_split_regex(text, '\s+'),
-                                       t -> t <> ''),
+               list_filter({tokens_sql('text')},
                            t -> length(t) > 7) AS l
         FROM documents
     ),

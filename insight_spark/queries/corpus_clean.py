@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from insight_spark.operators.text import tokenize
+from insight_spark.operators.text import token_set_sql, tokenize, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -39,8 +39,7 @@ _BOILER_DOCS = 3
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS ts
+               {tokens_sql('text')} AS ts
         FROM documents
     ),
     nonempty AS (SELECT * FROM toks WHERE len(ts) > 0),
@@ -125,11 +124,10 @@ def line_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dsir_importance",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT d.doc_id, d.lang,
-               unnest(list_filter(string_split_regex(d.text, '\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('d.text')}) AS token
         FROM documents d
     ),
     raw AS (SELECT token, COUNT(*) AS rc FROM toks GROUP BY token),
@@ -464,11 +462,10 @@ def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigram_lm_score",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS ts
+               {tokens_sql('text')} AS ts
         FROM documents
     ),
     grams AS (
@@ -637,10 +634,10 @@ def twap_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "span_merge_intervals",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     pos AS (
@@ -789,13 +786,11 @@ def quality_gate_observed(docs: DataFrame):
 
 @query(
     "observed_quality_gate",
-    oracle=r"""
+    oracle=rf"""
     WITH scored AS (
         SELECT source,
-               len(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), t -> t <> ''))) AS d,
-               len(list_filter(
-                   string_split_regex(text, '\s+'), t -> t <> '')) AS s
+               len({token_set_sql('text')}) AS d,
+               len({tokens_sql('text')}) AS s
         FROM documents
     ),
     kept AS (
@@ -850,11 +845,10 @@ _BLOCKLIST = ("dup", "slow", "stale")
 
 @query(
     "blocklist_filter_audit",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, source,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     scored AS (
@@ -1226,8 +1220,7 @@ _STOP_IN_SQL = ", ".join(f"'{s}'" for s in _STOP_GATE)
     "predicate_selectivity_profile",
     oracle=rf"""
     WITH toks AS (
-        SELECT list_filter(string_split_regex(text, '\s+'),
-                           t -> t <> '') AS l,
+        SELECT {tokens_sql('text')} AS l,
                text
         FROM documents
     ),
@@ -1652,12 +1645,11 @@ def url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_prefix_dup_groups",
-    oracle=r"""
+    oracle=rf"""
     WITH pref AS (
         SELECT doc_id, source,
                array_to_string(
-                   list_filter(string_split_regex(lower(text), '\s+'),
-                               t -> t <> '')[1:8], ' ') AS p8
+                   {tokens_sql('lower(text)')}[1:8], ' ') AS p8
         FROM documents
     ),
     g AS (

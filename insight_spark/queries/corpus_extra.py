@@ -20,7 +20,13 @@ from insight_spark.operators.dedup import (
     md5_band_ctes,
     prefix_filtered_jaccard_join,
 )
-from insight_spark.operators.text import ngrams, tokenize, tokens_df
+from insight_spark.operators.text import (
+    ngrams,
+    token_set_sql,
+    tokenize,
+    tokens_df,
+    tokens_sql,
+)
 from insight_spark.queries import StressCap, query
 from insight_spark.sources import load_table
 
@@ -28,29 +34,25 @@ from insight_spark.sources import load_table
 #: (GPT-3 used 13-gram decontamination); fixture docs are short, so 8.
 _DECON_N = 8
 
-_DECON_GRAMS_SQL = r"""
+_DECON_GRAMS_SQL = rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     grams AS (
         SELECT doc_id,
                list_distinct(list_transform(
-                   range(1, greatest(len(l) - {n} + 2, 1)),
-                   i -> array_to_string(l[i : i + {n} - 1], ' '))) AS g
+                   range(1, greatest(len(l) - {_DECON_N} + 2, 1)),
+                   i -> array_to_string(l[i : i + {_DECON_N} - 1], ' '))) AS g
         FROM toks
     )
 """
 
 
-def _gram_sql(n: int) -> str:
-    return _DECON_GRAMS_SQL.format(n=n)
-
-
 @query(
     "ngram_decontaminate",
-    oracle=_gram_sql(_DECON_N)
+    oracle=_DECON_GRAMS_SQL
     + """
     , bench AS (
         SELECT DISTINCT unnest(g) AS gram FROM grams WHERE doc_id % 50 = 0
@@ -108,7 +110,7 @@ def ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dup_span_ratio",
-    oracle=_gram_sql(_DECON_N)
+    oracle=_DECON_GRAMS_SQL
     + """
     , df AS (
         SELECT gram, COUNT(*) AS n_docs
@@ -166,10 +168,10 @@ def dup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_sample",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
         SELECT doc_id, source,
-               len(list_filter(string_split_regex(text, '\\s+'), t -> t <> ''))
+               len({tokens_sql('text')})
                    AS n_tokens,
                CAST((doc_id * 2654435761) % 4294967296 AS DOUBLE)
                    / 4294967296 AS u
@@ -210,12 +212,11 @@ def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_token_budget",
-    oracle="""
+    oracle=f"""
     WITH per_source AS (
         SELECT source,
                COUNT(*) AS n_docs,
-               SUM(len(list_filter(string_split_regex(text, '\\s+'),
-                                   t -> t <> ''))) AS n_tokens
+               SUM(len({tokens_sql('text')})) AS n_tokens
         FROM documents
         GROUP BY source
     )
@@ -253,10 +254,10 @@ def source_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gopher_quality_filter",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     sig AS (
@@ -368,10 +369,10 @@ def _topgram_branch_sql(n: int) -> str:
 
 @query(
     "top_ngram_repetition",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     grams AS ("""
@@ -453,8 +454,7 @@ _JTJ_CAP = StressCap("documents", "doc_id", 1_000)
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'),
-                                         t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     ),
     sized AS (SELECT * FROM toks WHERE len(s) > 0 AND {_JTJ_CAP.sql}),
@@ -496,7 +496,7 @@ _CHUNK_S = 24
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     sized AS (
@@ -557,11 +557,10 @@ def doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unigram_surprisal_score",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     vocab AS (SELECT token, COUNT(*) AS c FROM toks GROUP BY token),
@@ -618,10 +617,9 @@ def unigram_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bpe_merge_pairs",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     words AS (SELECT token, COUNT(*) AS wf FROM toks GROUP BY token),
@@ -745,7 +743,7 @@ def fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     gi AS (
@@ -875,11 +873,10 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fim_transform",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     sized AS (
@@ -980,11 +977,9 @@ def fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vocab_novelty_curve",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT doc_id, unnest(list_distinct(
-                   list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> ''))) AS token
+        SELECT doc_id, unnest({token_set_sql('text')}) AS token
         FROM documents
     ),
     first_seen AS (
@@ -1099,8 +1094,7 @@ def vocab_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'),
-                                         t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     ),
     sized AS (SELECT * FROM toks WHERE len(s) > 0
@@ -1213,11 +1207,10 @@ def jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "truncation_loss_audit",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT source,
-               len(list_filter(string_split_regex(text, '\s+'),
-                               x -> x <> '')) AS n
+               len({tokens_sql('text')}) AS n
         FROM documents
     ),
     sweep AS (
@@ -1275,10 +1268,9 @@ def truncation_loss_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "length_bucket_padding_sweep",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
-        SELECT len(list_filter(string_split_regex(text, '\s+'),
-                               x -> x <> '')) AS n
+        SELECT len({tokens_sql('text')}) AS n
         FROM documents
     ),
     bounds AS (
@@ -1363,11 +1355,10 @@ def length_bucket_padding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dataset_card_profile",
-    oracle=r"""
+    oracle=rf"""
     WITH base AS (
         SELECT source, lang, n_chars, md5(text) AS digest,
-               len(list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> '')) AS n_toks
+               len({tokens_sql('text')}) AS n_toks
         FROM documents
     ),
     per_source AS (

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from insight_spark.operators.pagerank import DAMP_DEN, DAMP_NUM, SCALE, pagerank
-from insight_spark.operators.text import tokenize
+from insight_spark.operators.text import token_set_sql, tokenize, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -46,11 +46,10 @@ def _pr_iter_sql(i: int) -> str:
 
 
 _PAGERANK_SQL = (
-    r"""
+    rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     pairs AS (
@@ -108,11 +107,10 @@ def pagerank_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "triangle_count",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT doc_id,
-               unnest(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), x -> x <> ''))) AS token
+               unnest({token_set_sql('text')}) AS token
         FROM documents
     ),
     edges AS (
@@ -199,10 +197,10 @@ def _bfs_round_sql(i: int) -> str:
 
 
 _BFS_SQL = (
-    r"""
+    rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     pairs AS (
@@ -293,8 +291,7 @@ _KCORE_FRAC = 0.64
     WITH n AS (SELECT COUNT(*) AS c FROM documents),
     t AS (
         SELECT doc_id,
-               unnest(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), x -> x <> ''))) AS tok
+               unnest({token_set_sql('text')}) AS tok
         FROM documents
     ),
     e0 AS (
@@ -399,8 +396,7 @@ def k_core_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH n AS (SELECT COUNT(*) AS c FROM documents),
     t AS (
         SELECT doc_id,
-               unnest(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), x -> x <> ''))) AS tok
+               unnest({token_set_sql('text')}) AS tok
         FROM documents
     ),
     e0 AS (
@@ -500,10 +496,9 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "degree_assortativity",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT list_filter(string_split_regex(text, '\s+'),
-                           x -> x <> '') AS l
+        SELECT {tokens_sql('text')} AS l
         FROM documents
     ),
     bi AS (
@@ -632,10 +627,9 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "edge_support_truss",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT list_filter(string_split_regex(text, '\s+'),
-                           x -> x <> '') AS l
+        SELECT {tokens_sql('text')} AS l
         FROM documents
     ),
     bi AS (

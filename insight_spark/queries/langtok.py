@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from insight_spark.operators.text import tokenize, tokens_df
+from insight_spark.operators.text import tokenize, tokens_df, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -176,8 +176,7 @@ def _bpe_oracle() -> str:
     )
     return rf"""
     WITH toks AS (
-        SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     v0 AS (
@@ -327,8 +326,7 @@ def _bpe_apply_oracle() -> str:
         head
         + f""", corpus AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     word_syms AS (
@@ -392,11 +390,10 @@ def bpe_apply_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vocab_coverage_curve",
-    oracle=r"""
+    oracle=rf"""
     WITH counts AS (
         SELECT t AS token, COUNT(*) AS freq
-        FROM (SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                                        t -> t <> '')) AS t
+        FROM (SELECT unnest({tokens_sql('text')}) AS t
               FROM documents)
         GROUP BY t
     ),
@@ -503,15 +500,14 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tokenizer_fertility_by_lang",
-    oracle=r"""
+    oracle=rf"""
     WITH per_doc AS (
         SELECT lang,
                n_chars,
                CAST(len(regexp_extract_all(
                    text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS BIGINT)
                    AS bpe,
-               CAST(len(list_filter(string_split_regex(text, '\s+'),
-                                    t -> t <> '')) AS BIGINT) AS ws
+               CAST(len({tokens_sql('text')}) AS BIGINT) AS ws
         FROM documents
     )
     SELECT lang,
@@ -573,11 +569,10 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigram_next_token_accuracy",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'),
-                           t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     bi AS (

@@ -19,6 +19,7 @@ from insight_spark.operators.layout import (
     z_value_sql,
 )
 from insight_spark.operators.relational import money, money_out
+from insight_spark.operators.text import token_set_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -100,7 +101,7 @@ def z_order_code_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bloom_fpr_audit",
-    oracle=r"""
+    oracle=rf"""
     WITH bounds AS (
         SELECT CAST(MIN(doc_id) AS BIGINT) AS lo,
                CAST(MAX(doc_id) AS BIGINT) AS hi
@@ -109,9 +110,7 @@ def z_order_code_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks AS (
         SELECT CASE WHEN (doc_id - lo) * 2 < (hi - lo + 1)
                     THEN 0 ELSE 1 END AS half,
-               unnest(list_distinct(
-                   list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> ''))) AS token
+               unnest({token_set_sql('text')}) AS token
         FROM documents, bounds
     ),
     a_tokens AS (SELECT DISTINCT token FROM toks WHERE half = 0),

@@ -15,7 +15,7 @@ from insight_spark.operators.dedup import (
     minhash_lsh_pairs_md5_oracle_sql,
     near_dedup_minhash,
 )
-from insight_spark.operators.text import ngrams, tokenize
+from insight_spark.operators.text import ngrams, tokenize, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -61,10 +61,10 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "minhash_recall_gate",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
         WHERE doc_id < 500
     ),
@@ -225,7 +225,7 @@ _EN_SQL = ", ".join(f"'{w}'" for w in _EN_MARKERS)
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id, lang,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     )
     SELECT doc_id, lang,
@@ -256,11 +256,11 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "token_count_bpe",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]'))
                 AS INTEGER) AS n_bpe_tokens,
-           CAST(len(list_filter(string_split_regex(text, '\s+'), t -> t <> ''))
+           CAST(len({tokens_sql('text')})
                 AS INTEGER) AS n_ws_tokens
     FROM documents
     """,
@@ -657,7 +657,7 @@ _KV_TOP = 10
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     pref AS (
@@ -721,10 +721,10 @@ def kv_prefix_sharing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cross_source_overlap_matrix",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT source,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
+               {tokens_sql('text')} AS t
         FROM documents
     ),
     sh AS (

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -15,6 +17,7 @@ from insight_spark.operators.multimodal import (
     decode_media_real,
     payload_entropy_arrow,
 )
+from insight_spark.operators.text import WS_RE, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table, register_views
 
@@ -266,7 +269,8 @@ def _tokenize_udtf():
 
     class TokenizeUDTF:
         def eval(self, text: str):
-            for i, tok in enumerate(text.split()):
+            toks = [t for t in re.split(WS_RE, text) if t]
+            for i, tok in enumerate(toks):
                 yield i, tok
 
     return udtf(TokenizeUDTF, returnType="idx int, token string")
@@ -274,10 +278,10 @@ def _tokenize_udtf():
 
 @query(
     "udtf_tokens",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
         WHERE doc_id < 50
     )
@@ -287,7 +291,8 @@ def _tokenize_udtf():
 )
 def udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF lateral expansion (L5), checked against pure-SQL
-    unnest — Python str.split() ≡ regex \\s+ split with empties dropped."""
+    unnest — both split on ``WS_RE`` and drop empty tokens (Python's
+    ``str.split()`` would also split on NBSP and U+001C..U+001F)."""
     register_views(spark, sf_dir, ("documents",))
     spark.udtf.register("tokenize_udtf", _tokenize_udtf())
     # Predicate INSIDE the subquery: Catalyst does not push a
@@ -305,18 +310,17 @@ def udtf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udtf_polymorphic_ngrams",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS ts
+               {tokens_sql('text')} AS ts
         FROM documents WHERE doc_id < 50
     ),
     g AS (
         SELECT doc_id,
                unnest(list_transform(range(1, greatest(len(ts) - 1, 1)),
-                   i -> {'pos': i - 1, 'g1': ts[i], 'g2': ts[i + 1],
-                         'g3': ts[i + 2]})) AS s
+                   i -> {{'pos': i - 1, 'g1': ts[i], 'g2': ts[i + 1],
+                         'g3': ts[i + 2]}})) AS s
         FROM toks WHERE len(ts) >= 3
     )
     SELECT doc_id, CAST(s.pos AS INTEGER) AS pos,
@@ -353,7 +357,7 @@ def udtf_polymorphic_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             return AnalyzeResult(schema=st)
 
         def eval(self, text, n):
-            toks = [t for t in (text or "").split() if t]
+            toks = [t for t in re.split(WS_RE, text or "") if t]
             for i in range(len(toks) - n + 1):
                 yield (i, *toks[i : i + n])
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from insight_spark.operators.text import tokenize, tokens_df
+from insight_spark.operators.text import tokenize, tokens_df, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -45,8 +45,7 @@ _WINNOW_W = 4
     WITH per_source AS (
         SELECT source,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(list_filter(string_split_regex(text, '\s+'),
-                                        t -> t <> ''))) AS BIGINT) AS n_tokens
+               CAST(SUM(len({tokens_sql('text')})) AS BIGINT) AS n_tokens
         FROM documents GROUP BY source
     ),
     tot AS (SELECT SUM(n_tokens) AS t FROM per_source),
@@ -122,8 +121,7 @@ def source_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH sized AS (
         SELECT doc_id, source,
-               CAST(len(list_filter(string_split_regex(text, '\s+'),
-                                    t -> t <> '')) AS INTEGER) AS n_tokens
+               CAST(len({tokens_sql('text')}) AS INTEGER) AS n_tokens
         FROM documents
     ),
     ranked AS (
@@ -178,11 +176,10 @@ def token_budget_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ccnet_perplexity_buckets",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, lang,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     vocab AS (SELECT token, COUNT(*) AS c FROM toks GROUP BY token),
@@ -266,8 +263,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS ts
+               {tokens_sql('text')} AS ts
         FROM documents
     ),
     grams AS (
@@ -449,8 +445,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH base AS (
         SELECT doc_id, source, text, sha256(text) AS h,
-               len(list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> '')) AS nt
+               len({tokens_sql('text')}) AS nt
         FROM documents
     ),
     keep AS (SELECT h, MIN(doc_id) AS keep_id FROM base GROUP BY h),
@@ -1337,10 +1332,9 @@ def jains_fairness_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "simpson_diversity_index",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
-        SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     tf AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS f
@@ -1520,7 +1514,7 @@ def cluster_sample_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pareto_skyline_sources",
-    oracle=r"""
+    oracle=rf"""
     WITH mass AS (
         SELECT source, CAST(SUM(n_chars) AS BIGINT) AS mass
         FROM documents GROUP BY source
@@ -1529,8 +1523,7 @@ def cluster_sample_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT source, CAST(COUNT(DISTINCT token) AS BIGINT) AS vocab
         FROM (
             SELECT source,
-                   unnest(list_filter(string_split_regex(text, '\s+'),
-                                      t -> t <> '')) AS token
+                   unnest({tokens_sql('text')}) AS token
             FROM documents
         ) GROUP BY source
     ),

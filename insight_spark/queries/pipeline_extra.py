@@ -21,10 +21,12 @@ from insight_spark.operators.relational import money_out
 from insight_spark.operators.similarity import (
     cosine,
     dot,
+    embedding_sql,
+    ivf_cells_ctes,
     l2_norm,
     lsh_bucket_join,
 )
-from insight_spark.operators.text import ngrams, tokenize
+from insight_spark.operators.text import ngrams, tokenize, tokens_sql
 from insight_spark.queries import StressCap, query
 from insight_spark.sources import load_table
 
@@ -77,7 +79,7 @@ _ENDUP_CAP = StressCap("embeddings", "vec_id", 1_000)
     oracle=f"""
     WITH e AS (
         SELECT vec_id, label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               {embedding_sql()} AS v
         FROM embeddings WHERE {_ENDUP_CAP.sql}
     )
     SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -151,7 +153,7 @@ def _ann_lsh_oracle(
                list_transform(embedding,
                    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))
                    AS iv,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               {embedding_sql()} AS v
         FROM embeddings
     ),
     proj AS (
@@ -253,28 +255,13 @@ def event_type_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivf_topk",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT vec_id AS c_vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings
     ),
-    cents AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY c_vec_id) - 1 AS INTEGER)
-                   AS cell_id,
-               e AS centroid
-        FROM (SELECT * FROM c ORDER BY c_vec_id LIMIT 8)
-    ),
-    assigned AS (
-        SELECT c_vec_id, e, cell_id FROM (
-            SELECT c.c_vec_id, c.e, cents.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY c.c_vec_id
-                       ORDER BY list_distance(c.e, cents.centroid),
-                                cents.cell_id) AS rn
-            FROM c CROSS JOIN cents
-        ) WHERE rn = 1
-    ),
+    {ivf_cells_ctes('c', 'c_vec_id', 8)},
     q AS (SELECT c_vec_id AS q_vec_id, e AS q_e FROM c WHERE c_vec_id < 10),
     probes AS (
         SELECT q_vec_id, q_e, cell_id FROM (
@@ -331,10 +318,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ngram_jaccard",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS t
+               {tokens_sql('text')} AS t
         FROM documents
     ),
     sh AS (
@@ -751,11 +738,10 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hashing_trick_features",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     bucketed AS (
@@ -823,7 +809,7 @@ def _ann_lsh_recall_eval_oracle(
                list_transform(embedding,
                    x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))
                    AS iv,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               {embedding_sql()} AS v
         FROM embeddings
     ),
     proj AS (
@@ -1017,18 +1003,16 @@ def sft_dialogue_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "feature_hash_collision_audit",
-    oracle="""
+    oracle=f"""
     WITH vocab AS (
         SELECT DISTINCT
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     tf AS (
         SELECT token, COUNT(*) AS occurrences
         FROM (
-            SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                      t -> t <> '')) AS token
+            SELECT unnest({tokens_sql('text')}) AS token
             FROM documents
         ) GROUP BY token
     ),

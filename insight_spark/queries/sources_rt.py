@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from insight_spark.engine import run_concurrently, scratch_base
+from insight_spark.operators.similarity import embedding_sql, ivf_cells_ctes
+from insight_spark.operators.text import token_set_sql, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -660,12 +662,11 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "search_index_probe",
-    oracle=r"""
+    oracle=rf"""
     SELECT 'the' AS term, doc_id
     FROM (SELECT DISTINCT doc_id
           FROM (SELECT doc_id,
-                       unnest(list_filter(string_split_regex(text, '\s+'),
-                                          t -> t <> '')) AS term
+                       unnest({tokens_sql('text')}) AS term
                 FROM documents)
           WHERE term = 'the')
     ORDER BY doc_id
@@ -706,11 +707,10 @@ def search_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "suggest_from_index",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS term
+               unnest({tokens_sql('text')}) AS term
         FROM documents
     ),
     df AS (
@@ -1175,28 +1175,13 @@ def pyds_topic_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vector_index_probe",
-    oracle="""
+    oracle=f"""
     WITH c AS (
         SELECT vec_id AS c_vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings
     ),
-    cents AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY c_vec_id) - 1 AS INTEGER)
-                   AS cell_id,
-               e AS centroid
-        FROM (SELECT * FROM c ORDER BY c_vec_id LIMIT 8)
-    ),
-    assigned AS (
-        SELECT c_vec_id, e, cell_id FROM (
-            SELECT c.c_vec_id, c.e, cents.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY c.c_vec_id
-                       ORDER BY list_distance(c.e, cents.centroid),
-                                cents.cell_id) AS rn
-            FROM c CROSS JOIN cents
-        ) WHERE rn = 1
-    ),
+    {ivf_cells_ctes('c', 'c_vec_id', 8)},
     probes AS (
         SELECT cell_id FROM (
             SELECT cents.cell_id,
@@ -1513,11 +1498,10 @@ def manifest_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "delta_index_merge_read",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
         SELECT doc_id,
-               unnest(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), t -> t <> ''))) AS term
+               unnest({token_set_sql('text')}) AS term
         FROM documents
     )
     SELECT 'join' AS term,

@@ -5,21 +5,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from insight_spark.operators.text import term_freq, tokenize
+from insight_spark.operators.text import term_freq, tokenize, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
 
 @query(
     "tokenize_wordcount",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     )
     SELECT token, COUNT(*) AS tf
     FROM toks
-    WHERE token <> ''
     GROUP BY token
     ORDER BY tf DESC, token
     LIMIT 20
@@ -65,10 +64,10 @@ def lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_stats",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, lang, length(text) AS text_len,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tokens
+               {tokens_sql('text')} AS tokens
         FROM documents
     )
     SELECT doc_id, lang, text_len,

@@ -15,8 +15,10 @@ from insight_spark.operators.text import (
     scrub_pii,
     term_freq,
     tf_idf,
+    token_set_sql,
     tokenize,
     tokens_df,
+    tokens_sql,
 )
 from insight_spark.operators.relational import MONEY, money_out
 from insight_spark.queries import StressCap, query
@@ -31,12 +33,12 @@ _STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
     "stopword_top_terms",
     oracle=rf"""
     WITH toks AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     )
     SELECT token, COUNT(*) AS tf
     FROM toks
-    WHERE token <> '' AND token NOT IN ({_STOP_SQL})
+    WHERE token NOT IN ({_STOP_SQL})
     GROUP BY token
     ORDER BY tf DESC, token
     LIMIT 20
@@ -56,9 +58,9 @@ def stopword_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigrams_top",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-        SELECT list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+        SELECT {tokens_sql('text')} AS l
         FROM documents
     ),
     grams AS (
@@ -89,11 +91,10 @@ def bigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_freq_idf",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT doc_id,
-               unnest(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), x -> x <> ''))) AS token
+               unnest({token_set_sql('text')}) AS token
         FROM documents
     ),
     n_total AS (SELECT COUNT(*) AS n FROM documents)
@@ -114,11 +115,10 @@ def doc_freq_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tfidf_top",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  x -> x <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     tf AS (
@@ -148,9 +148,9 @@ def tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "prefix_suggest_th",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (
-        SELECT unnest(string_split_regex(text, '\s+')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     )
     SELECT token, COUNT(*) AS tf
@@ -174,11 +174,10 @@ def prefix_suggest_th(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cooccurrence_top",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT doc_id,
-               unnest(list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), x -> x <> ''))) AS token
+               unnest({token_set_sql('text')}) AS token
         FROM documents
     )
     SELECT a.token AS token_a, b.token AS token_b, COUNT(*) AS n
@@ -217,10 +216,10 @@ def cooccurrence_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bm25_search",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     lens AS (SELECT doc_id, len(l) AS dl FROM toks),
@@ -310,10 +309,10 @@ def levenshtein_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "array_ops",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     )
     SELECT doc_id,
@@ -366,7 +365,7 @@ def json_struct_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     grams AS (
@@ -615,10 +614,10 @@ def entity_resolution_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "search_snippets",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     hits AS (
@@ -748,11 +747,10 @@ def pii_scrub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "inverted_index_build",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     per_doc AS (
@@ -824,11 +822,10 @@ def inverted_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sparse_cosine_topk",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     tf AS (
@@ -943,12 +940,11 @@ def sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "symspell_suggest",
-    oracle=r"""
+    oracle=rf"""
     WITH vocab AS (
         SELECT token AS term, CAST(COUNT(*) AS BIGINT) AS freq
         FROM (
-            SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                                      t -> t <> '')) AS token
+            SELECT unnest({tokens_sql('text')}) AS token
             FROM documents
         ) GROUP BY token HAVING COUNT(*) >= 5
     ),
@@ -1057,7 +1053,7 @@ _PMI_TOP = 20
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     bi AS (
@@ -1161,10 +1157,10 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "retriever_agreement_audit",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     lens AS (SELECT doc_id, len(l) AS dl FROM toks),
@@ -1290,10 +1286,10 @@ _RBO_W_NANO = (
 
 @query(
     "rank_biased_overlap",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     lens AS (SELECT doc_id, len(l) AS dl FROM toks),
@@ -1445,7 +1441,7 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     pos AS (
@@ -1578,7 +1574,7 @@ def rake_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "trending_terms_rank_shift",
-    oracle=r"""
+    oracle=rf"""
     WITH bounds AS (
         SELECT CAST(MIN(doc_id) AS BIGINT) AS lo,
                CAST(MAX(doc_id) AS BIGINT) AS hi
@@ -1587,8 +1583,7 @@ def rake_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks AS (
         SELECT CASE WHEN (doc_id - lo) * 2 < (hi - lo + 1)
                     THEN 0 ELSE 1 END AS half,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents, bounds
     ),
     counts AS (
@@ -1701,10 +1696,10 @@ def trending_terms_rank_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "skipgram_pair_counts",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     pos AS (
@@ -1762,12 +1757,11 @@ def skipgram_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "zipf_coverage_curve",
-    oracle=r"""
+    oracle=rf"""
     WITH tf AS (
         SELECT token, CAST(COUNT(*) AS BIGINT) AS tf
         FROM (
-            SELECT unnest(list_filter(string_split_regex(text, '\s+'),
-                                      t -> t <> '')) AS token
+            SELECT unnest({tokens_sql('text')}) AS token
             FROM documents
         ) GROUP BY token
     ),
@@ -1844,7 +1838,7 @@ def zipf_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sentence_split_stats",
-    oracle=r"""
+    oracle=rf"""
     WITH s AS (
         SELECT doc_id,
                list_filter(
@@ -1857,8 +1851,7 @@ def zipf_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc AS (
         SELECT doc_id, len(sents) AS n_sentences,
                list_transform(sents,
-                   x -> len(list_filter(string_split_regex(x, '\s+'),
-                                        t -> t <> ''))) AS lens
+                   x -> len({tokens_sql('x')})) AS lens
         FROM s WHERE len(sents) > 0
     )
     SELECT doc_id,
@@ -1891,9 +1884,7 @@ def sentence_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda x: x != "",
     )
-    lens = F.transform(
-        sents, lambda x: F.size(F.filter(F.split(x, r"\s+"), lambda t: t != ""))
-    )
+    lens = F.transform(sents, lambda x: F.size(tokenize(x)))
     d = docs.select("doc_id", lens.alias("lens")).filter(
         F.size("lens") > 0
     )
@@ -1915,14 +1906,13 @@ def sentence_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "code_like_score",
-    oracle=r"""
+    oracle=rf"""
     WITH m AS (
         SELECT doc_id, source, len(text) AS n_chars,
-               len(text) - len(regexp_replace(text, '[{}();=\[\]<>]', '', 'g'))
+               len(text) - len(regexp_replace(text, '[{{}}();=\[\]<>]', '', 'g'))
                    AS n_sym,
-               len(list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> '')) AS n_tok,
-               len(list_filter(string_split_regex(text, '\s+'),
+               len({tokens_sql('text')}) AS n_tok,
+               len(list_filter({tokens_sql('text')},
                    t -> regexp_matches(t, '^[a-zA-Z_][a-zA-Z0-9_]*\($')
                         OR regexp_matches(t, '^[a-zA-Z_][a-zA-Z0-9_]*\(\)$')))
                    AS n_call
@@ -1960,7 +1950,7 @@ def code_like_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_sym = n_chars - F.length(
         F.regexp_replace("text", r"[{}();=\[\]<>]", "")
     )
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
+    toks = tokenize(F.col("text"))
     n_call = F.size(
         F.filter(
             toks,
@@ -1994,10 +1984,10 @@ def code_like_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "kwic_windows",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     hits AS (
@@ -2055,10 +2045,10 @@ def kwic_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "prf_query_expansion",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     tf AS (
@@ -2148,10 +2138,10 @@ def prf_query_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "term_proximity_rank",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     flat AS (
@@ -2258,11 +2248,10 @@ def term_proximity_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "flesch_reading_ease",
-    oracle="""
+    oracle=f"""
     WITH per_doc AS (
         SELECT source,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS BIGINT) AS w,
+               CAST(len({tokens_sql('text')}) AS BIGINT) AS w,
                CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
                     AS BIGINT) AS s,
                CAST(greatest(len(regexp_extract_all(text,
@@ -2413,11 +2402,10 @@ def fair_topk_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "phrase_match_search",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           t -> t <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     post AS (
@@ -2484,11 +2472,10 @@ def phrase_match_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "distinctive_terms_ratio",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
         SELECT source,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS term
+               unnest({tokens_sql('text')}) AS term
         FROM documents WHERE source IN ('src0', 'src1')
     ),
     tf AS (
@@ -2560,11 +2547,10 @@ def distinctive_terms_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sorted_neighborhood_pairs",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, lang, n_chars,
-               list_distinct(list_filter(
-                   string_split_regex(text, '\s+'), t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     ),
     ordered AS (
@@ -2657,13 +2643,12 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lexical_richness_profile",
-    oracle=r"""
+    oracle=rf"""
     WITH tf AS (
         SELECT source, token, CAST(COUNT(*) AS BIGINT) AS f
         FROM (
             SELECT source,
-                   unnest(list_filter(string_split_regex(text, '\s+'),
-                                      t -> t <> '')) AS token
+                   unnest({tokens_sql('text')}) AS token
             FROM documents
         ) GROUP BY source, token
     ),

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from insight_spark.operators.components import canonical_assignment
 from insight_spark.operators.dedup import jaccard
-from insight_spark.operators.text import tokenize
+from insight_spark.operators.text import token_set_sql, tokenize, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
@@ -45,8 +45,7 @@ def _adjacent_jaccard_edges(docs: DataFrame) -> DataFrame:
     oracle=rf"""
     WITH RECURSIVE toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'),
-                                         t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     ),
     pairs AS (
@@ -177,7 +176,7 @@ _PACK_SHARDS = 8
 
 @query(
     "pack_token_budget",
-    oracle=r"""
+    oracle=rf"""
     WITH RECURSIVE base AS (
         SELECT doc_id, source,
                CAST(CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '20' THEN 0
@@ -188,8 +187,7 @@ _PACK_SHARDS = 8
                          WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'c0' THEN 5
                          WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e0' THEN 6
                          ELSE 7 END AS BIGINT) AS shard,
-               CAST(len(list_filter(string_split_regex(text, '\s+'),
-                                    t -> t <> '')) AS INTEGER) AS n_tokens
+               CAST(len({tokens_sql('text')}) AS INTEGER) AS n_tokens
         FROM documents
     ),
     docs AS (
@@ -452,11 +450,10 @@ def winsorize_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "oov_rate_by_source",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id, source,
-               unnest(list_filter(string_split_regex(text, '\s+'),
-                                  t -> t <> '')) AS token
+               unnest({tokens_sql('text')}) AS token
         FROM documents
     ),
     vocab AS (
@@ -516,11 +513,10 @@ def oov_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pack_sequential_bins",
-    oracle="""
+    oracle=f"""
     WITH sized AS (
         SELECT doc_id, source,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql('text')}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     cum AS (
@@ -648,8 +644,7 @@ _SKEW_N_SHARDS = 16
         SELECT CAST(
                    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
                         AS BIGINT) % {_SKEW_N_SHARDS} AS INTEGER) AS shard,
-               len(list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> '')) AS n_tok
+               len({tokens_sql('text')}) AS n_tok
         FROM documents
     ),
     per AS (
@@ -708,10 +703,9 @@ def shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "packing_waste_audit",
-    oracle=r"""
+    oracle=rf"""
     WITH per_doc AS (
-        SELECT least(CAST(len(list_filter(string_split_regex(text, '\s+'),
-                                          t -> t <> '')) AS BIGINT),
+        SELECT least(CAST(len({tokens_sql('text')}) AS BIGINT),
                      512) AS n_tok
         FROM documents
     ),
@@ -769,8 +763,7 @@ def packing_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH RECURSIVE toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'),
-                                         t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     ),
     pairs AS (
@@ -841,14 +834,13 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "preference_pair_build",
-    oracle=r"""
+    oracle=rf"""
     WITH scored AS (
         SELECT lang, source, doc_id,
                1000000 * len(list_distinct(l)) // len(l) AS reward_micro
         FROM (
             SELECT lang, source, doc_id,
-                   list_filter(string_split_regex(text, '\s+'),
-                               t -> t <> '') AS l
+                   {tokens_sql('text')} AS l
             FROM documents
         ) WHERE len(l) > 0
     ),
@@ -944,11 +936,10 @@ def preference_pair_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "packed_attention_mask_audit",
-    oracle="""
+    oracle=f"""
     WITH sized AS (
         SELECT doc_id, source,
-               CAST(len(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> '')) AS BIGINT) AS n_tokens
+               CAST(len({tokens_sql('text')}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     binned AS (
@@ -1044,8 +1035,7 @@ def packed_attention_mask_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH RECURSIVE toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), t -> t <> '')
-                   AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     sets AS (SELECT doc_id, list_distinct(l) AS s, len(l) AS n_tokens

@@ -5,22 +5,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from insight_spark.operators.similarity import knn_topk, l2_norm
+from insight_spark.operators.similarity import embedding_sql, knn_topk, l2_norm
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
 
 @query(
     "knn_cosine_topk",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id AS q_vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_embedding
+               {embedding_sql()} AS q_embedding
         FROM embeddings WHERE vec_id < 10
     ),
     c AS (
         SELECT vec_id AS c_vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c_embedding
+               {embedding_sql()} AS c_embedding
         FROM embeddings
     ),
     pairs AS (

@@ -9,18 +9,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from insight_spark.operators.dedup import jaccard
-from insight_spark.operators.text import tokenize
+from insight_spark.operators.similarity import embedding_sql, ivf_cells_ctes
+from insight_spark.operators.text import token_set_sql, tokenize, tokens_sql
 from insight_spark.queries import query
 from insight_spark.sources import load_table
 
 
 @query(
     "token_jaccard_pairs",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'),
-                                         t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     )
     SELECT a.doc_id AS a_id, b.doc_id AS b_id,
@@ -272,15 +272,15 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hard_negative_mining",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id AS q_vec_id, label AS q_label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS q_embedding
+               {embedding_sql()} AS q_embedding
         FROM embeddings WHERE vec_id < 20
     ),
     c AS (
         SELECT vec_id AS c_vec_id, label AS c_label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c_embedding
+               {embedding_sql()} AS c_embedding
         FROM embeddings
     ),
     pairs AS (
@@ -759,10 +759,10 @@ def logreg_gd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hybrid_search_rrf",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS l
+               {tokens_sql('text')} AS l
         FROM documents
     ),
     lens AS (SELECT doc_id, len(l) AS dl FROM toks),
@@ -802,13 +802,13 @@ def logreg_gd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM bm25 QUALIFY rt <= 20
     ),
     vq AS (
-        SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
+        SELECT {embedding_sql()} AS qe
         FROM embeddings WHERE vec_id = 0
     ),
     cos AS (
         SELECT vec_id,
                ROUND(list_cosine_similarity(
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)), qe), 6)
+                   {embedding_sql()}, qe), 6)
                    AS cs
         FROM embeddings CROSS JOIN vq
         WHERE vec_id <> 0
@@ -956,11 +956,11 @@ def _mmr_oracle_sql(pool: int = _MMR_POOL, k: int = _MMR_K) -> str:
         )
     return f"""
     WITH q AS MATERIALIZED (
-        SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        SELECT {embedding_sql()} AS e
         FROM embeddings WHERE vec_id = 0
     ),
     c AS MATERIALIZED (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        SELECT vec_id, {embedding_sql()} AS e
         FROM embeddings WHERE vec_id <> 0
     ),
     scored AS (
@@ -1063,10 +1063,10 @@ def mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "int8_quantize_embeddings",
-    oracle="""
+    oracle=f"""
     WITH e AS (
         SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               {embedding_sql()} AS v
         FROM embeddings
     ),
     scaled AS (
@@ -1159,11 +1159,11 @@ _MARGIN_THRESHOLD = 1.05
     "bitext_margin_mining",
     oracle=rf"""
     WITH src AS MATERIALIZED (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        SELECT vec_id, {embedding_sql()} AS e
         FROM embeddings WHERE label = 0
     ),
     tgt AS MATERIALIZED (
-        SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        SELECT vec_id, {embedding_sql()} AS e
         FROM embeddings WHERE label = 1
     ),
     pairs AS MATERIALIZED (
@@ -1330,28 +1330,13 @@ _MARGIN_TAIL_SQL = f"""
     oracle=rf"""
     WITH tgtc AS MATERIALIZED (
         SELECT vec_id AS t_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings WHERE label = 1
     ),
-    cents AS MATERIALIZED (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY t_id) - 1 AS INTEGER)
-                   AS cell_id,
-               e AS centroid
-        FROM (SELECT * FROM tgtc ORDER BY t_id LIMIT {_BITEXT_CELLS})
-    ),
-    assigned AS MATERIALIZED (
-        SELECT t_id, e, cell_id FROM (
-            SELECT tgtc.t_id, tgtc.e, cents.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY tgtc.t_id
-                       ORDER BY list_distance(tgtc.e, cents.centroid),
-                                cents.cell_id) AS rn
-            FROM tgtc CROSS JOIN cents
-        ) WHERE rn = 1
-    ),
+    {ivf_cells_ctes('tgtc', 't_id', _BITEXT_CELLS)},
     srcq AS MATERIALIZED (
         SELECT vec_id AS s_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings WHERE label = 0
     ),
     probes AS MATERIALIZED (
@@ -1450,12 +1435,12 @@ for _w in _DCG_W_MICRO:
     oracle=rf"""
     WITH q AS (
         SELECT vec_id AS q_id, label AS q_label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings WHERE vec_id < 10
     ),
     c AS (
         SELECT vec_id AS c_id, label AS c_label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings
     ),
     ranked AS (
@@ -1577,10 +1562,10 @@ def retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_recall_eval",
-    oracle="""
+    oracle=f"""
     WITH c AS MATERIALIZED (
         SELECT vec_id AS c_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings
     ),
     q AS MATERIALIZED (SELECT c_id AS q_id, e FROM c WHERE c_id < 10),
@@ -1595,22 +1580,7 @@ def retrieval_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM q CROSS JOIN c
         ) WHERE rn <= 5
     ),
-    cents AS MATERIALIZED (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY c_id) - 1 AS INTEGER)
-                   AS cell_id,
-               e AS centroid
-        FROM (SELECT * FROM c ORDER BY c_id LIMIT 8)
-    ),
-    assigned AS MATERIALIZED (
-        SELECT c_id, e, cell_id FROM (
-            SELECT c.c_id, c.e, cents.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY c.c_id
-                       ORDER BY list_distance(c.e, cents.centroid),
-                                cents.cell_id) AS rn
-            FROM c CROSS JOIN cents
-        ) WHERE rn = 1
-    ),
+    {ivf_cells_ctes('c', 'c_id', 8)},
     probes AS (
         SELECT q_id, e, cell_id FROM (
             SELECT q.q_id, q.e, cents.cell_id,
@@ -1703,29 +1673,14 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_cell_load_audit",
-    oracle="""
+    oracle=f"""
     WITH c AS MATERIALIZED (
         SELECT vec_id AS c_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+               {embedding_sql()} AS e
         FROM embeddings
     ),
     q AS MATERIALIZED (SELECT c_id AS q_id, e FROM c WHERE c_id < 10),
-    cents AS MATERIALIZED (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY c_id) - 1 AS INTEGER)
-                   AS cell_id,
-               e AS centroid
-        FROM (SELECT * FROM c ORDER BY c_id LIMIT 8)
-    ),
-    assigned AS (
-        SELECT c_id, cell_id FROM (
-            SELECT c.c_id, cents.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY c.c_id
-                       ORDER BY list_distance(c.e, cents.centroid),
-                                cents.cell_id) AS rn
-            FROM c CROSS JOIN cents
-        ) WHERE rn = 1
-    ),
+    {ivf_cells_ctes('c', 'c_id', 8)},
     probes AS (
         SELECT q_id, cell_id FROM (
             SELECT q.q_id, cents.cell_id,
@@ -1812,10 +1767,10 @@ def ivf_cell_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_pq_recall_eval",
-    oracle="""
+    oracle=f"""
     WITH c AS MATERIALIZED (
         SELECT vec_id AS c_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               {embedding_sql()} AS v
         FROM embeddings
     ),
     q AS MATERIALIZED (SELECT c_id AS q_id, v FROM c WHERE c_id < 10),
@@ -2064,10 +2019,10 @@ def class_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "matryoshka_dim_recall_eval",
-    oracle="""
+    oracle=f"""
     WITH c AS MATERIALIZED (
         SELECT vec_id AS c_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+               {embedding_sql()} AS v
         FROM embeddings
     ),
     q AS MATERIALIZED (SELECT c_id AS q_id, v FROM c WHERE c_id < 10),
@@ -2365,16 +2320,16 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "knn_label_agreement",
-    oracle="""
+    oracle=f"""
     WITH probes AS (
         SELECT vec_id AS q_vec_id, label AS q_label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
+               {embedding_sql()} AS qe
         FROM embeddings
         WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = '0'
     ),
     cand AS (
         SELECT vec_id AS c_vec_id, label AS c_label,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ce
+               {embedding_sql()} AS ce
         FROM embeddings
     ),
     ranked AS (
@@ -3544,13 +3499,12 @@ def active_learning_margin_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_jaccard_pairs",
-    oracle=r"""
+    oracle=rf"""
     WITH tf AS (
         SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c
         FROM (
             SELECT doc_id,
-                   unnest(list_filter(string_split_regex(text, '\s+'),
-                                      t -> t <> '')) AS token
+                   unnest({tokens_sql('text')}) AS token
             FROM documents
         ) GROUP BY doc_id, token
     ),
@@ -3774,11 +3728,10 @@ def centroid_2fold_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "overlap_coefficient_pairs",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
         SELECT doc_id,
-               list_distinct(list_filter(string_split_regex(text, '\s+'),
-                                         t -> t <> '')) AS s
+               {token_set_sql('text')} AS s
         FROM documents
     )
     SELECT a.doc_id AS a_id, b.doc_id AS b_id,

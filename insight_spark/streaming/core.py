@@ -22,11 +22,14 @@ store backend is RocksDB
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
+
+from insight_spark.sources.sinks import _hadoop_fs, _rename
 
 #: events schema *after* the ns-ts repair (streams carry proper timestamps).
 EVENTS_SCHEMA = T.StructType(
@@ -68,21 +71,27 @@ def prepare_stream_input(
 
 def write_single_parquet(df: DataFrame, dest_file: str) -> str:
     """Materialize a DataFrame as ONE plain parquet file (stream-source
-    arrival unit — the file source lists files, not directories)."""
-    import glob
-    import shutil
-    import tempfile
+    arrival unit — the file source lists files, not directories).
 
-    dest_dir = os.path.dirname(dest_file)
-    os.makedirs(dest_dir, exist_ok=True)
+    Every step runs on ``dest_file``'s own Hadoop FileSystem, so a
+    ``file://`` destination lands where Spark writes it.  An existing
+    ``dest_file`` is not replaced (the rename raises): a file source
+    that already listed it would never read the new rows."""
+    spark = df.sparkSession
     # staged beside the destination: the file stream source skips
     # ``_``-prefixed entries, and the final move is a same-filesystem
     # rename
-    staging = tempfile.mkdtemp(prefix="_single_pq_", dir=dest_dir)
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = glob.glob(os.path.join(staging, "part-*.parquet"))[0]
-    shutil.move(part, dest_file)
-    shutil.rmtree(staging, ignore_errors=True)
+    staging = os.path.join(
+        os.path.dirname(dest_file), f"_single_pq_{uuid.uuid4().hex}"
+    )
+    fs, stage = _hadoop_fs(spark, staging)
+    try:
+        df.coalesce(1).write.mode("overwrite").parquet(staging)
+        _, parts = _hadoop_fs(spark, os.path.join(staging, "part-*.parquet"))
+        _, dest = _hadoop_fs(spark, dest_file)
+        _rename(fs, fs.globStatus(parts)[0].getPath(), dest)
+    finally:
+        fs.delete(stage, True)
     return dest_file
 
 

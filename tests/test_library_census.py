@@ -11,13 +11,18 @@ public top-level function and class, then looks for a ``Name``,
 identifier anywhere counts as a caller: the census can miss a fork,
 never flag a used def.
 
-AST only: no Spark session is started.
+A second census finds shared fragments spelled by hand: the
+whitespace tokenizer and the embedding cast each have one Spark twin
+and one DuckDB renderer, and every other site calls them.
+
+Source scans only: no Spark session is started.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(HERE, "insight_spark")
@@ -102,3 +107,59 @@ def test_every_library_def_has_a_program_caller():
     # still test-only
     stale = sorted(set(TEST_ONLY_KEPT) - test_only)
     assert not stale, f"TEST_ONLY_KEPT entries no longer test-only defs: {stale}"
+
+
+#: Fragment -> (the one function allowed to spell it, its pattern).
+#: A split pattern is "whitespace" when it holds ``\s``, a whitespace
+#: escape or ``WS_RE``.
+_WS_PATTERN = r"[^'\"]*(?:\\{1,2}[stnfr]|\\x0B|WS_RE| )[^'\"]*"
+_SPELLED_ONCE = {
+    "whitespace string_split_regex": (
+        "operators/text.py:tokens_sql",
+        re.compile(r"string_split_regex\([^,]+,\s*'" + _WS_PATTERN + "'"),
+    ),
+    "embedding CAST(x AS DOUBLE) transform": (
+        "operators/similarity.py:embedding_sql",
+        re.compile(
+            r"list_transform\(\s*embedding\s*,\s*(\w+)\s*->\s*"
+            r"CAST\(\s*\1\s+AS\s+DOUBLE\s*\)\s*\)"
+        ),
+    ),
+    "whitespace F.split(": (
+        "operators/text.py:tokenize",
+        re.compile(
+            r"F\.split\([^,]+,\s*(?:r?[\"']" + _WS_PATTERN + r"|WS_RE\b)"
+        ),
+    ),
+}
+
+
+def _def_at(tree: ast.Module, line: int) -> str | None:
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and (
+            node.lineno <= line <= node.end_lineno
+        ):
+            return node.name
+    return None
+
+
+def test_shared_fragments_are_spelled_once():
+    """Each fragment appears only inside its renderer or Spark twin, so
+    a change to ``text.WS_RE`` reaches every oracle and every Spark
+    caller at once."""
+    stray = []
+    for path in _py_files(PKG):
+        rel = os.path.relpath(path, PKG)
+        with open(path) as fh:
+            src = fh.read()
+        tree = ast.parse(src, path)
+        for what, (home, pattern) in _SPELLED_ONCE.items():
+            for m in pattern.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                if f"{rel}:{_def_at(tree, line)}" != home:
+                    stray.append(f"{rel}:{line}: {what}")
+    assert not stray, (
+        "call the shared renderer (text.tokens_sql / token_set_sql, "
+        "similarity.embedding_sql) or text.tokenize instead:\n  "
+        + "\n  ".join(stray)
+    )

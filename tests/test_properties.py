@@ -374,6 +374,45 @@ def test_md5_band_keys_match_duckdb_ctes(spark):
     assert got == want
 
 
+def test_tokenizer_matches_its_duckdb_spelling(spark):
+    """``tokenize``, the oracles' ``tokens_sql`` and the Python UDTF
+    tokenizer split whitespace edge cases alike.  Java's ``\\s`` holds
+    the vertical tab and RE2's does not, so a bare ``\\s+`` split
+    ``'a\\x0bb'`` in two on Spark only; Python's ``str.split()`` also
+    splits on NBSP."""
+    import duckdb
+
+    from insight_spark.operators.text import tokenize, tokens_sql
+    from insight_spark.queries.misc import _tokenize_udtf
+
+    texts = [
+        "a\x0bb", "a\tb", " a  b ", "a\r\nb", "a\fb", "a\xa0b", "a b", "", None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = [
+        r["t"]
+        for r in df.orderBy("i").select(tokenize(F.col("text")).alias("t")).collect()
+    ]
+    con = duckdb.connect()
+    try:
+        sql = f"SELECT {tokens_sql('text')} FROM (SELECT CAST(? AS VARCHAR) AS text)"
+        want = [con.execute(sql, [t]).fetchone()[0] for t in texts]
+    finally:
+        con.close()
+    assert got == want
+    spark.udtf.register("tokenize_udtf", _tokenize_udtf())
+    df.createOrReplaceTempView("ws_texts")
+    by_text: dict[int, list[str]] = {}
+    for r in spark.sql(
+        "SELECT i, t.idx, t.token FROM"
+        " (SELECT i, text FROM ws_texts WHERE text IS NOT NULL) d,"
+        " LATERAL tokenize_udtf(text) t"
+    ).collect():
+        by_text.setdefault(r["i"], []).append((r["idx"], r["token"]))
+    udtf = [[tok for _, tok in sorted(by_text.get(i, []))] for i in range(len(texts))]
+    assert udtf[:-1] == want[:-1]  # the NULL text is last and emits no rows
+
+
 def test_line_dedup_ratio_bounds(spark, sf_dir):
     from insight_spark.queries import all_queries
 

@@ -861,3 +861,20 @@ def test_additive_merge_refuses_a_new_streams_batches(spark, tmp_path):
         new_id = json.load(fh)["id"]
     assert new_id != old.id and new_id in str(err.value)
     assert served() == [("a", 3)]
+
+
+def test_write_single_parquet_to_a_file_uri(spark, tmp_path, monkeypatch):
+    """A ``file://`` destination lands as one parquet file in the real
+    directory, leaves no ``_single_pq_*`` staging dir beside it, and
+    creates nothing under the working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    dest_dir = tmp_path / "arrivals"
+    df = spark.range(5).withColumnRenamed("id", "x")
+    out = write_single_parquet(df, f"file://{dest_dir}/chunk.parquet")
+    assert out == f"file://{dest_dir}/chunk.parquet"
+    landed = spark.read.parquet(str(dest_dir / "chunk.parquet"))
+    assert sorted(r["x"] for r in landed.collect()) == [0, 1, 2, 3, 4]
+    assert not [p for p in os.listdir(dest_dir) if p.startswith("_single_pq_")]
+    assert os.listdir(cwd) == []
